@@ -413,6 +413,40 @@ def array_width(df: DataFrame, col: str) -> int:
     return int(row["n"])
 
 
+def map_partials(df: DataFrame, kernel, *args) -> list:
+    """``kernel(*mats, *args)`` on every non-empty Arrow batch of ``df``
+    in ONE ``mapInPandas`` job, collected as a list of per-batch results.
+
+    ``mats`` holds one numpy matrix per (array) column of ``df``, rows
+    stacked. The kernel returns small partial aggregates (arrays or
+    floats) that the caller combines on the driver — the MLlib
+    treeAggregate shape, with row-count-independent traffic. An
+    iterative fit that has its rows on the driver calls the same kernel
+    on the collected matrices instead, so both branches share one piece
+    of math.
+
+    ``kernel`` must pickle BY VALUE: a function cloudpickle can import by
+    name is pickled by reference, and every fresh Python worker then
+    imports this package (pyspark.ml and friends, measured ~0.7 s) before
+    its first batch. A function nested in the caller has a ``<locals>``
+    qualname, which cloudpickle cannot import, so it ships the bytecode.
+    """
+    import pickle
+
+    import numpy as np
+    import pandas as pd
+
+    def run(batches):
+        for pdf in batches:
+            if len(pdf):
+                mats = [np.stack(pdf[c].to_numpy()) for c in pdf.columns]
+                yield pd.DataFrame(
+                    {"p": [pickle.dumps(kernel(*mats, *args))]})
+
+    rows = df.mapInPandas(run, "p binary").collect()
+    return [pickle.loads(r["p"]) for r in rows]
+
+
 def ensure_min_parallelism(df: DataFrame) -> DataFrame:
     """Round-robin repartition up to the session's default parallelism
     when the source has fewer splits.

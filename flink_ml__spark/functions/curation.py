@@ -72,26 +72,6 @@ from flink_ml__spark.functions.dedup import (
 )
 from flink_ml__spark.functions.text import TOKEN_SPLIT
 
-# Connected-components frontier rounds broadcast the changed-labels
-# delta when it is at most this many rows (~16 B/row of key+label ->
-# well under the 10 MB broadcast comfort zone at the default). Above
-# it the loop falls back to the full shuffle-join round, so the knob
-# only ever picks between two result-identical plans. Env-overridable
-# for cluster profiles with more executor headroom.
-import os as _os
-
-_CC_BROADCAST_ROWS = int(_os.environ.get(
-    "SPARK_GRAFT_CC_BROADCAST_ROWS", "500000"))
-
-# ... and only when it is at most 1/this of the label table: a frontier
-# that is still a sizable fraction of the nodes converges faster
-# through the full self-join round (the delta round's three broadcast
-# jobs + wider union are pure overhead when nearly every label is
-# changing anyway).
-_CC_DELTA_FACTOR = int(_os.environ.get(
-    "SPARK_GRAFT_CC_DELTA_FACTOR", "8"))
-
-
 
 def _hash_bucket16(col, salt: str):
     """Deterministic 16-bit bucket from a salted md5 — the engine-portable
@@ -753,8 +733,12 @@ class DuplicateClusterer(AlgoOperator, HasIdColMixin, HasMaxIter):
     component minimum, so convergence is O(log diameter) rounds, not
     O(diameter). ``maxIter`` (default 20) still bounds the loop.
 
-    Per round: two keyed joins + one ``groupBy(id).min`` — no
-    driver-side data beyond the O(1) convergence counter. Each round's
+    Every round has the same full form: an edges join and a labels
+    self-join (skipped in round 1, where it is the identity) + one
+    ``groupBy(id).min`` — no driver-side data beyond the O(1)
+    convergence counter. Joining only the labels that changed last
+    round, against a broadcast of them, gives identical labels but was
+    measured a wash on the events graph, so it is not kept. Each round's
     label table is ``localCheckpoint``-ed: iterative DataFrame loops
     grow their logical plan per round even under ``persist`` (plan
     trees replay the whole history and eventually OOM the driver);
@@ -812,35 +796,9 @@ class DuplicateClusterer(AlgoOperator, HasIdColMixin, HasMaxIter):
             return labels.select(F.col("__id").alias(idc),
                                  F.col("__lbl").alias("cluster_id"))
         first_round = True
-        frontier = None  # (__id, __lbl) rows whose label changed last round
-        fsize: int | None = None  # its exact row count (observe metric)
-        nrows: int | None = None  # label-table row count (constant)
         for _ in range(self.getMaxIter()):
-            # Frontier rounds (guide §2.4): after a round, only labels
-            # that CHANGED can lower a neighbor — an unchanged u's
-            # label was already proposed to every neighbor in the
-            # round after u last changed (round 1 counts as "all
-            # changed"), and labels are monotone mins, so re-proposing
-            # it is a no-op. Joining the per-round deltas against a
-            # BROADCAST frontier therefore yields labels IDENTICAL to
-            # the full joins, round by round, while shuffling none of
-            # the big sides. The driver knows the exact frontier size
-            # from last round's observe metric, so the broadcast
-            # decision needs no size estimate and degrades to the full
-            # (shuffle-join) form whenever the frontier is large.
-            # Delta rounds only pay when the frontier is genuinely
-            # sparse: each one costs three tiny broadcast jobs + two
-            # extra union branches of fixed overhead, so a frontier
-            # that is still a sizable fraction of the label table is
-            # cheaper through the full self-join form (measured on the
-            # 3.7 k-node events graph: full 1.3-1.6 s vs delta
-            # 1.6-1.7 s when most labels change every round).
-            small = (not first_round and fsize is not None
-                     and fsize <= _CC_BROADCAST_ROWS
-                     and fsize * _CC_DELTA_FACTOR <= (nrows or 0))
-            f_lbl = F.broadcast(frontier) if small else labels
             nbr = (edges.join(
-                f_lbl.select(F.col("__id").alias("__src"), "__lbl"),
+                labels.select(F.col("__id").alias("__src"), "__lbl"),
                 "__src")
                 .select(F.col("__dst").alias("__id"), "__lbl"))
             # Carry each id's OLD label through the union (null on the
@@ -854,39 +812,12 @@ class DuplicateClusterer(AlgoOperator, HasIdColMixin, HasMaxIter):
                                   F.col("__lbl").alias("__old"))
                     .union(nbr.select("__id", "__lbl",
                                       null_old.alias("__old"))))
-            if not first_round and small:
-                # Delta pointer jumping: label(label(v)) can differ
-                # from what earlier rounds already proposed only when
-                # v's pointer just changed (v in the frontier: fetch
-                # its new target's label) or the target's label just
-                # changed (target in the frontier: push to every v
-                # pointing at it). Both joins stream the full labels
-                # side against the broadcast frontier — no shuffle.
-                jump_a = (labels.select("__id",
-                                        F.col("__lbl").alias("__j"))
-                          .join(f_lbl.select(
-                              F.col("__id").alias("__j"),
-                              F.col("__lbl").alias("__jl")), "__j")
-                          .select("__id", F.col("__jl").alias("__lbl")))
-                jump_b = (f_lbl.select("__id",
-                                       F.col("__lbl").alias("__j"))
-                          .join(labels.select(
-                              F.col("__id").alias("__j"),
-                              F.col("__lbl").alias("__jl")), "__j")
-                          .select("__id", F.col("__jl").alias("__lbl")))
-                cand = cand.union(
-                    jump_a.select("__id", "__lbl",
-                                  null_old.alias("__old")))
-                cand = cand.union(
-                    jump_b.select("__id", "__lbl",
-                                  null_old.alias("__old")))
-            elif not first_round:
-                # Large frontier: the r12 full form — one labels
-                # self-join — is cheaper than two frontier-sized
-                # shuffle joins. Round 1 pointer jumping is provably
-                # the identity (label(v) = v, so label(label(v)) =
-                # label(v)): skipping it removes a self-join + shuffle
-                # from the round every caller always pays (guide §2.4).
+            if not first_round:
+                # Pointer jumping: one labels self-join. Round 1 is
+                # provably the identity (label(v) = v, so
+                # label(label(v)) = label(v)): skipping it removes a
+                # self-join + shuffle from the round every caller
+                # always pays (guide §2.4).
                 jump = (labels.select("__id",
                                       F.col("__lbl").alias("__j"))
                         .join(labels.select(F.col("__id").alias("__j"),
@@ -907,35 +838,9 @@ class DuplicateClusterer(AlgoOperator, HasIdColMixin, HasMaxIter):
                         F.min("__old").alias("__old"))
                    .observe(obs, F.sum(
                        F.when(F.col("__lbl") != F.col("__old"),
-                              1).otherwise(0)).alias("chg"),
-                       F.count(F.lit(1)).alias("n")))
-            dbg = _os.environ.get("SPARK_GRAFT_CC_DEBUG")
-            if dbg and _os.path.isdir(dbg):  # dump the round's real plan
-                rid = len([p for p in _os.listdir(dbg)
-                           if p.startswith("cc_round")])
-                txt = agg._sc._jvm.PythonSQLUtils.explainString(
-                    agg._jdf.queryExecution(), "formatted")
-                form = "delta" if small else "full"
-                with open(_os.path.join(
-                        dbg, f"cc_round{rid:02d}_{form}.txt"), "w") as fh:
-                    fh.write(txt)
-            new_labels = agg.localCheckpoint()  # eager; truncates lineage
-            got = obs.get
-            changed = int(got["chg"] or 0)
-            nrows = int(got["n"] or 0)
-            labels = new_labels.select("__id", "__lbl")
-            # next round's frontier: a cheap filter over the already-
-            # checkpointed frame (no recompute), sized exactly by the
-            # observe metric the round just produced
-            frontier = (new_labels
-                        .filter(F.col("__lbl") != F.col("__old"))
-                        .select("__id", "__lbl"))
-            fsize = changed
-            if dbg:
-                import sys as _sys
-                print(f"[cc] round changed={changed} n={nrows} "
-                      f"delta={small}", file=_sys.stderr)
-            if changed == 0:
+                              1).otherwise(0)).alias("chg")))
+            labels = agg.localCheckpoint().select("__id", "__lbl")
+            if int(obs.get["chg"] or 0) == 0:
                 break
         return labels.select(F.col("__id").alias(idc),
                              F.col("__lbl").alias("cluster_id"))

@@ -54,8 +54,6 @@ feeds the gather stays parallel. Callers that need bounded memory at
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import Column, DataFrame
 
 # Below this optimizer size estimate for the projected column the JVM
@@ -65,11 +63,10 @@ from pyspark.sql import Column, DataFrame
 # crossover between the 100 k-row events column (JVM agg faster,
 # lorenz 0.61 s vs Arrow 0.82 s) and the 600 k-row lineitem column
 # (Arrow 0.75 s vs JVM agg 3.56 s) — their estimates, 409 KB vs
-# 1.49 MB, sit either side of 1 MiB with ≥1.4x margin.
-# Env-overridable so a cluster profile can re-pin it without a code
-# change.
-_SMALL_INPUT_BYTES = int(os.environ.get(
-    "SPARK_GRAFT_EXACT_PCT_SMALL_BYTES", str(1024 * 1024)))
+# 1.49 MB, sit either side of 1 MiB with ≥1.4x margin. A plain
+# constant: either route returns the same bits, so it only ever steers
+# speed.
+_SMALL_INPUT_BYTES = 1024 * 1024
 
 
 def _estimated_bytes(df: DataFrame) -> int:
@@ -103,8 +100,8 @@ def exact_percentiles(df: DataFrame, col: Column | str,
               .filter(F.col("__x").isNotNull()))
 
     if _estimated_bytes(narrow) <= _SMALL_INPUT_BYTES:
-        row = df.agg(F.percentile(
-            c, F.array(*[F.lit(p) for p in ps])).alias("__es")).first()
+        row = narrow.agg(F.percentile(
+            "__x", F.array(*[F.lit(p) for p in ps])).alias("__es")).first()
         es = row["__es"]
         return None if es is None else [float(v) for v in es]
 

@@ -14,11 +14,13 @@ Reimplements ``/root/reference/src/main/java/cn/swust/algorithms/fcm/``
 
 Architecture (the MLlib driver-loop pattern, replacing the reference's
 Flink bounded-iteration graph): centroids live on the driver between
-epochs; each epoch is ONE ``mapInPandas`` partial-aggregation job
-computing, per partition, ``Σ u^m``, ``Σ u^m·x`` and the
-membership-delta max in vectorized numpy (the treeAggregate shape —
+epochs; each epoch evaluates ONE numpy kernel computing ``Σ u^m``,
+``Σ u^m·x`` and the membership-delta max (the treeAggregate shape —
 Catalyst expressions for this O(k²·dims) math blow codegen limits and
-pay per-epoch analysis cost). Memberships are never materialized: after
+pay per-epoch analysis cost). Inputs of at most ``_DRIVER_FIT_ROWS``
+rows run the kernel on the collected matrix; larger ones run it per
+Arrow batch in ONE ``mapInPandas`` job per epoch and sum the partials
+on the driver. Memberships are never materialized: after
 round one they are a pure function of (point, centroids), so
 ``max|Δu|`` is computed by evaluating memberships at both the current
 and previous centroids inside the same pass. Per-epoch traffic is
@@ -45,7 +47,7 @@ from flink_ml__spark.base import (
     HasSeed,
     Model,
     as_double_array,
-    array_width,
+    map_partials,
 )
 
 
@@ -149,10 +151,9 @@ _np_distances, _np_memberships = _make_np_math()
 # fit() runs its epochs driver-side when the input has at most this
 # many rows (one bounded collect — the same order of driver memory as
 # KMeans's k-means++ init sample) instead of paying a fixed ~0.2-0.5 s
-# job dispatch per epoch for sub-ms of numpy. Distributed epochs above
-# the cap are unchanged. Env-overridable per deployment.
-_DRIVER_FIT_ROWS = int(__import__("os").environ.get(
-    "SPARK_GRAFT_FCM_DRIVER_FIT_ROWS", "8192"))
+# job dispatch per epoch for sub-ms of numpy. Above it every epoch is
+# one mapInPandas job running the same kernel.
+_DRIVER_FIT_ROWS = 8192
 
 
 def _init_membership_exprs(x_col, k: int, seed: int):
@@ -290,10 +291,11 @@ class FCMModel(Model, FCMParams):
 
 
 class FCM(Estimator, FCMParams):
-    """FCM estimator — driver loop, one ``mapInPandas`` partial-aggregate
-    job per epoch (the MLlib treeAggregate shape).
+    """FCM estimator — driver loop over one partial-aggregate kernel per
+    epoch (the MLlib treeAggregate shape), evaluated on the collected
+    rows of a small input or in one ``mapInPandas`` job over a large one.
 
-    The per-epoch math runs in numpy over Arrow batches: building it as
+    The per-epoch math runs in numpy: building it as
     Catalyst expressions instead costs O(k²·dims) expression nodes whose
     per-epoch analysis + codegen dominates the runtime (and grows with
     dims), while memberships stay a pure function of (point, centroids),
@@ -322,94 +324,48 @@ class FCM(Estimator, FCMParams):
         u0 = _init_membership_exprs(F.col("x"), k, seed)
         base = (pts.select("x", F.array(*u0).alias("u0"))
                 .persist(StorageLevel.MEMORY_AND_DISK))
-        n_points = base.count()  # eager: every epoch re-reads the cache
         try:
-            if n_points < k:
+            # one bounded collect: the rows themselves when there are at
+            # most _DRIVER_FIT_ROWS of them, else proof that there are more
+            rows = base.limit(max(_DRIVER_FIT_ROWS, k) + 1).collect()
+            if len(rows) < k:
                 raise ValueError(
-                    f"need at least k={k} points, got {n_points}")
-            dims = array_width(base, "x")
+                    f"need at least k={k} points, got {len(rows)}")
+            on_driver = len(rows) <= _DRIVER_FIT_ROWS
+            X = np.asarray([list(r["x"]) for r in rows])
+            U0 = np.asarray([list(r["u0"]) for r in rows])
 
             # No centroid sampling: the reference seeds centroids
             # (``FCM.java:71``) but its first update derives them purely
             # from the Dirichlet memberships (as does ours at epoch 0),
             # so the sampled values are never read — only k ≤ n matters.
-            centroids = [[0.0] * dims for _ in range(k)]
+            C, P = np.zeros((k, X.shape[1])), None
 
-            def memberships(X, C):
-                return _np_memberships(X, C, measure, p)
+            def partial(X, U0, C, P, it):
+                """Σ u^m, Σ u^m·x and max|Δu| over the points X, with
+                memberships at centroids C (the Dirichlet init U0 at
+                epoch 0) and Δu against centroids P (U0 at epoch 1)."""
+                u = U0 if it == 0 else _np_memberships(X, C, measure, p)
+                if it == 0:
+                    delta = 0.0  # first round skips the tol check
+                else:            # (``FCM.java:315-322``)
+                    uo = U0 if it == 1 else _np_memberships(
+                        X, P, measure, p)
+                    delta = float(np.abs(u - uo).max())
+                w = u ** m
+                return w.sum(0), w.T @ X, delta
 
-            if n_points <= _DRIVER_FIT_ROWS:
-                # Small input: run the epochs driver-side on one
-                # collected copy. Each distributed epoch costs a fixed
-                # ~0.2-0.5 s job dispatch (JVM scheduling + Arrow round
-                # trip) for sub-ms of numpy — ten epochs of pure
-                # overhead at sf0.1 (guide §1.2: fewer actions; the
-                # per-epoch math itself is identical). Bounded: at most
-                # _DRIVER_FIT_ROWS × dims doubles on the driver, the
-                # same order as KMeans's k-means++ init sample; above
-                # the cap the distributed partial-aggregate epochs
-                # below are unchanged.
-                pdf = base.toPandas()
-                X = np.stack(pdf["x"].to_numpy())
-                U0 = np.stack(pdf["u0"].to_numpy())
-                prev_centroids = None
-                for it in range(max_iter):
-                    C = np.array(centroids)
-                    u = U0 if it == 0 else memberships(X, C)
-                    if it == 0:
-                        delta = 0.0  # first round skips the tol check
-                    else:            # (``FCM.java:315-322``)
-                        P = np.array(prev_centroids)
-                        uo = U0 if it == 1 else memberships(X, P)
-                        delta = float(np.abs(u - uo).max())
-                    w = u ** m
-                    den = w.sum(0)
-                    num = w.T @ X
-                    prev_centroids = centroids
-                    centroids = (num / den[:, None]).tolist()
-                    if it >= 1 and delta < tol:
-                        break
-                model = FCMModel(centroids)
-                model._set(**{p2.name: self.getOrDefault(p2)
-                              for p2 in self.params})
-                return model
-
-            schema = "den array<double>, num array<double>, delta double"
-            prev_centroids = None
             for it in range(max_iter):
-                C = np.array(centroids)
-                P = (np.array(prev_centroids)
-                     if prev_centroids is not None else None)
-
-                def partial(batches, C=C, P=P, it=it):
-                    for pdf in batches:
-                        if not len(pdf):
-                            continue
-                        X = np.stack(pdf["x"].to_numpy())
-                        U0 = np.stack(pdf["u0"].to_numpy())
-                        u = U0 if it == 0 else memberships(X, C)
-                        if it == 0:
-                            delta = 0.0  # first round skips the tol check
-                        else:            # (``FCM.java:315-322``)
-                            uo = U0 if it == 1 else memberships(X, P)
-                            delta = float(np.abs(u - uo).max())
-                        w = u ** m
-                        yield pd.DataFrame({
-                            "den": [w.sum(0).tolist()],
-                            "num": [(w.T @ X).ravel().tolist()],
-                            "delta": [delta]})
-
-                rows = base.mapInPandas(partial, schema).collect()
-                den = np.sum([r["den"] for r in rows], axis=0)
-                num = np.sum([np.asarray(r["num"]).reshape(k, dims)
-                              for r in rows], axis=0)
-                prev_centroids = centroids
-                centroids = (num / den[:, None]).tolist()
-                if it >= 1 and max(r["delta"] for r in rows) < tol:
+                parts = ([partial(X, U0, C, P, it)] if on_driver
+                         else map_partials(base, partial, C, P, it))
+                den = sum(q[0] for q in parts)
+                num = sum(q[1] for q in parts)
+                P, C = C, num / den[:, None]
+                if it >= 1 and max(q[2] for q in parts) < tol:
                     break
         finally:
             base.unpersist()
 
-        model = FCMModel(centroids)
+        model = FCMModel(C.tolist())
         model._set(**{p.name: self.getOrDefault(p) for p in self.params})
         return model

@@ -9,14 +9,19 @@ euclidean estimator form with a persistable model).
 Scale shape (the FCM/MLlib treeAggregate pattern):
 
 * **init** — k-means++ (Arthur & Vassilvitskii 2007) run driver-side
-  in numpy over a BOUNDED seeded sample (one JVM
-  ``TakeOrderedAndProject`` scan by seeded xxhash64 — no full-corpus
-  pass, no unbounded collect).
-* **iterate** — each Lloyd epoch is ONE ``mapInPandas``
-  partial-aggregation job: every partition assigns its points to the
-  nearest centroid in a single numpy matmul and emits O(k·dims)
-  partial sums, so per-epoch traffic is row-count-independent.
-  Empty clusters keep their previous centroid (MLlib behavior).
+  in numpy over a BOUNDED seeded sample: one JVM
+  ``TakeOrderedAndProject`` scan by seeded xxhash64 collects
+  ``initSampleSize + 1`` rows — no full-corpus pass, no unbounded
+  collect. The extra row says whether the sample is the whole dataset.
+* **iterate** — one Lloyd epoch loop over one numpy kernel,
+  ``partial(X, C)``: assign each point to its nearest centroid in a
+  single matmul and return per-cluster counts and sums, O(k·dims)
+  whatever the row count. When the sample is the whole dataset the
+  kernel runs on the collected matrix (an epoch job would cost a fixed
+  ~0.3 s dispatch for microseconds of numpy); otherwise each epoch is
+  ONE ``mapInPandas`` job running the same kernel per Arrow batch, and
+  the driver sums the partials. Empty clusters keep their previous
+  centroid (MLlib behavior).
 * **apply** — ``KMeansModel.transform`` folds the fitted centroids
   into pure-Catalyst array expressions (distances via
   ``zip_with``/``aggregate``, argmin via ``array_position``) — a
@@ -26,7 +31,6 @@ Scale shape (the FCM/MLlib treeAggregate pattern):
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.ml.param import Param, Params, TypeConverters
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -40,6 +44,7 @@ from flink_ml__spark.base import (
     HasSeed,
     Model,
     as_double_array,
+    map_partials,
 )
 
 
@@ -173,7 +178,8 @@ class KMeans(Estimator, KMeansParams):
     by a seeded hash of the vector VALUE, the ++ draws use a seeded
     numpy generator, and each epoch's update is a sum over points
     (order-independent up to float association, same budget as FCM's
-    goldens)."""
+    goldens). Driver-side and distributed epochs run the same kernel,
+    so the two branches agree to that budget as well."""
 
     def fit(self, df: DataFrame) -> KMeansModel:
         import numpy as np
@@ -185,14 +191,17 @@ class KMeans(Estimator, KMeansParams):
                         .alias("x")).filter(F.col("x").isNotNull())
         base = pts.persist(StorageLevel.MEMORY_AND_DISK)
         try:
-            n_points = base.count()
-            if n_points < k:
-                raise ValueError(f"need at least k={k} points, "
-                                 f"got {n_points}")
+            # one bounded collect: the first `cap` rows by seeded hash are
+            # the k-means++ sample; one row more tells whether they are
+            # the whole dataset
             cap = max(self.getOrDefault(self.initSampleSize), k)
-            sample = (base.orderBy(F.xxhash64(F.lit(seed), "x"))
-                      .limit(cap).collect())
-            S = np.asarray([list(r["x"]) for r in sample])
+            rows = (base.orderBy(F.xxhash64(F.lit(seed), "x"))
+                    .limit(cap + 1).collect())
+            if len(rows) < k:
+                raise ValueError(f"need at least k={k} points, "
+                                 f"got {len(rows)}")
+            S = np.asarray([list(r["x"]) for r in rows[:cap]])
+            on_driver = len(rows) <= cap
 
             # k-means++ on the sample (driver-side, O(sample·k·dims))
             rng = np.random.default_rng(seed)
@@ -206,66 +215,29 @@ class KMeans(Estimator, KMeansParams):
                     continue
                 centroids.append(S[rng.choice(len(S), p=d2 / tot)])
             C = np.asarray(centroids, dtype=float)
-            dims = C.shape[1]
 
-            if n_points <= len(S):
-                # The init sample IS the whole dataset (n ≤
-                # initSampleSize), already collected for k-means++ —
-                # run Lloyd driver-side on it. Each distributed epoch
-                # otherwise costs a fixed ~0.3 s mapInPandas dispatch
-                # for microseconds of numpy (measured at sf0.1: ten
-                # single-batch epoch jobs dominate the whole fit, and
-                # fanning the cache does not help because the cost is
-                # the per-job round trip, not compute — guide §1.2:
-                # fewer actions). No new driver memory: the rows are
-                # on the driver either way. Larger inputs keep the
-                # distributed epochs below.
-                X = S
-                for _ in range(max_iter):
-                    a = (-2.0 * X @ C.T + (C * C).sum(1)).argmin(1)
-                    cnt = np.bincount(a, minlength=len(C)).astype(float)
-                    sums = np.zeros_like(C)
-                    np.add.at(sums, a, X)
-                    new_C = C.copy()  # empty cluster keeps its centroid
-                    nz = cnt > 0
-                    new_C[nz] = sums[nz] / cnt[nz, None]
-                    shift = float(np.sqrt(((new_C - C) ** 2).sum(1)).max())
-                    C = new_C
-                    if shift < tol:
-                        break
-            else:
-                schema = "n array<double>, s array<double>"
-                for _ in range(max_iter):
-                    def partial(batches, C=C):
-                        for pdf in batches:
-                            if not len(pdf):
-                                continue
-                            X = np.stack(pdf["x"].to_numpy())
-                            # ||x-c||² = ||x||² - 2x·c + ||c||²; argmin
-                            # drops the ||x||² term
-                            a = (-2.0 * X @ C.T
-                                 + (C * C).sum(1)).argmin(1)
-                            cnt = np.bincount(
-                                a, minlength=len(C)).astype(float)
-                            sums = np.zeros_like(C)
-                            np.add.at(sums, a, X)
-                            yield pd.DataFrame({"n": [cnt.tolist()],
-                                                "s": [sums.ravel()
-                                                      .tolist()]})
+            def partial(X, C):
+                """Per-cluster point counts and coordinate sums of X
+                assigned to its nearest centroid in C."""
+                # ||x-c||² = ||x||² - 2x·c + ||c||²; argmin drops ||x||²
+                a = (-2.0 * X @ C.T + (C * C).sum(1)).argmin(1)
+                cnt = np.bincount(a, minlength=len(C)).astype(float)
+                sums = np.zeros_like(C)
+                np.add.at(sums, a, X)
+                return cnt, sums
 
-                    rows = base.mapInPandas(partial, schema).collect()
-                    cnt = np.sum([r["n"] for r in rows], axis=0)
-                    sums = np.sum([np.asarray(r["s"]).reshape(len(C),
-                                                              dims)
-                                   for r in rows], axis=0)
-                    new_C = C.copy()  # empty cluster keeps its centroid
-                    nz = cnt > 0
-                    new_C[nz] = sums[nz] / cnt[nz, None]
-                    shift = float(np.sqrt(((new_C - C) ** 2).sum(1))
-                                  .max())
-                    C = new_C
-                    if shift < tol:
-                        break
+            for _ in range(max_iter):
+                parts = ([partial(S, C)] if on_driver
+                         else map_partials(base, partial, C))
+                cnt = sum(q[0] for q in parts)
+                sums = sum(q[1] for q in parts)
+                new_C = C.copy()  # empty cluster keeps its centroid
+                nz = cnt > 0
+                new_C[nz] = sums[nz] / cnt[nz, None]
+                shift = float(np.sqrt(((new_C - C) ** 2).sum(1)).max())
+                C = new_C
+                if shift < tol:
+                    break
         finally:
             base.unpersist()
 

@@ -1,10 +1,9 @@
-"""Numpy replicas of the per-window scoring math, used by the
+"""Numpy replica of the per-window scoring math, used by the
 Structured-Streaming stateful wrappers (Arrow-batched pandas path).
 
-These mirror, and are tested against, the batch operators' Catalyst
+It mirrors, and is tested against, the batch operator's Catalyst
 expressions: ``OnlineAHP`` (``/root/reference/.../OnlineAHP.java:94-172``,
-note ``k = 1/ln(#cols)``) and the window-mean + TOPSIS pipeline of
-``OnlineTopsis`` (``OnlineTopsis.java:127-317``).
+note ``k = 1/ln(#cols)``).
 """
 
 from __future__ import annotations
@@ -31,29 +30,3 @@ def score_window_ahp(x: np.ndarray, indicator_types: list[int],
     w = d / d.sum()
     return norm @ (w * np.asarray(ahp_w))
 
-
-def topsis_scores(v: np.ndarray, criteria_types: list[int],
-                  weights: list[float], best_value: float | None,
-                  interval: list[float] | None) -> np.ndarray:
-    """Batch TOPSIS over an (n, m) matrix (``Topsis.java:261-385``)."""
-    v = np.asarray(v, dtype=float)
-    t = np.asarray(criteria_types)
-    pos = v.copy()
-    with np.errstate(divide="ignore", invalid="ignore"):
-        for j in range(v.shape[1]):
-            col = v[:, j]
-            if t[j] == 2:
-                pos[:, j] = col.max() - col
-            elif t[j] == 3:
-                dev = np.abs(col - best_value)
-                pos[:, j] = 1 - dev / dev.max()
-            elif t[j] == 4:
-                lo, hi = interval
-                m = max(lo - col.min(), col.max() - hi)
-                pos[:, j] = np.where(
-                    col < lo, 1 - (lo - col) / m,
-                    np.where(col <= hi, 1.0, 1 - (col - hi) / m))
-        u = pos / np.sqrt((pos ** 2).sum(axis=0)) * np.asarray(weights)
-        d_best = np.sqrt(((u.max(axis=0) - u) ** 2).sum(axis=1))
-        d_worst = np.sqrt(((u.min(axis=0) - u) ** 2).sum(axis=1))
-        return d_worst / (d_best + d_worst)

@@ -6,11 +6,13 @@ process runs ~28-45 min wall — past the round driver's verification
 window (VERIFY_r12 ``tests_ok: false``: the tail cut at ~90 % with zero
 failures). Config knobs (cores, shuffle partitions, AQE, codegen) were
 each measured a wash (±5 % on a 49-test probe), so the fix is
-parallelism: a bare full-suite invocation (``pytest tests/``, exactly
-what the driver runs) re-launches itself as ``SPARK_GRAFT_TEST_WORKERS``
-subprocess workers, each owning its own local[4] SparkSession and a
-deterministic shard of the collection. Runs that name specific
-files/tests (developer loops) are never sharded.
+parallelism: a full-suite invocation (``pytest tests/``) re-launches
+itself as subprocess workers, each owning its own local[4]
+SparkSession and a deterministic shard of the collection. The worker
+count is one per core, capped by ``MemAvailable`` at 4 GiB per worker
+(``SPARK_GRAFT_TEST_WORKERS`` overrides it). A worker that dies
+without a test summary fails the run, and its full log is kept. Runs
+that name specific files/tests (developer loops) are never sharded.
 
 Sharding is by MODULE (preserves within-module order and any
 module-scoped state), greedy-balanced by the measured r13 per-module
@@ -38,7 +40,26 @@ os.environ.setdefault("SPARK_GRAFT_CPUS", "4")
 os.environ.setdefault("SPARK_DRIVER_MEM", "4g")
 
 _SHARD_ENV = "SPARK_GRAFT_TEST_SHARD"
-_WORKERS = int(os.environ.get("SPARK_GRAFT_TEST_WORKERS", "6"))
+# each worker's local[4] JVM (4g heap) peaks at ~2.6-2.9 GB anon RSS;
+# budget 4 GiB of MemAvailable per worker so the kernel never has to
+# OOM-kill one of them mid-run
+_WORKER_MEM = 4 << 30
+
+
+def _default_workers() -> int:
+    """One worker per core, capped by MemAvailable // _WORKER_MEM."""
+    cores = len(os.sched_getaffinity(0))
+    try:
+        with open("/proc/meminfo") as f:
+            kb = next(int(line.split()[1]) for line in f
+                      if line.startswith("MemAvailable:"))
+    except (OSError, StopIteration, ValueError):
+        return 1
+    return max(1, min(cores, kb * 1024 // _WORKER_MEM))
+
+
+_WORKERS = int(os.environ.get("SPARK_GRAFT_TEST_WORKERS")
+               or _default_workers())
 # independent parametrized gate files — safe and necessary to split
 # below module level (test_oracles alone is ~450 s)
 _SPLITTABLE = {"test_oracles.py", "test_plans.py"}
@@ -170,7 +191,7 @@ def pytest_cmdline_main(config):
                 p.terminate()
 
     tot = {"passed": 0, "skipped": 0, "failed": 0, "error": 0}
-    bad_tail = []
+    bad_tail, lost = [], []
     for w, log in enumerate(logs):
         log.flush()
         with open(log.name) as f:
@@ -188,11 +209,20 @@ def pytest_cmdline_main(config):
                 tot[kind] += int(mm.group(1))
         status = "ok" if rcs.get(w) in (0, 5) else f"rc={rcs.get(w)}"
         print(f"[worker {w}] {status}: {summary or '(no summary)'}")
-        if rcs.get(w) not in (0, 5):
-            bad_tail.append(f"----- worker {w} tail -----\n" + out[-1500:])
-        os.unlink(log.name)
+        if rcs.get(w) in (0, 5):
+            os.unlink(log.name)
+            continue
+        bad_tail.append(f"----- worker {w} tail -----\n" + out[-1500:])
+        print(f"[worker {w}] full log kept at {log.name}")
+        if not summary:
+            # died before pytest could report (OOM kill, JVM crash):
+            # its unrun tests are invisible in the totals, so say so
+            lost.append(w)
     for tail in bad_tail[:2]:
         print(tail)
+    if lost:
+        print(f"[conftest] FAILED: worker(s) {lost} exited without a "
+              f"test summary; their tests did not all run")
 
     parts = [f"{v} {k}" for k, v in tot.items() if v]
     wall = time.time() - t0
@@ -200,4 +230,7 @@ def pytest_cmdline_main(config):
     print("=" * max(0, (80 - len(line)) // 2) + line
           + "=" * max(0, (80 - len(line) + 1) // 2))
     bad = [rc for rc in rcs.values() if rc not in (0, 5)]
-    return bad[0] if bad else 0
+    if not bad:
+        return 0
+    # a signal-killed worker has a negative rc
+    return bad[0] if bad[0] > 0 else pytest.ExitCode.TESTS_FAILED

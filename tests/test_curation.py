@@ -1831,10 +1831,10 @@ def test_coverage_novelty_against(spark):
     assert out[13]["novelty_frac"] is None
 
 
-def test_duplicate_clusterer_frontier_matches_full_form(spark, monkeypatch):
-    """r13 frontier rounds (delta joins against the broadcast changed
-    set) must label identically to the r12 full-join rounds — on a long
-    path (multi-round pointer jumping), a star, and random clusters."""
+def test_duplicate_clusterer_matches_union_find(spark):
+    """Connected components must equal a pure-Python union-find
+    min-label reference — on a long path (multi-round pointer jumping),
+    a star, random clusters and isolated nodes."""
     import random
 
     from flink_ml__spark.functions import curation
@@ -1844,22 +1844,27 @@ def test_duplicate_clusterer_frontier_matches_full_form(spark, monkeypatch):
              + [(1000, 1000 + i) for i in range(1, 8)]  # star
              + [(rng.randrange(2000, 2060), rng.randrange(2000, 2060))
                 for _ in range(80)])                    # random blob
+    node_ids = list(range(0, 2060, 7))
     pairs = spark.createDataFrame(edges, ["id_keep", "id_dup"])
-    nodes = spark.createDataFrame(
-        [(i,) for i in range(0, 2060, 7)], ["doc_id"])
+    nodes = spark.createDataFrame([(i,) for i in node_ids], ["doc_id"])
 
-    def run():
-        out = (curation.DuplicateClusterer().setMaxIter(30)
-               .cluster(pairs, nodes=nodes))
-        return {r["doc_id"]: r["cluster_id"] for r in out.collect()}
+    parent = {i: i for e in edges for i in e}
+    parent.update({i: i for i in node_ids})
 
-    monkeypatch.setattr(curation, "_CC_BROADCAST_ROWS", 0)   # full form
-    full = run()
-    # force the delta branch on EVERY eligible round (factor 0 defeats
-    # the sparsity gate), so the equivalence is actually exercised
-    monkeypatch.setattr(curation, "_CC_BROADCAST_ROWS", 1 << 30)
-    monkeypatch.setattr(curation, "_CC_DELTA_FACTOR", 0)
-    delta = run()
-    assert delta == full
+    def find(i):
+        while parent[i] != i:
+            parent[i] = parent[parent[i]]
+            i = parent[i]
+        return i
+
+    for a, b in edges:
+        ra, rb = find(a), find(b)
+        parent[max(ra, rb)] = min(ra, rb)  # the root is the min id
+    want = {i: find(i) for i in parent}
+
+    out = (curation.DuplicateClusterer().setMaxIter(30)
+           .cluster(pairs, nodes=nodes))
+    got = {r["doc_id"]: r["cluster_id"] for r in out.collect()}
+    assert got == want
     # sanity: the path really is one component labeled by its min
-    assert all(delta[i] == 0 for i in range(41))
+    assert all(got[i] == 0 for i in range(41))

@@ -43,13 +43,33 @@ def test_params():
     assert (est.getK(), est.getM(), est.getTOL(), est.getMaxIter()) == (5, 1.5, 0.01, 7)
 
 
-def test_golden_centroids(spark):
+# the same fit to 16 significant digits — the driver-side and the
+# distributed epochs share one kernel and must both land here
+FULL_CENTROIDS = [
+    [1.1703795782382915, 1.4739341522644906],
+    [5.8931853703183785, 7.999351629330754],
+    [8.885817670521016, 10.667327421917477],
+]
+
+
+# _DRIVER_FIT_ROWS 0: every epoch is a mapInPandas job instead of a
+# driver-side call on the collected rows
+@pytest.mark.parametrize("driver_fit_rows", [None, 0],
+                         ids=["driver", "distributed"])
+def test_golden_centroids(spark, monkeypatch, driver_fit_rows):
+    from flink_ml__spark.operators import fcm
+
+    if driver_fit_rows is not None:
+        monkeypatch.setattr(fcm, "_DRIVER_FIT_ROWS", driver_fit_rows)
     model, _ = fit_model(spark)
     got = sorted(model.centroids)
     expected = sorted(GOLDEN_CENTROIDS)
     for g, e in zip(got, expected):
         assert math.isclose(g[0], e[0], abs_tol=1e-3), (got, expected)
         assert math.isclose(g[1], e[1], abs_tol=1e-3), (got, expected)
+    for g, e in zip(got, FULL_CENTROIDS):
+        assert math.isclose(g[0], e[0], abs_tol=1e-9), got
+        assert math.isclose(g[1], e[1], abs_tol=1e-9), got
 
 
 def test_cluster_assignments(spark):

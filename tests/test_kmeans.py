@@ -16,16 +16,24 @@ def _blob_df(spark):
     return spark.createDataFrame(rows, "embedding array<double>")
 
 
-def test_kmeans_separates_blobs(spark):
+# initSampleSize 8 < 40 rows: the fit runs its epochs as mapInPandas
+# jobs instead of on the collected sample — both must land on the goldens
+@pytest.mark.parametrize("sample_size", [None, 8],
+                         ids=["driver", "distributed"])
+def test_kmeans_separates_blobs(spark, sample_size):
     df = _blob_df(spark)
-    model = KMeans().setK(2).setSeed(7).fit(df)
+    est = KMeans().setK(2).setSeed(7)
+    if sample_size is not None:
+        est.setInitSampleSize(sample_size)
+    model = est.fit(df)
     out = model.transform(df).collect()
     lo = {r["prediction"] for r in out if r["embedding"][0] < 5}
     hi = {r["prediction"] for r in out if r["embedding"][0] > 5}
     assert len(lo) == 1 and len(hi) == 1 and lo != hi
     cents = sorted(model.centroids)
-    assert math.isclose(cents[0][0], 0.095, abs_tol=1e-6)
-    assert math.isclose(cents[1][0], 10.095, abs_tol=1e-6)
+    for got, want in zip(cents, [[0.095, 0.05], [10.095, 10.05]]):
+        for g, w in zip(got, want):
+            assert math.isclose(g, w, abs_tol=1e-9), cents
 
 
 def test_kmeans_deterministic_across_partitioning(spark):

@@ -23,6 +23,12 @@ def _mixed_df(spark):
     return spark.createDataFrame(vals, "x double")
 
 
+def _int_df(spark):
+    # integer-typed: both routes must aggregate the column cast to double
+    vals = [(i % 89 - 40,) for i in range(1200)] + [(None,), (2 ** 40,)]
+    return spark.createDataFrame(vals, "x long")
+
+
 def _reference(df, probs):
     row = df.agg(F.percentile(
         F.col("x").cast("double"),
@@ -34,10 +40,10 @@ def _reference(df, probs):
 def test_both_routes_bit_identical(spark, force_small, monkeypatch):
     monkeypatch.setattr(
         quantiles, "_SMALL_INPUT_BYTES", (1 << 62) if force_small else 0)
-    df = _mixed_df(spark)
-    got = exact_percentiles(df, "x", GRID)
-    ref = _reference(df, GRID)
-    assert got == ref  # exact equality: both replay the same arithmetic
+    for df in (_mixed_df(spark), _int_df(spark)):
+        got = exact_percentiles(df, "x", GRID)
+        ref = _reference(df, GRID)
+        assert got == ref  # exact equality: both replay the same arithmetic
 
 
 @pytest.mark.parametrize("force_small", [True, False])
