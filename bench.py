@@ -1,7 +1,8 @@
 """Benchmark harness: runs the headline queries at $SPARK_GRAFT_SF_DIR
-(default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints ONE
-JSON line ``{"metric": ..., "value": total_sec, "unit": "sec",
-"queries": {name: sec}, "sf": ...}``.
+(default: the sf0.1 test tables) on a session sized to the host
+(local[N] over the usable cores; $SPARK_GRAFT_CPUS overrides N) and
+prints ONE JSON line ``{"metric": ..., "value": total_sec, "unit":
+"sec", "queries": {name: sec}, "sf": ...}``.
 
 Each query is forced through the noop sink (full computation, no
 materialization cost) so timings measure the engine, not the collect.
@@ -284,15 +285,12 @@ def main() -> None:
     T_START = time.perf_counter()
 
     from flink_ml__spark.plans import QUERIES
-    from flink_ml__spark.session import get_spark
+    from flink_ml__spark.session import get_spark, session_size
 
-    # One JVM runs ~160 queries x 3 reps; at the 16g default the old
-    # heap fills with broadcast/code-cache debris and late queries pay
-    # GC pauses the same query never sees isolated (measured: 7.7 s
-    # in-session vs 2.1 s isolated for dedup_minhash_documents, r07).
-    # A larger heap + explicit GC between reps keeps in-session
-    # timings close to the isolated truth (tools/bench_isolated.py).
-    os.environ.setdefault("SPARK_DRIVER_MEM", "48g")
+    # the session is sized to the host (session.host_size; the
+    # SPARK_GRAFT_CPUS / SPARK_DRIVER_MEM env vars override it). One JVM
+    # runs every query x 3 reps, so an explicit GC between reps keeps
+    # rep N's debris out of rep N+1's timings.
     spark = get_spark("flink_ml__spark-bench")
     sf = SF_DIR.rstrip("/").rsplit("sf", 1)[-1]
     all_queries = dict(QUERIES)
@@ -350,7 +348,7 @@ def main() -> None:
             # local[8] scaling run must not label its map "cpus": 32
             # (r12 verdict item 4 — metadata-only, but it breaks mover
             # classification between maps taken at different widths)
-            "cpus": int(os.environ.get("SPARK_GRAFT_CPUS", "32")),
+            "cpus": int(session_size()[0]),
             "host_cpus": os.cpu_count(),
             "wall_sec": round(time.perf_counter() - T_START, 1),
         },

@@ -25,6 +25,7 @@ and results remain plain-SQL comparable.
 from __future__ import annotations
 
 import json
+import math
 import os
 import time
 
@@ -208,8 +209,6 @@ class HasRelativeError(Params):
         ``percentile`` at relativeError 0, else ``approx_percentile``
         with the matching Greenwald-Khanna accuracy. ``pct`` is a float
         or a list of floats (one sketch serving all cut points)."""
-        import math
-
         if isinstance(pct, (list, tuple)):
             p_sql = "array(" + ", ".join(repr(float(p)) for p in pct) + ")"
         else:
@@ -399,6 +398,71 @@ def as_double_array(df: DataFrame, col: str) -> F.Column:
     if isinstance(dtype, T.ArrayType):
         return F.col(col).cast(T.ArrayType(T.DoubleType()))
     return F.array(F.col(col).cast("double"))
+
+
+def sql_double(x: float | None) -> str:
+    """SQL text for the double ``x`` that parses back to the same bits.
+
+    Hot per-row projections (fitted applies with folded tables, score
+    formulas) are built as ONE SQL string passed to ONE ``F.expr``: the
+    Column API costs a driver→JVM py4j round trip per ``F.lit``, per
+    operator and per function, hundreds for a 32-bucket table. The
+    rendered expression keeps the Column build's operand order, so the
+    optimized plan — and every output bit — is unchanged.
+
+    Bit-exactness contract: ``repr`` is the shortest decimal that
+    round-trips a Python float, and Spark parses a ``D``-suffixed
+    literal with ``Double.parseDouble``, so ``F.expr(sql_double(x))``
+    evaluates to exactly ``x`` (``-0.0`` and subnormals included).
+    NaN and ±Infinity have no literal form: they render as a cast the
+    optimizer folds back to the literal. ``None`` renders a typed NULL.
+    Negative values are parenthesised so ``a - (-1.0D)`` never lexes
+    as a ``--`` comment.
+    """
+    if x is None:
+        return "CAST(NULL AS DOUBLE)"
+    x = float(x)
+    if math.isnan(x):
+        return "CAST('NaN' AS DOUBLE)"
+    if math.isinf(x):
+        return f"CAST('{'' if x > 0 else '-'}Infinity' AS DOUBLE)"
+    text = repr(x) + "D"
+    return f"({text})" if text.startswith("-") else text
+
+
+def sql_sum(terms) -> str:
+    """SQL for Python's ``sum(terms)`` over Columns, in its exact shape
+    ``((t0 + 0) + t1) + ...`` (``0 + t0`` builds ``t0 + 0``), so a
+    projection moved to SQL text keeps its operand order and its bits.
+    ``0`` for no terms, as ``sum([])``."""
+    out = "0"
+    for i, t in enumerate(terms):
+        out = f"({t} + 0)" if i == 0 else f"({out} + {t})"
+    return out
+
+
+def sql_ident(name: str) -> str:
+    """``name`` as a backtick-quoted SQL identifier (one column, never
+    a nested-field path)."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def double_array_sql(df: DataFrame, col: str,
+                     helper: str) -> tuple[DataFrame, str]:
+    """``(df', sql)``: SQL text reading ``col`` of ``df'`` as
+    ``array<double>`` — the SQL twin of :func:`as_double_array`.
+
+    ``VectorUDT`` has no SQL cast, so a vector column is first projected
+    through :func:`as_double_array` into the column ``helper`` (callers
+    name it with their uid and drop it from their output); other types
+    cast inline and ``df'`` is ``df``."""
+    dtype = df.schema[col].dataType
+    if isinstance(dtype, VectorUDT):
+        return (df.withColumn(helper, as_double_array(df, col)),
+                sql_ident(helper))
+    if isinstance(dtype, T.ArrayType):
+        return df, f"CAST({sql_ident(col)} AS ARRAY<DOUBLE>)"
+    return df, f"array(CAST({sql_ident(col)} AS DOUBLE))"
 
 
 def array_width(df: DataFrame, col: str) -> int:

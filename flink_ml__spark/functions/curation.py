@@ -1398,8 +1398,7 @@ class PerplexityBucketer(AlgoOperator, HasRelativeError):
                    f"* 1e6 + 0.5) / 1e6")
         t1, t2 = (df
                   .agg(F.expr(self._percentile_sql(rounded, 1.0 - hf)),
-                       F.expr(self._percentile_sql(rounded, tf)))
-                  .first())
+                       F.expr(self._percentile_sql(rounded, tf))).collect()[0])
         bucket = (F.when(sc.isNull(), F.lit(None).cast("string"))
                   .when(sc >= F.lit(t1), F.lit("head"))
                   .when(sc <= F.lit(t2), F.lit("tail"))
@@ -3756,7 +3755,7 @@ class PaddingWasteProfiler(AlgoOperator):
                                           F.lit(acc))
                 row = base.agg(F.transform(
                     pct, lambda e: F.floor(e * 1e6 + 0.5) / 1e6)
-                    .alias("bs")).first()
+                    .alias("bs")).collect()[0]
                 bs = list(row["bs"] or [])
         else:
             bs = []

@@ -796,7 +796,7 @@ class MinHashTopK(AlgoOperator, HasInputCol, HasIdColMixin, HasSeed):
                  .groupBy("__b").agg(F.count(F.lit(1)).alias("__n")))
         row = sizes.agg(F.approx_percentile(
             F.col("__n").cast("double"), F.lit(float(quantile)),
-            F.lit(10000)).alias("q")).first()
+            F.lit(10000)).alias("q")).collect()[0]
         q = row["q"] if row else None
         return max(int(floor), int(math.ceil(q))) if q else int(floor)
 

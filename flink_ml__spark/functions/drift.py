@@ -153,7 +153,7 @@ class DriftMonitor(AlgoOperator, HasRelativeError):
         # list form shares a single sketch across all k-1 cut points)
         row = reference.agg(*[
             F.expr(self._percentile_sql(c, pcts)).alias(f"e_{ci}")
-            for ci, c in enumerate(cols)]).first()
+            for ci, c in enumerate(cols)]).collect()[0]
         out: dict[str, list[float]] = {}
         for ci, c in enumerate(cols):
             edges = list(row[f"e_{ci}"]) if row[f"e_{ci}"] is not None \

@@ -212,7 +212,7 @@ class TargetEncoder(Estimator, HasInputCol, HasOutputCol):
         t = F.col(self.getOrDefault(self.targetCol)).cast("double")
         m = self.getOrDefault(self.smoothing)
         fitted = df.filter(t.isNotNull() & F.col(c).isNotNull())
-        prior_row = fitted.agg(F.avg(t).alias("p")).first()
+        prior_row = fitted.agg(F.avg(t).alias("p")).collect()[0]
         if prior_row["p"] is None:
             raise ValueError("no non-null (category, target) rows to fit on")
         prior = float(prior_row["p"])
@@ -371,7 +371,7 @@ class RareCategoryCollapser(Estimator, HasInputCol, HasOutputCol):
                   .agg(F.count(F.lit(1)).alias("__n")))
         frac = self.getOrDefault(self.minFraction)
         if frac > 0:
-            total = counts.agg(F.sum("__n").alias("t")).first()["t"] or 0
+            total = counts.agg(F.sum("__n").alias("t")).collect()[0]["t"] or 0
             floor = frac * total
             kept = counts.filter(F.col("__n") >= floor)
         else:
@@ -453,7 +453,7 @@ class CountEncoder(Estimator, HasInputCol, HasOutputCol):
         counts = (df.filter(F.col(c).isNotNull())
                   .groupBy(F.col(c).cast("string").alias("__cat"))
                   .agg(F.count(F.lit(1)).alias("__n")))
-        total = counts.agg(F.sum("__n").alias("t")).first()["t"] or 0
+        total = counts.agg(F.sum("__n").alias("t")).collect()[0]["t"] or 0
         if total == 0:
             raise ValueError(
                 f"CountEncoder: no non-null values in column {c!r} to "

@@ -34,6 +34,9 @@ from flink_ml__spark.base import (
     HasOutputCols,
     HasRelativeError,
     Model,
+    sql_double,
+    sql_ident,
+    sql_sum,
 )
 
 # strict yyyy-MM-dd guard, mirroring the reference's DATE_PATTERN
@@ -131,7 +134,7 @@ class MeanImputer(Estimator, _SingleColOutputParams):
     def fit(self, df: DataFrame) -> MeanImputerModel:
         row = df.agg(
             F.avg(F.col(self.getInputCol()).cast("double")).alias("mean")
-        ).first()
+        ).collect()[0]
         mean = row["mean"] if row["mean"] is not None else 0.0
         model = MeanImputerModel(float(mean))
         model._set(inputCol=self.getInputCol(), outputCol=self.getOutputCol())
@@ -187,7 +190,8 @@ class StandardScaler(Estimator, _SingleColOutputParams):
 
     def fit(self, df: DataFrame) -> StandardScalerModel:
         x = F.col(self.getInputCol()).cast("double")
-        row = df.agg(F.avg(x).alias("mean"), F.stddev_samp(x).alias("std")).first()
+        row = df.agg(F.avg(x).alias("mean"),
+                     F.stddev_samp(x).alias("std")).collect()[0]
         mean = row["mean"] if row["mean"] is not None else 0.0
         std = row["std"] if row["std"] is not None else 1.0
         model = StandardScalerModel(float(mean), float(std))
@@ -238,12 +242,13 @@ class AutoFeatureTransformer(AlgoOperator):
         out = df
         onehot_cols = []
         # one fused aggregation pass for every double column's mean —
-        # per-column .agg().first() would scan the input once per column
+        # per-column aggregates would scan the input once per column
         double_cols = [f.name for f in df.schema.fields
                        if isinstance(f.dataType, T.DoubleType)]
         means = {}
         if double_cols:
-            row = df.agg(*[F.avg(c).alias(c) for c in double_cols]).first()
+            row = df.agg(
+                *[F.avg(c).alias(c) for c in double_cols]).collect()[0]
             means = {c: (row[c] if row[c] is not None else 0.0)
                      for c in double_cols}
         for field in df.schema.fields:
@@ -357,7 +362,7 @@ class Winsorizer(Estimator, _SingleColOutputParams, HasRelativeError):
         c = self.getInputCol()
         row = df.agg(
             F.expr(self._percentile_sql(c, lo_p)).alias("lo"),
-            F.expr(self._percentile_sql(c, hi_p)).alias("hi")).first()
+            F.expr(self._percentile_sql(c, hi_p)).alias("hi")).collect()[0]
         if row["lo"] is None:
             raise ValueError("no non-null values to fit on")
         model = WinsorizerModel(float(row["lo"]), float(row["hi"]))
@@ -485,7 +490,7 @@ class MinMaxScaler(Estimator, _SingleColOutputParams):
 
     def fit(self, df: DataFrame) -> MinMaxScalerModel:
         x = F.col(self.getInputCol()).cast("double")
-        row = df.agg(F.min(x).alias("lo"), F.max(x).alias("hi")).first()
+        row = df.agg(F.min(x).alias("lo"), F.max(x).alias("hi")).collect()[0]
         if row["lo"] is None:
             raise ValueError("no non-null values to fit on")
         model = MinMaxScalerModel(float(row["lo"]), float(row["hi"]))
@@ -536,7 +541,7 @@ class MaxAbsScaler(Estimator, _SingleColOutputParams):
 
     def fit(self, df: DataFrame) -> MaxAbsScalerModel:
         x = F.col(self.getInputCol()).cast("double")
-        row = df.agg(F.max(F.abs(x)).alias("m")).first()
+        row = df.agg(F.max(F.abs(x)).alias("m")).collect()[0]
         if row["m"] is None:
             raise ValueError("no non-null values to fit on")
         model = MaxAbsScalerModel(float(row["m"]))
@@ -633,8 +638,8 @@ class RobustScaler(Estimator, _SingleColOutputParams, HasRelativeError):
         if not 0.0 <= lo_p < hi_p <= 1.0:
             raise ValueError("need 0 <= lowerPct < upperPct <= 1")
         c = self.getInputCol()
-        row = df.agg(F.expr(
-            self._percentile_sql(c, [lo_p, 0.5, hi_p])).alias("q")).first()
+        row = df.agg(F.expr(self._percentile_sql(
+            c, [lo_p, 0.5, hi_p])).alias("q")).collect()[0]
         if row["q"] is None or row["q"][1] is None:
             raise ValueError("no non-null values to fit on")
         lo, med, hi = (float(v) for v in row["q"])
@@ -714,7 +719,8 @@ class QuantileDiscretizer(Estimator, _SingleColOutputParams,
         n = self.getOrDefault(self.numBuckets)
         pcts = [i / n for i in range(1, n)]
         c = self.getInputCol()
-        row = df.agg(F.expr(self._percentile_sql(c, pcts)).alias("q")).first()
+        row = df.agg(
+            F.expr(self._percentile_sql(c, pcts)).alias("q")).collect()[0]
         if row["q"] is None or row["q"][0] is None:
             raise ValueError("no non-null values to fit on")
         edges: list[float] = []
@@ -798,14 +804,15 @@ class MadOutlierDetector(Estimator, _SingleColOutputParams,
 
     def fit(self, df: DataFrame) -> MadOutlierModel:
         c = self.getInputCol()
-        row = df.agg(F.expr(self._percentile_sql(c, 0.5)).alias("m")).first()
+        row = df.agg(
+            F.expr(self._percentile_sql(c, 0.5)).alias("m")).collect()[0]
         if row["m"] is None:
             raise ValueError("no non-null values to fit on")
         med = float(row["m"])
         dev = df.select(F.abs(F.col(c).cast("double") - F.lit(med))
                         .alias("__d"))
         row2 = dev.agg(
-            F.expr(self._percentile_sql("__d", 0.5)).alias("m")).first()
+            F.expr(self._percentile_sql("__d", 0.5)).alias("m")).collect()[0]
         model = MadOutlierModel(med, float(row2["m"]))
         model._set(inputCol=c, outputCol=self.getOutputCol())
         return model
@@ -968,7 +975,7 @@ class QuantileMatcherModel(Model, _SingleColOutputParams):
             acc = int(math.ceil(1.0 / self._relative_error))
             expr = (f"approx_percentile({col}, array("
                     f"{', '.join(map(repr, pcts))}), {acc})")
-            row = df.agg(F.expr(expr).alias("g")).first()
+            row = df.agg(F.expr(expr).alias("g")).collect()[0]
             grid = None if row["g"] is None else list(row["g"])
         else:
             # bit-identical Arrow replacement for the exact percentile
@@ -1187,12 +1194,14 @@ class RankGaussModel(AlgoOperator, HasInputCol, HasOutputCol):
         return list(self._z)
 
     def transform(self, df: DataFrame) -> DataFrame:
-        x = F.col(self.getInputCol()).cast("double")
-        bucket = sum((x > F.lit(e)).cast("int") for e in self._edges)
-        z_arr = F.array(*[F.lit(z) for z in self._z])
-        out = F.when(x.isNotNull(),
-                     F.element_at(z_arr, bucket + 1))
-        return df.withColumn(self.getOutputCol(), out)
+        # one SQL string, one py4j call (base.sql_double)
+        x = f"CAST({sql_ident(self.getInputCol())} AS DOUBLE)"
+        bucket = sql_sum(f"CAST(({x} > {sql_double(e)}) AS INT)"
+                         for e in self._edges)
+        z_arr = "array(" + ", ".join(sql_double(z) for z in self._z) + ")"
+        out = (f"CASE WHEN ({x} IS NOT NULL) "
+               f"THEN element_at({z_arr}, ({bucket} + 1)) END")
+        return df.withColumn(self.getOutputCol(), F.expr(out))
 
     def _save_model_data(self, path: str) -> None:
         import json
@@ -1296,8 +1305,8 @@ class RankGaussTransformer(AlgoOperator, HasInputCol, HasOutputCol):
             acc = int(round(1.0 / self.getOrDefault(self.relativeError)))
             pct = F.approx_percentile(x, probs, F.lit(acc))
             row = base.agg(
-                F.transform(pct,
-                            lambda e: (F.floor((e) * 1e6 + 0.5) / 1e6)).alias("es")).first()
+                F.transform(pct, lambda e: (F.floor((e) * 1e6 + 0.5) / 1e6))
+                .alias("es")).collect()[0]
             edges = list(row["es"] or [])
         if not edges:
             raise ValueError("no non-null values to fit on")

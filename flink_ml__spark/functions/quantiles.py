@@ -36,7 +36,11 @@ grid sizes at sf0.1 (see OPTIMIZATION_r12.md).
 Small inputs skip the Arrow path entirely: the Python round trip costs
 a fixed ~0.25 s, which exceeds the interpreted aggregate it replaces on
 tiny columns (measured r12: qini 0.99→1.10 s, lorenz 0.61→0.93 s,
-padding_waste 0.54→0.77 s). The routing reads the optimizer's
+padding_waste 0.54→0.77 s). Re-measured on a 4-core host at sf0.1
+(warm, 7 interleaved pairs, median JVM vs Arrow): lorenz 1.00 vs
+1.27 s, qini 1.19 vs 1.43 s, padding_waste 0.54 vs 0.78 s, so both
+routes stay, although rank_gauss's 60 k-row sf0.01 column, also under
+the switch, ran 0.91 vs 0.75 s. The routing reads the optimizer's
 driver-side size ESTIMATE for the projected column (no extra job);
 either branch returns the same bits — ``F.percentile`` IS the reference
 implementation the Arrow path was verified against — so the estimate
@@ -55,6 +59,8 @@ feeds the gather stays parallel. Callers that need bounded memory at
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
+
+from flink_ml__spark.base import sql_double
 
 # Below this optimizer size estimate for the projected column the JVM
 # aggregate wins (no Python task round trip). The estimate is
@@ -100,8 +106,9 @@ def exact_percentiles(df: DataFrame, col: Column | str,
               .filter(F.col("__x").isNotNull()))
 
     if _estimated_bytes(narrow) <= _SMALL_INPUT_BYTES:
-        row = narrow.agg(F.percentile(
-            "__x", F.array(*[F.lit(p) for p in ps])).alias("__es")).first()
+        pct = ", ".join(sql_double(p) for p in ps)
+        row = narrow.agg(
+            F.expr(f"percentile(__x, array({pct}), 1) AS __es")).collect()[0]
         es = row["__es"]
         return None if es is None else [float(v) for v in es]
 

@@ -185,7 +185,7 @@ class BM25Retriever(AlgoOperator, _MaterializeMixin, HasInputCol,
         # (zero-length included), total length comes from the postings
         # so a precomputed index never re-tokenizes the corpus
         n_docs = docs.count()
-        sum_dl = postings.agg(F.sum("__tf")).first()[0]
+        sum_dl = postings.agg(F.sum("__tf")).collect()[0][0]
         avgdl = (sum_dl or 0) / n_docs if n_docs else 0.0
 
         dfreq = postings.groupBy("__term").agg(
@@ -283,7 +283,7 @@ class QueryLikelihoodRetriever(BM25Retriever):
         if postings is None:
             postings = self.postings(docs)
 
-        total_tokens = postings.agg(F.sum("__tf")).first()[0] or 0
+        total_tokens = postings.agg(F.sum("__tf")).collect()[0][0] or 0
         if total_tokens == 0:
             raise ValueError("empty corpus: no tokens to model")
         # collection LM: p(t|C) = cf_t / total — O(vocab) rows

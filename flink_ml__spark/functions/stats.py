@@ -602,7 +602,7 @@ class _BinnedTwoSampleTest(AlgoOperator):
         d = (df.filter(x.isNotNull() & g.isin([ga, gb]))
              .select(x.alias("__x"), (g == ga).alias("__a")))
         lohi = d.agg(F.min("__x").alias("lo"),
-                     F.max("__x").alias("hi")).first()
+                     F.max("__x").alias("hi")).collect()[0]
         if lohi["lo"] is None:
             raise ValueError("no non-null values in either sample")
         lo, hi = float(lohi["lo"]), float(lohi["hi"])
@@ -2310,7 +2310,7 @@ class EmpiricalBayesRateShrinker(AlgoOperator):
         r = s / n
         m = base.agg(F.count(F.lit(1)).alias("n_groups"),
                      F.avg(r).alias("mean"),
-                     F.var_samp(r).alias("var")).first()
+                     F.var_samp(r).alias("var")).collect()[0]
         mean, var = m["mean"], m["var"]
         if (mean is None or var is None or var <= 0
                 or not 0 < mean < 1

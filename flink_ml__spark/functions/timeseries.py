@@ -419,9 +419,8 @@ class FunnelAnalyzer(AlgoOperator):
         per_user = self.transform(df)
         aggs = [F.count(F.col(f"t_step{i}")).alias(f"c{i}")
                 for i in range(1, len(steps) + 1)]
-        row = per_user.agg(*aggs)
+        counts = per_user.agg(*aggs).collect()[0]
         spark = df.sparkSession
-        counts = row.first()
         base = counts["c1"] or 0
         return spark.createDataFrame(
             [(i, steps[i - 1], int(counts[f"c{i}"]),

@@ -50,6 +50,9 @@ from flink_ml__spark.base import (
     HasOutputCol,
     HasTimeCol,
     HasWindows,
+    sql_double,
+    sql_ident,
+    sql_sum,
 )
 
 # average random-consistency index (``AHP.java:48``)
@@ -183,34 +186,35 @@ class AHP(AlgoOperator, AHPParams):
     def transform(self, df: DataFrame) -> DataFrame:
         cols, ahp_w = self._prepare()
         types = self.getIndicatorType()
-        x = [F.col(c).cast("double") for c in cols]
+        # every expression is SQL text, one F.expr each (base.sql_double)
+        x = [f"CAST({sql_ident(c)} AS DOUBLE)" for c in cols]
         n = len(cols)
 
         # pass 1: per-column min/max (``AHP.java:388-447``)
         stats = df.agg(
-            *[F.min(x[j]).alias(f"mn_{j}") for j in range(n)],
-            *[F.max(x[j]).alias(f"mx_{j}") for j in range(n)],
-        ).first().asDict()
+            *[F.expr(f"min({x[j]}) AS mn_{j}") for j in range(n)],
+            *[F.expr(f"max({x[j]}) AS mx_{j}") for j in range(n)],
+        ).collect()[0].asDict()
 
         # min-max normalization by indicator type (``AHP.java:370-379``)
         norm = []
         for j in range(n):
-            mn, mx = F.lit(stats[f"mn_{j}"]), F.lit(stats[f"mx_{j}"])
+            mn, mx = sql_double(stats[f"mn_{j}"]), sql_double(stats[f"mx_{j}"])
             if types[j] == 1:
-                norm.append((x[j] - mn) / (mx - mn))
+                norm.append(f"(({x[j]} - {mn}) / ({mx} - {mn}))")
             else:
-                norm.append((mx - x[j]) / (mx - mn))
+                norm.append(f"(({mx} - {x[j]}) / ({mx} - {mn}))")
 
         # pass 2: column sums S_j, Σ n·ln n, row count
         # (Σ p·ln p = T/S − ln S with p = norm/S; the 0-guard mirrors
         #  ``AHP.java:295-307``)
         agg2 = df.agg(
-            *[F.sum(norm[j]).alias(f"s_{j}") for j in range(n)],
-            *[F.sum(
-                F.when(norm[j] != 0, norm[j] * F.log(norm[j])).otherwise(0.0)
-            ).alias(f"t_{j}") for j in range(n)],
+            *[F.expr(f"sum({norm[j]}) AS s_{j}") for j in range(n)],
+            *[F.expr(f"sum(CASE WHEN ({norm[j]} != 0) "
+                     f"THEN ({norm[j]} * ln({norm[j]})) ELSE 0.0D END) "
+                     f"AS t_{j}") for j in range(n)],
             F.count(F.lit(1)).alias("cnt"),
-        ).first().asDict()
+        ).collect()[0].asDict()
 
         cnt = agg2["cnt"]
         k = 1.0 / math.log(cnt) if cnt > 1 else float("inf")
@@ -223,8 +227,9 @@ class AHP(AlgoOperator, AHPParams):
         entropy_w = [dj / total for dj in d]  # ``AHP.java:167-177``
 
         # score = Σ norm_ij · entropy_w_j · ahp_w_j (``AHP.java:181-198``)
-        score = sum(norm[j] * F.lit(entropy_w[j] * ahp_w[j]) for j in range(n))
-        return df.withColumn(self.getOutputCol(), score)
+        score = sql_sum(f"({norm[j]} * {sql_double(entropy_w[j] * ahp_w[j])})"
+                        for j in range(n))
+        return df.withColumn(self.getOutputCol(), F.expr(score))
 
 
 class OnlineAHP(AlgoOperator, AHPParams, HasWindows, HasTimeCol):

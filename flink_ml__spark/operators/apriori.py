@@ -139,7 +139,7 @@ class Apriori(AlgoOperator, AprioriParams):
             .persist(StorageLevel.MEMORY_AND_DISK))
         stats = baskets.agg(
             F.count(F.lit(1)).alias("n"),
-            F.max(F.size("__items")).alias("max_size")).first()
+            F.max(F.size("__items")).alias("max_size")).collect()[0]
         if (stats["max_size"] or 0) > self.getMaxBasketSize():
             raise ValueError(
                 f"basket exceeds maxBasketSize={self.getMaxBasketSize()}; "
@@ -222,7 +222,7 @@ class Apriori(AlgoOperator, AprioriParams):
                     re.escape(self.getItemSeparator())).alias("__items"))
         stats = baskets.agg(
             F.count(F.lit(1)).alias("n"),
-            F.max(F.size("__items")).alias("max_size")).first()
+            F.max(F.size("__items")).alias("max_size")).collect()[0]
         if (stats["max_size"] or 0) > self.getMaxBasketSize():
             raise ValueError(
                 f"basket exceeds maxBasketSize={self.getMaxBasketSize()}; "

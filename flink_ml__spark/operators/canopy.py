@@ -103,7 +103,7 @@ class Canopy(AlgoOperator, CanopyParams):
         # stays distributed
         small_pool = 200_000
         try:
-            head = pool.agg(*head_agg).first()
+            head = pool.agg(*head_agg).collect()[0]
             rounds_left = self.getMaxIter()
             while rounds_left > 0:
                 if head is None or head["c"] is None or head["n"] == 0:
@@ -123,7 +123,7 @@ class Canopy(AlgoOperator, CanopyParams):
                 # one job per round: next center + emptiness check in a
                 # single aggregation, which also populates the child
                 # cache before the parent is released
-                head = new_pool.agg(*head_agg).first()
+                head = new_pool.agg(*head_agg).collect()[0]
                 pool.unpersist()
                 pool = new_pool
         finally:

@@ -26,7 +26,8 @@ Scale shape (the FCM/MLlib treeAggregate pattern):
   into pure-Catalyst array expressions (distances via
   ``zip_with``/``aggregate``, argmin via ``array_position``) — a
   map-only whole-stage-codegen projection, no Python in the apply
-  path.
+  path. The projection is built as one SQL string (one py4j call,
+  ``base.sql_double`` literals) rather than ~k·dims Column calls.
 """
 
 from __future__ import annotations
@@ -44,7 +45,9 @@ from flink_ml__spark.base import (
     HasSeed,
     Model,
     as_double_array,
+    double_array_sql,
     map_partials,
+    sql_double,
 )
 
 
@@ -80,15 +83,22 @@ class KMeansParams(HasFeaturesCol, HasPredictionCol, HasMaxIter, HasSeed):
         return self._set(initSampleSize=int(v))
 
 
-def _dist_exprs(arr, centroids):
-    """Squared-euclidean distance of array column ``arr`` to every
-    centroid, as ONE Catalyst array expression (k literals folded)."""
-    return F.array(*[
-        F.aggregate(
-            F.zip_with(arr, F.array(*[F.lit(float(v)) for v in c]),
-                       lambda a, b: (a - b) * (a - b)),
-            F.lit(0.0), lambda acc, x: acc + x)
-        for c in centroids])
+def _vec_sql(c) -> str:
+    return "array(" + ", ".join(sql_double(v) for v in c) + ")"
+
+
+def _dist_sql(arr: str, centroids) -> str:
+    """Squared-euclidean distance of array expression ``arr`` to every
+    centroid, as ONE SQL array expression (k literal vectors folded)."""
+    return "array(" + ", ".join(
+        f"aggregate(zip_with({arr}, {_vec_sql(c)}, "
+        f"(x, y) -> ((x - y) * (x - y))), 0.0D, (x, y) -> (x + y))"
+        for c in centroids) + ")"
+
+
+def _nearest_sql(dists: str) -> str:
+    """0-based index of the smallest distance (ties: lowest index)."""
+    return f"(array_position({dists}, array_min({dists})) - 1)"
 
 
 class KMeansModel(Model, KMeansParams):
@@ -105,11 +115,19 @@ class KMeansModel(Model, KMeansParams):
     def centroids(self) -> list[list[float]]:
         return [list(c) for c in self._centroids]
 
+    def _features(self, df: DataFrame) -> tuple[DataFrame, str, str]:
+        """(df', features SQL, centroid-distance array SQL); a vector
+        features column leaves the helper ``__x_<uid>`` to drop."""
+        df, arr = double_array_sql(df, self.getFeaturesCol(),
+                                   f"__x_{self.uid}")
+        return df, arr, _dist_sql(arr, self._centroids)
+
     def transform(self, df: DataFrame) -> DataFrame:
-        arr = as_double_array(df, self.getFeaturesCol())
-        dists = _dist_exprs(arr, self._centroids)
-        nearest = (F.array_position(dists, F.array_min(dists)) - 1)
-        return df.withColumn(self.getPredictionCol(), nearest.cast("int"))
+        df2, _, dists = self._features(df)
+        nearest = _nearest_sql(dists)
+        return (df2.withColumn(self.getPredictionCol(),
+                               F.expr(f"CAST({nearest} AS INT)"))
+                .drop(f"__x_{self.uid}"))
 
     def prototypicality(self, df: DataFrame) -> DataFrame:
         """Appends ``predictionCol`` (nearest centroid) and
@@ -125,35 +143,29 @@ class KMeansModel(Model, KMeansParams):
         Map-only: distances AND cosines fold the k centroids in as
         literals — one codegen projection, no join, no shuffle. Zero
         vectors (no direction) get NULL prototypicality."""
-        arr = as_double_array(df, self.getFeaturesCol())
-        dists = _dist_exprs(arr, self._centroids)
-        nearest = (F.array_position(dists, F.array_min(dists)) - 1)
-        dots = F.array(*[
-            F.aggregate(
-                F.zip_with(arr,
-                           F.array(*[F.lit(float(v)) for v in c]),
-                           lambda a, b: a * b),
-                F.lit(0.0), lambda acc, x: acc + x)
-            for c in self._centroids])
-        cnorms = F.array(*[
-            F.lit(float(sum(v * v for v in c) ** 0.5))
-            for c in self._centroids])
-        xnorm = F.sqrt(F.aggregate(
-            F.transform(arr, lambda x: x * x), F.lit(0.0),
-            lambda acc, x: acc + x))
-        idx = (nearest + 1).cast("int")
-        denom = xnorm * F.element_at(cnorms, idx)
-        proto = F.when(denom > 0,
-                       F.element_at(dots, idx) / denom)
-        return (df.withColumn(self.getPredictionCol(),
-                              nearest.cast("int"))
-                .withColumn("prototypicality", proto))
+        df2, arr, dists = self._features(df)
+        nearest = _nearest_sql(dists)
+        dots = "array(" + ", ".join(
+            f"aggregate(zip_with({arr}, {_vec_sql(c)}, (x, y) -> (x * y)), "
+            f"0.0D, (x, y) -> (x + y))" for c in self._centroids) + ")"
+        cnorms = "array(" + ", ".join(
+            sql_double(float(sum(v * v for v in c) ** 0.5))
+            for c in self._centroids) + ")"
+        xnorm = (f"SQRT(aggregate(transform({arr}, x -> (x * x)), 0.0D, "
+                 f"(x, y) -> (x + y)))")
+        idx = f"CAST(({nearest} + 1) AS INT)"
+        denom = f"({xnorm} * element_at({cnorms}, {idx}))"
+        proto = (f"CASE WHEN ({denom} > 0) "
+                 f"THEN (element_at({dots}, {idx}) / {denom}) END")
+        return (df2.withColumn(self.getPredictionCol(),
+                               F.expr(f"CAST({nearest} AS INT)"))
+                .withColumn("prototypicality", F.expr(proto))
+                .drop(f"__x_{self.uid}"))
 
     def wssse(self, df: DataFrame) -> float:
         """Within-set sum of squared errors — one scan aggregate."""
-        arr = as_double_array(df, self.getFeaturesCol())
-        dists = _dist_exprs(arr, self._centroids)
-        row = df.agg(F.sum(F.array_min(dists)).alias("c")).first()
+        df2, _, dists = self._features(df)
+        row = df2.agg(F.expr(f"sum(array_min({dists})) AS c")).collect()[0]
         return float(row["c"]) if row["c"] is not None else 0.0
 
     def _save_model_data(self, path: str) -> None:

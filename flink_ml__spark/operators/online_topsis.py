@@ -35,7 +35,6 @@ from flink_ml__spark.base import (
     HasWindows,
     Model,
     as_double_array,
-    array_width,
 )
 from flink_ml__spark.operators.topsis import Topsis, TopsisParams
 
@@ -99,17 +98,15 @@ class OnlineTopsis(Estimator, OnlineTopsisParams):
 
     def window_means(self, df: DataFrame) -> DataFrame:
         """Per-window mean rows ``(data, timestamp, minTimestamp)`` — the
-        incremental half of fit. Works unchanged on a streaming
+        incremental half of fit. ``data`` holds one mean per criteria
+        type (TOPSIS's one-type-per-feature contract), so the plan is
+        built without an action and works unchanged on a streaming
         DataFrame (the groupBy(window) aggregation is declarative), which
         is how ``streaming.stream_online_topsis_fit`` reuses it."""
         arr = as_double_array(df, self.getFeaturesCol())
-        if df.isStreaming:
-            # array_width samples a row — an action, illegal on streams;
-            # TOPSIS requires one criteria type per feature, so the
-            # validated criteriaTypes length IS the feature width
-            dims = len(self.getCriteriaTypes())
-        else:
-            dims = array_width(df, self.getFeaturesCol())
+        # TOPSIS requires one criteria type per feature, so the width
+        # comes from the params: no action, batch and stream alike
+        dims = len(self.getCriteriaTypes())
         idc = F.col(self.getIdCol())
 
         windows = self.getWindows()

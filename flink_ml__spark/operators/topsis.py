@@ -39,7 +39,9 @@ from flink_ml__spark.base import (
     AlgoOperator,
     HasFeaturesCol,
     HasPredictionCol,
-    as_double_array,
+    double_array_sql,
+    sql_double,
+    sql_sum,
 )
 
 EXTREMELY_LARGE = 1
@@ -135,22 +137,25 @@ class Topsis(AlgoOperator, TopsisParams):
         types = self.getCriteriaTypes()
         weights = self.getWeights()
         n = len(types)
-        arr = as_double_array(df, self.getFeaturesCol())
-        x = [F.element_at(arr, j + 1) for j in range(n)]
+        # every expression is SQL text, one F.expr each (base.sql_double);
+        # a vector features column goes through a helper column
+        helper = f"__x_{self.uid}"
+        data, arr = double_array_sql(df, self.getFeaturesCol(), helper)
+        x = [f"element_at({arr}, {j + 1})" for j in range(n)]
 
         # -- pass 1: stats needed by positive-ization -----------------------
-        aggs, names = [], []
+        aggs = []
         for j, t in enumerate(types):
             if t == EXTREMELY_SMALL:
-                aggs.append(F.max(x[j]).alias(f"max_{j}"))
+                aggs.append(f"max({x[j]}) AS max_{j}")
             elif t == INTERMEDIATE:
-                aggs.append(
-                    F.max(F.abs(x[j] - F.lit(self.getBestValue())))
-                    .alias(f"maxdev_{j}"))
+                best = sql_double(self.getBestValue())
+                aggs.append(f"max(abs(({x[j]} - {best}))) AS maxdev_{j}")
             elif t == INTERVAL:
-                aggs.append(F.min(x[j]).alias(f"min_{j}"))
-                aggs.append(F.max(x[j]).alias(f"max_{j}"))
-        stats = df.agg(*aggs).first().asDict() if aggs else {}
+                aggs.append(f"min({x[j]}) AS min_{j}")
+                aggs.append(f"max({x[j]}) AS max_{j}")
+        stats = (data.agg(*[F.expr(a) for a in aggs]).collect()[0].asDict()
+                 if aggs else {})
 
         # -- positive-ization (``Topsis.java:344-384``) ---------------------
         v = []
@@ -158,25 +163,28 @@ class Topsis(AlgoOperator, TopsisParams):
             if t == EXTREMELY_LARGE:
                 v.append(x[j])
             elif t == EXTREMELY_SMALL:
-                v.append(F.lit(stats[f"max_{j}"]) - x[j])
+                v.append(f"({sql_double(stats[f'max_{j}'])} - {x[j]})")
             elif t == INTERMEDIATE:
-                best = self.getBestValue()
-                v.append(1 - F.abs(x[j] - F.lit(best)) / F.lit(stats[f"maxdev_{j}"]))
+                best = sql_double(self.getBestValue())
+                maxdev = sql_double(stats[f"maxdev_{j}"])
+                v.append(f"(1 - (abs(({x[j]} - {best})) / {maxdev}))")
             else:  # INTERVAL
                 lo, hi = self.getIntervalValue()
-                m = max(lo - stats[f"min_{j}"], stats[f"max_{j}"] - hi)
-                v.append(
-                    F.when(x[j] < lo, 1 - (F.lit(lo) - x[j]) / F.lit(m))
-                    .when(x[j] <= hi, F.lit(1.0))
-                    .otherwise(1 - (x[j] - F.lit(hi)) / F.lit(m)))
+                m = sql_double(
+                    max(lo - stats[f"min_{j}"], stats[f"max_{j}"] - hi))
+                lo, hi = sql_double(lo), sql_double(hi)
+                v.append(f"CASE WHEN ({x[j]} < {lo}) "
+                         f"THEN (1 - (({lo} - {x[j]}) / {m})) "
+                         f"WHEN ({x[j]} <= {hi}) THEN 1.0D "
+                         f"ELSE (1 - (({x[j]} - {hi}) / {m})) END")
 
         # -- pass 2 (fused): sum(v^2) + min/max(v) per column ---------------
         aggs2 = []
         for j in range(n):
-            aggs2.append(F.sum(v[j] * v[j]).alias(f"ssq_{j}"))
-            aggs2.append(F.max(v[j]).alias(f"vmax_{j}"))
-            aggs2.append(F.min(v[j]).alias(f"vmin_{j}"))
-        s = df.agg(*aggs2).first().asDict()
+            aggs2.append(f"sum(({v[j]} * {v[j]})) AS ssq_{j}")
+            aggs2.append(f"max({v[j]}) AS vmax_{j}")
+            aggs2.append(f"min({v[j]}) AS vmin_{j}")
+        s = data.agg(*[F.expr(a) for a in aggs2]).collect()[0].asDict()
         if s.get("ssq_0") is None and s.get("vmax_0") is None:
             # empty input (or an entirely NULL feature column): no
             # stats exist — emit the score column as NULL instead of
@@ -196,9 +204,12 @@ class Topsis(AlgoOperator, TopsisParams):
             zworst.append(lo)
 
         # -- final score projection -----------------------------------------
-        d_best = sum(
-            (F.lit(zbest[j]) - v[j] * F.lit(scale[j])) ** 2 for j in range(n))
-        d_worst = sum(
-            (F.lit(zworst[j]) - v[j] * F.lit(scale[j])) ** 2 for j in range(n))
-        score = F.sqrt(d_worst) / (F.sqrt(d_best) + F.sqrt(d_worst))
-        return df.withColumn(self.getPredictionCol(), score)
+        def dist(ideal):
+            return sql_sum(f"POWER(({sql_double(ideal[j])} - "
+                           f"({v[j]} * {sql_double(scale[j])})), 2)"
+                           for j in range(n))
+
+        d_best, d_worst = dist(zbest), dist(zworst)
+        score = f"(SQRT({d_worst}) / (SQRT({d_best}) + SQRT({d_worst})))"
+        return (data.withColumn(self.getPredictionCol(), F.expr(score))
+                .drop(helper))

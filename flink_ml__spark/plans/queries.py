@@ -530,7 +530,7 @@ def q_pca_invariants_embeddings(spark, sf_dir):
     for i in range(k):
         c = F.element_at("pca", i + 1)
         aggs += [F.var_samp(c).alias(f"v{i}")]
-    row = proj.agg(*aggs).first()
+    row = proj.agg(*aggs).collect()[0]
     for i in range(k):
         if abs(row[f"v{i}"] - ev[i]) > 1e-6 * max(abs(ev[i]), 1e-12):
             driver_viol.append((f"variance_{i}", float(row[f"v{i}"])))
@@ -8951,7 +8951,7 @@ def q_unimax_alloc_documents(spark, sf_dir):
 
     docs = load_table(spark, "documents", sf_dir)
     total = (docs.filter(F.col("source").isNotNull())
-             .agg(F.sum("n_chars")).first()[0])
+             .agg(F.sum("n_chars")).collect()[0][0])
     return (UniMaxAllocator().setGroupCol("source")
             .setTokenCol("n_chars").setMaxEpochs(1.2)
             .setBudget(int(1.15 * float(total)))

@@ -57,6 +57,28 @@ def _pin_session_conf(spark: SparkSession,
         spark.conf.set(k, v)
 
 
+# parquet schemas already inferred in this process: path -> (the file's
+# (st_size, st_mtime_ns, st_ino) when inferred, schema); one entry per
+# path, replaced when the file changes
+_SCHEMAS: dict[str, tuple[tuple, T.StructType]] = {}
+
+
+def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)``, reusing a schema inferred earlier
+    for the same file instead of reading its footer again."""
+    try:
+        st = os.stat(path)
+    except OSError:  # not a local path: no identity to key on
+        return spark.read.parquet(path)
+    ident = (st.st_size, st.st_mtime_ns, st.st_ino)
+    hit = _SCHEMAS.get(path)
+    if hit is not None and hit[0] == ident:
+        return spark.read.schema(hit[1]).parquet(path)
+    df = spark.read.parquet(path)
+    _SCHEMAS[path] = (ident, df.schema)
+    return df
+
+
 def load_table(spark: SparkSession, name: str, sf_dir: str | None = None) -> DataFrame:
     """Load one test table as a distributed parquet scan.
 
@@ -66,14 +88,25 @@ def load_table(spark: SparkSession, name: str, sf_dir: str | None = None) -> Dat
     event-time semantics depend on them. A session that carried
     different values is overridden with a ``RuntimeWarning``; pass a
     dedicated session (``flink_ml__spark.session.get_spark``) if those
-    confs must not change."""
+    confs must not change.
+
+    Schema memo: the first load of a file infers its schema from the
+    parquet footer (a Spark job, ~70 ms on a 4-core host); later loads
+    in the same process pass that schema to ``spark.read.schema``
+    (~10 ms, no job). The memo
+    is keyed by the path's ``(path, st_size, st_mtime_ns, st_ino)``, so
+    a file rewritten at the same path — even with another schema — gets
+    a new key and is inferred again. A dataset directory is keyed by the
+    directory's own stat, which changes when files are added, removed or
+    renamed in it (Spark's overwrite recreates the directory); a path
+    ``os.stat`` cannot see (a remote URI) is inferred every time."""
     sf_dir = sf_dir or DEFAULT_SF_DIR
     _pin_session_conf(spark)
     path = os.path.join(sf_dir, f"{name}.parquet")
     if name == "events":
         _pin_session_conf(
             spark, {"spark.sql.legacy.parquet.nanosAsLong": "true"})
-        df = spark.read.parquet(path)
+        df = _read_parquet(spark, path)
         if isinstance(df.schema["ts"].dataType, T.LongType):
             # integer division: `/` goes through double and epoch-nanos
             # (~1.7e18) exceed double's 2^53 exact range, silently
@@ -87,7 +120,7 @@ def load_table(spark: SparkSession, name: str, sf_dir: str | None = None) -> Dat
             # (above) the cast is a pure re-tag, not a wall-clock shift
             df = df.withColumn("ts", F.col("ts").cast("timestamp"))
         return df
-    return spark.read.parquet(path)
+    return _read_parquet(spark, path)
 
 
 def read_csv(spark: SparkSession, path: str, *, header: bool = True,
@@ -198,7 +231,7 @@ def zorder_key(df: DataFrame, cols: list[str], *, bits: int = 8):
     for c in cols:
         aggs += [F.min(F.col(c).cast("double")).alias(f"__mn_{c}"),
                  F.max(F.col(c).cast("double")).alias(f"__mx_{c}")]
-    row = df.agg(*aggs).first()
+    row = df.agg(*aggs).collect()[0]
     stats = {c: (row[f"__mn_{c}"], row[f"__mx_{c}"]) for c in cols}
     n_cells = 1 << bits
     key = F.lit(0).cast("bigint")

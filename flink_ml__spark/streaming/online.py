@@ -518,7 +518,7 @@ def stream_weighted_sample(stream_df: DataFrame, sampler,
     """
     kept = sampler.transform(reference).select(
         (F.floor((F.col("sample_key")) * 1e12 + 0.5) / 1e12).alias("__k"))
-    tau = kept.agg(F.min("__k").alias("t")).first()["t"]
+    tau = kept.agg(F.min("__k").alias("t")).collect()[0]["t"]
     if tau is None:
         raise ValueError("reference yielded no sampleable rows "
                          "(all weights NULL/non-positive?)")
@@ -1025,7 +1025,7 @@ def stream_ks_monitor(stream_df: DataFrame, time_col: str,
     row = reference.agg(
         F.expr(f"percentile({value_col}, array({pcts}))").alias("e"),
         F.max(x).alias("mx"),
-        F.count(x).alias("n")).first()
+        F.count(x).alias("n")).collect()[0]
     if row["e"] is None or row["e"][0] is None:
         raise ValueError("reference has no non-null values")
     # the reference MAX is appended as a final evaluation point:
@@ -1040,7 +1040,7 @@ def stream_ks_monitor(stream_df: DataFrame, time_col: str,
              + [round(float(row["mx"]), 6)])
     ref_row = reference.agg(
         *[F.sum((x <= F.lit(e)).cast("long")).alias(f"c{j}")
-          for j, e in enumerate(edges)]).first()
+          for j, e in enumerate(edges)]).collect()[0]
     ref_n = int(row["n"])
     ref_cdf = [ref_row[f"c{j}"] / ref_n for j in range(len(edges))]
 

@@ -98,6 +98,17 @@ def test_too_few_points(spark):
         FCM().setK(3).fit(df)
 
 
+def test_null_features_are_dropped(spark):
+    """A row with NULL features is left out of the fit, as KMeans leaves
+    it out: 5 rows with one NULL fit the same centroids as the 4 rows."""
+    rows = [([1.0, 2.0],), ([1.5, 1.8],), ([8.0, 8.0],), ([9.0, 11.0],)]
+    schema = "features array<double>"
+    est = FCM().setK(2).setSeed(7).setMaxIter(20)
+    with_null = est.fit(spark.createDataFrame(rows + [(None,)], schema))
+    without = est.fit(spark.createDataFrame(rows, schema))
+    assert sorted(with_null.centroids) == sorted(without.centroids)
+
+
 def test_save_load(spark, tmp_path):
     model, df = fit_model(spark)
     path = str(tmp_path / "fcm_model")

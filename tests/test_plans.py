@@ -12,9 +12,21 @@ from flink_ml__spark.plans import QUERIES
 SF = "/root/testdata/sf0.001"
 
 
+# scan metadata (ReadSchema, PushedFilters) is abbreviated to this
+# many characters in a plan string; Spark's default of 100 cuts a
+# 6-column ReadSchema mid-name, and a cut schema matches no regex
+_METADATA_CHARS = "100000"
+
+
 def _plan(spark, name):
-    return (QUERIES[name](spark, SF)
-            ._jdf.queryExecution().executedPlan().toString())
+    qe = QUERIES[name](spark, SF)._jdf.queryExecution()
+    key = "spark.sql.maxMetadataStringLength"
+    old = spark.conf.get(key)
+    spark.conf.set(key, _METADATA_CHARS)
+    try:
+        return qe.executedPlan().toString()
+    finally:
+        spark.conf.set(key, old)
 
 
 def _read_schemas(plan):
@@ -23,11 +35,46 @@ def _read_schemas(plan):
 
 def test_ahp_scan_prunes_columns(spark):
     plan = _plan(spark, "ahp_score_lineitem")
+    schemas = _read_schemas(plan)
+    assert schemas, plan
     # lineitem has 16 columns; AHP needs its 4 inputs + 2 keys
-    for schema in _read_schemas(plan):
+    for schema in schemas:
         cols = {c.split(":")[0] for c in schema.split(",") if c}
         assert cols <= {"l_orderkey", "l_linenumber", "l_quantity",
                         "l_extendedprice", "l_discount", "l_tax"}, cols
+
+
+# Spark jobs each reference query launches while it is BUILT: its fits
+# and stats passes run eagerly, the sink runs later and is not counted.
+# An eager one-row aggregate is 2 jobs (AQE's shuffle map stage, then
+# the result), 3 over a grouped input; a hidden new action moves a
+# count and fails here.
+BUILD_JOBS = {
+    "ahp_score_lineitem": 4,            # min/max, then sums
+    "topsis_score_part": 4,             # min-type max, then sum(v^2)
+    "online_topsis_predict_events": 6,  # the same over window means
+    "rank_gauss_lineitem": 2,           # exact percentile edges
+}
+
+
+@pytest.mark.parametrize("name", sorted(BUILD_JOBS))
+def test_reference_query_build_jobs(spark, name):
+    import uuid
+
+    # a first build infers the parquet schemas (one job per table);
+    # load_table reuses them from then on, so the counted build sees
+    # only the operators' own jobs
+    QUERIES[name](spark, SF)
+    sc = spark.sparkContext
+    group = f"build-{name}-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, name)
+    try:
+        QUERIES[name](spark, SF)
+    finally:
+        sc._jsc.clearJobGroup()
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert len(jobs) == BUILD_JOBS[name], (name, len(jobs))
 
 
 def test_time_features_reads_one_column(spark):

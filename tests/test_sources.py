@@ -58,6 +58,31 @@ def test_events_ts_normalized_across_parquet_layouts(spark, tmp_path):
         assert got == [m // 1000 for m in micros], name
 
 
+def test_load_table_schema_memo_follows_rewrites(spark, tmp_path):
+    """load_table reuses the schema it inferred for a parquet file, and
+    infers again once the file at that path is rewritten — here with a
+    different schema."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from flink_ml__spark.sources import registry
+
+    path = str(tmp_path / "part.parquet")
+    pq.write_table(pa.table({"p_partkey": [1, 2], "p_size": [3, 4]}), path)
+    first = load_table(spark, "part", str(tmp_path))
+    assert first.columns == ["p_partkey", "p_size"]
+    memo = dict(registry._SCHEMAS)
+    again = load_table(spark, "part", str(tmp_path))
+    assert registry._SCHEMAS == memo  # served from the memo
+    assert again.collect() == first.collect()
+
+    pq.write_table(pa.table({"p_partkey": [5], "p_name": ["x"],
+                             "p_retailprice": [1.5]}), path)
+    rewritten = load_table(spark, "part", str(tmp_path))
+    assert rewritten.columns == ["p_partkey", "p_name", "p_retailprice"]
+    assert [tuple(r) for r in rewritten.collect()] == [(5, "x", 1.5)]
+
+
 def test_events_ts_live_fixture_is_timestamp(spark):
     from pyspark.sql import functions as F
     from pyspark.sql import types as T
