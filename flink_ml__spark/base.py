@@ -172,16 +172,21 @@ class HasSeed(Params):
 
 class HasRelativeError(Params):
     """Exact-vs-approximate quantile switch for fit-time percentile
-    aggregations (DriftMonitor, Winsorizer, PerplexityBucketer).
+    aggregations (DriftMonitor, Winsorizer, PerplexityBucketer,
+    QuantileMatcher, ...).
 
-    Default 0.0 = exact ``percentile`` — deterministic and
-    SQL-oracle-replayable, but Spark's exact percentile merges a full
-    value→count map on a single final aggregation buffer, which on a
-    100 TB high-cardinality double column is an OOM, not a slowdown.
-    Setting ``relativeError`` > 0 (e.g. 0.001) switches the fit to
-    ``approx_percentile`` (Greenwald-Khanna sketch, accuracy =
-    ceil(1/relativeError)): bounded memory per partial, mergeable,
-    and rank error ≤ relativeError · n — the production path at scale.
+    Default 0.0 = exact percentiles — deterministic and
+    SQL-oracle-replayable. ``_percentile_sql`` renders Spark's
+    ``percentile`` aggregate (a full value→count map merged on a single
+    final aggregation buffer); QuantileMatcher fits through
+    ``functions.quantiles.exact_percentiles`` (the sorted value list
+    gathered on a single reducer). Either way the exact path holds the
+    whole column on one node, which on a 100 TB high-cardinality double
+    column is an OOM, not a slowdown. Setting ``relativeError`` > 0
+    (e.g. 0.001) switches the fit to ``approx_percentile``
+    (Greenwald-Khanna sketch, accuracy = ceil(1/relativeError)):
+    bounded memory per partial, mergeable, and rank error
+    ≤ relativeError · n — the production path at scale.
     """
 
     relativeError = Param(

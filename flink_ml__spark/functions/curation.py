@@ -3735,8 +3735,8 @@ class PaddingWasteProfiler(AlgoOperator):
         base = df.filter(nt.isNotNull()).select(nt.alias("__nt"))
         if k > 1:
             if self.getOrDefault(self.exactEdges):
-                # bit-identical Arrow replacement for the exact
-                # percentile aggregate (see functions/quantiles.py)
+                # exact percentiles, bit-identical to the percentile
+                # aggregate (see functions/quantiles.py)
                 import math
 
                 from flink_ml__spark.functions.quantiles import (

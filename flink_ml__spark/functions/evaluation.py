@@ -1099,7 +1099,7 @@ class UpliftEvaluator(AlgoOperator):
         v = F.col(self.getOrDefault(self.variantCol)).cast("string")
         base = df.filter(s.isNotNull() & y.isNotNull()
                          & v.isin(t_lbl, c_lbl))
-        # ONE Arrow pass for all k−1 edges, bit-identical to the
+        # ONE sort for all k−1 edges, bit-identical to the
         # per-edge percentile aggregates this replaces (each of which
         # buffered the full column separately — see
         # functions/quantiles.py)

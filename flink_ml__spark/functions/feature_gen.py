@@ -978,7 +978,7 @@ class QuantileMatcherModel(Model, _SingleColOutputParams):
             row = df.agg(F.expr(expr).alias("g")).collect()[0]
             grid = None if row["g"] is None else list(row["g"])
         else:
-            # bit-identical Arrow replacement for the exact percentile
+            # exact percentiles, bit-identical to the percentile
             # aggregate (see functions/quantiles.py)
             from flink_ml__spark.functions.quantiles import (
                 exact_percentiles,
@@ -1287,9 +1287,9 @@ class RankGaussTransformer(AlgoOperator, HasInputCol, HasOutputCol):
         x = F.col(self.getInputCol()).cast("double")
         base = df.filter(x.isNotNull())
         if self.getOrDefault(self.exactEdges):
-            # bit-identical Arrow replacement for the exact percentile
-            # aggregate (TypedImperativeAggregate: 4-5 s at sf0.1 for
-            # ONE 600 k-row column; the np.sort pass is ~1 s) — see
+            # exact percentiles in one in-engine sort, bit-identical to
+            # the percentile aggregate (TypedImperativeAggregate: 4-5 s
+            # at sf0.1 for ONE 600 k-row column) — see
             # functions/quantiles.py for the interpolation parity proof
             from flink_ml__spark.functions.quantiles import (
                 exact_percentiles,

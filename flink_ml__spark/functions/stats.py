@@ -2147,7 +2147,7 @@ class LorenzCurveAnalyzer(AlgoOperator):
         k = self.getOrDefault(self.numBins)
         w = F.col(self.getOrDefault(self.weightCol)).cast("double")
         base = df.filter(w.isNotNull() & (w >= 0))
-        # bit-identical Arrow replacement for the exact percentile
+        # exact percentiles, bit-identical to the percentile
         # aggregate (see functions/quantiles.py)
         import math
 

@@ -156,4 +156,7 @@ class OnlineTopsis(Estimator, OnlineTopsisParams):
 
     def fit(self, df: DataFrame) -> OnlineTopsisModel:
         self._validate()
-        return self.score_means(self.window_means(df))
+        # materialised once: TOPSIS's two stats passes and the model's
+        # broadcast join would each re-scan and re-aggregate the windows
+        return self.score_means(
+            self.window_means(df).localCheckpoint(eager=True))

@@ -42,13 +42,16 @@ def _pin_session_conf(spark: SparkSession,
     """Pin the engine's required session confs, LOUDLY when that changes
     an effective value: the driver may hand us a foreign session, and
     the pin must win for correctness — but silently re-timezoning a
-    user's session mid-flight is worse than a warning. Subsequent calls
-    are quiet (the values already match)."""
+    user's session mid-flight is worse than a warning. A value that
+    already matches is left alone: no warning, no ``conf.set`` round
+    trip, so subsequent calls only read."""
     import warnings
 
     for k, v in {**_REQUIRED_CONF, **(extra or {})}.items():
         cur = spark.conf.get(k, None)
-        if cur is not None and cur.lower() != v.lower():
+        if cur is not None and cur.lower() == v.lower():
+            continue
+        if cur is not None:
             warnings.warn(
                 f"load_table: overriding session conf {k}={cur!r} with "
                 f"{v!r} — required for the engine's oracle-parity "

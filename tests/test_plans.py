@@ -52,7 +52,8 @@ def test_ahp_scan_prunes_columns(spark):
 BUILD_JOBS = {
     "ahp_score_lineitem": 4,            # min/max, then sums
     "topsis_score_part": 4,             # min-type max, then sum(v^2)
-    "online_topsis_predict_events": 6,  # the same over window means
+    # window means checkpointed (2), then TOPSIS's two passes over them
+    "online_topsis_predict_events": 6,
     "rank_gauss_lineitem": 2,           # exact percentile edges
 }
 

@@ -183,6 +183,41 @@ def test_load_table_pins_session_conf_loudly(spark):
         spark.conf.set("spark.sql.session.timeZone", prev)
 
 
+def test_load_table_sets_only_differing_conf(spark, monkeypatch):
+    """Confs that already hold the required value cost no ``conf.set``
+    round trip; a foreign time zone is still set and warned about."""
+    import warnings
+
+    sf = "/root/testdata/sf0.001"
+    load_table(spark, "region", sf)
+    load_table(spark, "events", sf)
+    conf = spark.conf  # one cached RuntimeConfig per session
+    calls = []
+    orig = conf.set
+
+    def spy(key, value):
+        calls.append(key)
+        return orig(key, value)
+
+    monkeypatch.setattr(conf, "set", spy)
+    load_table(spark, "region", sf)
+    load_table(spark, "events", sf)
+    assert calls == []
+
+    prev = spark.conf.get("spark.sql.session.timeZone")
+    try:
+        orig("spark.sql.session.timeZone", "Asia/Tokyo")
+        with warnings.catch_warnings(record=True) as w:
+            warnings.simplefilter("always")
+            load_table(spark, "region", sf)
+        assert calls == ["spark.sql.session.timeZone"]
+        assert any("session.timeZone" in str(x.message)
+                   and issubclass(x.category, RuntimeWarning) for x in w)
+        assert spark.conf.get("spark.sql.session.timeZone") == "UTC"
+    finally:
+        orig("spark.sql.session.timeZone", prev)
+
+
 def test_zorder_key_matches_reference_interleave(spark):
     from flink_ml__spark.sources.registry import zorder_key
 

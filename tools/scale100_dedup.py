@@ -41,7 +41,7 @@ def replicate(docs, n_copies):
 def main():
     reps_small = int(sys.argv[1]) if len(sys.argv) > 1 else 2
     reps_big = int(sys.argv[2]) if len(sys.argv) > 2 else 1
-    os.environ.setdefault("SPARK_DRIVER_MEM", "48g")
+    # sized to the host (session.host_size); SPARK_DRIVER_MEM overrides
     spark = get_spark("scale100")
     print("loadavg:", os.getloadavg())
     docs = (load_table(spark, "documents", "/root/testdata/sf0.1")
