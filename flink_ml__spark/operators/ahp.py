@@ -24,16 +24,18 @@ final aggregation merge (which replaces the reference's manual
 ``countWindowAll(parallelism).reduce``, ``AHP.java:79-99,143-154``).
 
 ``OnlineAHP`` applies the same per-window math over event-time tumbling
-windows. Instead of the reference's parallelism-1
-``ProcessAllWindowFunction`` (``OnlineAHP.java:67-71``), the per-window
-stats are computed with two ``groupBy(window).agg`` passes (partial →
-final merge, so no task ever buffers a whole window's rows — analytic
-window functions would) and the tiny per-window stats tables are
-broadcast-joined back onto the rows; the per-row score is then a single
-codegen projection. A tumbling window holding billions of rows costs
-only O(#windows · #cols) state per task this way. Note the reference
-quirk ``k = 1/ln(#cols)`` in the windowed variant (``OnlineAHP.java:151``)
-vs ``k = 1/ln(#rows)`` in batch AHP (``AHP.java:158``) — both preserved.
+windows, from one SQL-text kernel shared with the stream
+(:func:`ahp_norm_sql`, :func:`ahp_plogp_sql`, :func:`window_score_sql`).
+Instead of the reference's parallelism-1 ``ProcessAllWindowFunction``
+(``OnlineAHP.java:67-71``), the batch transform computes the per-window
+stats with two ``groupBy(window).agg`` passes (partial → final merge, so
+no task ever buffers a whole window's rows — analytic window functions
+would) and broadcast-joins the tiny stats tables back onto the rows; the
+per-row score is one codegen projection. ``streaming.stream_online_ahp``
+folds the same kernel over each closed window's collected rows. Note
+the reference quirk ``k = 1/ln(#cols)`` in the windowed variant
+(``OnlineAHP.java:151``) vs ``k = 1/ln(#rows)`` in batch AHP
+(``AHP.java:158``) — both preserved.
 """
 
 from __future__ import annotations
@@ -180,6 +182,43 @@ def _check_indicator_type(indicator, input_cols) -> None:
             raise ValueError("indicatorType must be 0 or 1")
 
 
+def ahp_norm_sql(x: str, mn: str, mx: str, positive: bool) -> str:
+    """Min-max normalisation of the SQL value ``x`` by indicator type
+    (1=positive, 0=negative; ``AHP.java:370-379``). ``mx == mn`` divides
+    by zero, so a constant column normalises to NULL."""
+    if positive:
+        return f"(({x} - {mn}) / ({mx} - {mn}))"
+    return f"(({mx} - {x}) / ({mx} - {mn}))"
+
+
+def ahp_plogp_sql(nm: str) -> str:
+    """The entropy term ``n·ln n`` of a normalised value, 0 where n is 0
+    or NULL (the guard of ``AHP.java:295-307``). Summed per column it is
+    T; with S = Σ n, ``Σ p·ln p = T/S − ln S`` for p = n/S, so P never
+    needs its own pass."""
+    return f"CASE WHEN ({nm} != 0) THEN ({nm} * ln({nm})) ELSE 0.0D END"
+
+
+def window_score_sql(nm: list[str], s: list[str], t: list[str],
+                     ahp_w: list[float]) -> str:
+    """A row's window-local score from its normalised values ``nm`` and
+    its window's column sums S (``s``) and T (``t``), all SQL text
+    (``OnlineAHP.java:138-172``): entropy ``e_j = T/S − ln S``,
+    redundancy ``d_j = 1 + k·e_j`` with the reference's
+    ``k = 1/ln(#cols)``, weights ``d_j / Σ d`` and
+    ``score = Σ n_j · w_j · ahp_j``. An all-NULL column (min == max)
+    leaves S NULL: e_j falls back to the reference's 0 and the score is
+    NULL."""
+    k = sql_double(1.0 / math.log(len(nm)))
+    d = [f"((coalesce((({t[j]} / {s[j]}) - ln({s[j]})), 0.0D) * {k}) + 1)"
+         for j in range(len(nm))]
+    total = d[0]
+    for dj in d[1:]:
+        total = f"({total} + {dj})"
+    return sql_sum(f"(({nm[j]} * ({d[j]} / {total})) * {sql_double(w)})"
+                   for j, w in enumerate(ahp_w))
+
+
 class AHP(AlgoOperator, AHPParams):
     """Batch entropy-weight + AHP scorer (``AHP.java:41-562``)."""
 
@@ -197,22 +236,15 @@ class AHP(AlgoOperator, AHPParams):
         ).collect()[0].asDict()
 
         # min-max normalization by indicator type (``AHP.java:370-379``)
-        norm = []
-        for j in range(n):
-            mn, mx = sql_double(stats[f"mn_{j}"]), sql_double(stats[f"mx_{j}"])
-            if types[j] == 1:
-                norm.append(f"(({x[j]} - {mn}) / ({mx} - {mn}))")
-            else:
-                norm.append(f"(({mx} - {x[j]}) / ({mx} - {mn}))")
+        norm = [ahp_norm_sql(x[j], sql_double(stats[f"mn_{j}"]),
+                             sql_double(stats[f"mx_{j}"]), types[j] == 1)
+                for j in range(n)]
 
-        # pass 2: column sums S_j, Σ n·ln n, row count
-        # (Σ p·ln p = T/S − ln S with p = norm/S; the 0-guard mirrors
-        #  ``AHP.java:295-307``)
+        # pass 2: column sums S_j, T_j = Σ n·ln n, row count
         agg2 = df.agg(
             *[F.expr(f"sum({norm[j]}) AS s_{j}") for j in range(n)],
-            *[F.expr(f"sum(CASE WHEN ({norm[j]} != 0) "
-                     f"THEN ({norm[j]} * ln({norm[j]})) ELSE 0.0D END) "
-                     f"AS t_{j}") for j in range(n)],
+            *[F.expr(f"sum({ahp_plogp_sql(norm[j])}) AS t_{j}")
+              for j in range(n)],
             F.count(F.lit(1)).alias("cnt"),
         ).collect()[0].asDict()
 
@@ -258,57 +290,37 @@ class OnlineAHP(AlgoOperator, AHPParams, HasWindows, HasTimeCol):
         else:
             part = F.window(F.col(self.getTimeCol()), windows)
 
-        x = [F.col(c).cast("double") for c in cols]
+        x = [f"CAST({sql_ident(c)} AS DOUBLE)" for c in cols]
         df1 = df.withColumn(win_col, part)
+
+        def helper(tag, j):
+            return f"__{tag}_{j}_{uid}"
 
         # pass 1: per-window min/max (partial+final agg)
         stats1 = df1.groupBy(win_col).agg(
-            *[F.max(x[j]).alias(f"__mx_{j}_{uid}") for j in range(n)],
-            *[F.min(x[j]).alias(f"__mn_{j}_{uid}") for j in range(n)],
+            *[F.expr(f"max({x[j]}) AS {helper('mx', j)}") for j in range(n)],
+            *[F.expr(f"min({x[j]}) AS {helper('mn', j)}") for j in range(n)],
         )
-
-        norm = []
-        for j in range(n):
-            mx, mn = F.col(f"__mx_{j}_{uid}"), F.col(f"__mn_{j}_{uid}")
-            if types[j] == 1:
-                norm.append(((x[j] - mn) / (mx - mn)).alias(f"__nm_{j}_{uid}"))
-            else:
-                norm.append(((mx - x[j]) / (mx - mn)).alias(f"__nm_{j}_{uid}"))
+        norm = [F.expr(
+            ahp_norm_sql(x[j], helper("mn", j), helper("mx", j),
+                         types[j] == 1) + f" AS {helper('nm', j)}")
+            for j in range(n)]
         normed = df1.join(F.broadcast(stats1), win_col).select("*", *norm)
 
-        # pass 2: per-window column sums S_j and guarded Σ n·ln n; the
-        # entropy Σ p·ln p with p = n/S (``OnlineAHP.java:138-148``)
-        # folds to T/S − ln S because the p==0-guarded terms drop out of
-        # both sums. An all-NULL window (min==max) leaves S NULL while the
-        # guarded terms sum to 0 on both engines — coalesce reproduces
-        # the reference's e_j = 0 there.
-        nm = [F.col(f"__nm_{j}_{uid}") for j in range(n)]
+        # pass 2: per-window column sums S_j and T_j
+        nm = [helper("nm", j) for j in range(n)]
         stats2 = normed.groupBy(win_col).agg(
-            *[F.sum(nm[j]).alias(f"__s_{j}_{uid}") for j in range(n)],
-            *[F.sum(
-                F.when(nm[j] != 0, nm[j] * F.log(nm[j])).otherwise(0.0)
-            ).alias(f"__t_{j}_{uid}") for j in range(n)],
+            *[F.expr(f"sum({nm[j]}) AS {helper('s', j)}") for j in range(n)],
+            *[F.expr(f"sum({ahp_plogp_sql(nm[j])}) AS {helper('t', j)}")
+              for j in range(n)],
         )
 
-        out = normed.join(F.broadcast(stats2), win_col)
-        e = [F.coalesce(
-                F.col(f"__t_{j}_{uid}") / F.col(f"__s_{j}_{uid}")
-                - F.log(F.col(f"__s_{j}_{uid}")),
-                F.lit(0.0)) for j in range(n)]
-
-        # redundancy/weights; note k = 1/ln(#cols) (``OnlineAHP.java:151``)
-        k = 1.0 / math.log(n)
-        d = [1 + k * e[j] for j in range(n)]
-        total = d[0]
-        for dj in d[1:]:
-            total = total + dj
-        weight = [dj / total for dj in d]
-
-        score = sum(nm[j] * weight[j] * F.lit(ahp_w[j]) for j in range(n))
-        out = out.withColumn(self.getOutputCol(), score)
+        out = normed.join(F.broadcast(stats2), win_col).withColumn(
+            self.getOutputCol(), F.expr(window_score_sql(
+                nm, [helper("s", j) for j in range(n)],
+                [helper("t", j) for j in range(n)], ahp_w)))
         # drop exactly the generated helper names — a substring match on
         # the uid could silently swallow a user column
-        helpers = [win_col] + [
-            f"__{tag}_{j}_{uid}"
-            for tag in ("mx", "mn", "nm", "s", "t") for j in range(n)]
-        return out.drop(*helpers)
+        return out.drop(win_col, *[
+            helper(tag, j)
+            for tag in ("mx", "mn", "nm", "s", "t") for j in range(n)])

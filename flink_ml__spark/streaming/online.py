@@ -7,16 +7,19 @@ application with buffering of rows that arrive before their window's model
 
 Spark-first mapping:
 
-* ``stream_online_ahp`` — ``applyInPandasWithState`` keyed by the tumbling
-  window: rows buffer in group state until the watermark passes the window
-  end, then the whole window is scored at once (numpy replica of the
-  per-window math, tested against the batch operator) and emitted in
-  append mode. This is the ``windowAllAndProcess`` contract with
-  watermark-driven firing — but parallel across windows.
+* ``stream_online_ahp`` — a watermarked streaming aggregation keyed by
+  the tumbling ``F.window``: each open window keeps its rows
+  (``collect_list``) and per-column min/max in the state store; when the
+  watermark passes the window end, one projection folds the window's
+  column sums over those rows and scores every row with the batch
+  operator's SQL kernel (``operators.ahp``), emitted in append mode. This
+  is the ``windowAllAndProcess`` contract with watermark-driven firing,
+  parallel across windows and with no Python on the per-trigger path.
 * ``stream_online_topsis_apply`` — a stream-static broadcast range join
   against the fitted model table: the declarative form of
-  buffer-until-model when the model is available up front. (Full
-  stream-stream model arrival would use the same state pattern as above.)
+  buffer-until-model when the model is available up front
+  (``stream_online_topsis_apply_streams`` takes the models as a stream
+  too: a stream-stream join keyed by window index).
 """
 
 from __future__ import annotations
@@ -29,9 +32,14 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from flink_ml__spark.operators.ahp import OnlineAHP
+from flink_ml__spark.base import sql_ident
+from flink_ml__spark.operators.ahp import (
+    OnlineAHP,
+    ahp_norm_sql,
+    ahp_plogp_sql,
+    window_score_sql,
+)
 from flink_ml__spark.operators.online_topsis import OnlineTopsisModel
-from flink_ml__spark.streaming.score_numpy import score_window_ahp
 
 
 _UNITS_MS = {"millisecond": 1, "second": 1000, "minute": 60_000,
@@ -78,99 +86,40 @@ def stream_online_ahp(stream_df: DataFrame, op: OnlineAHP,
     if windows in (None, "global"):
         raise ValueError("streaming OnlineAHP requires a tumbling window")
     time_col = op.getTimeCol()
-    out_col = op.getOutputCol()
+    names = [sql_ident(c) for c in stream_df.columns]
+    n = len(cols)
+    x = [f"CAST({sql_ident(c)} AS DOUBLE)" for c in cols]
 
-    # F.window() would attach a second event-time column (conflicting with
-    # the watermark in the stateful operator); derive the tumbling window
-    # struct with plain epoch arithmetic instead.
-    ival_ms = _interval_ms(windows)
-    ms = F.unix_millis(F.col(time_col))
-    start = (F.floor(ms / ival_ms) * ival_ms).cast("long")
-    win = F.struct(
-        F.timestamp_millis(start).alias("start"),
-        F.timestamp_millis(start + ival_ms).alias("end"))
-    src = (stream_df.withWatermark(time_col, watermark_delay)
-           .withColumn("__win", win))
-    keyed = src.groupBy("__win")
+    # state per open window: its rows plus the per-column min/max
+    agg = (stream_df.withWatermark(time_col, watermark_delay)
+           .groupBy(F.window(time_col, windows))
+           .agg(F.expr(f"collect_list(struct({', '.join(names)})) AS __rows"),
+                *[F.expr(f"min({x[j]}) AS __mn_{j}") for j in range(n)],
+                *[F.expr(f"max({x[j]}) AS __mx_{j}") for j in range(n)]))
 
-    out_fields = list(stream_df.schema.fields) + [
-        T.StructField(out_col, T.DoubleType())]
-    out_schema = T.StructType(out_fields)
-    # append-only chunked Arrow state: each micro-batch serializes ONLY
-    # its own rows to one Arrow-IPC chunk and appends it — earlier
-    # chunks are carried as opaque bytes and never re-parsed until the
-    # window fires, so per-batch Python work is O(batch), not
-    # O(rows buffered so far) (the previous JSON buffer re-parsed and
-    # re-stringified the whole window every micro-batch)
-    state_schema = T.StructType(
-        [T.StructField("chunks", T.ArrayType(T.BinaryType()))])
-    in_names = [f.name for f in stream_df.schema.fields]
-    # timestamps ride the buffer as int64 nanos: chunk-local Arrow
-    # schemas stay primitive and the fire-time concat cannot upcast
-    ts_names = [f.name for f in stream_df.schema.fields
-                if isinstance(f.dataType,
-                              (T.TimestampType, T.TimestampNTZType))]
+    # when a window fires, one projection folds S_j and T_j over its rows
+    # (skipping NULL terms as sum() does) into the accumulator ``a``,
+    # then scores every row ``r`` with the batch operator's kernel
+    nm = [ahp_norm_sql(f"CAST(r.{sql_ident(c)} AS DOUBLE)", f"__mn_{j}",
+                       f"__mx_{j}", types[j] == 1)
+          for j, c in enumerate(cols)]
 
-    def _chunk_of(pdf: pd.DataFrame) -> bytes:
-        import pyarrow as pa
+    def fold(acc, term):
+        return f"coalesce(coalesce({acc}, 0.0D) + {term}, {acc})"
 
-        table = pa.Table.from_pandas(pdf, preserve_index=False)
-        sink = pa.BufferOutputStream()
-        with pa.ipc.new_stream(sink, table.schema) as w:
-            w.write_table(table)
-        return sink.getvalue().to_pybytes()
-
-    def _frames_of(chunks) -> list[pd.DataFrame]:
-        import pyarrow as pa
-
-        return [pa.ipc.open_stream(c).read_all().to_pandas()
-                for c in chunks]
-
-    session_tz = stream_df.sparkSession.conf.get(
-        "spark.sql.session.timeZone", "UTC")
-
-    def score_fn(key, pdfs: Iterator[pd.DataFrame],
-                 state: GroupState) -> Iterator[pd.DataFrame]:
-        wk = key[0]  # struct key arrives as a dict {'start':..,'end':..}
-        win_end = wk["end"] if isinstance(wk, dict) else wk[1]
-        # the key timestamp is session-timezone wall-clock with tzinfo
-        # stripped; naive .timestamp() would reinterpret it as local
-        # UTC and misfire by the tz offset on non-UTC sessions
-        win_end_ms = int(pd.Timestamp(win_end).tz_localize(session_tz)
-                         .timestamp() * 1000)
-        frames = [p for p in pdfs if len(p)]
-        batch = pd.concat(frames, ignore_index=True) if frames else None
-        (chunks,) = state.get if state.exists else ([],)
-        chunks = list(chunks or [])
-        if batch is not None and len(batch):
-            b = batch[in_names].copy()
-            for c in ts_names:
-                b[c] = b[c].astype("int64")  # ns → stable ints
-            chunks.append(_chunk_of(b))
-
-        fire = (state.hasTimedOut
-                or (state.getCurrentWatermarkMs() >= win_end_ms))
-        if fire:
-            state.remove()
-            if not chunks:
-                return
-            data = pd.concat(_frames_of(chunks), ignore_index=True)
-            if not len(data):
-                return
-            scores = score_window_ahp(
-                data[cols].to_numpy(dtype=float), types, ahp_w)
-            data[out_col] = scores
-            for c in ts_names:
-                data[c] = pd.to_datetime(data[c])
-            yield data
-        else:
-            state.update((chunks,))
-            state.setTimeoutTimestamp(win_end_ms)
-            return
-
-    return keyed.applyInPandasWithState(
-        score_fn, outputStructType=out_schema, stateStructType=state_schema,
-        outputMode="append", timeoutConf=GroupStateTimeout.EventTimeTimeout)
+    zero = ", ".join(f"'s{j}', CAST(NULL AS DOUBLE), "
+                     f"'t{j}', CAST(NULL AS DOUBLE)" for j in range(n))
+    step = ", ".join(f"'s{j}', {fold(f'a.s{j}', nm[j])}, "
+                     f"'t{j}', {fold(f'a.t{j}', ahp_plogp_sql(nm[j]))}"
+                     for j in range(n))
+    score = window_score_sql(nm, [f"a.s{j}" for j in range(n)],
+                             [f"a.t{j}" for j in range(n)], ahp_w)
+    row = ", ".join(f"r.{c} AS {c}" for c in names)
+    return agg.select(F.expr(
+        f"inline(aggregate(__rows, named_struct({zero}), "
+        f"(a, r) -> named_struct({step}), "
+        f"a -> transform(__rows, r -> struct({row}, "
+        f"{score} AS {sql_ident(op.getOutputCol())}))))"))
 
 
 def stream_exact_dedup(stream_df: DataFrame, time_col: str,

@@ -6,11 +6,11 @@ process runs ~28-45 min wall — past the round driver's verification
 window (VERIFY_r12 ``tests_ok: false``: the tail cut at ~90 % with zero
 failures). Config knobs (cores, shuffle partitions, AQE, codegen) were
 each measured a wash (±5 % on a 49-test probe), so the fix is
-parallelism: a full-suite invocation (``pytest tests/``) re-launches
-itself as subprocess workers, each owning its own local[4]
-SparkSession and a deterministic shard of the collection. The worker
-count is one per core, capped by ``MemAvailable`` at 4 GiB per worker
-(``SPARK_GRAFT_TEST_WORKERS`` overrides it). A worker that dies
+parallelism: a full-suite invocation (``pytest tests/``, or a bare
+``pytest``) re-launches itself as subprocess workers, each owning its
+own local[4] SparkSession and a deterministic shard of the collection.
+The worker count is one per core, capped by ``MemAvailable`` at 4 GiB
+per worker (``SPARK_GRAFT_TEST_WORKERS`` overrides it). A worker that dies
 without a test summary fails the run, and its full log is kept. Runs
 that name specific files/tests (developer loops) are never sharded.
 
@@ -137,18 +137,25 @@ def pytest_collection_modifyitems(config, items):
 
 
 def _is_full_suite_run(config) -> bool:
+    """``pytest tests/`` or a bare ``pytest`` (which collects from the
+    rootdir); a run naming files or tests is not."""
     here = os.path.dirname(os.path.abspath(__file__))
     try:
         args = list(config.args)
     except Exception:
         return False
-    return len(args) == 1 and os.path.abspath(args[0]) == here
+    return len(args) <= 1 and all(
+        os.path.abspath(a) in (here, os.path.dirname(here)) for a in args)
 
 
 def pytest_cmdline_main(config):
     if os.environ.get(_SHARD_ENV) or _WORKERS <= 1:
         return None  # worker (or sharding disabled): run normally
-    if getattr(config.option, "collectonly", False):
+    # runs that report instead of testing (--co, --version, --help,
+    # --fixtures, --markers) stay in-process
+    if any(getattr(config.option, o, False) for o in (
+            "collectonly", "version", "help", "showfixtures",
+            "show_fixtures_per_test", "markers")):
         return None
     if not _is_full_suite_run(config):
         return None  # developer runs of specific files stay in-process

@@ -281,6 +281,26 @@ def test_empty_input_new_dedup_paths(spark):
         EmbeddingCosineDeduplicator().transform(empty_vecs).count()
 
 
+def _score_window_ahp(x: np.ndarray, indicator_types: list[int],
+                      ahp_w: list[float]) -> np.ndarray:
+    """Numpy replica of one window's entropy-weight AHP scores for an
+    (n, m) matrix (``OnlineAHP.java:94-172``, note ``k = 1/ln(#cols)``),
+    computing Σ p·ln p directly rather than as T/S − ln S."""
+    x = np.asarray(x, dtype=float)
+    mx, mn = x.max(axis=0), x.min(axis=0)
+    t = np.asarray(indicator_types)
+    with np.errstate(divide="ignore", invalid="ignore"):
+        norm = np.where(t == 1, (x - mn) / (mx - mn), (mx - x) / (mx - mn))
+        s = norm.sum(axis=0)
+        p = norm / s
+        plogp = np.where(p == 0, 0.0, p * np.log(np.where(p == 0, 1.0, p)))
+    e = plogp.sum(axis=0)
+    k = 1.0 / math.log(x.shape[1])
+    d = 1 + k * e
+    w = d / d.sum()
+    return norm @ (w * np.asarray(ahp_w))
+
+
 @H
 @given(data=st.lists(
     st.tuples(st.integers(0, 2),  # window bucket (day offset)
@@ -288,25 +308,32 @@ def test_empty_input_new_dedup_paths(spark):
               st.floats(0.1, 100.0, allow_nan=False)),
     min_size=4, max_size=16))
 def test_online_ahp_matches_numpy_replica(spark, data):
-    """The agg+broadcast OnlineAHP plan must reproduce the independent
-    per-window numpy replica (score_window_ahp) on arbitrary windowed
-    data — the cross-check that the T/S − ln S entropy folding is the
-    same math as the replica's direct Σ p·ln p."""
+    """Both plans of the one AHP window kernel — batch
+    ``OnlineAHP.transform`` (agg + broadcast join) and the collected-rows
+    fold of ``stream_online_ahp``, run here on a batch frame — must
+    reproduce an independent per-window numpy replica on arbitrary
+    windowed data: the cross-check that the T/S − ln S entropy folding
+    is the same math as the replica's direct Σ p·ln p. Day 5 is a
+    window whose column ``a`` is constant: min == max leaves its
+    normalised values NULL, so both plans score it NULL (the replica's
+    0/0 gives NaN)."""
     import datetime
 
     from flink_ml__spark.operators.ahp import OnlineAHP, ahp_weight_vector
-    from flink_ml__spark.streaming.score_numpy import score_window_ahp
+    from flink_ml__spark.streaming import stream_online_ahp
 
+    data = data + [(5, 7.0, 1.0), (5, 7.0, 2.0), (5, 7.0, 4.0)]
     base = datetime.datetime(2024, 3, 1)
     rows = [(i, base + datetime.timedelta(days=d), float(a), float(b))
             for i, (d, a, b) in enumerate(data)]
     df = spark.createDataFrame(
         rows, "id long, ts timestamp, a double, b double")
-    out = (OnlineAHP().setInputCols(["a", "b"])
-           .setJudgmentMatrix(MATRIX2).setIndicatorType([1, 0])
-           .setWindows("1 day").setTimeCol("ts").setOutputCol("s")
-           .transform(df))
-    got = {r["id"]: r["s"] for r in out.collect()}
+    op = (OnlineAHP().setInputCols(["a", "b"])
+          .setJudgmentMatrix(MATRIX2).setIndicatorType([1, 0])
+          .setWindows("1 day").setTimeCol("ts").setOutputCol("s"))
+    batch = {r["id"]: r["s"] for r in op.transform(df).collect()}
+    folded = {r["id"]: r["s"] for r in stream_online_ahp(df, op).collect()}
+    assert batch.keys() == folded.keys() == set(range(len(data)))
 
     ahp_w = ahp_weight_vector(MATRIX2)
     by_day = {}
@@ -314,13 +341,14 @@ def test_online_ahp_matches_numpy_replica(spark, data):
         by_day.setdefault(d, []).append((i, a, b))
     for d, members in by_day.items():
         X = np.array([[a, b] for _, a, b in members])
-        expect = score_window_ahp(X, [1, 0], ahp_w)
+        expect = _score_window_ahp(X, [1, 0], ahp_w)
         for (i, _, _), e in zip(members, expect):
-            g = got[i]
             if math.isnan(e):
-                assert g is None or math.isnan(g), (d, i)
+                assert batch[i] is None and folded[i] is None, (d, i)
             else:
-                assert g == pytest.approx(e, abs=1e-9), (d, i)
+                assert batch[i] == pytest.approx(e, abs=1e-9), (d, i)
+                assert folded[i] == pytest.approx(e, abs=1e-9), (d, i)
+    assert all(batch[i] is None for i, _, _ in by_day[5])
 
 
 @H

@@ -109,9 +109,10 @@ def test_map_only_operators_stream_compatible(spark):
 
 
 def test_stream_online_ahp_accumulates_across_micro_batches(spark):
-    """One row per micro-batch (9 batches): windows must accumulate in
-    the chunked Arrow state across batches and still score identically
-    to the batch operator when the watermark closes them."""
+    """One row per micro-batch (9 batches): each window's rows must
+    accumulate in the streaming aggregate's state across batches and
+    still score identically to the batch operator when the watermark
+    closes them."""
     import glob
     import os
 
@@ -163,6 +164,79 @@ def test_stream_online_ahp_matches_batch(spark, stream_source):
     for key, score in got.items():
         assert math.isclose(score, ONLINE_GOLDEN[key], abs_tol=1e-4), key
 
+
+def test_stream_online_ahp_plan_is_declarative(spark, stream_source):
+    """The stream is one stateful window aggregate plus a projection:
+    no Python stateful operator and no Python evaluation per trigger."""
+    stream_df, _ = stream_source
+    out = stream_online_ahp(stream_df, _op())
+    q = (out.writeStream.format("memory").queryName("ahp_stream_plan")
+         .outputMode("append").trigger(availableNow=True).start())
+    try:
+        q.awaitTermination(120)
+        plan = q._jsq.explainInternal(True)
+    finally:
+        q.stop()
+    assert "StateStoreSave" in plan
+    assert "FlatMapGroupsInPandasWithState" not in plan
+    for python_node in ("ArrowEvalPython", "BatchEvalPython",
+                        "FlatMapGroupsInPandas", "MapInPandas"):
+        assert python_node not in plan, python_node
+
+
+def test_stream_online_ahp_matches_batch_non_utc_session(spark):
+    """Under a non-UTC session time zone and a compound interval, the
+    stream fires and scores the same windows as the batch operator: all
+    windows the final watermark closes, every row as batch scores it.
+    The last event sits exactly on a window end, so the window ending at
+    the final watermark must fire too (``end <= watermark``)."""
+    import datetime
+
+    from pyspark.sql import functions as F
+
+    tz = spark.conf.get("spark.sql.session.timeZone")
+    d = tempfile.mkdtemp(prefix="stream_src_tz_")
+    try:
+        spark.conf.set("spark.sql.session.timeZone", "Asia/Tokyo")
+        base = datetime.datetime(2024, 1, 1, 23, 10,
+                                 tzinfo=datetime.timezone.utc)
+        rows = [(i, base + datetime.timedelta(minutes=17 * i),
+                 float((i * 7) % 11 + 1), float((i * 5) % 13 + 2))
+                for i in range(30)]
+        ival = 90 * 60 + 30   # windows are aligned to the epoch
+        end = (int(rows[-1][1].timestamp()) // ival + 1) * ival
+        rows.append((30, datetime.datetime.fromtimestamp(
+            end, datetime.timezone.utc), 3.0, 4.0))
+        df = spark.createDataFrame(
+            rows, "id long, rowtime timestamp, a double, b double")
+        df.coalesce(1).write.mode("overwrite").parquet(d)
+        op = (OnlineAHP().setInputCols(["a", "b"])
+              .setJudgmentMatrix([[1.0, 2.0], [0.5, 1.0]])
+              .setIndicatorType([1, 0]).setWindows("90 minutes 30 seconds")
+              .setTimeCol("rowtime").setOutputCol("output"))
+        stream_df = spark.readStream.schema(df.schema).parquet(d)
+        q = (stream_online_ahp(stream_df, op).writeStream.format("memory")
+             .queryName("ahp_stream_tz").outputMode("append")
+             .trigger(availableNow=True).start())
+        q.awaitTermination(120)
+        got = {r["id"]: (r["rowtime"], r["output"])
+               for r in spark.sql("SELECT * FROM ahp_stream_tz").collect()}
+        last = df.agg(F.max("rowtime")).first()[0]
+        fired = (op.transform(df)
+                 .withColumn("w", F.window("rowtime", "90 minutes 30 seconds"))
+                 .filter(F.col("w.end") <= F.lit(last)).collect())
+        assert len(fired) > 0 and len(fired) < len(rows)
+        assert got.keys() == {r["id"] for r in fired}
+        for r in fired:
+            ts, score = got[r["id"]]
+            assert ts == r["rowtime"]
+            if r["output"] is None:   # a one-row window: min == max
+                assert score is None, r["id"]
+            else:
+                assert math.isclose(score, r["output"], rel_tol=1e-12), r["id"]
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", tz)
+        shutil.rmtree(d, ignore_errors=True)
 
 def test_stream_online_topsis_apply_streams(spark):
     """Stream-stream: rows AND models arrive as streams; every row must
