@@ -166,15 +166,6 @@ class DriftMonitor(AlgoOperator, HasRelativeError):
             out[c] = [float(e) for e in edges]
         return out
 
-    @staticmethod
-    def _bucket(col, edges: list[float]):
-        return _bucket_expr(col, edges)
-
-    @staticmethod
-    def _hist(df: DataFrame, edges: dict[str, list[float]],
-              tag: str) -> DataFrame:
-        return _numeric_hist(df, edges, tag)
-
     def fit(self, reference: DataFrame) -> "DriftMonitorModel":
         """Materialize the reference PROFILE — quantile edges + the
         reference histogram, O(columns · buckets) numbers total — so
@@ -237,6 +228,13 @@ class DriftMonitorModel(AlgoOperator):
                        F.coalesce("n_cur", F.lit(0)).alias("n_cur")))
         return _psi_terms(out)
 
+    def _profile(self) -> list:
+        """(column, bucket expression, [(bucket, n_ref)]) per column:
+        what ``stream_drift_monitor`` folds per event-time window."""
+        return [(c, _bucket_expr(c, self._edges[c]),
+                 [(b, self._ref.get((c, b), 0)) for b in range(self._k)])
+                for c in self._cols]
+
     def summary(self, current: DataFrame) -> DataFrame:
         return _psi_summary(self.report(current))
 
@@ -266,6 +264,36 @@ class DriftMonitorModel(AlgoOperator):
         self._ref = {(c, b): n for c, b, n in d["ref"]}
 
 
+def _category_value(c: str):
+    """Column ``c`` as a category string, NULL as ``__null__``. A DATA
+    value literally equal to either sentinel would silently merge with
+    the sentinel's population (e.g. nulls pre-stringified by an
+    upstream ETL stage), so it fails LOUDLY at execution time via
+    ``raise_error`` instead of producing merged counts."""
+    null_cat = CategoricalDriftMonitor.NULL_CAT
+    v = F.col(c).cast("string")
+    return F.coalesce(
+        F.when(v.isin(null_cat, CategoricalDriftMonitor.OTHER_CAT),
+               F.raise_error(F.concat(
+                   F.lit("CategoricalDriftMonitor: column '"
+                         f"{c}' contains the literal sentinel value "), v,
+                   F.lit(" — rename it upstream; sentinel categories "
+                         "must not occur as data"))))
+         .otherwise(v),
+        F.lit(null_cat))
+
+
+def _cells(df: DataFrame, values: dict) -> DataFrame:
+    """One (column, value) cell per monitored column per row, from
+    ``{column: value expression}``."""
+    cells = F.explode(F.array(*[
+        F.struct(F.lit(c).alias("column"), v.alias("value"))
+        for c, v in values.items()]))
+    return (df.select(cells.alias("__cell"))
+              .select(F.col("__cell.column").alias("column"),
+                      F.col("__cell.value").alias("value")))
+
+
 class CategoricalDriftMonitor(AlgoOperator):
     """PSI drift for categorical columns — the complement of
     :class:`DriftMonitor`'s quantile buckets: category frequencies
@@ -275,9 +303,11 @@ class CategoricalDriftMonitor(AlgoOperator):
     ``report(reference, current)`` returns one row per (column,
     category)::
 
-        column, category   category '__null__' for NULL values,
-                           '__other__' for values outside the
-                           reference's top ``maxCategories``
+        column, category   category '__other__' for values outside
+                           the reference's top ``maxCategories``;
+                           NULL values are '__null__' when
+                           '__null__' is in that vocabulary, else
+                           '__other__' too
         n_ref, n_cur       counts
         p_ref, p_cur       floored proportions
         psi_term           (p_cur − p_ref) · ln(p_cur / p_ref)
@@ -323,33 +353,6 @@ class CategoricalDriftMonitor(AlgoOperator):
             raise ValueError(f"maxCategories must be >= 1, got {v}")
         return self._set(maxCategories=v)
 
-    def _cells(self, df: DataFrame, cols: list[str]) -> DataFrame:
-        """One (column, value) cell per monitored column per row.
-        NULLs map to the ``__null__`` sentinel; a DATA value that is
-        literally equal to either sentinel string would silently merge
-        with the sentinel's population (e.g. nulls pre-stringified by
-        an upstream ETL stage), so it fails LOUDLY at execution time
-        via ``raise_error`` instead of producing merged counts."""
-        def value(c):
-            v = F.col(c).cast("string")
-            return F.coalesce(
-                F.when(v.isin(self.NULL_CAT, self.OTHER_CAT),
-                       F.raise_error(F.concat(
-                           F.lit("CategoricalDriftMonitor: column '"
-                                 f"{c}' contains the literal sentinel "
-                                 "value "), v,
-                           F.lit(" — rename it upstream; sentinel "
-                                 "categories must not occur as data"))))
-                 .otherwise(v),
-                F.lit(self.NULL_CAT))
-
-        cells = F.explode(F.array(*[
-            F.struct(F.lit(c).alias("column"), value(c).alias("value"))
-            for c in cols]))
-        return (df.select(cells.alias("__cell"))
-                  .select(F.col("__cell.column").alias("column"),
-                          F.col("__cell.value").alias("value")))
-
     def fit(self, reference: DataFrame) -> "CategoricalDriftModel":
         """Materialize the reference PROFILE — the per-column
         vocabulary plus reference category counts (__other__/__null__
@@ -363,7 +366,8 @@ class CategoricalDriftMonitor(AlgoOperator):
             raise ValueError("no columns set — call setInputCols(...)")
         mx = self.getOrDefault(self.maxCategories)
 
-        ref_counts = (self._cells(reference, cols)
+        ref_counts = (_cells(reference, {c: _category_value(c)
+                                         for c in cols})
                       .groupBy("column", "value")
                       .agg(F.count(F.lit(1)).alias("n")))
         # reference vocabulary: top-N per column, keyed window top-k
@@ -406,15 +410,12 @@ class CategoricalDriftMonitor(AlgoOperator):
 class CategoricalDriftModel(AlgoOperator):
     """Fitted categorical-drift reference profile (see
     :meth:`CategoricalDriftMonitor.fit`). ``report(current)`` maps the
-    current snapshot through the STORED vocabulary (broadcast-sized
-    literal frame) and joins the STORED reference counts — one
-    aggregation over current, zero reference scans; identical output
-    to the two-frame path (pinned by test)."""
-
-    # sentinel spellings shared with the monitor — _cells() reads them
-    # through self, so the borrowed method sees identical values
-    NULL_CAT = None   # bound below, after the monitor class exists
-    OTHER_CAT = None
+    current snapshot through the STORED vocabulary (a literal
+    ``isin`` per column, :meth:`_category`) and joins the STORED
+    reference counts — one aggregation over current, zero reference
+    scans; identical output to the two-frame path (pinned by test).
+    ``stream_categorical_drift_monitor`` maps every window by the same
+    rule."""
 
     def __init__(self, cols=None, vocab=None, ref_counts=None):
         super().__init__()
@@ -422,22 +423,33 @@ class CategoricalDriftModel(AlgoOperator):
         self._vocab = vocab or []          # [(column, value)]
         self._ref = ref_counts or []       # [(column, category, n_ref)]
 
+    def _category(self, c: str):
+        """The fitted category of column ``c``: its value when the value
+        is in the vocabulary, else ``__other__`` — so NULL reads
+        ``__null__`` only when ``__null__`` made the vocabulary."""
+        v = _category_value(c)
+        return (F.when(v.isin(*[x for cc, x in self._vocab if cc == c]), v)
+                .otherwise(F.lit(CategoricalDriftMonitor.OTHER_CAT)))
+
+    def _profile(self) -> list:
+        """(column, category expression, [(category, n_ref)]) per
+        column: what ``stream_categorical_drift_monitor`` folds per
+        event-time window."""
+        ref = {(c, cat): n for c, cat, n in self._ref}
+        return [(c, self._category(c),
+                 [(cat, ref.get((c, cat), 0))
+                  for cat in [x for cc, x in self._vocab if cc == c]
+                  + [CategoricalDriftMonitor.OTHER_CAT]])
+                for c in self._cols]
+
     def report(self, current: DataFrame) -> DataFrame:
         if not self._cols:
             raise ValueError("empty profile — fit() or load() first")
         spark = current.sparkSession
-        in_vocab = (spark.createDataFrame(
-            self._vocab, "column string, value string")
-            .withColumn("__in", F.lit(True)))
-        category = (F.when(F.col("__in").isNotNull(), F.col("value"))
-                     .otherwise(F.lit(CategoricalDriftMonitor.OTHER_CAT))
-                     .alias("category"))
-        cur_side = (CategoricalDriftMonitor._cells(
-            self, current, self._cols)
-            .join(F.broadcast(in_vocab), ["column", "value"], "left")
-            .select("column", category)
-            .groupBy("column", "category")
-            .agg(F.count(F.lit(1)).alias("n_cur")))
+        cur_side = (_cells(current, {c: self._category(c)
+                                     for c in self._cols})
+                    .groupBy("column", F.col("value").alias("category"))
+                    .agg(F.count(F.lit(1)).alias("n_cur")))
         ref_side = spark.createDataFrame(
             self._ref, "column string, category string, n_ref long")
         out = (ref_side
@@ -472,10 +484,6 @@ class CategoricalDriftModel(AlgoOperator):
         self._cols = d["cols"]
         self._vocab = [tuple(v) for v in d["vocab"]]
         self._ref = [tuple(v) for v in d["ref"]]
-
-
-CategoricalDriftModel.NULL_CAT = CategoricalDriftMonitor.NULL_CAT
-CategoricalDriftModel.OTHER_CAT = CategoricalDriftMonitor.OTHER_CAT
 
 
 class EmbeddingDriftMonitor(AlgoOperator):

@@ -31,6 +31,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from flink_ml__spark.base import AlgoOperator
+from flink_ml__spark.functions.stats import _AggStat
 
 
 class BinaryClassificationEvaluator(AlgoOperator):
@@ -411,7 +412,7 @@ class AgreementEvaluator(AlgoOperator):
         return self.evaluate(df)
 
 
-class RegressionEvaluator(AlgoOperator):
+class RegressionEvaluator(_AggStat):
     """Regression-quality metrics in ONE distributed aggregation.
 
     ``evaluate(df)`` returns ONE row::
@@ -446,31 +447,30 @@ class RegressionEvaluator(AlgoOperator):
     def setPredictionCol(self, v):
         return self._set(predictionCol=v)
 
-    def evaluate(self, df: DataFrame) -> DataFrame:
+    def _stats(self):
+        """Every row enters (invalid ones add a NULL error); ``bias``
+        (mean signed error) feeds only ``stream_regression_monitor``."""
         y = F.col(self.getOrDefault(self.labelCol)).cast("double")
         p = F.col(self.getOrDefault(self.predictionCol)).cast("double")
         valid = y.isNotNull() & p.isNotNull()
         err = F.when(valid, p - y)
-        agg = df.agg(
-            F.count(err).alias("n"),
-            F.avg(F.abs(err)).alias("mae"),
-            F.avg(err * err).alias("mse"),
-            F.max(F.abs(err)).alias("max_error"),
-            F.sum(F.when(valid, y)).alias("__sy"),
-            F.sum(F.when(valid, y * y)).alias("__syy"),
-            F.sum(F.when(valid, (p - y) * (p - y))).alias("__ss_res"),
-            F.avg(F.when(valid & (y != 0), F.abs((p - y) / y)))
-             .alias("mape"),
-        )
         n = F.col("n").cast("double")
         ss_tot = F.col("__syy") - F.col("__sy") * F.col("__sy") / n
         r2 = F.when(ss_tot > 0, 1.0 - F.col("__ss_res") / ss_tot)
-        return agg.select(
-            "n", "mae", "mse", F.sqrt(F.col("mse")).alias("rmse"),
-            r2.alias("r2"), "mape", "max_error")
-
-    def transform(self, df: DataFrame) -> DataFrame:
-        return self.evaluate(df)
+        return (F.lit(True),
+                [F.count(err).alias("n"),
+                 F.avg(F.abs(err)).alias("mae"),
+                 F.avg(err * err).alias("mse"),
+                 F.max(F.abs(err)).alias("max_error"),
+                 F.avg(err).alias("bias"),
+                 F.sum(F.when(valid, y)).alias("__sy"),
+                 F.sum(F.when(valid, y * y)).alias("__syy"),
+                 F.sum(F.when(valid, (p - y) * (p - y))).alias("__ss_res"),
+                 F.avg(F.when(valid & (y != 0), F.abs((p - y) / y)))
+                 .alias("mape")],
+                [F.col("n"), F.col("mae"), F.col("mse"),
+                 F.sqrt(F.col("mse")).alias("rmse"), r2.alias("r2"),
+                 F.col("mape"), F.col("max_error")])
 
 
 class ClusteringEvaluator(AlgoOperator):

@@ -711,6 +711,23 @@ class MannWhitneyUTest(_BinnedTwoSampleTest):
             " z_stat double, significant boolean")
 
 
+def _anova_readout() -> list:
+    """F / df_between / df_within / η² over the columns ``k_groups``,
+    ``n``, ``__sy`` (Σy), ``__syy`` (Σy²) and ``__ss_w`` (SS_within).
+    :class:`AnovaFTest` reads them from one row per frame,
+    ``stream_anova_monitor`` from one row per event-time window."""
+    n = F.col("n").cast("double")
+    ss_tot = F.col("__syy") - F.col("__sy") * F.col("__sy") / n
+    ss_b = ss_tot - F.col("__ss_w")
+    df_b = (F.col("k_groups") - 1).cast("bigint")
+    df_w = (F.col("n") - F.col("k_groups")).cast("bigint")
+    ms_b = F.when(df_b > 0, ss_b / df_b)
+    ms_w = F.when(df_w > 0, F.col("__ss_w") / df_w)
+    return [F.when(ms_w > 0, ms_b / ms_w).alias("f_stat"),
+            df_b.alias("df_between"), df_w.alias("df_within"),
+            F.when(ss_tot > 0, ss_b / ss_tot).alias("eta_sq")]
+
+
 class AnovaFTest(AlgoOperator):
     """One-way ANOVA F readout: does a numeric metric's mean differ
     across the levels of a categorical column?
@@ -762,19 +779,7 @@ class AnovaFTest(AlgoOperator):
             # SS_within = Σ_g (Σy²_g − (Σy_g)²/n_g)
             F.sum(F.col("__ss") - F.col("__s") * F.col("__s")
                   / F.col("__n")).alias("__ss_w"))
-        n = F.col("n").cast("double")
-        ss_tot = F.col("__syy") - F.col("__sy") * F.col("__sy") / n
-        ss_b = ss_tot - F.col("__ss_w")
-        df_b = (F.col("k_groups") - 1).cast("bigint")
-        df_w = (F.col("n") - F.col("k_groups")).cast("bigint")
-        ms_b = F.when(df_b > 0, ss_b / df_b)
-        ms_w = F.when(df_w > 0, F.col("__ss_w") / df_w)
-        f = F.when(ms_w > 0, ms_b / ms_w)
-        eta = F.when(ss_tot > 0, ss_b / ss_tot)
-        return tot.select("k_groups", "n", f.alias("f_stat"),
-                          df_b.alias("df_between"),
-                          df_w.alias("df_within"),
-                          eta.alias("eta_sq"))
+        return tot.select("k_groups", "n", *_anova_readout())
 
     def transform(self, df: DataFrame) -> DataFrame:
         return self.evaluate(df)
@@ -1082,7 +1087,24 @@ class GiniConcentration(AlgoOperator):
                 / (F.count(F.lit(1)) * F.sum("__w"))) * 1e6 + 0.5) / 1e6).alias("gini"))
 
 
-class WelchTTest(AlgoOperator):
+class _AggStat(AlgoOperator):
+    """An evaluator whose whole statistic is ``_stats()``: its row
+    filter, its aggregate list and its readout columns. ``evaluate(df)``
+    runs them over the whole frame; the window monitors in
+    ``streaming.online`` run the same three per event-time window."""
+
+    def _stats(self):
+        raise NotImplementedError
+
+    def evaluate(self, df: DataFrame) -> DataFrame:
+        cond, aggs, readout = self._stats()
+        return df.filter(cond).agg(*aggs).select(*readout)
+
+    def transform(self, df: DataFrame) -> DataFrame:
+        return self.evaluate(df)
+
+
+class WelchTTest(_AggStat):
     """Welch's unequal-variance two-sample t-test: does a numeric
     metric's mean differ between two named groups?
 
@@ -1133,7 +1155,10 @@ class WelchTTest(AlgoOperator):
             raise ValueError("groupA and groupB must differ")
         return self._set(groupA=a, groupB=b)
 
-    def evaluate(self, df: DataFrame) -> DataFrame:
+    def _stats(self):
+        """(row filter, aggregates, readout): ``evaluate`` runs them over
+        the whole frame, ``stream_welch_monitor`` per event-time window.
+        The variance is Σy²−(Σy)²/n over n − 1."""
         if (not self.isDefined(self.groupA)
                 or not self.isDefined(self.groupB)):
             raise ValueError("setGroups(a, b) is required")
@@ -1148,27 +1173,27 @@ class WelchTTest(AlgoOperator):
                     F.sum(v).alias(f"__s{suf}"),
                     F.sum(v * v).alias(f"__ss{suf}")]
 
-        tot = (df.filter(y.isNotNull() & g.isin(a, b))
-               .agg(*side(a, "a"), *side(b, "b")))
-        na, nb = F.col("__na").cast("double"), F.col("__nb").cast("double")
-        ma = F.col("__sa") / na
-        mb = F.col("__sb") / nb
-        # sample variance / n, via the sum-of-squares identity
-        va_n = (F.col("__ssa") - F.col("__sa") * ma) / (na - 1) / na
-        vb_n = (F.col("__ssb") - F.col("__sb") * mb) / (nb - 1) / nb
+        def mean_var_n(suf):
+            n = F.col(f"__n{suf}").cast("double")
+            s = F.col(f"__s{suf}")
+            # sample variance / n, via the sum-of-squares identity
+            return n, F.when(n > 0, s / n), F.when(
+                n > 1, (F.col(f"__ss{suf}") - s * s / n) / (n - 1) / n)
+
+        na, ma, va_n = mean_var_n("a")
+        nb, mb, vb_n = mean_var_n("b")
         se2 = va_n + vb_n
         ok = (na > 1) & (nb > 1) & (se2 > 0)
         t = F.when(ok, (ma - mb) / F.sqrt(se2))
         dof = F.when(ok, se2 * se2 / (va_n * va_n / (na - 1)
                                       + vb_n * vb_n / (nb - 1)))
-        return tot.select(
-            F.col("__na").alias("n_a"), F.col("__nb").alias("n_b"),
-            ma.alias("mean_a"), mb.alias("mean_b"),
-            t.alias("t_stat"), dof.alias("dof"),
-            F.coalesce(F.abs(t) > 1.96, F.lit(False)).alias("significant"))
-
-    def transform(self, df: DataFrame) -> DataFrame:
-        return self.evaluate(df)
+        return (y.isNotNull() & g.isin(a, b),
+                [*side(a, "a"), *side(b, "b")],
+                [F.col("__na").alias("n_a"), F.col("__nb").alias("n_b"),
+                 ma.alias("mean_a"), mb.alias("mean_b"),
+                 t.alias("t_stat"), dof.alias("dof"),
+                 F.coalesce(F.abs(t) > 1.96, F.lit(False))
+                 .alias("significant")])
 
 
 # cumulative Poisson(1) ladder for the deterministic bootstrap:
@@ -1815,7 +1840,7 @@ def _norm_ppf(p: float) -> float:
                 + b[4]) * r + 1))
 
 
-class SrmChecker(AlgoOperator):
+class SrmChecker(_AggStat):
     """Sample-ratio-mismatch check (Fabijan et al. 2019, "Diagnosing
     sample ratio mismatch"): does the observed variant split match the
     configured allocation? SRM is the #1 experiment-validity gate —
@@ -1863,7 +1888,9 @@ class SrmChecker(AlgoOperator):
             raise ValueError(f"ratioA must be in (0, 1), got {v}")
         return self._set(ratioA=v)
 
-    def evaluate(self, df: DataFrame) -> DataFrame:
+    def _stats(self):
+        """(row filter, aggregates, readout): ``evaluate`` runs them over
+        the whole frame, ``stream_srm_monitor`` per event-time window."""
         if (not self.isDefined(self.variantA)
                 or not self.isDefined(self.variantB)):
             raise ValueError("setVariants(a, b) is required")
@@ -1871,22 +1898,18 @@ class SrmChecker(AlgoOperator):
         b = self.getOrDefault(self.variantB)
         r = self.getOrDefault(self.ratioA)
         v = F.col(self.getOrDefault(self.variantCol)).cast("string")
-        m = df.filter(v.isin(a, b)).agg(
-            F.sum(F.when(v == a, 1).otherwise(0)).alias("n_a"),
-            F.sum(F.when(v == b, 1).otherwise(0)).alias("n_b"))
         n = (F.col("n_a") + F.col("n_b")).cast("double")
         ea = n * r
         eb = n * (1 - r)
         chi2 = F.when(n > 0, (F.col("n_a") - ea) * (F.col("n_a") - ea)
                       / ea + (F.col("n_b") - eb) * (F.col("n_b") - eb)
                       / eb)
-        return m.select("n_a", "n_b", ea.alias("expected_a"),
-                        chi2.alias("chi2"),
-                        F.coalesce(chi2 > 10.828, F.lit(False))
-                        .alias("srm"))
-
-    def transform(self, df: DataFrame) -> DataFrame:
-        return self.evaluate(df)
+        return (v.isin(a, b),
+                [F.sum(F.when(v == a, 1).otherwise(0)).alias("n_a"),
+                 F.sum(F.when(v == b, 1).otherwise(0)).alias("n_b")],
+                [F.col("n_a"), F.col("n_b"), ea.alias("expected_a"),
+                 chi2.alias("chi2"),
+                 F.coalesce(chi2 > 10.828, F.lit(False)).alias("srm")])
 
 
 class MdeCalculator(AlgoOperator):
@@ -1987,7 +2010,7 @@ class MdeCalculator(AlgoOperator):
         return self.evaluate(df)
 
 
-class RatioMetricAnalyzer(AlgoOperator):
+class RatioMetricAnalyzer(_AggStat):
     """Two-sample test for RATIO metrics (clicks/views, revenue/order
     — numerator and denominator both random per unit) via the delta
     method (Deng, Knoblich & Lu, KDD 2018): the naive t-test on
@@ -2042,7 +2065,9 @@ class RatioMetricAnalyzer(AlgoOperator):
             raise ValueError("variantA and variantB must differ")
         return self._set(variantA=a, variantB=b)
 
-    def evaluate(self, df: DataFrame) -> DataFrame:
+    def _stats(self):
+        """(row filter, aggregates, readout): ``evaluate`` runs them over
+        the whole frame, ``stream_ratio_monitor`` per event-time window."""
         if (not self.isDefined(self.variantA)
                 or not self.isDefined(self.variantB)):
             raise ValueError("setVariants(a, b) is required")
@@ -2051,7 +2076,6 @@ class RatioMetricAnalyzer(AlgoOperator):
         x = F.col(self.getOrDefault(self.numCol)).cast("double")
         y = F.col(self.getOrDefault(self.denCol)).cast("double")
         v = F.col(self.getOrDefault(self.variantCol)).cast("string")
-        base = df.filter(x.isNotNull() & y.isNotNull() & v.isin(a, b))
 
         def side(lbl, s):
             hit = v == lbl
@@ -2065,8 +2089,6 @@ class RatioMetricAnalyzer(AlgoOperator):
                 .alias(f"__syy{s}"),
                 F.sum(F.when(hit, x * y).otherwise(0.0))
                 .alias(f"__sxy{s}")]
-
-        m = base.agg(*side(a, "a"), *side(b, "b"))
 
         def ratio(s):
             return F.when(F.col(f"__sy{s}") != 0,
@@ -2087,15 +2109,13 @@ class RatioMetricAnalyzer(AlgoOperator):
         se = F.sqrt(var_r("a") + var_r("b"))
         diff = ratio("a") - ratio("b")
         z = F.when(se > 0, diff / se)
-        return m.select(
-            "n_a", "n_b", ratio("a").alias("ratio_a"),
-            ratio("b").alias("ratio_b"), diff.alias("diff"),
-            se.alias("se"), z.alias("z_stat"),
-            F.coalesce(F.abs(z) > 1.96, F.lit(False))
-            .alias("significant"))
-
-    def transform(self, df: DataFrame) -> DataFrame:
-        return self.evaluate(df)
+        return (x.isNotNull() & y.isNotNull() & v.isin(a, b),
+                [*side(a, "a"), *side(b, "b")],
+                [F.col("n_a"), F.col("n_b"), ratio("a").alias("ratio_a"),
+                 ratio("b").alias("ratio_b"), diff.alias("diff"),
+                 se.alias("se"), z.alias("z_stat"),
+                 F.coalesce(F.abs(z) > 1.96, F.lit(False))
+                 .alias("significant")])
 
 
 class LorenzCurveAnalyzer(AlgoOperator):

@@ -115,16 +115,16 @@ def _subset_expr(items_col: str, mask_col: str):
 
 class Apriori(AlgoOperator, AprioriParams):
 
-    def transform(self, df: DataFrame) -> DataFrame:
+    def _frequent(self, df: DataFrame) -> DataFrame:
+        """The frequent-itemset table (itemSet, count, support),
+        materialized once: basket split, the ``maxBasketSize`` guard and
+        N in one stats pass, then the subset explode, the count and the
+        support filter."""
         if self.getItemSeparator() is None:
             raise ValueError("itemSeparator must not be null")
         cols = self.getInputCols()
         if len(cols) != 1:
             raise ValueError("inputCols must be one")
-        min_sup, min_conf = self.getMinSupport(), self.getMinConfidence()
-        lift_th = self.getLift()
-        max_size = self.getMaxIter() + 1
-
         import re
 
         # repartition before the 2^n explode so subset generation
@@ -137,32 +137,42 @@ class Apriori(AlgoOperator, AprioriParams):
                     re.escape(self.getItemSeparator())).alias("__items"))
             .repartition(shuffle_n)
             .persist(StorageLevel.MEMORY_AND_DISK))
-        stats = baskets.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.max(F.size("__items")).alias("max_size")).collect()[0]
-        if (stats["max_size"] or 0) > self.getMaxBasketSize():
-            raise ValueError(
-                f"basket exceeds maxBasketSize={self.getMaxBasketSize()}; "
-                "raise the guard explicitly if the 2^n explosion is intended")
-        n_total = stats["n"]
+        try:
+            stats = baskets.agg(
+                F.count(F.lit(1)).alias("n"),
+                F.max(F.size("__items")).alias("max_size")).collect()[0]
+            if (stats["max_size"] or 0) > self.getMaxBasketSize():
+                raise ValueError(
+                    f"basket exceeds maxBasketSize="
+                    f"{self.getMaxBasketSize()}; raise the guard "
+                    "explicitly if the 2^n explosion is intended")
+            n_total = stats["n"]
 
-        # all non-empty ordered subsequences via bitmask explode
-        subsets = (baskets
-                   .withColumn("__mask", F.explode(F.expr(
-                       "sequence(1L, shiftleft(1L, size(__items)) - 1)")))
-                   .select(_subset_expr("__items", "__mask").alias("itemSet")))
-        counts = subsets.groupBy("itemSet").agg(
-            F.count(F.lit(1)).cast("int").alias("count"))
-        freq = (counts
-                .withColumn("support", F.col("count") / F.lit(float(n_total)))
-                .filter(F.col("support") >= min_sup))
-        # materialize once: three downstream references (splits/fq/fp)
-        # share the frequent table. localCheckpoint (not persist) so the
-        # blocks are released by the ContextCleaner as soon as the caller
-        # drops the result — repeated transform() calls don't accumulate
-        # CacheManager entries until LRU eviction.
-        freq = freq.localCheckpoint(eager=True)
-        baskets.unpersist()
+            # all non-empty ordered subsequences via bitmask explode
+            subsets = (baskets
+                       .withColumn("__mask", F.explode(F.expr(
+                           "sequence(1L, shiftleft(1L, size(__items)) - 1)")))
+                       .select(_subset_expr("__items", "__mask")
+                               .alias("itemSet")))
+            counts = subsets.groupBy("itemSet").agg(
+                F.count(F.lit(1)).cast("int").alias("count"))
+            freq = (counts
+                    .withColumn("support",
+                                F.col("count") / F.lit(float(n_total)))
+                    .filter(F.col("support") >= self.getMinSupport()))
+            # materialize once: transform's three downstream references
+            # (splits/fq/fp) share the frequent table. localCheckpoint (not
+            # persist) so the blocks are released by the ContextCleaner as
+            # soon as the caller drops the result — repeated calls don't
+            # accumulate CacheManager entries until LRU eviction.
+            return freq.localCheckpoint(eager=True)
+        finally:
+            baskets.unpersist()
+
+    def transform(self, df: DataFrame) -> DataFrame:
+        min_conf, lift_th = self.getMinConfidence(), self.getLift()
+        max_size = self.getMaxIter() + 1
+        freq = self._frequent(df)
 
         # rule candidates: split every frequent itemset (2 <= size <=
         # maxIter+1) into (prefix, suffix) by bitmask
@@ -212,27 +222,4 @@ class Apriori(AlgoOperator, AprioriParams):
     def frequent_itemsets(self, df: DataFrame) -> DataFrame:
         """(itemSet, count, support) table — the intermediate the
         reference exposes only implicitly."""
-        if self.getItemSeparator() is None:
-            raise ValueError("itemSeparator must not be null")
-        import re
-
-        cols = self.getInputCols()
-        baskets = df.select(
-            F.split(F.col(cols[0]),
-                    re.escape(self.getItemSeparator())).alias("__items"))
-        stats = baskets.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.max(F.size("__items")).alias("max_size")).collect()[0]
-        if (stats["max_size"] or 0) > self.getMaxBasketSize():
-            raise ValueError(
-                f"basket exceeds maxBasketSize={self.getMaxBasketSize()}; "
-                "raise the guard explicitly if the 2^n explosion is intended")
-        n_total = stats["n"]
-        subsets = (baskets
-                   .withColumn("__mask", F.explode(F.expr(
-                       "sequence(1L, shiftleft(1L, size(__items)) - 1)")))
-                   .select(_subset_expr("__items", "__mask").alias("itemSet")))
-        return (subsets.groupBy("itemSet")
-                .agg(F.count(F.lit(1)).cast("int").alias("count"))
-                .withColumn("support", F.col("count") / F.lit(float(n_total)))
-                .filter(F.col("support") >= self.getMinSupport()))
+        return self._frequent(df)

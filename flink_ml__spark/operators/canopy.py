@@ -14,7 +14,9 @@ seeded hash rank once, and "first" means minimum rank — via ``min_by``
 aggregation (no sort), so results are reproducible for a given seed.
 
 Scale notes: a driver loop of at most ``maxIter`` rounds; per round one
-``min_by`` aggregation + two filter scans over the persisted pool. Member
+``min_by`` aggregation + one filter scan over the previous round's
+locally checkpointed pool; pools of at most ``_DRIVER_POOL_ROWS`` finish
+on the driver. Member
 lists are assembled with ``collect_list`` per canopy at the end — the
 reference materializes the same arrays in its output rows
 (``Canopy.java:94-96``). For outputs too large for that, use
@@ -38,9 +40,14 @@ from flink_ml__spark.base import (
     HasPredictionCol,
     HasSeed,
     as_double_array,
-    array_width,
 )
 from flink_ml__spark.operators.fcm import _dist_expr, _np_distances
+
+# once the pool fits comfortably on the driver, the (inherently
+# sequential) selection finishes locally in numpy instead of paying one
+# cluster round-trip per remaining center — the standard tail-iteration
+# cut; above it every round stays distributed
+_DRIVER_POOL_ROWS = 200_000
 
 
 class CanopyParams(HasFeaturesCol, HasPredictionCol, HasMaxIter, HasSeed,
@@ -74,9 +81,11 @@ class Canopy(AlgoOperator, CanopyParams):
     def _centers(self, df: DataFrame) -> list[list[float]]:
         """Sequential center selection (inherently so: each center
         depends on the previous removals). Per round: one ``min_by``
-        aggregation + one filter over the cached pool; each child pool is
-        eagerly cached (its count doubles as the emptiness check) before
-        the parent is released, so lineage never recomputes."""
+        aggregation + one filter over the previous pool. Each child pool
+        is a lazy local checkpoint that the round's aggregation (which
+        doubles as the emptiness check) materializes, so its plan is a
+        scan of the checkpointed rows: lineage never recomputes and the
+        plan does not grow with the round count."""
         if self.getT1() <= self.getT2():
             raise ValueError("T1 must be greater than T2")
         t2 = self.getT2()
@@ -89,45 +98,38 @@ class Canopy(AlgoOperator, CanopyParams):
             as_double_array(df, self.getFeaturesCol()).alias("x"),
             F.xxhash64(as_double_array(df, self.getFeaturesCol()),
                        F.lit(self.getSeed())).alias("__rank"))
-        pool.persist(StorageLevel.MEMORY_AND_DISK)
-        dims = array_width(pool, "x")
-        x = [F.element_at(F.col("x"), j + 1) for j in range(dims)]
+        base = pool.persist(StorageLevel.MEMORY_AND_DISK)
 
         centers: list[list[float]] = []
         head_agg = [F.min_by("x", "__rank").alias("c"),
                     F.count(F.lit(1)).alias("n")]
-        # once the pool fits comfortably on the driver, finish the
-        # (inherently sequential) selection locally in numpy instead of
-        # paying one cluster round-trip per remaining center — the
-        # standard tail-iteration cut; above the threshold every round
-        # stays distributed
-        small_pool = 200_000
         try:
             head = pool.agg(*head_agg).collect()[0]
             rounds_left = self.getMaxIter()
             while rounds_left > 0:
                 if head is None or head["c"] is None or head["n"] == 0:
                     break
-                if head["n"] <= small_pool:
+                if head["n"] <= _DRIVER_POOL_ROWS:
                     centers.extend(self._finish_local(
                         pool, measure, t2, rounds_left))
                     break
                 center = list(head["c"])
                 centers.append(center)
                 rounds_left -= 1
+                x = [F.element_at(F.col("x"), j + 1)
+                     for j in range(len(center))]
                 d = _dist_expr(x, center, measure)
                 # pool keeps dist >= T2, dropping (near-)duplicates of
-                # the center (``Canopy.java:396-414``)
-                new_pool = (pool.filter((d > 1e-6) & (d >= t2))
-                            .persist(StorageLevel.MEMORY_AND_DISK))
-                # one job per round: next center + emptiness check in a
-                # single aggregation, which also populates the child
-                # cache before the parent is released
-                head = new_pool.agg(*head_agg).collect()[0]
-                pool.unpersist()
-                pool = new_pool
+                # the center (``Canopy.java:396-414``); one job per
+                # round: next center + emptiness check in a single
+                # aggregation, which also materializes the checkpoint
+                pool = (pool.filter((d > 1e-6) & (d >= t2))
+                        .localCheckpoint(eager=False))
+                head = pool.agg(*head_agg).collect()[0]
+                # the checkpoint now holds the surviving rows
+                base.unpersist()
         finally:
-            pool.unpersist()
+            base.unpersist()
         return centers
 
     def _finish_local(self, pool, measure: str, t2: float,

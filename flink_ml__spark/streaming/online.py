@@ -20,6 +20,10 @@ Spark-first mapping:
   buffer-until-model when the model is available up front
   (``stream_online_topsis_apply_streams`` takes the models as a stream
   too: a stream-stream join keyed by window index).
+
+The window monitors run their batch evaluators per window: the same
+row filter, aggregates and readout (``_stats()``), or the same fitted
+drift profile, so each statistic has one copy for batch and stream.
 """
 
 from __future__ import annotations
@@ -71,6 +75,60 @@ def _interval_ms(spec: str) -> int:
                 f"in {spec!r}")
         total += int(parts[i]) * _UNITS_MS[unit]
     return total
+
+
+def _per_window(src: DataFrame, time_col: str, window: str,
+                watermark_delay: str, aggs: list, readout: list
+                ) -> DataFrame:
+    """Run an aggregate list per event-time window: the watermark, one
+    ``groupBy(F.window)``, then ``window_start``, ``window_end`` and the
+    readout columns over each window's aggregates. This is how the
+    window monitors run their batch evaluators' ``_stats()``; on a
+    batch frame the watermark is a no-op and every window fires."""
+    return (src.withWatermark(time_col, watermark_delay)
+            .groupBy(F.window(F.col(time_col), window).alias("__w"))
+            .agg(*aggs)
+            .select(F.col("__w.start").alias("window_start"),
+                    F.col("__w.end").alias("window_end"), *readout))
+
+
+def _window_psi(stream_df: DataFrame, time_col: str, window: str,
+                watermark_delay: str, profile: list) -> DataFrame:
+    """PSI per event-time window and column against a fitted drift
+    profile: ``profile`` lists (column, label expression, [(label,
+    n_ref)]) — each row's bucket or category, and the reference count
+    of every label. Each label is materialized ONCE as a named
+    projection (re-embedding the expression inside every conditional
+    sum would multiply expression nodes in the hot stateful aggregate);
+    the per-label counts fold into the one windowed aggregation as
+    conditional sums, and the PSI arithmetic is a pure projection over
+    its O(windows) output — inside streaming's single-aggregation
+    constraint."""
+    from flink_ml__spark.functions.drift import _FLOOR, drift_level
+
+    labelled = stream_df.select(
+        F.col(time_col),
+        *[lab.alias(f"__l{i}") for i, (_c, lab, _r) in enumerate(profile)])
+    aggs, proj = [], []
+    for i, (c, _lab, ref) in enumerate(profile):
+        lc = F.col(f"__l{i}")
+        aggs += [F.sum((lc == F.lit(key)).cast("bigint"))
+                 .alias(f"__n{i}_{j}") for j, (key, _n) in enumerate(ref)]
+        aggs.append(F.count(lc).alias(f"__t{i}"))
+        tot = F.greatest(F.col(f"__t{i}"), F.lit(1))
+        ref_tot = max(sum(n for _k, n in ref), 1)
+        psi = F.lit(0.0)
+        for j, (_key, n_ref) in enumerate(ref):
+            p_cur = F.greatest(F.col(f"__n{i}_{j}") / tot, F.lit(_FLOOR))
+            pr = F.lit(max(n_ref / ref_tot, _FLOOR))
+            psi = psi + (p_cur - pr) * F.log(p_cur / pr)
+        proj.append(F.struct(F.lit(c).alias("column"),
+                             F.col(f"__t{i}").alias("n_rows"),
+                             psi.alias("psi")))
+    return (_per_window(labelled, time_col, window, watermark_delay, aggs,
+                        [F.explode(F.array(*proj)).alias("r")])
+            .select("window_start", "window_end", "r.*")
+            .withColumn("drift_level", drift_level(F.col("psi"))))
 
 
 def stream_online_ahp(stream_df: DataFrame, op: OnlineAHP,
@@ -215,21 +273,17 @@ def stream_expectation_monitor(stream_df: DataFrame, time_col: str,
     if not viols:
         raise ValueError("validator has no streamable rules")
 
-    win = F.window(F.col(time_col), window)
-    agg = (df.withWatermark(time_col, watermark_delay)
-             .groupBy(win.alias("__w"))
-             .agg(F.count(F.lit(1)).alias("n_rows"),
-                  *[F.sum(v.cast("bigint")).alias(f"__v{i}")
-                    for i, (_n, _t, v) in enumerate(viols)]))
     stack = F.explode(F.array(*[
         F.struct(F.lit(n).alias("rule"), F.lit(t).alias("rule_type"),
                  F.coalesce(F.col(f"__v{i}"), F.lit(0))
                   .alias("n_violations"))
         for i, (n, t, _v) in enumerate(viols)])).alias("r")
-    return (agg.select(F.col("__w.start").alias("window_start"),
-                       F.col("__w.end").alias("window_end"),
-                       "n_rows", stack)
-               .select("window_start", "window_end", "r.*", "n_rows"))
+    return (_per_window(df, time_col, window, watermark_delay,
+                        [F.count(F.lit(1)).alias("n_rows"),
+                         *[F.sum(v.cast("bigint")).alias(f"__v{i}")
+                           for i, (_n, _t, v) in enumerate(viols)]],
+                        [F.col("n_rows"), stack])
+            .select("window_start", "window_end", "r.*", "n_rows"))
 
 
 def stream_drift_monitor(stream_df: DataFrame, time_col: str,
@@ -244,13 +298,12 @@ def stream_drift_monitor(stream_df: DataFrame, time_col: str,
     was calibrated on.
 
     Takes the SAME DriftMonitor object (columns + bucket count) the
-    batch report uses. The reference's quantile edges and bucket
-    proportions are computed ONCE at plan-build time (two bounded
-    jobs on the static side); the stream then needs exactly ONE
-    stateful aggregation — per-bucket counts fold into the windowed
-    groupBy as conditional sums, and the PSI arithmetic runs as a
-    pure projection over that O(windows) output, which is what keeps
-    it inside streaming's single-aggregation constraint.
+    batch report uses, and folds the profile ``monitor.fit(reference)``
+    builds — its quantile edges and reference histogram, two bounded
+    jobs on the static side at plan-build time. The stream then needs
+    exactly ONE stateful aggregation: per-bucket counts fold into the
+    windowed groupBy as conditional sums, and the PSI arithmetic runs
+    as a pure projection over that O(windows) output.
 
     Output: ``window_start``, ``window_end``, ``column``, ``n_rows``
     (non-null values of that column in the window), ``psi``,
@@ -258,60 +311,8 @@ def stream_drift_monitor(stream_df: DataFrame, time_col: str,
     run is the oracle-gated query, the stream run the parity-tested
     twin.
     """
-    from flink_ml__spark.functions.drift import _FLOOR, drift_level
-
-    cols = monitor.getOrDefault(monitor.inputCols)
-    if not cols:
-        raise ValueError("monitor has no columns — setInputCols(...)")
-    k = monitor.getOrDefault(monitor.numBuckets)
-    edges = monitor._all_edges(reference, cols)
-
-    # reference proportions: O(cols · k) floats, shipped as literals
-    ref_hist = {(r["column"], r["bucket"]): r["n_ref"]
-                for r in monitor._hist(reference, edges, "ref")
-                .collect()}
-    ref_tot = {c: sum(v for (cc, _b), v in ref_hist.items() if cc == c)
-               for c in cols}
-    p_ref = {c: [max(ref_hist.get((c, b), 0) / ref_tot[c], _FLOOR)
-                 for b in range(k)] for c in cols}
-
-    win = F.window(F.col(time_col), window)
-    # materialize each column's bucket ONCE as a named projection —
-    # reusing the (k−1)-comparison Column object inside k conditional
-    # sums would re-embed the comparison chain per condition (O(k²)
-    # expression nodes per row in the hot stateful aggregate)
-    bucketed = stream_df.select(
-        F.col(time_col),
-        *[monitor._bucket(c, edges[c]).alias(f"__b_{c}")
-          for c in cols])
-    aggs, proj = [], []
-    for c in cols:
-        bc = F.col(f"__b_{c}")  # NULL when the source value is NULL
-        for b in range(k):
-            aggs.append(F.sum((bc == b).cast("bigint"))
-                        .alias(f"__n_{c}_{b}"))
-        aggs.append(F.sum(bc.isNotNull().cast("bigint"))
-                    .alias(f"__t_{c}"))
-    agg = (bucketed
-           .withWatermark(time_col, watermark_delay)
-           .groupBy(win.alias("__w")).agg(*aggs))
-
-    for c in cols:
-        tot = F.greatest(F.col(f"__t_{c}"), F.lit(1))
-        psi = F.lit(0.0)
-        for b in range(k):
-            p_cur = F.greatest(F.col(f"__n_{c}_{b}") / tot,
-                               F.lit(_FLOOR))
-            pr = F.lit(p_ref[c][b])
-            psi = psi + (p_cur - pr) * F.log(p_cur / pr)
-        proj.append(F.struct(F.lit(c).alias("column"),
-                             F.col(f"__t_{c}").alias("n_rows"),
-                             psi.alias("psi")))
-    stack = F.explode(F.array(*proj)).alias("r")
-    return (agg.select(F.col("__w.start").alias("window_start"),
-                       F.col("__w.end").alias("window_end"), stack)
-            .select("window_start", "window_end", "r.*")
-            .withColumn("drift_level", drift_level(F.col("psi"))))
+    return _window_psi(stream_df, time_col, window, watermark_delay,
+                       monitor.fit(reference)._profile())
 
 
 def stream_categorical_drift_monitor(stream_df: DataFrame,
@@ -327,105 +328,24 @@ def stream_categorical_drift_monitor(stream_df: DataFrame,
     parity-tested stream.
 
     Takes the SAME CategoricalDriftMonitor (columns + vocabulary
-    cap). The reference vocabulary and category proportions are
-    computed ONCE at plan-build time (one aggregate job on the
-    static side, O(cols · maxCategories) literals); the stream pays
-    exactly ONE stateful windowed aggregation — per-category counts
-    fold in as conditional sums (value-in-vocab tests over literal
-    lists), and the PSI arithmetic is a pure projection over the
-    O(windows) output. A brand-new category in a window folds into
+    cap) and folds the profile ``monitor.fit(reference)`` builds —
+    the vocabulary and reference category counts, O(cols ·
+    maxCategories) literals. Every window maps its values by the
+    fitted model's rule (a value outside the vocabulary, NULL
+    included unless ``__null__`` made the vocabulary, is
+    ``__other__``), so a window's PSI is the batch ``summary`` of
+    that window. The stream pays exactly ONE stateful windowed
+    aggregation — per-category counts fold in as conditional sums —
+    and the PSI arithmetic is a pure projection over the O(windows)
+    output. A brand-new category in a window folds into
     ``__other__``, which is the schema-drift signal the batch side
     reports too.
 
     Output: ``window_start, window_end, column, n_rows, psi,
     drift_level`` — one row per (window, column).
     """
-    from flink_ml__spark.functions.drift import _FLOOR, drift_level
-
-    cols = monitor.getOrDefault(monitor.inputCols)
-    if not cols:
-        raise ValueError("monitor has no columns — setInputCols(...)")
-    mx = monitor.getOrDefault(monitor.maxCategories)
-    null_cat, other_cat = monitor.NULL_CAT, monitor.OTHER_CAT
-
-    # one bounded job on the static side: per-column category counts,
-    # vocabulary cut to top-mx (count desc, value asc — same tie rule
-    # as the batch report's WindowGroupLimit)
-    ref_counts = (monitor._cells(reference, cols)
-                  .groupBy("column", "value")
-                  .agg(F.count(F.lit(1)).alias("n")).collect())
-    by_col: dict[str, dict[str, int]] = {c: {} for c in cols}
-    for r in ref_counts:
-        by_col[r["column"]][r["value"]] = r["n"]
-    vocab: dict[str, list[str]] = {}
-    p_ref: dict[str, dict[str, float]] = {}
-    for c in cols:
-        counts = by_col[c]
-        tot = max(sum(counts.values()), 1)
-        ranked = sorted(counts.items(), key=lambda kv: (-kv[1], kv[0]))
-        vocab[c] = [v for v, _n in ranked[:mx] if v != null_cat]
-        # fixed category set: vocab ∪ sentinels — every current value
-        # maps into it, and vocab categories absent from a window
-        # still emit their floored term (matching the batch report)
-        cats = vocab[c] + [other_cat, null_cat]
-        in_v = set(vocab[c])
-        n_of = {cat: 0 for cat in cats}
-        for v, n in counts.items():
-            key = (null_cat if v == null_cat
-                   else (v if v in in_v else other_cat))
-            n_of[key] += n
-        p_ref[c] = {cat: max(n_of[cat] / tot, _FLOOR) for cat in cats}
-
-    win = F.window(F.col(time_col), window)
-    # materialize each column's category ONCE as a named projection
-    # (same reuse rule as the numeric twin: re-embedding the isin
-    # chain inside every conditional sum multiplies expression nodes
-    # in the hot stateful aggregate)
-    def cat_of(c):
-        # NULL test FIRST: a trailing .otherwise() would swallow the
-        # NULL result of isin() and misfile NULLs as __other__
-        v = F.col(c).cast("string")
-        branch = F.when(v.isNull(), F.lit(null_cat)).when(
-            v.isin(null_cat, other_cat),
-            F.raise_error(F.concat(
-                F.lit("stream_categorical_drift_monitor: column '"
-                      f"{c}' contains the literal sentinel value "),
-                v, F.lit(" — rename it upstream"))))
-        if vocab[c]:
-            branch = branch.when(v.isin(*vocab[c]), v)
-        return branch.otherwise(F.lit(other_cat))
-
-    catted = stream_df.select(
-        F.col(time_col), *[cat_of(c).alias(f"__c_{c}") for c in cols])
-    aggs = []
-    for c in cols:
-        cc = F.col(f"__c_{c}")
-        for i, cat in enumerate(vocab[c] + [other_cat, null_cat]):
-            aggs.append(F.sum((cc == cat).cast("bigint"))
-                        .alias(f"__n_{c}_{i}"))
-        aggs.append(F.count(F.lit(1)).alias(f"__t_{c}"))
-    agg = (catted
-           .withWatermark(time_col, watermark_delay)
-           .groupBy(win.alias("__w")).agg(*aggs))
-
-    proj = []
-    for c in cols:
-        cats = vocab[c] + [other_cat, null_cat]
-        tot = F.greatest(F.col(f"__t_{c}"), F.lit(1))
-        psi = F.lit(0.0)
-        for i, cat in enumerate(cats):
-            p_cur = F.greatest(F.col(f"__n_{c}_{i}") / tot,
-                               F.lit(_FLOOR))
-            pr = F.lit(p_ref[c][cat])
-            psi = psi + (p_cur - pr) * F.log(p_cur / pr)
-        proj.append(F.struct(F.lit(c).alias("column"),
-                             F.col(f"__t_{c}").alias("n_rows"),
-                             psi.alias("psi")))
-    stack = F.explode(F.array(*proj)).alias("r")
-    return (agg.select(F.col("__w.start").alias("window_start"),
-                       F.col("__w.end").alias("window_end"), stack)
-            .select("window_start", "window_end", "r.*")
-            .withColumn("drift_level", drift_level(F.col("psi"))))
+    return _window_psi(stream_df, time_col, window, watermark_delay,
+                       monitor.fit(reference)._profile())
 
 
 def stream_domain_balance(stream_df: DataFrame, balancer,
@@ -509,7 +429,6 @@ def stream_correlation_monitor(stream_df: DataFrame, time_col: str,
     the batch run is the oracle-gated query, the stream run the
     parity-tested twin.
     """
-    win = F.window(F.col(time_col), window)
     # materialize the pair projections once (named columns) so the
     # conditional sums don't re-embed the both-non-null masks
     proj_cols = [F.col(time_col)]
@@ -532,10 +451,6 @@ def stream_correlation_monitor(stream_df: DataFrame, time_col: str,
             F.sum(yc * yc).alias(f"__syy_{i}"),
             F.sum(xc * yc).alias(f"__sxy_{i}"),
         ]
-    agg = (masked
-           .withWatermark(time_col, watermark_delay)
-           .groupBy(win.alias("__w")).agg(*aggs))
-
     outs = []
     for i, (x, y) in enumerate(pairs):
         n = F.col(f"__n_{i}").cast("double")
@@ -548,9 +463,8 @@ def stream_correlation_monitor(stream_df: DataFrame, time_col: str,
         outs.append(F.struct(F.lit(f"{x}:{y}").alias("pair"),
                              F.col(f"__n_{i}").alias("n"),
                              corr.alias("corr")))
-    stack = F.explode(F.array(*outs)).alias("r")
-    return (agg.select(F.col("__w.start").alias("window_start"),
-                       F.col("__w.end").alias("window_end"), stack)
+    return (_per_window(masked, time_col, window, watermark_delay, aggs,
+                        [F.explode(F.array(*outs)).alias("r")])
             .select("window_start", "window_end", "r.*"))
 
 
@@ -765,20 +679,11 @@ def stream_online_topsis_apply_streams(
 def stream_online_topsis_apply(stream_df: DataFrame,
                                model: OnlineTopsisModel,
                                watermark_delay: str = "0 seconds") -> DataFrame:
-    """Score a stream against a fitted OnlineTopsis model table
-    (stream-static broadcast range join)."""
-    md = model.getModelData().select(
-        F.col("timestamp").alias("__ot_max"),
-        F.col("score").alias("__ot_score"),
-        F.col("minTimestamp").alias("__ot_min"))
-    time_col = model.getTimeCol()
-    t = (F.unix_millis(F.col(time_col).cast("timestamp"))
-         - F.lit(model.getMaxAllowedModelDelayMs()))
-    cond = (t >= md["__ot_min"]) & (t <= md["__ot_max"])
-    src = stream_df.withWatermark(time_col, watermark_delay)
-    out = src.join(F.broadcast(md), cond, "inner")
-    return out.select(*stream_df.columns,
-                      F.col("__ot_score").alias(model.getPredictionCol()))
+    """Score a stream against a fitted OnlineTopsis model table: the
+    model's own stream-static broadcast range join, over the
+    watermarked stream."""
+    return model.transform(
+        stream_df.withWatermark(model.getTimeCol(), watermark_delay))
 
 
 def stream_ewma(stream_df: DataFrame, op) -> DataFrame:
@@ -993,14 +898,6 @@ def stream_ks_monitor(stream_df: DataFrame, time_col: str,
     ref_n = int(row["n"])
     ref_cdf = [ref_row[f"c{j}"] / ref_n for j in range(len(edges))]
 
-    win = F.window(F.col(time_col), window)
-    src = stream_df
-    if stream_df.isStreaming:
-        src = stream_df.withWatermark(time_col, watermark_delay)
-    agg = (src.groupBy(win.alias("__w"))
-           .agg(F.count(x).alias("n_rows"),
-                *[F.sum((x <= F.lit(e)).cast("long")).alias(f"__c{j}")
-                  for j, e in enumerate(edges)]))
     n = F.col("n_rows").cast("double")
     terms = [F.abs(F.col(f"__c{j}") / n - F.lit(ref_cdf[j]))
              for j in range(len(edges))]
@@ -1009,9 +906,12 @@ def stream_ks_monitor(stream_df: DataFrame, time_col: str,
     ne = n * ref_n / (n + F.lit(float(ref_n)))
     p = F.when(d.isNotNull(),
                F.least(F.lit(1.0), 2.0 * F.exp(-2.0 * d * d * ne)))
-    return agg.select(F.col("__w.start").alias("window_start"),
-                      F.col("__w.end").alias("window_end"),
-                      "n_rows", d.alias("d_stat"), p.alias("p_value"))
+    return _per_window(
+        stream_df, time_col, window, watermark_delay,
+        [F.count(x).alias("n_rows"),
+         *[F.sum((x <= F.lit(e)).cast("long")).alias(f"__c{j}")
+           for j, e in enumerate(edges)]],
+        [F.col("n_rows"), d.alias("d_stat"), p.alias("p_value")])
 
 
 def stream_ohlc(stream_df: DataFrame, time_col: str, key_col: str,
@@ -1033,9 +933,8 @@ def stream_ohlc(stream_df: DataFrame, time_col: str, key_col: str,
     t = F.col(time_col)
     k = F.col(key_col)
     v = F.col(value_col).cast("double")
-    src = stream_df.filter(t.isNotNull() & k.isNotNull() & v.isNotNull())
-    if stream_df.isStreaming:
-        src = src.withWatermark(time_col, watermark_delay)
+    src = (stream_df.filter(t.isNotNull() & k.isNotNull() & v.isNotNull())
+           .withWatermark(time_col, watermark_delay))
     order = F.struct(t, v)
     return (src.groupBy(F.window(t, window).alias("__w"), k)
             .agg(F.min_by(v, order).alias("open"),
@@ -1059,36 +958,23 @@ def stream_regression_monitor(stream_df: DataFrame, time_col: str,
     per event-time window, how well a deployed predictor tracks the
     observed label (the model-degradation dashboard).
 
-    Every metric is algebraic (MAE/MSE/RMSE and R² via the
-    Σy²−(Σy)²/n identity), so the whole readout folds into ONE
-    watermarked windowed aggregation with O(1) state per open window —
-    no percentiles, no sort, no second pass. Output: ``window_start``,
+    Runs the evaluator's own aggregates and readout per window. Every
+    metric is algebraic (MAE/MSE/RMSE and R² via the Σy²−(Σy)²/n
+    identity), so the whole readout folds into ONE watermarked
+    windowed aggregation with O(1) state per open window — no
+    percentiles, no sort, no second pass. Output: ``window_start``,
     ``window_end``, ``n``, ``mae``, ``rmse``, ``bias`` (mean signed
     error), ``r2``. Runs identically on a batch frame (the batch run
     is the oracle-gated query)."""
-    t = F.col(time_col)
-    y = F.col(label_col).cast("double")
-    p = F.col(prediction_col).cast("double")
-    src = stream_df.filter(t.isNotNull())
-    if stream_df.isStreaming:
-        src = src.withWatermark(time_col, watermark_delay)
-    valid = y.isNotNull() & p.isNotNull()
-    err = F.when(valid, p - y)
-    agg = (src.groupBy(F.window(t, window).alias("__w"))
-           .agg(F.count(err).alias("n"),
-                F.avg(F.abs(err)).alias("mae"),
-                F.avg(err * err).alias("__mse"),
-                F.avg(err).alias("bias"),
-                F.sum(F.when(valid, y)).alias("__sy"),
-                F.sum(F.when(valid, y * y)).alias("__syy"),
-                F.sum(F.when(valid, (p - y) * (p - y))).alias("__ssr")))
-    n = F.col("n").cast("double")
-    ss_tot = F.col("__syy") - F.col("__sy") * F.col("__sy") / n
-    r2 = F.when(ss_tot > 0, 1.0 - F.col("__ssr") / ss_tot)
-    return agg.select(F.col("__w.start").alias("window_start"),
-                      F.col("__w.end").alias("window_end"),
-                      "n", "mae", F.sqrt(F.col("__mse")).alias("rmse"),
-                      "bias", r2.alias("r2"))
+    from flink_ml__spark.functions.evaluation import RegressionEvaluator
+
+    cond, aggs, readout = (RegressionEvaluator().setLabelCol(label_col)
+                           .setPredictionCol(prediction_col)._stats())
+    src = stream_df.filter(F.col(time_col).isNotNull() & cond)
+    return (_per_window(src, time_col, window, watermark_delay, aggs,
+                        [*readout, F.col("bias")])
+            .select("window_start", "window_end", "n", "mae", "rmse",
+                    "bias", "r2"))
 
 
 def stream_anova_monitor(stream_df: DataFrame, time_col: str,
@@ -1110,13 +996,15 @@ def stream_anova_monitor(stream_df: DataFrame, time_col: str,
     literals; unseen stream groups are ignored and surface through the
     categorical drift monitor instead). Per window, each group's
     (n, Σy, Σy²) are conditional sums inside the ONE watermarked
-    aggregate; F / dfs / η² are projections over those O(groups)
-    columns. Capped at ``max_groups`` (by reference frequency) —
+    aggregate; F / dfs / η² are the batch test's readout over the
+    window's totals. Capped at ``max_groups`` (by reference frequency) —
     past that, a per-window ANOVA is not a conditional-sum problem.
 
     Output: ``window_start``, ``window_end``, ``k_groups`` (observed
     in the window), ``n``, ``f_stat``, ``df_between``, ``df_within``,
     ``eta_sq``. Runs identically on a batch frame (oracle-gated)."""
+    from flink_ml__spark.functions.stats import _anova_readout
+
     g = F.col(group_col).cast("string")
     y = F.col(value_col).cast("double")
     vocab_rows = (reference
@@ -1129,11 +1017,8 @@ def stream_anova_monitor(stream_df: DataFrame, time_col: str,
         raise ValueError("reference has no (group, value) rows")
     vocab = [r["__g"] for r in vocab_rows]
 
-    t = F.col(time_col)
-    src = stream_df.filter(t.isNotNull() & y.isNotNull()
+    src = stream_df.filter(F.col(time_col).isNotNull() & y.isNotNull()
                            & g.isin(vocab))
-    if stream_df.isStreaming:
-        src = src.withWatermark(time_col, watermark_delay)
     aggs = []
     for i, grp in enumerate(vocab):
         hit = g == F.lit(grp)
@@ -1142,34 +1027,21 @@ def stream_anova_monitor(stream_df: DataFrame, time_col: str,
             F.sum(F.when(hit, y).otherwise(0.0)).alias(f"__s{i}"),
             F.sum(F.when(hit, y * y).otherwise(0.0)).alias(f"__q{i}"),
         ]
-    agg = src.groupBy(F.window(t, window).alias("__w")).agg(*aggs)
-
-    k_obs = sum((F.col(f"__n{i}") > 0).cast("int")
-                for i in range(len(vocab)))
-    n = sum(F.col(f"__n{i}") for i in range(len(vocab)))
-    sy = sum(F.col(f"__s{i}") for i in range(len(vocab)))
-    syy = sum(F.col(f"__q{i}") for i in range(len(vocab)))
-    ss_w = sum(F.when(F.col(f"__n{i}") > 0,
-                      F.col(f"__q{i}") - F.col(f"__s{i}")
-                      * F.col(f"__s{i}") / F.col(f"__n{i}"))
-               .otherwise(0.0) for i in range(len(vocab)))
-    out = (agg.withColumn("k_groups", k_obs.cast("bigint"))
-           .withColumn("n", n.cast("bigint"))
-           .withColumn("__sy", sy).withColumn("__syy", syy)
-           .withColumn("__ssw", ss_w))
-    nd = F.col("n").cast("double")
-    ss_tot = F.col("__syy") - F.col("__sy") * F.col("__sy") / nd
-    df_b = (F.col("k_groups") - 1).cast("bigint")
-    df_w = (F.col("n") - F.col("k_groups")).cast("bigint")
-    ms_b = F.when(df_b > 0, (ss_tot - F.col("__ssw")) / df_b)
-    ms_w = F.when(df_w > 0, F.col("__ssw") / df_w)
-    f_stat = F.when(ms_w > 0, ms_b / ms_w)
-    eta = F.when(ss_tot > 0, (ss_tot - F.col("__ssw")) / ss_tot)
-    return out.select(F.col("__w.start").alias("window_start"),
-                      F.col("__w.end").alias("window_end"),
-                      "k_groups", "n", f_stat.alias("f_stat"),
-                      df_b.alias("df_between"), df_w.alias("df_within"),
-                      eta.alias("eta_sq"))
+    groups = range(len(vocab))
+    n_i, s_i, q_i = ([F.col(f"__{m}{i}") for i in groups] for m in "nsq")
+    # (k_groups, n, Σy, Σy², SS_within) of the window: the columns the
+    # batch AnovaFTest readout reads
+    totals = [
+        sum((n > 0).cast("int") for n in n_i).cast("bigint")
+        .alias("k_groups"),
+        sum(n_i).cast("bigint").alias("n"),
+        sum(s_i).alias("__sy"), sum(q_i).alias("__syy"),
+        sum(F.when(n > 0, q - s * s / n).otherwise(0.0)
+            for n, s, q in zip(n_i, s_i, q_i)).alias("__ss_w")]
+    return (_per_window(src, time_col, window, watermark_delay, aggs,
+                        totals)
+            .select("window_start", "window_end", "k_groups", "n",
+                    *_anova_readout()))
 
 
 def stream_quantile_monitor(stream_df: DataFrame, time_col: str,
@@ -1198,9 +1070,8 @@ def stream_quantile_monitor(stream_df: DataFrame, time_col: str,
     """
     t = F.col(time_col)
     x = F.col(value_col).cast("double")
-    src = stream_df.filter(t.isNotNull() & x.isNotNull())
-    if stream_df.isStreaming:
-        src = src.withWatermark(time_col, watermark_delay)
+    src = (stream_df.filter(t.isNotNull() & x.isNotNull())
+           .withWatermark(time_col, watermark_delay))
     keys = [F.window(t, window).alias("__w")]
     if group_col:
         keys.insert(0, F.col(group_col))
@@ -1373,55 +1244,23 @@ def stream_welch_monitor(stream_df: DataFrame, time_col: str,
     drifting from segment B's? (The A/B guardrail metric emitted
     continuously instead of at experiment end.)
 
-    Per window each side's (n, Σy, Σy²) are conditional sums inside
-    the ONE watermarked aggregate; t and the Welch–Satterthwaite dof
-    are projections over those six columns — O(1) state per window,
-    no buffering. Runs identically on a batch frame (oracle-gated
+    Runs the test's own aggregates and readout per window: each side's
+    (n, Σy, Σy²) are conditional sums inside the ONE watermarked
+    aggregate; t and the Welch–Satterthwaite dof are projections over
+    those six columns — O(1) state per window, no buffering. Runs identically on a batch frame (oracle-gated
     via ``welch_window_events``).
 
     Output: ``window_start``, ``window_end``, ``n_a``, ``n_b``,
     ``mean_a``, ``mean_b``, ``t_stat``, ``dof``, ``significant``.
     """
-    if label_a == label_b:
-        raise ValueError("label_a and label_b must differ")
-    t = F.col(time_col)
-    y = F.col(value_col).cast("double")
-    g = F.col(group_col).cast("string")
-    src = stream_df.filter(t.isNotNull() & y.isNotNull()
-                           & g.isin(label_a, label_b))
-    if stream_df.isStreaming:
-        src = src.withWatermark(time_col, watermark_delay)
+    from flink_ml__spark.functions.stats import WelchTTest
 
-    def side(lbl, suf):
-        hit = g == F.lit(lbl)
-        return [F.sum(F.when(hit, 1).otherwise(0)).alias(f"__n{suf}"),
-                F.sum(F.when(hit, y).otherwise(0.0)).alias(f"__s{suf}"),
-                F.sum(F.when(hit, y * y).otherwise(0.0))
-                .alias(f"__q{suf}")]
-
-    agg = (src.groupBy(F.window(t, window).alias("__w"))
-           .agg(*side(label_a, "a"), *side(label_b, "b")))
-    na = F.col("__na").cast("double")
-    nb = F.col("__nb").cast("double")
-    ma = F.when(na > 0, F.col("__sa") / na)
-    mb = F.when(nb > 0, F.col("__sb") / nb)
-    va_n = F.when(na > 1, (F.col("__qa") - F.col("__sa") * F.col("__sa")
-                           / na) / (na - 1) / na)
-    vb_n = F.when(nb > 1, (F.col("__qb") - F.col("__sb") * F.col("__sb")
-                           / nb) / (nb - 1) / nb)
-    se2 = va_n + vb_n
-    ok = (na > 1) & (nb > 1) & (se2 > 0)
-    t_stat = F.when(ok, (ma - mb) / F.sqrt(se2))
-    dof = F.when(ok, se2 * se2 / (va_n * va_n / (na - 1)
-                                  + vb_n * vb_n / (nb - 1)))
-    return agg.select(
-        F.col("__w.start").alias("window_start"),
-        F.col("__w.end").alias("window_end"),
-        F.col("__na").alias("n_a"), F.col("__nb").alias("n_b"),
-        ma.alias("mean_a"), mb.alias("mean_b"),
-        t_stat.alias("t_stat"), dof.alias("dof"),
-        F.coalesce(F.abs(t_stat) > 1.96, F.lit(False))
-        .alias("significant"))
+    cond, aggs, readout = (WelchTTest().setValueCol(value_col)
+                           .setGroupCol(group_col)
+                           .setGroups(label_a, label_b)._stats())
+    src = stream_df.filter(F.col(time_col).isNotNull() & cond)
+    return _per_window(src, time_col, window, watermark_delay, aggs,
+                       readout)
 
 
 def stream_srm_monitor(stream_df: DataFrame, time_col: str,
@@ -1435,36 +1274,19 @@ def stream_srm_monitor(stream_df: DataFrame, time_col: str,
     configured allocation? A randomizer bug or a crashing variant
     shows up here within one window instead of at experiment readout.
 
-    Per window the two counts are conditional sums inside the ONE
-    watermarked aggregate; χ² and the p=0.001 flag are projections.
-    Output: ``window_start``, ``window_end``, ``n_a``, ``n_b``,
+    Runs the checker's own aggregates and readout per window: the two
+    counts are conditional sums inside the ONE watermarked aggregate;
+    χ² and the p=0.001 flag are projections. Output: ``window_start``, ``window_end``, ``n_a``, ``n_b``,
     ``expected_a``, ``chi2``, ``srm``. Runs identically on a batch
     frame (oracle-gated via ``srm_window_events``)."""
-    if label_a == label_b:
-        raise ValueError("label_a and label_b must differ")
-    if not 0 < ratio_a < 1:
-        raise ValueError("ratio_a must be in (0, 1)")
-    t = F.col(time_col)
-    v = F.col(variant_col).cast("string")
-    src = stream_df.filter(t.isNotNull() & v.isin(label_a, label_b))
-    if stream_df.isStreaming:
-        src = src.withWatermark(time_col, watermark_delay)
-    agg = (src.groupBy(F.window(t, window).alias("__w"))
-           .agg(F.sum(F.when(v == label_a, 1).otherwise(0))
-                .alias("n_a"),
-                F.sum(F.when(v == label_b, 1).otherwise(0))
-                .alias("n_b")))
-    n = (F.col("n_a") + F.col("n_b")).cast("double")
-    ea = n * ratio_a
-    eb = n * (1 - ratio_a)
-    chi2 = F.when(n > 0, (F.col("n_a") - ea) * (F.col("n_a") - ea) / ea
-                  + (F.col("n_b") - eb) * (F.col("n_b") - eb) / eb)
-    return agg.select(F.col("__w.start").alias("window_start"),
-                      F.col("__w.end").alias("window_end"),
-                      "n_a", "n_b", ea.alias("expected_a"),
-                      chi2.alias("chi2"),
-                      F.coalesce(chi2 > 10.828, F.lit(False))
-                      .alias("srm"))
+    from flink_ml__spark.functions.stats import SrmChecker
+
+    cond, aggs, readout = (SrmChecker().setVariantCol(variant_col)
+                           .setVariants(label_a, label_b)
+                           .setRatioA(ratio_a)._stats())
+    src = stream_df.filter(F.col(time_col).isNotNull() & cond)
+    return _per_window(src, time_col, window, watermark_delay, aggs,
+                       readout)
 
 
 def stream_ratio_monitor(stream_df: DataFrame, time_col: str,
@@ -1481,64 +1303,23 @@ def stream_ratio_monitor(stream_df: DataFrame, time_col: str,
     this for ratio metrics).
 
     Rows here are UNITS (pre-aggregated per user upstream, or raw
-    rows when the unit is the row). Per window each side's six
-    moments are conditional sums inside the ONE watermarked
-    aggregate; ratios, variances and z are projections.
+    rows when the unit is the row). Runs the analyzer's own
+    aggregates and readout per window: each side's six moments are
+    conditional sums inside the ONE watermarked aggregate; ratios,
+    variances and z are projections.
 
     Output: ``window_start``, ``window_end``, ``n_a``, ``n_b``,
     ``ratio_a``, ``ratio_b``, ``diff``, ``se``, ``z_stat``,
     ``significant``. Runs identically on a batch frame (oracle-gated
     via ``ratio_window_events``)."""
-    if label_a == label_b:
-        raise ValueError("label_a and label_b must differ")
-    t = F.col(time_col)
-    x = F.col(num_col).cast("double")
-    y = F.col(den_col).cast("double")
-    v = F.col(variant_col).cast("string")
-    src = stream_df.filter(t.isNotNull() & x.isNotNull()
-                           & y.isNotNull() & v.isin(label_a, label_b))
-    if stream_df.isStreaming:
-        src = src.withWatermark(time_col, watermark_delay)
+    from flink_ml__spark.functions.stats import RatioMetricAnalyzer
 
-    def side(lbl, s):
-        hit = v == lbl
-        return [
-            F.sum(F.when(hit, 1).otherwise(0)).alias(f"__n{s}"),
-            F.sum(F.when(hit, x).otherwise(0.0)).alias(f"__sx{s}"),
-            F.sum(F.when(hit, y).otherwise(0.0)).alias(f"__sy{s}"),
-            F.sum(F.when(hit, x * x).otherwise(0.0)).alias(f"__sxx{s}"),
-            F.sum(F.when(hit, y * y).otherwise(0.0)).alias(f"__syy{s}"),
-            F.sum(F.when(hit, x * y).otherwise(0.0)).alias(f"__sxy{s}")]
-
-    agg = (src.groupBy(F.window(t, window).alias("__w"))
-           .agg(*side(label_a, "a"), *side(label_b, "b")))
-
-    def ratio(s):
-        return F.when(F.col(f"__sy{s}") != 0,
-                      F.col(f"__sx{s}") / F.col(f"__sy{s}"))
-
-    def var_r(s):
-        n = F.col(f"__n{s}").cast("double")
-        mx = F.col(f"__sx{s}") / n
-        my = F.col(f"__sy{s}") / n
-        sxx = (F.col(f"__sxx{s}") - n * mx * mx) / (n - 1)
-        syy = (F.col(f"__syy{s}") - n * my * my) / (n - 1)
-        sxy = (F.col(f"__sxy{s}") - n * mx * my) / (n - 1)
-        r = ratio(s)
-        return F.when((n > 1) & (my != 0),
-                      (sxx - 2 * r * sxy + r * r * syy)
-                      / (n * my * my))
-
-    se = F.sqrt(var_r("a") + var_r("b"))
-    diff = ratio("a") - ratio("b")
-    z = F.when(se > 0, diff / se)
-    return agg.select(
-        F.col("__w.start").alias("window_start"),
-        F.col("__w.end").alias("window_end"),
-        F.col("__na").alias("n_a"), F.col("__nb").alias("n_b"),
-        ratio("a").alias("ratio_a"), ratio("b").alias("ratio_b"),
-        diff.alias("diff"), se.alias("se"), z.alias("z_stat"),
-        F.coalesce(F.abs(z) > 1.96, F.lit(False)).alias("significant"))
+    cond, aggs, readout = (RatioMetricAnalyzer().setNumCol(num_col)
+                           .setDenCol(den_col).setVariantCol(variant_col)
+                           .setVariants(label_a, label_b)._stats())
+    src = stream_df.filter(F.col(time_col).isNotNull() & cond)
+    return _per_window(src, time_col, window, watermark_delay, aggs,
+                       readout)
 
 
 def stream_boilerplate_score(corpus_df: DataFrame, scorer, emit, *,

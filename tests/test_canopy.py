@@ -70,3 +70,25 @@ def test_assign_flat_output(spark):
     flat = Canopy().setT1(3.0).setT2(1.5).setSeed(42).assign(df)
     assert flat.columns == ["canopy_id", "centroid", "point"]
     assert flat.count() >= len(POINTS)
+
+
+@pytest.mark.parametrize("measure,t2", [("euclidean", 0.3),
+                                        ("cosine", 0.002)])
+def test_distributed_rounds_match_local_tail(spark, monkeypatch, measure,
+                                             t2):
+    """With the driver tail switched off, every round runs distributed
+    over a repartitioned pool (one checkpoint per round, 20 rounds at the
+    default maxIter) and must pick the local tail's centers exactly."""
+    import math
+
+    from flink_ml__spark.operators import canopy
+
+    pts = [([math.sin(1.3 * i) * 5, math.cos(0.7 * i) * 3,
+             (i % 7) * 0.9 + 0.1],) for i in range(60)]
+    df = spark.createDataFrame(pts, ["features"]).repartition(4)
+    op = (Canopy().setT1(2 * t2).setT2(t2).setSeed(11)
+          .setDistanceMeasure(measure))
+    local = op._centers(df)
+    assert len(local) == op.getMaxIter() == 20
+    monkeypatch.setattr(canopy, "_DRIVER_POOL_ROWS", 0)
+    assert op._centers(df) == local

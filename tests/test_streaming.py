@@ -849,6 +849,23 @@ def test_stream_categorical_drift_monitor_matches_batch(spark):
     assert math.isclose(batch[sorted(batch)[0][0], "cat"][1],
                         rep["psi"], abs_tol=1e-6)
 
+    # NULL outside the top-maxCategories vocabulary is __other__ on
+    # both sides: the window's PSI is the batch summary's
+    ref3 = spark.createDataFrame(
+        [(i, ["a", "a", "a", "b", "b", "c", None][i % 7])
+         for i in range(70)], "id long, cat string")
+    cur3 = spark.createDataFrame(
+        [(i, datetime(2024, 1, 1, 0, 0, 7, tzinfo=timezone.utc),
+          ["a", None, None, None, "d"][i % 5]) for i in range(50)],
+        "id long, ts timestamp, cat string")
+    mon2 = (CategoricalDriftMonitor().setInputCols("cat")
+            .setMaxCategories(2))
+    assert "__null__" not in {v for _c, v in mon2.fit(ref3)._vocab}
+    win = stream_categorical_drift_monitor(cur3, "ts", mon2, ref3).first()
+    rep3 = mon2.summary(ref3, cur3.drop("ts")).first()
+    assert win["n_rows"] == 50
+    assert math.isclose(win["psi"], rep3["psi"], abs_tol=1e-12)
+
     d = tempfile.mkdtemp(prefix="stream_catdrift_")
     try:
         df.coalesce(1).write.mode("overwrite").parquet(d)
@@ -1227,6 +1244,22 @@ def test_stream_regression_monitor_matches_batch(spark):
     assert first[0] == 10  # the NULL-label row doesn't count
     assert math.isclose(first[1], sum(abs((i % 3) - 1)
                                       for i in range(10)) / 10)
+
+    # window 1 IS the batch RegressionEvaluator on the same slice
+    from pyspark.sql import functions as F
+
+    from flink_ml__spark.functions.evaluation import RegressionEvaluator
+
+    lo = datetime(2024, 1, 1, 0, 1, tzinfo=timezone.utc)
+    sl = df.filter((F.col("ts") >= lo) & (F.col("ts") < datetime(
+        2024, 1, 1, 0, 2, tzinfo=timezone.utc)))
+    ref = (RegressionEvaluator().setLabelCol("label")
+           .setPredictionCol("pred").evaluate(sl).first())
+    w1 = (stream_regression_monitor(df, "ts", "label", "pred")
+          .filter(F.col("window_start") == lo).first())
+    assert ref["r2"] is not None
+    for c in ("n", "mae", "rmse", "r2"):
+        assert w1[c] == ref[c], c
 
     d = _tf.mkdtemp(prefix="stream_reg_")
     try:
@@ -1706,15 +1739,18 @@ def test_stream_welch_monitor_matches_batch_and_welch(spark):
     # the shifted windows must flag
     assert any(r[6] for r in batch)
 
-    # window 2 agrees with the batch WelchTTest on the same slice
-    sl = df.filter((F.col("ts") >= base + _dt.timedelta(minutes=2))
+    # window 2 IS the batch WelchTTest on the same slice: one kernel,
+    # so every column is equal, not just close
+    lo = base + _dt.timedelta(minutes=2)
+    sl = df.filter((F.col("ts") >= lo)
                    & (F.col("ts") < base + _dt.timedelta(minutes=3)))
     ref = (WelchTTest().setValueCol("v").setGroupCol("g")
            .setGroups("a", "b").evaluate(sl).first())
-    w2 = [r for r in batch
-          if r[0] == base + _dt.timedelta(minutes=2)][0]
-    assert w2[1] == ref["n_a"] and w2[2] == ref["n_b"]
-    assert abs(w2[5] - ref["t_stat"]) < 1e-9
+    w2 = (stream_welch_monitor(df, "ts", "v", "g", "a", "b",
+                               window="1 minute")
+          .filter(F.col("window_start") == lo)
+          .drop("window_start", "window_end").first())
+    assert w2.asDict() == ref.asDict()
 
     d = _tf.mkdtemp(prefix="welch_stream_")
     try:
@@ -1807,6 +1843,22 @@ def test_stream_srm_monitor_matches_batch(spark):
                                      window="1 minute"))
     assert any(r[4] for r in batch)          # the skewed window flags
     assert not all(r[4] for r in batch)      # the fair windows don't
+
+    # the skewed window IS the batch SrmChecker on the same slice
+    from pyspark.sql import functions as F
+
+    from flink_ml__spark.functions.stats import SrmChecker
+
+    lo = base + _dt.timedelta(minutes=2)
+    sl = df.filter((F.col("ts") >= lo)
+                   & (F.col("ts") < base + _dt.timedelta(minutes=3)))
+    ref = (SrmChecker().setVariantCol("v").setVariants("a", "b")
+           .evaluate(sl).first())
+    w1 = (stream_srm_monitor(df, "ts", "v", "a", "b", window="1 minute")
+          .filter(F.col("window_start") == lo)
+          .drop("window_start", "window_end").first())
+    assert ref["srm"] and w1.asDict() == ref.asDict()
+
     d = _tf.mkdtemp(prefix="srm_stream_")
     try:
         df.coalesce(1).write.mode("overwrite").parquet(d)
@@ -1866,16 +1918,19 @@ def test_stream_ratio_monitor_matches_batch_and_ratio(spark):
     assert len(batch) == 8
     assert any(r[6] for r in batch)       # the planted window flags
 
-    # window 2 agrees with the batch analyzer on the same slice
-    sl = df.filter((F.col("ts") >= base + _dt.timedelta(minutes=2))
+    # window 2 IS the batch analyzer on the same slice: every column
+    # is equal, not just close
+    lo = base + _dt.timedelta(minutes=2)
+    sl = df.filter((F.col("ts") >= lo)
                    & (F.col("ts") < base + _dt.timedelta(minutes=3)))
     ref = (RatioMetricAnalyzer().setNumCol("num").setDenCol("den")
            .setVariantCol("g").setVariants("a", "b")
            .evaluate(sl).first())
-    w2 = [r for r in batch
-          if r[0] == base + _dt.timedelta(minutes=2)][0]
-    assert w2[1] == ref["n_a"]
-    assert abs(w2[5] - ref["z_stat"]) < 1e-9
+    w2 = (stream_ratio_monitor(df, "ts", "num", "den", "g", "a", "b",
+                               window="1 minute")
+          .filter(F.col("window_start") == lo)
+          .drop("window_start", "window_end").first())
+    assert w2.asDict() == ref.asDict()
 
     d = _tf.mkdtemp(prefix="ratio_stream_")
     try:
