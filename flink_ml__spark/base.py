@@ -12,9 +12,11 @@ Here the same contract is expressed in the ``pyspark.ml`` idiom:
 * params         → ``pyspark.ml.param.Param`` on ``Params`` mixins
 * AlgoOperator   → a ``Transformer`` (stateless ``transform(df) -> df``)
 * Estimator      → ``Estimator.fit(df) -> Model``
-* persistence    → params metadata JSON (``DefaultParamsWriter``-compatible
-  layout: ``<path>/metadata``) plus, for models, a parquet model-data
-  directory ``<path>/data``.
+* persistence    → one ``<path>/metadata`` JSON (``DefaultParamsWriter``-
+  compatible layout) holding the params and the fitted state each stage
+  names in ``_state``; a state value that is a ``DataFrame`` goes to
+  parquet under ``<path>/<name>`` and a ``bytes`` value to the file
+  ``<path>/<name>`` (``name`` without its leading underscores).
 
 Feature columns are accepted either as ``pyspark.ml.linalg`` vectors
 (``VectorUDT``) or as ``array<double>`` columns; internally all vector math
@@ -24,6 +26,7 @@ and results remain plain-SQL comparable.
 
 from __future__ import annotations
 
+import importlib
 import json
 import math
 import os
@@ -290,12 +293,57 @@ class HasTimeCol(Params):
 # --------------------------------------------------------------------------
 
 
+def _json_default(value):
+    """numpy arrays and scalars (the fitted state of the numpy-backed
+    models) write as their Python ``tolist()`` values."""
+    return value.tolist()
+
+
+def _read_metadata(path: str) -> dict:
+    with open(os.path.join(path, "metadata")) as f:
+        return json.load(f)
+
+
+def load_stage(spark: SparkSession, path: str, cls: type | None = None):
+    """The stage saved at ``path``: its class comes from ``metadata``
+    (which must be ``cls`` when given), its params and ``_state`` are
+    restored from the same one read."""
+    meta = _read_metadata(path)
+    if cls is None:
+        module, name = meta["class"].rsplit(".", 1)
+        cls = getattr(importlib.import_module(module), name)
+    elif meta["class"] != f"{cls.__module__}.{cls.__name__}":
+        raise ValueError(f"cannot load {meta['class']} as "
+                         f"{cls.__module__}.{cls.__name__}")
+    inst = cls()
+    for p in inst.params:
+        if p.name in meta["paramMap"]:
+            value = meta["paramMap"][p.name]
+            if value is not None:
+                inst._set(**{p.name: p.typeConverter(value)})
+    inst._load_state(spark, path, meta)
+    return inst
+
+
 class Stage(Params):
-    """Common save/load for every stage (params-metadata JSON).
+    """Common save/load for every stage: params plus the fitted state
+    named in ``_state``.
+
+    ``save`` writes each ``_state`` attribute by type: a ``DataFrame``
+    to parquet under ``<path>/<name>``, ``bytes`` to the file
+    ``<path>/<name>``, anything else into the ``state`` object of the
+    ``metadata`` JSON (``name`` is the attribute name without its
+    leading underscores). JSON state must be JSON-shaped: lists come
+    back for tuples and numpy arrays, and a dict keeps only string
+    keys, so no declared state holds an int-keyed dict. Floats
+    round-trip bit for bit, NaN and ±Inf included. ``load`` builds the
+    class with no arguments, then restores params and state.
 
     ``uid`` comes from ``pyspark.ml.util.Identifiable`` (class name +
     random hex), assigned inside ``Params.__init__``.
     """
+
+    _state: tuple[str, ...] = ()
 
     # -- persistence --------------------------------------------------------
 
@@ -308,37 +356,57 @@ class Stage(Params):
 
     def save(self, path: str) -> None:
         os.makedirs(path, exist_ok=True)
+        state = {}
+        for name in self._state:
+            key, value = name.lstrip("_"), getattr(self, name)
+            if isinstance(value, DataFrame):
+                value.write.mode("overwrite").parquet(
+                    os.path.join(path, key))
+            elif isinstance(value, bytes):
+                with open(os.path.join(path, key), "wb") as f:
+                    f.write(value)
+            else:
+                state[key] = value
         meta = {
             "class": f"{type(self).__module__}.{type(self).__name__}",
             "timestamp": int(time.time() * 1000),
             "uid": self.uid,
             "paramMap": self._params_to_json(),
+            "state": state,
         }
         with open(os.path.join(path, "metadata"), "w") as f:
-            json.dump(meta, f)
+            json.dump(meta, f, default=_json_default)
         self._save_model_data(path)
 
-    def _save_model_data(self, path: str) -> None:  # overridden by models
-        pass
+    def _save_model_data(self, path: str) -> None:
+        """Hook for state a ``_state`` type cannot hold (sub-stages, a
+        pyspark.ml model with its own writer)."""
 
     @classmethod
     def load(cls, spark: SparkSession, path: str):
-        with open(os.path.join(path, "metadata")) as f:
-            meta = json.load(f)
-        expected = f"{cls.__module__}.{cls.__name__}"
-        if meta["class"] != expected:
-            raise ValueError(f"cannot load {meta['class']} as {expected}")
-        inst = cls()
-        for p in inst.params:
-            if p.name in meta["paramMap"]:
-                value = meta["paramMap"][p.name]
-                if value is not None:
-                    inst._set(**{p.name: p.typeConverter(value)})
-        inst._load_model_data(spark, path)
-        return inst
+        return load_stage(spark, path, cls)
+
+    def _load_state(self, spark: SparkSession, path: str,
+                    meta: dict | None = None) -> None:
+        """Restore the ``_state`` saved at ``path`` onto this stage, its
+        params untouched: the second half of ``load``, which passes the
+        ``metadata`` it has read, and how an index loader puts a saved
+        model back onto a live operator."""
+        state = (meta or _read_metadata(path))["state"]
+        for name in self._state:
+            key = name.lstrip("_")
+            if key in state:
+                value = state[key]
+            elif os.path.isdir(os.path.join(path, key)):
+                value = spark.read.parquet(os.path.join(path, key))
+            else:
+                with open(os.path.join(path, key), "rb") as f:
+                    value = f.read()
+            setattr(self, name, value)
+        self._load_model_data(spark, path)
 
     def _load_model_data(self, spark: SparkSession, path: str) -> None:
-        pass
+        """Reads back what ``_save_model_data`` wrote."""
 
 
 class AlgoOperator(Stage):
@@ -349,7 +417,12 @@ class AlgoOperator(Stage):
 
 
 class Model(AlgoOperator):
-    """Transformer backed by a model-data DataFrame."""
+    """Transformer backed by a model-data DataFrame, persisted as the
+    ``_state`` parquet ``<path>/model_data``. A subclass that holds its
+    fitted state in other attributes names those in its own
+    ``_state``."""
+
+    _state = ("_model_data",)
 
     def __init__(self):
         super().__init__()
@@ -363,16 +436,6 @@ class Model(AlgoOperator):
         if self._model_data is None:
             raise ValueError("model data has not been set")
         return self._model_data
-
-    def _save_model_data(self, path: str) -> None:
-        if self._model_data is not None:
-            self._model_data.write.mode("overwrite").parquet(
-                os.path.join(path, "data"))
-
-    def _load_model_data(self, spark: SparkSession, path: str) -> None:
-        data_path = os.path.join(path, "data")
-        if os.path.isdir(data_path):
-            self._model_data = spark.read.parquet(data_path)
 
 
 class Estimator(Stage):

@@ -88,15 +88,17 @@ class NaiveBayesTextModel(Model, _NbParams):
     token-free text scores on priors alone.
     """
 
+    _state = ("_labels", "_priors", "_defaults", "_loglik")
+
     def __init__(self, labels: list[str] | None = None,
                  priors: list[int] | None = None,
                  defaults: list[int] | None = None,
-                 loglik: dict[tuple[str, int], int] | None = None):
+                 loglik: list[tuple[str, int, int]] | None = None):
         super().__init__()
         self._labels = labels
         self._priors = priors      # int64 round(ln(D_c/D)·1e6) per label
         self._defaults = defaults  # unseen-bucket log-lik per label
-        self._loglik = loglik      # {(label, bucket): int64}
+        self._loglik = loglik      # [(label, bucket, int64)]
 
     @property
     def labels(self) -> list[str]:
@@ -109,7 +111,7 @@ class NaiveBayesTextModel(Model, _NbParams):
         mat = np.empty((len(self._labels), v), dtype=np.int64)
         for ci, lbl in enumerate(self._labels):
             mat[ci, :] = self._defaults[ci]
-        for (lbl, b), ll in self._loglik.items():
+        for lbl, b, ll in self._loglik:
             mat[self._labels.index(lbl), b] = ll
         return mat
 
@@ -154,27 +156,6 @@ class NaiveBayesTextModel(Model, _NbParams):
                 .withColumn(self.getOrDefault(self.scoreCol),
                             F.col("__nb.s"))
                 .drop("__nb"))
-
-    def _save_model_data(self, path: str) -> None:
-        import json
-        import os
-
-        with open(os.path.join(path, "nb.json"), "w") as f:
-            json.dump({"labels": self._labels, "priors": self._priors,
-                       "defaults": self._defaults,
-                       "loglik": [[lbl, b, ll] for (lbl, b), ll
-                                  in sorted(self._loglik.items())]}, f)
-
-    def _load_model_data(self, spark, path: str) -> None:
-        import json
-        import os
-
-        with open(os.path.join(path, "nb.json")) as f:
-            d = json.load(f)
-        self._labels = d["labels"]
-        self._priors = d["priors"]
-        self._defaults = d["defaults"]
-        self._loglik = {(lbl, b): ll for lbl, b, ll in d["loglik"]}
 
 
 class NaiveBayesTextClassifier(Estimator, _NbParams):
@@ -221,11 +202,11 @@ class NaiveBayesTextClassifier(Estimator, _NbParams):
                   for lbl in labels]
         defaults = [round(math.log(a / (tok_totals[lbl] + a * v))
                           * SCALE) for lbl in labels]
-        loglik = {
-            (r["__l"], int(r["__b"])): round(
+        loglik = [
+            (r["__l"], int(r["__b"]), round(
                 math.log((r["__n"] + a)
-                         / (tok_totals[r["__l"]] + a * v)) * SCALE)
-            for r in cells}
+                         / (tok_totals[r["__l"]] + a * v)) * SCALE))
+            for r in cells]
         model = NaiveBayesTextModel(labels, priors, defaults, loglik)
         model._set(inputCol=c, labelCol=lc,
                    predictionCol=self.getOrDefault(self.predictionCol),

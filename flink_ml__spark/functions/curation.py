@@ -1189,6 +1189,8 @@ class DSIRModel(AlgoOperator, HasInputCol, HasIdColMixin):
     over the broadcast O(numBuckets) ratio vector — no shuffle, no
     join, stream-compatible unchanged."""
 
+    _state = ("_logratio", "_num_buckets")
+
     def __init__(self, logratio=None, num_buckets: int | None = None):
         super().__init__()
         self._setDefault(inputCol="text", idCol="doc_id")
@@ -1228,23 +1230,6 @@ class DSIRModel(AlgoOperator, HasInputCol, HasIdColMixin):
 
         return df.withColumn("dsir_logweight",
                              weight(F.col(self.getInputCol())))
-
-    def _save_model_data(self, path: str) -> None:
-        import json
-        import os
-
-        with open(os.path.join(path, "dsir.json"), "w") as f:
-            json.dump({"logratio": list(self._logratio),
-                       "num_buckets": self._num_buckets}, f)
-
-    def _load_model_data(self, spark, path: str) -> None:
-        import json
-        import os
-
-        with open(os.path.join(path, "dsir.json")) as f:
-            d = json.load(f)
-        self._logratio = d["logratio"]
-        self._num_buckets = d["num_buckets"]
 
 
 class DSIRSelector(AlgoOperator, HasInputCol, HasIdColMixin):
@@ -1657,6 +1642,8 @@ class UnigramLMModel(AlgoOperator, HasInputCol, HasIdColMixin):
     semantics of the SQL oracle.
     """
 
+    _state = ("_vocab", "_oov_logp")
+
     def __init__(self, vocab: DataFrame | None = None,
                  oov_logp: float | None = None):
         super().__init__()
@@ -1704,23 +1691,6 @@ class UnigramLMModel(AlgoOperator, HasInputCol, HasIdColMixin):
         s = score(F.col(self.getInputCol()))
         return (df.withColumn("mean_logprob", s["mean_logprob"])
                 .withColumn("oov_frac", s["oov_frac"]))
-
-    def _save_model_data(self, path: str) -> None:
-        import json
-        import os
-
-        self._vocab.write.mode("overwrite").parquet(
-            os.path.join(path, "vocab"))
-        with open(os.path.join(path, "meta.json"), "w") as f:
-            json.dump({"oov_logp": self._oov_logp}, f)
-
-    def _load_model_data(self, spark, path: str) -> None:
-        import json
-        import os
-
-        self._vocab = spark.read.parquet(os.path.join(path, "vocab"))
-        with open(os.path.join(path, "meta.json")) as f:
-            self._oov_logp = json.load(f)["oov_logp"]
 
 
 class UnigramLM(AlgoOperator, HasInputCol, HasIdColMixin):
@@ -1817,6 +1787,8 @@ class BigramLMModel(AlgoOperator, HasInputCol, HasIdColMixin):
     as :class:`UnigramLMModel`).
     """
 
+    _state = ("_unigrams", "_bigrams", "_total", "_lam")
+
     def __init__(self, unigrams: DataFrame | None = None,
                  bigrams: DataFrame | None = None,
                  total: int | None = None, lam: float = 0.7):
@@ -1877,27 +1849,6 @@ class BigramLMModel(AlgoOperator, HasInputCol, HasIdColMixin):
         s = score(F.col(self.getInputCol()))
         return (df.withColumn("mean_logprob", s["mean_logprob"])
                 .withColumn("bigram_frac", s["bigram_frac"]))
-
-    def _save_model_data(self, path: str) -> None:
-        import json
-        import os
-
-        self._unigrams.write.mode("overwrite").parquet(
-            os.path.join(path, "unigrams"))
-        self._bigrams.write.mode("overwrite").parquet(
-            os.path.join(path, "bigrams"))
-        with open(os.path.join(path, "meta.json"), "w") as f:
-            json.dump({"total": self._total, "lam": self._lam}, f)
-
-    def _load_model_data(self, spark, path: str) -> None:
-        import json
-        import os
-
-        self._unigrams = spark.read.parquet(os.path.join(path, "unigrams"))
-        self._bigrams = spark.read.parquet(os.path.join(path, "bigrams"))
-        with open(os.path.join(path, "meta.json")) as f:
-            meta = json.load(f)
-        self._total, self._lam = meta["total"], meta["lam"]
 
 
 class BigramLM(AlgoOperator, HasInputCol, HasIdColMixin):
@@ -2526,6 +2477,8 @@ class QualityClassifierModel(AlgoOperator, HasInputCol):
     and the logistic scoring both run JVM-side; the apply pass is
     map-only."""
 
+    _state = ("_num_features",)
+
     def __init__(self, lr_model=None, num_features: int = 1 << 18):
         super().__init__()
         self._setDefault(inputCol="text")
@@ -2570,23 +2523,17 @@ class QualityClassifierModel(AlgoOperator, HasInputCol):
     # -- persistence: delegate the LR coefficients to pyspark.ml ------
 
     def _save_model_data(self, path: str) -> None:
-        import json
         import os
 
         if self._lr is not None:
             self._lr.write().overwrite().save(os.path.join(path, "lr"))
-        with open(os.path.join(path, "meta_qc.json"), "w") as f:
-            json.dump({"num_features": self._num_features}, f)
 
     def _load_model_data(self, spark, path: str) -> None:
-        import json
         import os
 
         from pyspark.ml.classification import LogisticRegressionModel
 
         self._lr = LogisticRegressionModel.load(os.path.join(path, "lr"))
-        with open(os.path.join(path, "meta_qc.json")) as f:
-            self._num_features = json.load(f)["num_features"]
 
 
 class QualityClassifier(Estimator, HasInputCol, HasMaxIter):
@@ -3394,6 +3341,8 @@ class KneserNeyBigramLMModel(BigramLMModel):
     O(maxVocab + maxBigrams) and the SQL oracle replays every count.
     """
 
+    _state = BigramLMModel._state + ("_discount",)
+
     def __init__(self, unigrams: DataFrame | None = None,
                  bigrams: DataFrame | None = None,
                  total: int | None = None, discount: float = 0.75):
@@ -3464,23 +3413,6 @@ class KneserNeyBigramLMModel(BigramLMModel):
         s = score(F.col(self.getInputCol()))
         return (df.withColumn("mean_logprob", s["mean_logprob"])
                 .withColumn("bigram_frac", s["bigram_frac"]))
-
-    def _save_model_data(self, path: str) -> None:
-        import json
-        import os
-
-        super()._save_model_data(path)
-        with open(os.path.join(path, "meta.json"), "w") as f:
-            json.dump({"total": self._total, "lam": self._lam,
-                       "discount": self._discount}, f)
-
-    def _load_model_data(self, spark, path: str) -> None:
-        import json
-        import os
-
-        super()._load_model_data(spark, path)
-        with open(os.path.join(path, "meta.json")) as f:
-            self._discount = json.load(f).get("discount", 0.75)
 
 
 class KneserNeyBigramLM(BigramLM):

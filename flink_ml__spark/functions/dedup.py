@@ -37,6 +37,7 @@ from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
 from flink_ml__spark.base import AlgoOperator, HasInputCol, HasSeed
+from flink_ml__spark.functions.sketches import BloomBitset
 from flink_ml__spark.functions.text import TOKEN_SPLIT, Fingerprinter
 
 MERSENNE31 = 2147483647
@@ -1456,7 +1457,8 @@ class EmbeddingCosineDeduplicator(AlgoOperator, _MaterializeMixin,
         return _keep_non_dominated(df, dups, self.getIdCol())
 
 
-class BloomCorpusDeduplicator(AlgoOperator, HasInputCol, HasIdColMixin):
+class BloomCorpusDeduplicator(AlgoOperator, BloomBitset, HasInputCol,
+                              HasIdColMixin):
     """Bloom-filter membership dedup against a reference corpus.
 
     ``fit(corpus)`` folds the corpus's normalized-text fingerprints
@@ -1487,97 +1489,26 @@ class BloomCorpusDeduplicator(AlgoOperator, HasInputCol, HasIdColMixin):
     NULL text can never match (kept).
     """
 
-    numBits = Param(Params._dummy(), "numBits",
-                    "bloom filter size in bits (m)", TypeConverters.toInt)
-    numHashes = Param(Params._dummy(), "numHashes",
-                      "probes per key (k)", TypeConverters.toInt)
+    _state = ("_bits",)
 
     def __init__(self):
         super().__init__()
         self._setDefault(inputCol="text", idCol="doc_id",
                          numBits=1 << 23, numHashes=4)
-        self._bits: bytes | None = None
-        self._bc = None    # cached SparkContext broadcast of the bitset
-
-    def getNumBits(self):
-        return self.getOrDefault(self.numBits)
-
-    def setNumBits(self, v):
-        return self._set(numBits=int(v))
-
-    def getNumHashes(self):
-        return self.getOrDefault(self.numHashes)
-
-    def setNumHashes(self, v):
-        return self._set(numHashes=int(v))
 
     def _fp(self) -> Column:
         return F.md5(Fingerprinter.normalized(F.col(self.getInputCol())))
 
     def fit(self, corpus: DataFrame) -> "BloomCorpusDeduplicator":
-        import numpy as np
-
-        m, k = self.getNumBits(), self.getNumHashes()
-        nbytes = (m + 7) // 8
-        fp = corpus.select(self._fp().alias("__fp"))
-
-        def partial(batches):
-            bits = np.zeros(nbytes, dtype=np.uint8)
-            seen = False
-            for pdf in batches:
-                for s in pdf["__fp"]:
-                    if s is None:
-                        continue
-                    h1, h2 = int(s[:15], 16), int(s[15:30], 16)
-                    for i in range(k):
-                        p = (h1 + i * h2) % m
-                        bits[p >> 3] |= 1 << (p & 7)
-                    seen = True
-            if seen:
-                yield pd.DataFrame({"b": [bits.tobytes()]})
-
-        acc = np.zeros(nbytes, dtype=np.uint8)
-        for row in fp.mapInPandas(partial, "b binary").collect():
-            acc |= np.frombuffer(row["b"], dtype=np.uint8)
-        self._bits = acc.tobytes()
-        if self._bc is not None:       # refit invalidates the broadcast
-            self._bc.unpersist()
-            self._bc = None
+        self._fit_bits(corpus.select(self._fp().alias("__fp")))
         return self
 
     def transform(self, df: DataFrame) -> DataFrame:
-        import numpy as np
-
         if self._bits is None:
             raise ValueError("fit(corpus) before transform(df)")
-        m, k = self.getNumBits(), self.getNumHashes()
-        # one broadcast per fitted bitset: per-call broadcasts of the
-        # MB..GB-sized filter would accumulate for the app lifetime
-        # (the per-micro-batch foreachBatch shape hits this hard)
-        if self._bc is None:
-            self._bc = df.sparkSession.sparkContext.broadcast(self._bits)
-        bc = self._bc
-
-        @F.pandas_udf("boolean")
-        def might_contain(fps: pd.Series) -> pd.Series:
-            bits = np.frombuffer(bc.value, dtype=np.uint8)
-            out = []
-            for s in fps:
-                if s is None:
-                    out.append(False)
-                    continue
-                h1, h2 = int(s[:15], 16), int(s[15:30], 16)
-                hit = True
-                for i in range(k):
-                    p = (h1 + i * h2) % m
-                    if not (bits[p >> 3] >> (p & 7)) & 1:
-                        hit = False
-                        break
-                out.append(hit)
-            return pd.Series(out)
-
+        contains = self._might_contain(df.sparkSession, F.col("__fp"))
         return (df.withColumn("__fp", self._fp())
-                .filter(~might_contain(F.col("__fp")))
+                .filter(~contains)
                 .drop("__fp"))
 
     def transform_against(self, df: DataFrame,
@@ -1586,19 +1517,3 @@ class BloomCorpusDeduplicator(AlgoOperator, HasInputCol, HasIdColMixin):
         drop ``df`` rows it might contain."""
         return self.fit(corpus).transform(df)
 
-    # -- persistence: the bitset IS the model -------------------------
-
-    def _save_model_data(self, path: str) -> None:
-        import os
-
-        if self._bits is not None:
-            with open(os.path.join(path, "bloom.bin"), "wb") as f:
-                f.write(self._bits)
-
-    def _load_model_data(self, spark, path: str) -> None:
-        import os
-
-        p = os.path.join(path, "bloom.bin")
-        if os.path.exists(p):
-            with open(p, "rb") as f:
-                self._bits = f.read()

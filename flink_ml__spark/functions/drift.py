@@ -179,11 +179,10 @@ class DriftMonitor(AlgoOperator, HasRelativeError):
             raise ValueError("no columns set — call setInputCols(...)")
         k = self.getOrDefault(self.numBuckets)
         edges = self._all_edges(reference, cols)
-        ref = {(r["column"], r["bucket"]): r["n_ref"]
-               for r in _numeric_hist(reference, edges,
-                                      "ref").collect()}
-        return DriftMonitorModel(cols=cols, num_buckets=k, edges=edges,
-                                 ref_hist=ref)
+        ref = {c: [0] * k for c in cols}
+        for r in _numeric_hist(reference, edges, "ref").collect():
+            ref[r["column"]][r["bucket"]] = r["n_ref"]
+        return DriftMonitorModel(cols=cols, edges=edges, ref_hist=ref)
 
     def report(self, reference: DataFrame, current: DataFrame
                ) -> DataFrame:
@@ -206,21 +205,21 @@ class DriftMonitorModel(AlgoOperator):
     reference scans. Output is identical to
     ``DriftMonitor.report(reference, current)`` (pinned by test)."""
 
-    def __init__(self, cols=None, num_buckets=None, edges=None,
-                 ref_hist=None):
+    _state = ("_cols", "_edges", "_ref")
+
+    def __init__(self, cols=None, edges=None, ref_hist=None):
         super().__init__()
         self._cols = cols or []
-        self._k = num_buckets or 0
         self._edges = edges or {}
-        self._ref = ref_hist or {}
+        self._ref = ref_hist or {}      # {column: [n_ref per bucket]}
 
     def report(self, current: DataFrame) -> DataFrame:
         if not self._cols:
             raise ValueError("empty profile — fit() or load() first")
         spark = current.sparkSession
         grid = spark.createDataFrame(
-            [(c, b, int(self._ref.get((c, b), 0)))
-             for c in self._cols for b in range(self._k)],
+            [(c, b, n) for c in self._cols
+             for b, n in enumerate(self._ref[c])],
             "column string, bucket int, n_ref long")
         cur = _numeric_hist(current, self._edges, "cur")
         out = (grid.join(cur, ["column", "bucket"], "left")
@@ -232,7 +231,7 @@ class DriftMonitorModel(AlgoOperator):
         """(column, bucket expression, [(bucket, n_ref)]) per column:
         what ``stream_drift_monitor`` folds per event-time window."""
         return [(c, _bucket_expr(c, self._edges[c]),
-                 [(b, self._ref.get((c, b), 0)) for b in range(self._k)])
+                 list(enumerate(self._ref[c])))
                 for c in self._cols]
 
     def summary(self, current: DataFrame) -> DataFrame:
@@ -240,28 +239,6 @@ class DriftMonitorModel(AlgoOperator):
 
     def transform(self, df: DataFrame) -> DataFrame:
         return self.report(df)
-
-    def _save_model_data(self, path: str) -> None:
-        import json
-        import os
-
-        with open(os.path.join(path, "drift_profile.json"), "w") as f:
-            json.dump({
-                "cols": self._cols, "k": self._k,
-                "edges": self._edges,
-                "ref": [[c, b, n] for (c, b), n in self._ref.items()],
-            }, f)
-
-    def _load_model_data(self, spark, path: str) -> None:
-        import json
-        import os
-
-        with open(os.path.join(path, "drift_profile.json")) as f:
-            d = json.load(f)
-        self._cols = d["cols"]
-        self._k = d["k"]
-        self._edges = d["edges"]
-        self._ref = {(c, b): n for c, b, n in d["ref"]}
 
 
 def _category_value(c: str):
@@ -417,6 +394,8 @@ class CategoricalDriftModel(AlgoOperator):
     ``stream_categorical_drift_monitor`` maps every window by the same
     rule."""
 
+    _state = ("_cols", "_vocab", "_ref")
+
     def __init__(self, cols=None, vocab=None, ref_counts=None):
         super().__init__()
         self._cols = cols or []
@@ -464,26 +443,6 @@ class CategoricalDriftModel(AlgoOperator):
 
     def transform(self, df: DataFrame) -> DataFrame:
         return self.report(df)
-
-    def _save_model_data(self, path: str) -> None:
-        import json
-        import os
-
-        with open(os.path.join(path, "cat_drift_profile.json"),
-                  "w") as f:
-            json.dump({"cols": self._cols,
-                       "vocab": self._vocab,
-                       "ref": self._ref}, f)
-
-    def _load_model_data(self, spark, path: str) -> None:
-        import json
-        import os
-
-        with open(os.path.join(path, "cat_drift_profile.json")) as f:
-            d = json.load(f)
-        self._cols = d["cols"]
-        self._vocab = [tuple(v) for v in d["vocab"]]
-        self._ref = [tuple(v) for v in d["ref"]]
 
 
 class EmbeddingDriftMonitor(AlgoOperator):

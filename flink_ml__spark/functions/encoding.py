@@ -53,6 +53,8 @@ class StringIndexerModel(Model, _IndexerParams):
     via a broadcast join on the label (NULL-safe equality so a NULL
     category behaves like any other unseen value)."""
 
+    _state = ("_mapping",)
+
     def __init__(self, mapping: DataFrame | None = None):
         super().__init__()
         self._setDefault(outputCol="label_index", handleInvalid="keep")
@@ -80,13 +82,6 @@ class StringIndexerModel(Model, _IndexerParams):
         return (joined
                 .withColumn(out, F.coalesce(F.col("__index"), invalid))
                 .drop("__label", "__index"))
-
-    def _save_model_data(self, path: str) -> None:
-        self._mapping.coalesce(1).write.mode("overwrite").parquet(
-            path + "/mapping.parquet")
-
-    def _load_model_data(self, spark, path: str) -> None:
-        self._mapping = spark.read.parquet(path + "/mapping.parquet")
 
 
 class StringIndexer(Estimator, _IndexerParams):
@@ -130,6 +125,8 @@ class TargetEncoderModel(Model, HasInputCol, HasOutputCol):
     ``outputCol`` = the category's shrunk target mean via a broadcast
     join; unseen and NULL categories fall back to the global prior."""
 
+    _state = ("_encoding", "_prior")
+
     def __init__(self, encoding: DataFrame | None = None,
                  prior: float | None = None):
         super().__init__()
@@ -151,23 +148,6 @@ class TargetEncoderModel(Model, HasInputCol, HasOutputCol):
                 .withColumn(out, F.coalesce(F.col("__enc"),
                                             F.lit(self._prior)))
                 .drop("__cat", "__enc"))
-
-    def _save_model_data(self, path: str) -> None:
-        import json
-        import os
-
-        self._encoding.coalesce(1).write.mode("overwrite").parquet(
-            path + "/encoding.parquet")
-        with open(os.path.join(path, "prior.json"), "w") as f:
-            json.dump({"prior": self._prior}, f)
-
-    def _load_model_data(self, spark, path: str) -> None:
-        import json
-        import os
-
-        self._encoding = spark.read.parquet(path + "/encoding.parquet")
-        with open(os.path.join(path, "prior.json")) as f:
-            self._prior = json.load(f)["prior"]
 
 
 class TargetEncoder(Estimator, HasInputCol, HasOutputCol):
@@ -293,6 +273,8 @@ class RareCategoryCollapserModel(Model, HasInputCol, HasOutputCol):
                        "replacement label for collapsed categories",
                        TypeConverters.toString)
 
+    _state = ("_kept",)
+
     def __init__(self, kept: DataFrame | None = None):
         super().__init__()
         self._setDefault(outputCol="collapsed", otherLabel="__other__")
@@ -317,13 +299,6 @@ class RareCategoryCollapserModel(Model, HasInputCol, HasOutputCol):
              .when(F.col("__kept"), col.cast("string"))
              .otherwise(F.lit(other)))
             .drop("__label", "__kept"))
-
-    def _save_model_data(self, path: str) -> None:
-        self._kept.coalesce(1).write.mode("overwrite").parquet(
-            path + "/kept.parquet")
-
-    def _load_model_data(self, spark, path: str) -> None:
-        self._kept = spark.read.parquet(path + "/kept.parquet")
 
 
 class RareCategoryCollapser(Estimator, HasInputCol, HasOutputCol):
@@ -392,6 +367,8 @@ class CountEncoderModel(Model, HasInputCol, HasOutputCol):
                       "emit the share of non-null rows instead of the "
                       "raw count", TypeConverters.toBoolean)
 
+    _state = ("_counts", "_total")
+
     def __init__(self, counts: DataFrame | None = None,
                  total: int | None = None):
         super().__init__()
@@ -413,23 +390,6 @@ class CountEncoderModel(Model, HasInputCol, HasOutputCol):
             val = val / F.lit(float(self._total))
         return (joined.withColumn(out, val)
                 .drop("__cat", "__n"))
-
-    def _save_model_data(self, path: str) -> None:
-        import json
-        import os
-
-        self._counts.coalesce(1).write.mode("overwrite").parquet(
-            path + "/counts.parquet")
-        with open(os.path.join(path, "total.json"), "w") as f:
-            json.dump({"total": self._total}, f)
-
-    def _load_model_data(self, spark, path: str) -> None:
-        import json
-        import os
-
-        self._counts = spark.read.parquet(path + "/counts.parquet")
-        with open(os.path.join(path, "total.json")) as f:
-            self._total = json.load(f)["total"]
 
 
 class CountEncoder(Estimator, HasInputCol, HasOutputCol):

@@ -593,6 +593,8 @@ class IsotonicCalibratorModel(AlgoOperator):
                       "calibrated-probability column",
                       TypeConverters.toString)
 
+    _state = ("_boundaries", "_values")
+
     def __init__(self, boundaries: list[float] | None = None,
                  values: list[float] | None = None):
         super().__init__()
@@ -618,22 +620,6 @@ class IsotonicCalibratorModel(AlgoOperator):
             expr = expr.when(s >= F.lit(lo), F.lit(val))
         expr = expr.otherwise(F.lit(self._values[0]))
         return df.withColumn(self.getOrDefault(self.outputCol), expr)
-
-    def _save_model_data(self, path: str) -> None:
-        import json
-        import os
-
-        with open(os.path.join(path, "steps.json"), "w") as f:
-            json.dump({"boundaries": self._boundaries,
-                       "values": self._values}, f)
-
-    def _load_model_data(self, spark, path: str) -> None:
-        import json
-        import os
-
-        with open(os.path.join(path, "steps.json")) as f:
-            d = json.load(f)
-        self._boundaries, self._values = d["boundaries"], d["values"]
 
 
 class IsotonicCalibrator(AlgoOperator):
@@ -733,6 +719,8 @@ class PlattCalibratorModel(AlgoOperator):
                       "calibrated-probability column",
                       TypeConverters.toString)
 
+    _state = ("_a", "_b")
+
     def __init__(self, a: float | None = None, b: float | None = None):
         super().__init__()
         self._setDefault(scoreCol="score", outputCol="calibrated")
@@ -753,21 +741,6 @@ class PlattCalibratorModel(AlgoOperator):
         z = F.lit(self._a) * s + F.lit(self._b)
         return df.withColumn(self.getOrDefault(self.outputCol),
                              F.lit(1.0) / (F.lit(1.0) + F.exp(-z)))
-
-    def _save_model_data(self, path: str) -> None:
-        import json
-        import os
-
-        with open(os.path.join(path, "coef.json"), "w") as f:
-            json.dump({"a": self._a, "b": self._b}, f)
-
-    def _load_model_data(self, spark, path: str) -> None:
-        import json
-        import os
-
-        with open(os.path.join(path, "coef.json")) as f:
-            d = json.load(f)
-        self._a, self._b = d["a"], d["b"]
 
 
 class PlattCalibrator(AlgoOperator):
@@ -892,8 +865,11 @@ class SplitConformalModel(AlgoOperator):
     labeled test set. See :class:`SplitConformalRegressor`.
     """
 
-    def __init__(self, q_df: DataFrame, pred_col: str,
-                 group_cols: list[str]):
+    _state = ("_q_df", "_pred_col", "_group_cols")
+
+    def __init__(self, q_df: DataFrame | None = None,
+                 pred_col: str | None = None,
+                 group_cols: list[str] = ()):
         super().__init__()
         self._q_df = q_df
         self._pred_col = pred_col

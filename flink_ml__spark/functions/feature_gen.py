@@ -87,6 +87,8 @@ class MeanImputerModel(Model, _SingleColOutputParams):
     """Replaces nulls with the fitted mean; emits ONLY ``outputCol``
     (reference quirk, ``MeanImputerModel.java:37-43``)."""
 
+    _state = ("_mean_value",)
+
     def __init__(self, mean_value: float | None = None):
         super().__init__()
         self._setDefault(outputCol="imputed_value")
@@ -94,8 +96,6 @@ class MeanImputerModel(Model, _SingleColOutputParams):
 
     @property
     def meanValue(self) -> float:
-        if self._mean_value is None and self._model_data is not None:
-            self._mean_value = self._model_data.first()["mean"]
         return self._mean_value
 
     def transform(self, df: DataFrame) -> DataFrame:
@@ -103,20 +103,6 @@ class MeanImputerModel(Model, _SingleColOutputParams):
         return df.select(
             F.coalesce(F.col(self.getInputCol()).cast("double"), F.lit(mean))
             .alias(self.getOutputCol()))
-
-    def _save_model_data(self, path: str) -> None:
-        import json
-        import os
-
-        with open(os.path.join(path, "model_data.json"), "w") as f:
-            json.dump({"mean": self.meanValue}, f)
-
-    def _load_model_data(self, spark, path: str) -> None:
-        import json
-        import os
-
-        with open(os.path.join(path, "model_data.json")) as f:
-            self._mean_value = json.load(f)["mean"]
 
 
 class MeanImputer(Estimator, _SingleColOutputParams):
@@ -150,6 +136,8 @@ class StandardScalerModel(Model, _SingleColOutputParams):
         "(StandardScalerModel.java:52-66)",
         typeConverter=TypeConverters.toBoolean)
 
+    _state = ("_mean", "_std")
+
     def __init__(self, mean: float | None = None, std: float | None = None):
         super().__init__()
         self._setDefault(outputCol="scaled_value", passthrough=False)
@@ -163,21 +151,6 @@ class StandardScalerModel(Model, _SingleColOutputParams):
             std = self._std if self._std else 1.0
             expr = (x - F.lit(self._mean)) / F.lit(std)
         return df.select(expr.alias(self.getOutputCol()))
-
-    def _save_model_data(self, path: str) -> None:
-        import json
-        import os
-
-        with open(os.path.join(path, "model_data.json"), "w") as f:
-            json.dump({"mean": self._mean, "std": self._std}, f)
-
-    def _load_model_data(self, spark, path: str) -> None:
-        import json
-        import os
-
-        with open(os.path.join(path, "model_data.json")) as f:
-            d = json.load(f)
-        self._mean, self._std = d["mean"], d["std"]
 
 
 class StandardScaler(Estimator, _SingleColOutputParams):
@@ -292,6 +265,8 @@ class WinsorizerModel(Model, _SingleColOutputParams):
     (NULL passes through). Map-only codegen projection — the bounds
     are folded in as literals."""
 
+    _state = ("_lo", "_hi")
+
     def __init__(self, lo: float | None = None, hi: float | None = None):
         super().__init__()
         self._lo, self._hi = lo, hi
@@ -304,21 +279,6 @@ class WinsorizerModel(Model, _SingleColOutputParams):
                          F.least(F.greatest(x, F.lit(self._lo)),
                                  F.lit(self._hi)))
         return df.withColumn(self.getOutputCol(), clipped)
-
-    def _save_model_data(self, path: str) -> None:
-        import json
-        import os
-
-        with open(os.path.join(path, "bounds.json"), "w") as f:
-            json.dump({"lo": self._lo, "hi": self._hi}, f)
-
-    def _load_model_data(self, spark, path: str) -> None:
-        import json
-        import os
-
-        with open(os.path.join(path, "bounds.json")) as f:
-            d = json.load(f)
-        self._lo, self._hi = d["lo"], d["hi"]
 
 
 class Winsorizer(Estimator, _SingleColOutputParams, HasRelativeError):
@@ -431,6 +391,8 @@ class MinMaxScalerModel(Model, _SingleColOutputParams):
                        "upper bound of the output range",
                        TypeConverters.toFloat)
 
+    _state = ("_lo", "_hi")
+
     def __init__(self, lo: float | None = None, hi: float | None = None):
         super().__init__()
         self._setDefault(outputCol="scaled_value",
@@ -455,21 +417,6 @@ class MinMaxScalerModel(Model, _SingleColOutputParams):
             unit = (x - F.lit(self._lo)) / F.lit(self._hi - self._lo)
             expr = unit * F.lit(fmax - fmin) + F.lit(fmin)
         return df.withColumn(self.getOutputCol(), expr)
-
-    def _save_model_data(self, path: str) -> None:
-        import json
-        import os
-
-        with open(os.path.join(path, "bounds.json"), "w") as f:
-            json.dump({"lo": self._lo, "hi": self._hi}, f)
-
-    def _load_model_data(self, spark, path: str) -> None:
-        import json
-        import os
-
-        with open(os.path.join(path, "bounds.json")) as f:
-            d = json.load(f)
-        self._lo, self._hi = d["lo"], d["hi"]
 
 
 class MinMaxScaler(Estimator, _SingleColOutputParams):
@@ -505,6 +452,8 @@ class MaxAbsScalerModel(Model, _SingleColOutputParams):
     leaving the column unchanged (pyspark.ml convention). NULL passes
     through. Map-only projection."""
 
+    _state = ("_max_abs",)
+
     def __init__(self, max_abs: float | None = None):
         super().__init__()
         self._setDefault(outputCol="scaled_value")
@@ -514,20 +463,6 @@ class MaxAbsScalerModel(Model, _SingleColOutputParams):
         x = F.col(self.getInputCol()).cast("double")
         denom = self._max_abs if self._max_abs else 1.0
         return df.withColumn(self.getOutputCol(), x / F.lit(denom))
-
-    def _save_model_data(self, path: str) -> None:
-        import json
-        import os
-
-        with open(os.path.join(path, "model_data.json"), "w") as f:
-            json.dump({"max_abs": self._max_abs}, f)
-
-    def _load_model_data(self, spark, path: str) -> None:
-        import json
-        import os
-
-        with open(os.path.join(path, "model_data.json")) as f:
-            self._max_abs = json.load(f)["max_abs"]
 
 
 class MaxAbsScaler(Estimator, _SingleColOutputParams):
@@ -564,6 +499,8 @@ class RobustScalerModel(Model, _SingleColOutputParams):
                         "divide by the fitted quantile range",
                         TypeConverters.toBoolean)
 
+    _state = ("_median", "_range")
+
     def __init__(self, median: float | None = None,
                  q_range: float | None = None):
         super().__init__()
@@ -584,21 +521,6 @@ class RobustScalerModel(Model, _SingleColOutputParams):
         if self.getOrDefault(self.withScaling):
             expr = expr / F.lit(self._range if self._range else 1.0)
         return df.withColumn(self.getOutputCol(), expr)
-
-    def _save_model_data(self, path: str) -> None:
-        import json
-        import os
-
-        with open(os.path.join(path, "model_data.json"), "w") as f:
-            json.dump({"median": self._median, "range": self._range}, f)
-
-    def _load_model_data(self, spark, path: str) -> None:
-        import json
-        import os
-
-        with open(os.path.join(path, "model_data.json")) as f:
-            d = json.load(f)
-        self._median, self._range = d["median"], d["range"]
 
 
 class RobustScaler(Estimator, _SingleColOutputParams, HasRelativeError):
@@ -655,6 +577,8 @@ class QuantileDiscretizerModel(Model, _SingleColOutputParams):
     bucket). NULL → NULL. The edges fold into ONE map-side CASE chain
     — no join, no shuffle, whole-stage codegen."""
 
+    _state = ("_edges",)
+
     def __init__(self, edges: list[float] | None = None):
         super().__init__()
         self._setDefault(outputCol="bucket")
@@ -671,20 +595,6 @@ class QuantileDiscretizerModel(Model, _SingleColOutputParams):
             expr = expr.when(x <= F.lit(e), F.lit(i))
         expr = expr.otherwise(F.lit(len(self._edges)))
         return df.withColumn(self.getOutputCol(), expr)
-
-    def _save_model_data(self, path: str) -> None:
-        import json
-        import os
-
-        with open(os.path.join(path, "edges.json"), "w") as f:
-            json.dump({"edges": self._edges}, f)
-
-    def _load_model_data(self, spark, path: str) -> None:
-        import json
-        import os
-
-        with open(os.path.join(path, "edges.json")) as f:
-            self._edges = json.load(f)["edges"]
 
 
 class QuantileDiscretizer(Estimator, _SingleColOutputParams,
@@ -745,6 +655,8 @@ class MadOutlierModel(Model, _SingleColOutputParams):
                       "|robust z| beyond which a value is an outlier",
                       TypeConverters.toFloat)
 
+    _state = ("_median", "_mad")
+
     def __init__(self, median: float | None = None,
                  mad: float | None = None):
         super().__init__()
@@ -767,21 +679,6 @@ class MadOutlierModel(Model, _SingleColOutputParams):
             flag = F.when(x.isNotNull(), x != F.lit(self._median))
         return (df.withColumn(oc, z)
                 .withColumn(f"{oc}_outlier", flag))
-
-    def _save_model_data(self, path: str) -> None:
-        import json
-        import os
-
-        with open(os.path.join(path, "model_data.json"), "w") as f:
-            json.dump({"median": self._median, "mad": self._mad}, f)
-
-    def _load_model_data(self, spark, path: str) -> None:
-        import json
-        import os
-
-        with open(os.path.join(path, "model_data.json")) as f:
-            d = json.load(f)
-        self._median, self._mad = d["median"], d["mad"]
 
 
 class MadOutlierDetector(Estimator, _SingleColOutputParams,
@@ -883,6 +780,8 @@ class GroupedStandardScalerModel(Model, _SingleColOutputParams):
                      "normalization group column",
                      TypeConverters.toString)
 
+    _state = ("_moments",)
+
     def __init__(self, moments: DataFrame | None = None):
         super().__init__()
         self._setDefault(outputCol="scaled_value")
@@ -899,13 +798,6 @@ class GroupedStandardScalerModel(Model, _SingleColOutputParams):
                    (x - F.col("__mean")) / std)
         return (joined.withColumn(self.getOutputCol(), z)
                 .drop("__g", "__mean", "__std"))
-
-    def _save_model_data(self, path: str) -> None:
-        self._moments.coalesce(1).write.mode("overwrite").parquet(
-            path + "/moments.parquet")
-
-    def _load_model_data(self, spark, path: str) -> None:
-        self._moments = spark.read.parquet(path + "/moments.parquet")
 
 
 class GroupedStandardScaler(Estimator, _SingleColOutputParams):
@@ -954,6 +846,8 @@ class QuantileMatcherModel(Model, _SingleColOutputParams):
     aggregate); the map itself folds both grids into one CASE chain —
     map-only codegen. Values outside the current grid clamp to the
     reference extremes; NULL passes through."""
+
+    _state = ("_ref_grid", "_relative_error")
 
     def __init__(self, ref_grid: list[float] | None = None,
                  relative_error: float = 0.0):
@@ -1016,23 +910,6 @@ class QuantileMatcherModel(Model, _SingleColOutputParams):
             expr = expr.when(x <= F.lit(hi), seg)
         expr = expr.otherwise(F.lit(ref[-1]))
         return df.withColumn(self.getOutputCol(), expr)
-
-    def _save_model_data(self, path: str) -> None:
-        import json
-        import os
-
-        with open(os.path.join(path, "grid.json"), "w") as f:
-            json.dump({"ref_grid": self._ref_grid,
-                       "relative_error": self._relative_error}, f)
-
-    def _load_model_data(self, spark, path: str) -> None:
-        import json
-        import os
-
-        with open(os.path.join(path, "grid.json")) as f:
-            d = json.load(f)
-        self._ref_grid = d["ref_grid"]
-        self._relative_error = d.get("relative_error", 0.0)
 
 
 class QuantileMatcher(Estimator, _SingleColOutputParams,
@@ -1178,6 +1055,8 @@ class RankGaussModel(AlgoOperator, HasInputCol, HasOutputCol):
     zero shuffles, stream-safe unchanged. See
     :class:`RankGaussTransformer`."""
 
+    _state = ("_edges", "_z")
+
     def __init__(self, edges: list[float] | None = None,
                  z_scores: list[float] | None = None):
         super().__init__()
@@ -1202,21 +1081,6 @@ class RankGaussModel(AlgoOperator, HasInputCol, HasOutputCol):
         out = (f"CASE WHEN ({x} IS NOT NULL) "
                f"THEN element_at({z_arr}, ({bucket} + 1)) END")
         return df.withColumn(self.getOutputCol(), F.expr(out))
-
-    def _save_model_data(self, path: str) -> None:
-        import json
-        import os
-
-        with open(os.path.join(path, "model.json"), "w") as f:
-            json.dump({"edges": self._edges, "z": self._z}, f)
-
-    def _load_model_data(self, spark, path: str) -> None:
-        import json
-        import os
-
-        with open(os.path.join(path, "model.json")) as f:
-            d = json.load(f)
-        self._edges, self._z = d["edges"], d["z"]
 
 
 class RankGaussTransformer(AlgoOperator, HasInputCol, HasOutputCol):

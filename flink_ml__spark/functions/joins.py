@@ -25,13 +25,12 @@ interval_length / bin_width.
 
 from __future__ import annotations
 
-import pandas as pd
-
 from pyspark.ml.param import Param, Params, TypeConverters
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from flink_ml__spark.base import AlgoOperator
+from flink_ml__spark.functions.sketches import BloomBitset
 
 
 class AsOfJoiner(AlgoOperator):
@@ -403,7 +402,7 @@ class SaltedJoiner(AlgoOperator):
                         "join(big, small, on, how)")
 
 
-class BloomJoinFilter(AlgoOperator):
+class BloomJoinFilter(AlgoOperator, BloomBitset):
     """Bloom-filter semi-join reduction (Bloom 1970; the classic
     distributed-join optimization, e.g. Mackert & Lohman "R* join
     site selection" 1986): build a bitset over the SMALL side's join
@@ -430,27 +429,17 @@ class BloomJoinFilter(AlgoOperator):
 
     keyCols = Param(Params._dummy(), "keyCols", "join key columns",
                     TypeConverters.toListString)
-    numBits = Param(Params._dummy(), "numBits",
-                    "bitset size in bits (m)", TypeConverters.toInt)
-    numHashes = Param(Params._dummy(), "numHashes",
-                      "probes per key (k)", TypeConverters.toInt)
+
+    _state = ("_bits",)
 
     def __init__(self):
         super().__init__()
         self._setDefault(keyCols=[], numBits=1 << 20, numHashes=4)
-        self._bits = None
-        self._bc = None
 
     def setKeyCols(self, *v):
         if len(v) == 1 and isinstance(v[0], (list, tuple)):
             v = tuple(v[0])
         return self._set(keyCols=list(v))
-
-    def setNumBits(self, v):
-        return self._set(numBits=int(v))
-
-    def setNumHashes(self, v):
-        return self._set(numHashes=int(v))
 
     def _fp(self) -> F.Column:
         cols = self.getOrDefault(self.keyCols)
@@ -465,70 +454,16 @@ class BloomJoinFilter(AlgoOperator):
         return F.when(~anynull, F.md5(joined))
 
     def fit(self, small: DataFrame) -> "BloomJoinFilter":
-        import numpy as np
-
-        m, k = (self.getOrDefault(self.numBits),
-                self.getOrDefault(self.numHashes))
-        nbytes = (m + 7) // 8
-        fp = small.select(self._fp().alias("__fp"))
-
-        def partial(batches):
-            bits = np.zeros(nbytes, dtype=np.uint8)
-            seen = False
-            for pdf in batches:
-                for s in pdf["__fp"]:
-                    if s is None:
-                        continue
-                    h1, h2 = int(s[:15], 16), int(s[15:30], 16)
-                    for i in range(k):
-                        p = (h1 + i * h2) % m
-                        bits[p >> 3] |= 1 << (p & 7)
-                    seen = True
-            if seen:
-                yield pd.DataFrame({"b": [bits.tobytes()]})
-
-        acc = np.zeros(nbytes, dtype=np.uint8)
-        for row in fp.mapInPandas(partial, "b binary").collect():
-            acc |= np.frombuffer(row["b"], dtype=np.uint8)
-        self._bits = acc.tobytes()
-        if self._bc is not None:
-            self._bc.unpersist()
-            self._bc = None
+        self._fit_bits(small.select(self._fp().alias("__fp")))
         return self
 
     def transform(self, big: DataFrame) -> DataFrame:
         """Big side with can't-match rows (and NULL-key rows)
         removed."""
-        import numpy as np
-
         if self._bits is None:
             raise ValueError("fit(small) before transform(big)")
-        m, k = (self.getOrDefault(self.numBits),
-                self.getOrDefault(self.numHashes))
-        if self._bc is None:
-            self._bc = big.sparkSession.sparkContext.broadcast(
-                self._bits)
-        bc = self._bc
-
-        @F.pandas_udf("boolean")
-        def might_contain(fps: pd.Series) -> pd.Series:
-            bits = np.frombuffer(bc.value, dtype=np.uint8)
-            out = []
-            for s in fps:
-                if s is None:
-                    out.append(False)
-                    continue
-                h1, h2 = int(s[:15], 16), int(s[15:30], 16)
-                hit = True
-                for i in range(k):
-                    p = (h1 + i * h2) % m
-                    if not (bits[p >> 3] >> (p & 7)) & 1:
-                        hit = False
-                        break
-                out.append(hit)
-            return pd.Series(out)
-
-        return (big.withColumn("__bjf", might_contain(self._fp()))
+        return (big.withColumn("__bjf", self._might_contain(
+                    big.sparkSession, self._fp()))
                 .filter(F.col("__bjf")).drop("__bjf"))
 
     def filtered_join(self, big: DataFrame, small: DataFrame,
@@ -545,20 +480,3 @@ class BloomJoinFilter(AlgoOperator):
         return self.transform(big).join(
             small, self.getOrDefault(self.keyCols), how)
 
-    # -- persistence ----------------------------------------------------
-
-    def _save_model_data(self, path: str) -> None:
-        import os
-
-        if self._bits is not None:
-            with open(os.path.join(path, "bloom.bin"), "wb") as f:
-                f.write(self._bits)
-
-    def _load_model_data(self, spark, path: str) -> None:
-        import os
-
-        p = os.path.join(path, "bloom.bin")
-        if os.path.exists(p):
-            with open(p, "rb") as f:
-                self._bits = f.read()
-            self._bc = None

@@ -242,6 +242,8 @@ class IVFCosineTopK(AlgoOperator, _SimilarityParams):
                       "driver-side Lloyd iterations on the sample",
                       TypeConverters.toInt)
 
+    _state = ("_centroids",)
+
     def __init__(self):
         super().__init__()
         self._setDefault(nList=16, nProbe=4, trainSampleSize=8192,
@@ -320,11 +322,11 @@ class IVFCosineTopK(AlgoOperator, _SimilarityParams):
     def save_index(self, path: str, corpus: DataFrame | None = None, *,
                    precomputed: DataFrame | None = None,
                    mode: str = "overwrite") -> None:
-        """Persist the celled corpus + the trained centroids. The
-        centroids ship WITH the index (an IVF index is only meaningful
-        under the quantizer that built it); ``mode='append'`` adds a
-        new corpus batch celled under the SAME centroids."""
-        import json
+        """Persist the celled corpus + the operator (``save``: params and
+        the trained centroids). The centroids ship WITH the index (an
+        IVF index is only meaningful under the quantizer that built
+        it); ``mode='append'`` adds a new corpus batch celled under the
+        SAME centroids."""
         import os
 
         if precomputed is None:
@@ -332,21 +334,15 @@ class IVFCosineTopK(AlgoOperator, _SimilarityParams):
                 raise ValueError("need corpus or precomputed")
             precomputed = self.index_table(corpus)
         precomputed.write.mode(mode).parquet(os.path.join(path, "data"))
-        os.makedirs(path, exist_ok=True)
-        with open(os.path.join(path, "centroids.json"), "w") as f:
-            json.dump({"centroids": self._centroids,
-                       "nList": self.getNList()}, f)
+        self.save(path)
 
     def load_index(self, spark, path: str) -> DataFrame:
         """Load a saved index: restores the centroids onto THIS
         operator (so probe ranking matches the stored cells) and
         returns the celled corpus for ``corpus_indexed=``."""
-        import json
         import os
 
-        with open(os.path.join(path, "centroids.json")) as f:
-            meta = json.load(f)
-        self._centroids = meta["centroids"]
+        self._load_state(spark, path)
         return spark.read.parquet(os.path.join(path, "data"))
 
     def topk(self, queries: DataFrame, corpus: DataFrame | None = None,
@@ -433,25 +429,6 @@ class IVFCosineTopK(AlgoOperator, _SimilarityParams):
 
     def transform(self, df: DataFrame) -> DataFrame:
         return self.topk(df, df)
-
-    # -- persistence: the trained coarse quantizer IS the index ---------
-
-    def _save_model_data(self, path: str) -> None:
-        import json
-        import os
-
-        if self._centroids is not None:
-            with open(os.path.join(path, "centroids.json"), "w") as f:
-                json.dump({"centroids": self._centroids}, f)
-
-    def _load_model_data(self, spark, path: str) -> None:
-        import json
-        import os
-
-        p = os.path.join(path, "centroids.json")
-        if os.path.exists(p):
-            with open(p) as f:
-                self._centroids = json.load(f)["centroids"]
 
 
 class EmbeddingQuantizer(AlgoOperator, _SimilarityParams):
@@ -695,6 +672,8 @@ class EmbeddingPCAModel(AlgoOperator, _SimilarityParams):
     variance.
     """
 
+    _state = ("_mean", "_components", "_eigvals", "_total_var")
+
     def __init__(self, mean=None, components=None, eigvals=None,
                  total_var: float | None = None):
         super().__init__()
@@ -729,27 +708,6 @@ class EmbeddingPCAModel(AlgoOperator, _SimilarityParams):
         arr = as_double_array(df, self.getEmbeddingCol())
         return df.withColumn("pca", project(arr))
 
-    def _save_model_data(self, path: str) -> None:
-        import json
-        import os
-
-        with open(os.path.join(path, "pca.json"), "w") as f:
-            json.dump({"mean": list(self._mean),
-                       "components": [list(r) for r in self._components],
-                       "eigvals": list(self._eigvals),
-                       "total_var": self._total_var}, f)
-
-    def _load_model_data(self, spark, path: str) -> None:
-        import json
-        import os
-
-        with open(os.path.join(path, "pca.json")) as f:
-            d = json.load(f)
-        self._mean = d["mean"]
-        self._components = d["components"]
-        self._eigvals = d["eigvals"]
-        self._total_var = d["total_var"]
-
 
 class EmbeddingPCA(AlgoOperator, _SimilarityParams):
     """PCA over an embedding column — the standard dimensionality cut
@@ -782,34 +740,33 @@ class EmbeddingPCA(AlgoOperator, _SimilarityParams):
     def fit(self, df: DataFrame) -> EmbeddingPCAModel:
         import numpy as np
 
-        from flink_ml__spark.base import array_width
-
         ecol = self.getEmbeddingCol()
-        dims = array_width(df, ecol)
-        k = min(self.getK(), dims)
         arr = as_double_array(df, ecol)
         src = df.select(arr.alias("__v"))
 
         def partials(batches):
-            n = 0
-            sx = np.zeros(dims)
-            sxx = np.zeros((dims, dims))
+            n, sx, sxx = 0, 0.0, 0.0
             for pdf in batches:
                 X = np.stack(pdf["__v"].to_numpy()).astype(np.float64)
                 n += len(X)
-                sx += X.sum(0)
-                sxx += X.T @ X
+                sx = sx + X.sum(0)
+                sxx = sxx + X.T @ X
             if n:
                 yield pd.DataFrame({
                     "n": [n], "sx": [sx.tolist()],
                     "sxx": [sxx.reshape(-1).tolist()]})
 
+        rows = src.mapInPandas(
+            partials, "n long, sx array<double>, sxx array<double>"
+        ).collect()
+        if not rows:
+            raise ValueError("EmbeddingPCA needs at least 2 rows")
+        dims = len(rows[0]["sx"])
+        k = min(self.getK(), dims)
         n = 0
         sx = np.zeros(dims)
         sxx = np.zeros((dims, dims))
-        for row in src.mapInPandas(
-                partials,
-                "n long, sx array<double>, sxx array<double>").collect():
+        for row in rows:
             n += row["n"]
             sx += np.asarray(row["sx"])
             sxx += np.asarray(row["sxx"]).reshape(dims, dims)
@@ -831,6 +788,23 @@ class EmbeddingPCA(AlgoOperator, _SimilarityParams):
                                   float(np.trace(cov)))
         model._set(embeddingCol=ecol, idCol=self.getIdCol(), k=k)
         return model
+
+
+def _train_sample(pts: DataFrame, seed: int, cap: int, m: int):
+    """The PQ training sample of ``pts.__v`` as a (rows, dims) matrix:
+    the ``cap`` rows first in seeded-hash order, in one job whose rows
+    also give the width, checked to split into ``m`` subspaces."""
+    import numpy as np
+
+    sample = (pts.orderBy(F.xxhash64(F.lit(seed), "__v"))
+              .limit(cap).collect())
+    if not sample:
+        raise ValueError("cannot train on an empty embedding column")
+    X = np.asarray([list(r["__v"]) for r in sample])
+    if X.shape[1] % m:
+        raise ValueError(
+            f"numSubspaces={m} must divide dims={X.shape[1]}")
+    return X
 
 
 def _pq_train_books(X, m: int, k_sub: int, iters: int):
@@ -910,6 +884,8 @@ class ProductQuantizer(AlgoOperator, _SimilarityParams):
                       "driver-side Lloyd iterations per subspace",
                       TypeConverters.toInt)
 
+    _state = ("_codebooks",)
+
     def __init__(self):
         super().__init__()
         self._setDefault(numSubspaces=8, bitsPerCode=8,
@@ -937,23 +913,11 @@ class ProductQuantizer(AlgoOperator, _SimilarityParams):
     # -- training -------------------------------------------------------
 
     def train(self, df: DataFrame) -> "ProductQuantizer":
-        import numpy as np
-
-        from flink_ml__spark.base import array_width
-
-        ecol = self.getEmbeddingCol()
-        dims = array_width(df, ecol)
         m = self.getNumSubspaces()
-        if dims % m:
-            raise ValueError(
-                f"numSubspaces={m} must divide dims={dims}")
-        sub = dims // m
-        arr = as_double_array(df, ecol)
+        arr = as_double_array(df, self.getEmbeddingCol())
         pts = df.select(arr.alias("__v"))
         cap = max(self.getOrDefault(self.trainSampleSize), 2)
-        sample = (pts.orderBy(F.xxhash64(F.lit(self.getSeed()), "__v"))
-                  .limit(cap).collect())
-        X = np.asarray([list(r["__v"]) for r in sample])
+        X = _train_sample(pts, self.getSeed(), cap, m)
         k_sub = min(1 << self.getBitsPerCode(), len(X))
         iters = max(self.getOrDefault(self.trainIter), 0)
         self._codebooks = _pq_train_books(X, m, k_sub, iters)
@@ -1074,25 +1038,6 @@ class ProductQuantizer(AlgoOperator, _SimilarityParams):
                 .filter(F.col("rank") <= k)
                 .select("query_id", "neighbor_id", "adc_cosine", "rank"))
 
-    # -- persistence ----------------------------------------------------
-
-    def _save_model_data(self, path: str) -> None:
-        import json
-        import os
-
-        if self._codebooks is not None:
-            with open(os.path.join(path, "pq_codebooks.json"), "w") as f:
-                json.dump({"codebooks": self._codebooks}, f)
-
-    def _load_model_data(self, spark, path: str) -> None:
-        import json
-        import os
-
-        p = os.path.join(path, "pq_codebooks.json")
-        if os.path.exists(p):
-            with open(p) as f:
-                self._codebooks = json.load(f)["codebooks"]
-
 
 class IVFPQTopK(AlgoOperator, _SimilarityParams):
     """IVF-PQ approximate cosine top-k — the COMPLETE Jégou, Douze &
@@ -1142,6 +1087,8 @@ class IVFPQTopK(AlgoOperator, _SimilarityParams):
                          "(1 disables refinement)",
                          TypeConverters.toInt)
 
+    _state = ("_centroids", "_anchors", "_codebooks")
+
     def __init__(self):
         super().__init__()
         self._setDefault(nList=16, nProbe=4, numSubspaces=8,
@@ -1183,21 +1130,12 @@ class IVFPQTopK(AlgoOperator, _SimilarityParams):
     def train(self, corpus: DataFrame) -> "IVFPQTopK":
         import numpy as np
 
-        from flink_ml__spark.base import array_width
-
-        ecol = self.getEmbeddingCol()
-        dims = array_width(corpus, ecol)
         m = self.getOrDefault(self.numSubspaces)
-        if dims % m:
-            raise ValueError(
-                f"numSubspaces={m} must divide dims={dims}")
-        arr = as_double_array(corpus, ecol)
+        arr = as_double_array(corpus, self.getEmbeddingCol())
         pts = corpus.select(arr.alias("__v"))
         cap = max(self.getOrDefault(self.trainSampleSize),
                   self.getNList(), 2)
-        sample = (pts.orderBy(F.xxhash64(F.lit(self.getSeed()), "__v"))
-                  .limit(cap).collect())
-        X = np.asarray([list(r["__v"]) for r in sample])
+        X = _train_sample(pts, self.getSeed(), cap, m)
         iters = max(self.getOrDefault(self.trainIter), 0)
         self._centroids = _spherical_centroids(
             _unit(X), self.getNList(), iters)
@@ -1267,10 +1205,9 @@ class IVFPQTopK(AlgoOperator, _SimilarityParams):
     def save_index(self, path: str, corpus: DataFrame | None = None, *,
                    precomputed: DataFrame | None = None,
                    mode: str = "overwrite") -> None:
-        """Persist the compressed corpus + the model (centroids AND
-        residual codebooks travel with the index);
+        """Persist the compressed corpus + the model (``save``: centroids
+        AND residual codebooks travel with the index);
         ``mode='append'`` adds a batch encoded under the SAME model."""
-        import json
         import os
 
         if precomputed is None:
@@ -1278,21 +1215,14 @@ class IVFPQTopK(AlgoOperator, _SimilarityParams):
                 raise ValueError("need corpus or precomputed")
             precomputed = self.index_table(corpus)
         precomputed.write.mode(mode).parquet(os.path.join(path, "data"))
-        os.makedirs(path, exist_ok=True)
-        with open(os.path.join(path, "model.json"), "w") as f:
-            json.dump({"centroids": self._centroids,
-                       "anchors": self._anchors,
-                       "codebooks": self._codebooks}, f)
+        self.save(path)
 
     def load_index(self, spark, path: str) -> DataFrame:
-        import json
+        """Restores the model onto THIS operator and returns the
+        compressed corpus for ``corpus_indexed=``."""
         import os
 
-        with open(os.path.join(path, "model.json")) as f:
-            d = json.load(f)
-        self._centroids = d["centroids"]
-        self._anchors = d["anchors"]
-        self._codebooks = d["codebooks"]
+        self._load_state(spark, path)
         return spark.read.parquet(os.path.join(path, "data"))
 
     # -- search ---------------------------------------------------------
@@ -1414,30 +1344,6 @@ class IVFPQTopK(AlgoOperator, _SimilarityParams):
 
     def transform(self, df: DataFrame) -> DataFrame:
         return self.topk(df, df)
-
-    # -- persistence (model only; the index persists via save_index) ----
-
-    def _save_model_data(self, path: str) -> None:
-        import json
-        import os
-
-        if self._centroids is not None:
-            with open(os.path.join(path, "ivfpq.json"), "w") as f:
-                json.dump({"centroids": self._centroids,
-                           "anchors": self._anchors,
-                           "codebooks": self._codebooks}, f)
-
-    def _load_model_data(self, spark, path: str) -> None:
-        import json
-        import os
-
-        p = os.path.join(path, "ivfpq.json")
-        if os.path.exists(p):
-            with open(p) as f:
-                d = json.load(f)
-            self._centroids = d["centroids"]
-            self._anchors = d["anchors"]
-            self._codebooks = d["codebooks"]
 
 
 class RandomProjection(AlgoOperator, _SimilarityParams):

@@ -17,7 +17,7 @@ from __future__ import annotations
 
 import pandas as pd
 from pyspark.ml.param import Param, Params, TypeConverters
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from flink_ml__spark.base import AlgoOperator, HasInputCol
@@ -412,6 +412,8 @@ class CountMinSketch(AlgoOperator, HasInputCol):
     seed = Param(Params._dummy(), "seed", "hash seed",
                  TypeConverters.toInt)
 
+    _state = ("_matrix", "_total")
+
     def __init__(self):
         super().__init__()
         self._setDefault(inputCol="item", depth=5, width=2048, seed=17)
@@ -512,28 +514,6 @@ class CountMinSketch(AlgoOperator, HasInputCol):
 
         est = F.when(item.isNotNull(), gather_min(idx))
         return df.withColumn("cms_est", est)
-
-    # -- persistence ----------------------------------------------------
-
-    def _save_model_data(self, path: str) -> None:
-        import json
-        import os
-
-        if self._matrix is not None:
-            with open(os.path.join(path, "cms.json"), "w") as f:
-                json.dump({"matrix": self._matrix,
-                           "total": self._total}, f)
-
-    def _load_model_data(self, spark, path: str) -> None:
-        import json
-        import os
-
-        p = os.path.join(path, "cms.json")
-        if os.path.exists(p):
-            with open(p) as f:
-                d = json.load(f)
-            self._matrix = d["matrix"]
-            self._total = d["total"]
 
 
 def stream_count_min(op: CountMinSketch, emit) -> "callable":
@@ -676,3 +656,106 @@ class SketchOverlapEstimator(AlgoOperator):
 
     def transform(self, df: DataFrame) -> DataFrame:
         return self.evaluate(df)
+
+
+class BloomBitset(Params):
+    """The Bloom-filter kernel of :class:`~flink_ml__spark.functions.
+    dedup.BloomCorpusDeduplicator` and :class:`~flink_ml__spark.
+    functions.joins.BloomJoinFilter`: a ``numBits``-bit filter over
+    md5-hex key fingerprints, ``numHashes`` positions per key from the
+    Kirsch–Mitzenmacher double hash ``pos_i = (h1 + i·h2) mod m`` with
+    ``h1 = hex[0:15]``, ``h2 = hex[15:30]``. Positions derive only from
+    the hex, so a SQL oracle replays the exact set, false positives
+    included. NULL fingerprints are never added and never match.
+
+    ``_fit_bits`` ORs per-batch partial bitsets built in one
+    ``mapInPandas`` pass (the driver merge collects O(batches·m/8)
+    bytes); ``_might_contain`` probes them in a map-only Arrow pass with
+    the bitset broadcast once per fitted filter. The bitset is the
+    fitted state ``_bits``; each operator names it in its ``_state``.
+    """
+
+    numBits = Param(Params._dummy(), "numBits",
+                    "bloom filter size in bits (m)", TypeConverters.toInt)
+    numHashes = Param(Params._dummy(), "numHashes",
+                      "probes per key (k)", TypeConverters.toInt)
+
+    def __init__(self):
+        super().__init__()
+        self._bits: bytes | None = None
+        self._bc = None    # cached SparkContext broadcast of the bitset
+
+    def getNumBits(self):
+        return self.getOrDefault(self.numBits)
+
+    def setNumBits(self, v):
+        return self._set(numBits=int(v))
+
+    def getNumHashes(self):
+        return self.getOrDefault(self.numHashes)
+
+    def setNumHashes(self, v):
+        return self._set(numHashes=int(v))
+
+    def _fit_bits(self, fp: DataFrame) -> None:
+        """Fold the one md5-hex column of ``fp`` into ``_bits``."""
+        import numpy as np
+
+        m, k = self.getNumBits(), self.getNumHashes()
+        nbytes = (m + 7) // 8
+
+        def partial(batches):
+            bits = np.zeros(nbytes, dtype=np.uint8)
+            seen = False
+            for pdf in batches:
+                for s in pdf.iloc[:, 0]:
+                    if s is None:
+                        continue
+                    h1, h2 = int(s[:15], 16), int(s[15:30], 16)
+                    for i in range(k):
+                        p = (h1 + i * h2) % m
+                        bits[p >> 3] |= 1 << (p & 7)
+                    seen = True
+            if seen:
+                yield pd.DataFrame({"b": [bits.tobytes()]})
+
+        acc = np.zeros(nbytes, dtype=np.uint8)
+        for row in fp.mapInPandas(partial, "b binary").collect():
+            acc |= np.frombuffer(row["b"], dtype=np.uint8)
+        self._bits = acc.tobytes()
+        if self._bc is not None:       # refit invalidates the broadcast
+            self._bc.unpersist()
+            self._bc = None
+
+    def _might_contain(self, spark, fp: Column) -> Column:
+        """Boolean column: the md5-hex ``fp`` might be in the filter
+        (false for NULL). One broadcast per fitted bitset: per-call
+        broadcasts of the MB..GB-sized filter would accumulate for the
+        app lifetime (the per-micro-batch foreachBatch shape hits this
+        hard)."""
+        import numpy as np
+
+        m, k = self.getNumBits(), self.getNumHashes()
+        if self._bc is None:
+            self._bc = spark.sparkContext.broadcast(self._bits)
+        bc = self._bc
+
+        @F.pandas_udf("boolean")
+        def might_contain(fps: pd.Series) -> pd.Series:
+            bits = np.frombuffer(bc.value, dtype=np.uint8)
+            out = []
+            for s in fps:
+                if s is None:
+                    out.append(False)
+                    continue
+                h1, h2 = int(s[:15], 16), int(s[15:30], 16)
+                hit = True
+                for i in range(k):
+                    p = (h1 + i * h2) % m
+                    if not (bits[p >> 3] >> (p & 7)) & 1:
+                        hit = False
+                        break
+                out.append(hit)
+            return pd.Series(out)
+
+        return might_contain(fp)

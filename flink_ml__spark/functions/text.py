@@ -998,6 +998,8 @@ class HashedTfIdfModel(AlgoOperator, HasInputCol, HasOutputCol):
     no join, stream-compatible.
     """
 
+    _state = ("_dim", "_idf")
+
     def __init__(self, dim: int | None = None,
                  idf: list | None = None):
         super().__init__()
@@ -1039,21 +1041,6 @@ class HashedTfIdfModel(AlgoOperator, HasInputCol, HasOutputCol):
                 .withColumn("__hti_n", norm)
                 .withColumn(out, vec)
                 .drop("__hti_b", "__hti_c", "__hti_w", "__hti_n"))
-
-    def _save_model_data(self, path: str) -> None:
-        import json
-        import os
-
-        with open(os.path.join(path, "idf.json"), "w") as f:
-            json.dump({"dim": self._dim, "idf": self._idf}, f)
-
-    def _load_model_data(self, spark, path: str) -> None:
-        import json
-        import os
-
-        with open(os.path.join(path, "idf.json")) as f:
-            d = json.load(f)
-        self._dim, self._idf = d["dim"], d["idf"]
 
 
 class HashedTfIdfEmbedder(AlgoOperator, HasInputCol, HasOutputCol):

@@ -179,6 +179,9 @@ class FCMModel(Model, FCMParams):
     """Cluster assignment = argmax membership ≡ argmin distance
     (``FCMModel.java:121-143``); centroids broadcast as literals."""
 
+    # a model built by ``setModelData`` holds its centroids only there
+    _state = ("_centroids", "_model_data")
+
     def __init__(self, centroids: list[list[float]] | None = None):
         super().__init__()
         self._centroids = centroids
@@ -272,22 +275,6 @@ class FCMModel(Model, FCMParams):
         arr = as_double_array(df, self.getFeaturesCol())
         return df.select(F.col(self.getFeaturesCol()),
                          memberships(arr).alias("membership"))
-
-    def _save_model_data(self, path: str) -> None:
-        import json
-        import os
-
-        with open(os.path.join(path, "model_data.json"), "w") as f:
-            json.dump({"centroids": self.centroids}, f)
-
-    def _load_model_data(self, spark, path: str) -> None:
-        import json
-        import os
-
-        p = os.path.join(path, "model_data.json")
-        if os.path.exists(p):
-            with open(p) as f:
-                self._centroids = json.load(f)["centroids"]
 
 
 class FCM(Estimator, FCMParams):

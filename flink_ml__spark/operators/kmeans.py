@@ -107,6 +107,8 @@ class KMeansModel(Model, KMeansParams):
     break to the lowest index (``array_position`` returns the first
     match)."""
 
+    _state = ("_centroids",)
+
     def __init__(self, centroids: list[list[float]] | None = None):
         super().__init__()
         self._centroids = centroids
@@ -167,20 +169,6 @@ class KMeansModel(Model, KMeansParams):
         df2, _, dists = self._features(df)
         row = df2.agg(F.expr(f"sum(array_min({dists})) AS c")).collect()[0]
         return float(row["c"]) if row["c"] is not None else 0.0
-
-    def _save_model_data(self, path: str) -> None:
-        import json
-        import os
-
-        with open(os.path.join(path, "centroids.json"), "w") as f:
-            json.dump({"centroids": self._centroids}, f)
-
-    def _load_model_data(self, spark, path: str) -> None:
-        import json
-        import os
-
-        with open(os.path.join(path, "centroids.json")) as f:
-            self._centroids = json.load(f)["centroids"]
 
 
 class KMeans(Estimator, KMeansParams):

@@ -8,33 +8,25 @@ engine mirrors, so composition is the natural completion of the API.
 ``fit`` walks the stages: transformers apply, estimators fit on the
 current frame and their models apply; the result is a ``PipelineModel``
 of pure transformers. Save/load delegates to each stage's own
-persistence (metadata JSON + optional model data), one numbered subdir
-per stage.
+persistence (``Stage.save``: one metadata JSON with params and fitted
+state), one numbered subdir per stage; ``base.load_stage`` resolves
+each subdir's class from that same metadata read.
 """
 
 from __future__ import annotations
 
-import importlib
 import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession
 
-from flink_ml__spark.base import AlgoOperator, Estimator, Stage
-
-
-def _load_stage(spark: SparkSession, path: str) -> Stage:
-    with open(os.path.join(path, "metadata")) as f:
-        cls_path = json.load(f)["class"]
-    module, name = cls_path.rsplit(".", 1)
-    cls = getattr(importlib.import_module(module), name)
-    return cls.load(spark, path)
+from flink_ml__spark.base import AlgoOperator, Estimator, Stage, load_stage
 
 
 class _StageListPersistence:
     """Stage-list save/load through the standard ``Stage`` hooks, so a
     Pipeline/PipelineModel also writes its own ``metadata`` file and
-    can therefore NEST as a stage of another pipeline (``_load_stage``
+    can therefore NEST as a stage of another pipeline (``load_stage``
     resolves every stage dir through its metadata)."""
 
     def _save_model_data(self, path: str) -> None:
@@ -46,7 +38,7 @@ class _StageListPersistence:
     def _load_model_data(self, spark: SparkSession, path: str) -> None:
         with open(os.path.join(path, "pipeline")) as f:
             n = json.load(f)["n_stages"]
-        self.stages = [_load_stage(spark, os.path.join(path, f"stage_{i}"))
+        self.stages = [load_stage(spark, os.path.join(path, f"stage_{i}"))
                        for i in range(n)]
 
 

@@ -1426,6 +1426,27 @@ def test_kneser_ney_golden(spark):
     assert out[3]["mean_logprob"] is None
 
 
+def test_kneser_ney_save_load_round_trip(spark, tmp_path):
+    from flink_ml__spark.functions.curation import (
+        KneserNeyBigramLM,
+        KneserNeyBigramLMModel,
+    )
+    corpus = spark.createDataFrame(
+        [(0, "a b"), (1, "a b"), (2, "a c")],
+        "doc_id long, text string")
+    m = (KneserNeyBigramLM().setMaxVocab(100).setMaxBigrams(100)
+         .setDiscount(0.5).fit(corpus))
+    p = str(tmp_path / "kn")
+    m.save(p)
+    back = KneserNeyBigramLMModel.load(spark, p)
+    assert back._discount == 0.5
+    docs = spark.createDataFrame(
+        [(0, "a b"), (1, "c a"), (2, "b b"), (3, None)],
+        "doc_id long, text string")
+    assert (sorted(back.transform(docs).collect())
+            == sorted(m.transform(docs).collect()))
+
+
 def test_kneser_ney_sums_to_one_and_ranks_fluency(spark):
     import math
     import pytest as _pt

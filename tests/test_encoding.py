@@ -6,11 +6,13 @@ import pytest
 
 from flink_ml__spark.functions import (
     MaxAbsScaler,
+    MaxAbsScalerModel,
     MinMaxScaler,
     MinMaxScalerModel,
     QuantileDiscretizer,
     QuantileDiscretizerModel,
     RobustScaler,
+    RobustScalerModel,
     StringIndexer,
     StringIndexerModel,
     TargetEncoder,
@@ -66,6 +68,16 @@ def test_max_abs_scaler(spark):
     assert vals == [-1.0, 0.5, 0.0, None]
 
 
+def test_max_abs_scaler_save_load(spark, tmp_path):
+    df = spark.createDataFrame([(-4.0,), (2.0,), (0.0,), (None,)],
+                               ["value"])
+    model = MaxAbsScaler().setInputCol("value").fit(df)
+    p = str(tmp_path / "maxabs")
+    model.save(p)
+    loaded = MaxAbsScalerModel.load(spark, p)
+    assert loaded.transform(df).collect() == model.transform(df).collect()
+
+
 def test_max_abs_scaler_all_zero_identity(spark):
     df = spark.createDataFrame([(0.0,), (0.0,)], ["value"])
     model = MaxAbsScaler().setInputCol("value").fit(df)
@@ -82,6 +94,18 @@ def test_robust_scaler(spark):
     assert math.isclose(got[0], (1 - 5) / 4)
     assert math.isclose(got[4], 0.0)
     assert math.isclose(got[-1], 1.0)
+
+
+def test_robust_scaler_save_load(spark, tmp_path):
+    df = spark.createDataFrame([(float(i),) for i in range(1, 10)],
+                               ["value"])
+    model = (RobustScaler().setInputCol("value").fit(df)
+             .setWithCentering(False))
+    p = str(tmp_path / "robust")
+    model.save(p)
+    loaded = RobustScalerModel.load(spark, p)
+    assert not loaded.getOrDefault(loaded.withCentering)
+    assert loaded.transform(df).collect() == model.transform(df).collect()
 
 
 def test_robust_scaler_toggles_and_approx(spark):

@@ -541,6 +541,24 @@ def test_conformal_tiny_group_and_grouped_coverage(spark):
         SplitConformalRegressor().setAlpha(1.0)
 
 
+def test_conformal_model_save_load(spark, tmp_path):
+    from flink_ml__spark.functions.evaluation import (
+        SplitConformalModel,
+        SplitConformalRegressor,
+    )
+    cal = spark.createDataFrame(
+        [("g", 0.0, float(i)) for i in range(1, 21)] +
+        [("h", 0.0, 1.0), ("h", 0.0, 2.0)],
+        "grp string, prediction double, label double")
+    m = (SplitConformalRegressor().setGroupCols("grp").setAlpha(0.1)
+         .fit(cal))
+    p = str(tmp_path / "conformal")
+    m.save(p)
+    back = SplitConformalModel.load(spark, p)
+    assert (sorted(back.transform(cal).collect())
+            == sorted(m.transform(cal).collect()))
+
+
 # ---------------------------------------------------------------------------
 # UpliftEvaluator
 # ---------------------------------------------------------------------------

@@ -187,6 +187,23 @@ def test_set_model_data_transplant(spark):
     assert sorted(a) == sorted(b)
 
 
+def test_set_model_data_save_load(spark, tmp_path):
+    """A model built from model data alone saves and reloads with the
+    same assignments."""
+    model, df = fit_model(spark)
+    fresh = FCMModel().setModelData(model.getModelData())
+    fresh._set(**{p.name: model.getOrDefault(p) for p in model.params})
+    path = str(tmp_path / "fcm_md")
+    fresh.save(path)
+    loaded = FCMModel.load(spark, path)
+    a = [(tuple(r["features"]), r["prediction"])
+         for r in fresh.transform(df).collect()]
+    b = [(tuple(r["features"]), r["prediction"])
+         for r in loaded.transform(df).collect()]
+    assert sorted(a) == sorted(b)
+    assert loaded.centroids == fresh.centroids
+
+
 def test_model_data_reference_shape(spark):
     """Schema parity with the reference's model data: one row
     ``(centroids, membershipMatrix)`` (``FCMModelData.java:35-47``,

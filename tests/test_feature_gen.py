@@ -7,6 +7,7 @@ from flink_ml__spark.functions import (
     MeanImputer,
     MeanImputerModel,
     StandardScaler,
+    StandardScalerModel,
     TimeFeatureExtractor,
 )
 
@@ -77,6 +78,16 @@ def test_standard_scaler(spark):
     model._set(passthrough=True)
     out = [r["scaled_value"] for r in model.transform(df).collect()]
     assert out == [2.0, 4.0, 6.0]
+
+
+def test_standard_scaler_save_load(spark, tmp_path):
+    df = spark.createDataFrame([(2.0,), (4.0,), (None,), (7.0,)], "x double")
+    model = StandardScaler().setInputCol("x").setOutputCol("z").fit(df)
+    p = str(tmp_path / "scaler")
+    model.save(p)
+    loaded = StandardScalerModel.load(spark, p)
+    assert loaded.getOutputCol() == "z"
+    assert loaded.transform(df).collect() == model.transform(df).collect()
 
 
 def test_auto_feature_transformer(spark):

@@ -492,6 +492,22 @@ def test_ivfpq_index_save_load_round_trip(spark, tmp_path):
     assert a == b
 
 
+def test_ivfpq_save_load_round_trip(spark, tmp_path):
+    from flink_ml__spark.sources import load_table
+    from flink_ml__spark.functions.similarity import IVFPQTopK
+
+    emb = load_table(spark, "embeddings", "/root/testdata/sf0.001")
+    op = (IVFPQTopK().setK(3).setNList(8).setNProbe(4)
+          .setNumSubspaces(8).setBitsPerCode(4).setSeed(42).train(emb))
+    p = str(tmp_path / "ivfpq_model")
+    op.save(p)
+    back = IVFPQTopK.load(spark, p)
+    assert back.getNProbe() == 4
+    a = sorted(tuple(r) for r in op.topk(emb.limit(5), emb).collect())
+    b = sorted(tuple(r) for r in back.topk(emb.limit(5), emb).collect())
+    assert a == b
+
+
 def test_ivfpq_guards(spark):
     import pytest as _pytest
 
