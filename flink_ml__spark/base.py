@@ -9,7 +9,10 @@ model-data table) — see /root/reference
 
 Here the same contract is expressed in the ``pyspark.ml`` idiom:
 
-* params         → ``pyspark.ml.param.Param`` on ``Params`` mixins
+* params         → a ``pyspark.ml.param.Param`` class attribute, on the
+  stage or on a ``Params`` mixin (the ``HasXxx`` interfaces), declared
+  once: its default is an entry of the class's ``_defaults`` dict and
+  ``Stage`` derives its ``get<Name>``/``set<Name>`` accessors
 * AlgoOperator   → a ``Transformer`` (stateless ``transform(df) -> df``)
 * Estimator      → ``Estimator.fit(df) -> Model``
 * persistence    → one ``<path>/metadata`` JSON (``DefaultParamsWriter``-
@@ -26,11 +29,13 @@ and results remain plain-SQL comparable.
 
 from __future__ import annotations
 
+import functools
 import importlib
 import json
 import math
 import os
 import time
+from urllib.parse import urlparse
 
 from pyspark.ml.linalg import VectorUDT
 from pyspark.ml.param import Param, Params, TypeConverters
@@ -48,15 +53,7 @@ class HasFeaturesCol(Params):
         Params._dummy(), "featuresCol", "features column name",
         typeConverter=TypeConverters.toString)
 
-    def __init__(self):
-        super().__init__()
-        self._setDefault(featuresCol="features")
-
-    def getFeaturesCol(self) -> str:
-        return self.getOrDefault(self.featuresCol)
-
-    def setFeaturesCol(self, value: str):
-        return self._set(featuresCol=value)
+    _defaults = dict(featuresCol="features")
 
 
 class HasPredictionCol(Params):
@@ -64,15 +61,7 @@ class HasPredictionCol(Params):
         Params._dummy(), "predictionCol", "prediction column name",
         typeConverter=TypeConverters.toString)
 
-    def __init__(self):
-        super().__init__()
-        self._setDefault(predictionCol="prediction")
-
-    def getPredictionCol(self) -> str:
-        return self.getOrDefault(self.predictionCol)
-
-    def setPredictionCol(self, value: str):
-        return self._set(predictionCol=value)
+    _defaults = dict(predictionCol="prediction")
 
 
 class HasInputCol(Params):
@@ -80,27 +69,13 @@ class HasInputCol(Params):
         Params._dummy(), "inputCol", "input column name",
         typeConverter=TypeConverters.toString)
 
-    def __init__(self):
-        super().__init__()
-        self._setDefault(inputCol="input")
-
-    def getInputCol(self) -> str:
-        return self.getOrDefault(self.inputCol)
-
-    def setInputCol(self, value: str):
-        return self._set(inputCol=value)
+    _defaults = dict(inputCol="input")
 
 
 class HasInputCols(Params):
     inputCols = Param(
         Params._dummy(), "inputCols", "input column names",
         typeConverter=TypeConverters.toListString)
-
-    def __init__(self):
-        super().__init__()
-
-    def getInputCols(self) -> list[str]:
-        return self.getOrDefault(self.inputCols)
 
     def setInputCols(self, *value):
         if len(value) == 1 and isinstance(value[0], (list, tuple)):
@@ -113,27 +88,13 @@ class HasOutputCol(Params):
         Params._dummy(), "outputCol", "output column name",
         typeConverter=TypeConverters.toString)
 
-    def __init__(self):
-        super().__init__()
-        self._setDefault(outputCol="output")
-
-    def getOutputCol(self) -> str:
-        return self.getOrDefault(self.outputCol)
-
-    def setOutputCol(self, value: str):
-        return self._set(outputCol=value)
+    _defaults = dict(outputCol="output")
 
 
 class HasOutputCols(Params):
     outputCols = Param(
         Params._dummy(), "outputCols", "output column names",
         typeConverter=TypeConverters.toListString)
-
-    def __init__(self):
-        super().__init__()
-
-    def getOutputCols(self) -> list[str]:
-        return self.getOrDefault(self.outputCols)
 
     def setOutputCols(self, *value):
         if len(value) == 1 and isinstance(value[0], (list, tuple)):
@@ -146,15 +107,7 @@ class HasMaxIter(Params):
         Params._dummy(), "maxIter", "maximum number of iterations (>=0)",
         typeConverter=TypeConverters.toInt)
 
-    def __init__(self):
-        super().__init__()
-        self._setDefault(maxIter=20)
-
-    def getMaxIter(self) -> int:
-        return self.getOrDefault(self.maxIter)
-
-    def setMaxIter(self, value: int):
-        return self._set(maxIter=value)
+    _defaults = dict(maxIter=20)
 
 
 class HasSeed(Params):
@@ -162,27 +115,22 @@ class HasSeed(Params):
         Params._dummy(), "seed", "random seed",
         typeConverter=TypeConverters.toInt)
 
-    def __init__(self):
-        super().__init__()
-        self._setDefault(seed=0)
-
-    def getSeed(self) -> int:
-        return self.getOrDefault(self.seed)
-
-    def setSeed(self, value: int):
-        return self._set(seed=value)
+    _defaults = dict(seed=0)
 
 
 class HasRelativeError(Params):
-    """Exact-vs-approximate quantile switch for fit-time percentile
-    aggregations (DriftMonitor, Winsorizer, PerplexityBucketer,
-    QuantileMatcher, ...).
+    """The one exact-vs-approximate quantile switch for fit-time
+    percentile aggregations (DriftMonitor, Winsorizer,
+    PerplexityBucketer, QuantileMatcher, RankGaussTransformer,
+    PaddingWasteProfiler, ...).
 
     Default 0.0 = exact percentiles — deterministic and
     SQL-oracle-replayable. ``_percentile_sql`` renders Spark's
     ``percentile`` aggregate (a full value→count map merged on a single
     final aggregation buffer); QuantileMatcher fits through
-    ``functions.quantiles.exact_percentiles`` (the sorted value list
+    ``functions.quantiles.exact_percentiles``, and the quantile-band
+    operators (RankGaussTransformer, PaddingWasteProfiler) through
+    ``functions.quantiles.quantile_edges`` (the sorted value list
     gathered on a single reducer). Either way the exact path holds the
     whole column on one node, which on a 100 TB high-cardinality double
     column is an OOM, not a slowdown. Setting ``relativeError`` > 0
@@ -198,12 +146,7 @@ class HasRelativeError(Params):
         "approx_percentile with this relative rank error",
         typeConverter=TypeConverters.toFloat)
 
-    def __init__(self):
-        super().__init__()
-        self._setDefault(relativeError=0.0)
-
-    def getRelativeError(self) -> float:
-        return self.getOrDefault(self.relativeError)
+    _defaults = dict(relativeError=0.0)
 
     def setRelativeError(self, value: float):
         value = float(value)
@@ -234,12 +177,7 @@ class HasDistanceMeasure(Params):
         "distance measure: euclidean | cosine",
         typeConverter=TypeConverters.toString)
 
-    def __init__(self):
-        super().__init__()
-        self._setDefault(distanceMeasure="euclidean")
-
-    def getDistanceMeasure(self) -> str:
-        return self.getOrDefault(self.distanceMeasure)
+    _defaults = dict(distanceMeasure="euclidean")
 
     def setDistanceMeasure(self, value: str):
         if value not in ("euclidean", "cosine"):
@@ -261,15 +199,7 @@ class HasWindows(Params):
         "string like '3 days'",
         typeConverter=TypeConverters.identity)
 
-    def __init__(self):
-        super().__init__()
-        self._setDefault(windows=None)
-
-    def getWindows(self):
-        return self.getOrDefault(self.windows)
-
-    def setWindows(self, value):
-        return self._set(windows=value)
+    _defaults = dict(windows=None)
 
 
 class HasTimeCol(Params):
@@ -277,15 +207,7 @@ class HasTimeCol(Params):
         Params._dummy(), "timeCol", "event-time (rowtime) column name",
         typeConverter=TypeConverters.toString)
 
-    def __init__(self):
-        super().__init__()
-        self._setDefault(timeCol="rowtime")
-
-    def getTimeCol(self) -> str:
-        return self.getOrDefault(self.timeCol)
-
-    def setTimeCol(self, value: str):
-        return self._set(timeCol=value)
+    _defaults = dict(timeCol="rowtime")
 
 
 # --------------------------------------------------------------------------
@@ -325,9 +247,41 @@ def load_stage(spark: SparkSession, path: str, cls: type | None = None):
     return inst
 
 
+def _accessors(name: str):
+    """The generated ``get``/``set`` pair of the param ``name``: read
+    its value or default, set it through its ``typeConverter``."""
+    def get(self):
+        return self.getOrDefault(name)
+
+    def set(self, value):
+        return self._set(**{name: value})
+    return get, set
+
+
+@functools.cache
+def _declared_defaults(cls: type) -> dict:
+    """The ``_defaults`` of every class in ``cls``'s MRO, base first,
+    so a subclass overrides a mixin."""
+    merged = {}
+    for c in reversed(cls.__mro__):
+        merged.update(c.__dict__.get("_defaults", {}))
+    return merged
+
+
 class Stage(Params):
-    """Common save/load for every stage: params plus the fitted state
-    named in ``_state``.
+    """Common params and save/load for every stage: params plus the
+    fitted state named in ``_state``.
+
+    A param is declared once, as a ``Param`` class attribute with its
+    ``typeConverter``, and its default goes in the declaring class's
+    ``_defaults`` dict. ``__init__`` applies the ``_defaults`` of every
+    class in the MRO, base first, so a subclass overrides a mixin; no
+    other code calls ``_setDefault``. Each subclass gets a
+    ``get<Name>`` (``getOrDefault``) and a ``set<Name>`` (``_set``,
+    which converts the value through the ``typeConverter``) for every
+    ``Param`` it can see, unless a class in its MRO already defines
+    that name: a setter that validates its value, takes varargs or sets
+    two params is written by hand and stays.
 
     ``save`` writes each ``_state`` attribute by type: a ``DataFrame``
     to parquet under ``<path>/<name>``, ``bytes`` to the file
@@ -345,6 +299,25 @@ class Stage(Params):
 
     _state: tuple[str, ...] = ()
 
+    # -- params -------------------------------------------------------------
+
+    def __init_subclass__(cls, **kwargs):
+        super().__init_subclass__(**kwargs)
+        for name in dir(cls):
+            if not isinstance(getattr(cls, name, None), Param):
+                continue
+            suffix = name[0].upper() + name[1:]
+            for fn in _accessors(name):
+                attr = fn.__name__ + suffix
+                if not any(attr in c.__dict__ for c in cls.__mro__):
+                    fn.__name__ = attr
+                    fn.__qualname__ = f"{cls.__qualname__}.{attr}"
+                    setattr(cls, attr, fn)
+
+    def __init__(self):
+        super().__init__()
+        self._setDefault(**_declared_defaults(type(self)))
+
     # -- persistence --------------------------------------------------------
 
     def _params_to_json(self) -> dict:
@@ -355,6 +328,7 @@ class Stage(Params):
         return payload
 
     def save(self, path: str) -> None:
+        self._check_not_reading(path)
         os.makedirs(path, exist_ok=True)
         state = {}
         for name in self._state:
@@ -377,6 +351,24 @@ class Stage(Params):
         with open(os.path.join(path, "metadata"), "w") as f:
             json.dump(meta, f, default=_json_default)
         self._save_model_data(path)
+
+    def _check_not_reading(self, path: str) -> None:
+        """Raise before anything is written when a ``DataFrame`` state
+        reads files under the ``<path>/<name>`` its save would overwrite
+        (a stage loaded from ``path``): the overwrite would delete them
+        mid-write. A fitted frame reads no files."""
+        for name in self._state:
+            value = getattr(self, name)
+            if not isinstance(value, DataFrame):
+                continue
+            target = os.path.realpath(os.path.join(path, name.lstrip("_")))
+            for uri in value.inputFiles():
+                src = os.path.realpath(urlparse(uri).path)
+                if os.path.commonpath([src, target]) == target:
+                    raise ValueError(
+                        f"cannot save {type(self).__name__} to {path}: its "
+                        f"state {name} reads {target}, which the save "
+                        "would overwrite")
 
     def _save_model_data(self, path: str) -> None:
         """Hook for state a ``_state`` type cannot hold (sub-stages, a

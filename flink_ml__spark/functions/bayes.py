@@ -51,20 +51,9 @@ class _NbParams(HasInputCol):
                       "additive (Laplace) smoothing",
                       TypeConverters.toFloat)
 
-    def __init__(self):
-        super().__init__()
-        self._setDefault(inputCol="text", labelCol="lang",
-                         predictionCol="nb_pred", scoreCol="nb_score",
-                         numFeatures=4096, smoothing=1.0)
-
-    def setLabelCol(self, v):
-        return self._set(labelCol=v)
-
-    def setPredictionCol(self, v):
-        return self._set(predictionCol=v)
-
-    def setScoreCol(self, v):
-        return self._set(scoreCol=v)
+    _defaults = dict(inputCol="text", labelCol="lang",
+                     predictionCol="nb_pred", scoreCol="nb_score",
+                     numFeatures=4096, smoothing=1.0)
 
     def setNumFeatures(self, v):
         v = int(v)
@@ -88,16 +77,16 @@ class NaiveBayesTextModel(Model, _NbParams):
     token-free text scores on priors alone.
     """
 
-    _state = ("_labels", "_priors", "_defaults", "_loglik")
+    _state = ("_labels", "_priors", "_unseen", "_loglik")
 
     def __init__(self, labels: list[str] | None = None,
                  priors: list[int] | None = None,
-                 defaults: list[int] | None = None,
+                 unseen: list[int] | None = None,
                  loglik: list[tuple[str, int, int]] | None = None):
         super().__init__()
         self._labels = labels
         self._priors = priors      # int64 round(ln(D_c/D)·1e6) per label
-        self._defaults = defaults  # unseen-bucket log-lik per label
+        self._unseen = unseen      # unseen-bucket log-lik per label
         self._loglik = loglik      # [(label, bucket, int64)]
 
     @property
@@ -110,7 +99,7 @@ class NaiveBayesTextModel(Model, _NbParams):
         v = self.getOrDefault(self.numFeatures)
         mat = np.empty((len(self._labels), v), dtype=np.int64)
         for ci, lbl in enumerate(self._labels):
-            mat[ci, :] = self._defaults[ci]
+            mat[ci, :] = self._unseen[ci]
         for lbl, b, ll in self._loglik:
             mat[self._labels.index(lbl), b] = ll
         return mat
@@ -200,14 +189,14 @@ class NaiveBayesTextClassifier(Estimator, _NbParams):
             tok_totals[r["__l"]] += r["__n"]
         priors = [round(math.log(drows[lbl] / total_docs) * SCALE)
                   for lbl in labels]
-        defaults = [round(math.log(a / (tok_totals[lbl] + a * v))
-                          * SCALE) for lbl in labels]
+        unseen = [round(math.log(a / (tok_totals[lbl] + a * v))
+                        * SCALE) for lbl in labels]
         loglik = [
             (r["__l"], int(r["__b"]), round(
                 math.log((r["__n"] + a)
                          / (tok_totals[r["__l"]] + a * v)) * SCALE))
             for r in cells]
-        model = NaiveBayesTextModel(labels, priors, defaults, loglik)
+        model = NaiveBayesTextModel(labels, priors, unseen, loglik)
         model._set(inputCol=c, labelCol=lc,
                    predictionCol=self.getOrDefault(self.predictionCol),
                    scoreCol=self.getOrDefault(self.scoreCol),

@@ -111,15 +111,7 @@ class RepetitionScorer(AlgoOperator, HasInputCol):
                     "line separator regex for the duplicate-line signals",
                     TypeConverters.toString)
 
-    def __init__(self):
-        super().__init__()
-        self._setDefault(inputCol="text", lineSep="\n")
-
-    def getLineSep(self):
-        return self.getOrDefault(self.lineSep)
-
-    def setLineSep(self, v):
-        return self._set(lineSep=v)
+    _defaults = dict(inputCol="text", lineSep="\n")
 
     def transform(self, df: DataFrame) -> DataFrame:
         import re
@@ -198,34 +190,8 @@ class DeterministicSplitter(AlgoOperator, HasIdColMixin):
     outputCol = Param(Params._dummy(), "outputCol",
                       "split label column", TypeConverters.toString)
 
-    def __init__(self):
-        super().__init__()
-        self._setDefault(trainFrac=0.8, valFrac=0.1, salt="split",
-                         outputCol="split", idCol="doc_id")
-
-    def getTrainFrac(self):
-        return self.getOrDefault(self.trainFrac)
-
-    def setTrainFrac(self, v):
-        return self._set(trainFrac=float(v))
-
-    def getValFrac(self):
-        return self.getOrDefault(self.valFrac)
-
-    def setValFrac(self, v):
-        return self._set(valFrac=float(v))
-
-    def getSalt(self):
-        return self.getOrDefault(self.salt)
-
-    def setSalt(self, v):
-        return self._set(salt=v)
-
-    def getOutputCol(self):
-        return self.getOrDefault(self.outputCol)
-
-    def setOutputCol(self, v):
-        return self._set(outputCol=v)
+    _defaults = dict(trainFrac=0.8, valFrac=0.1, salt="split",
+                     outputCol="split", idCol="doc_id")
 
     def transform(self, df: DataFrame) -> DataFrame:
         if self.getTrainFrac() + self.getValFrac() > 1.0:
@@ -270,15 +236,7 @@ class SplitLeakageAuditor(AlgoOperator, HasIdColMixin):
                      "split label column in the labeled frame",
                      TypeConverters.toString)
 
-    def __init__(self):
-        super().__init__()
-        self._setDefault(idCol="doc_id", splitCol="split")
-
-    def getSplitCol(self):
-        return self.getOrDefault(self.splitCol)
-
-    def setSplitCol(self, v):
-        return self._set(splitCol=v)
+    _defaults = dict(idCol="doc_id", splitCol="split")
 
     def audit(self, pairs: DataFrame, labeled: DataFrame,
               id_a: str = "id_keep", id_b: str = "id_dup") -> DataFrame:
@@ -320,22 +278,8 @@ class ContaminationChecker(AlgoOperator, HasInputCol, HasIdColMixin):
                       "contaminated_frac at/above which "
                       "is_contaminated is true", TypeConverters.toFloat)
 
-    def __init__(self):
-        super().__init__()
-        self._setDefault(inputCol="text", shingleSize=8, threshold=0.2,
-                         idCol="doc_id")
-
-    def getShingleSize(self):
-        return self.getOrDefault(self.shingleSize)
-
-    def setShingleSize(self, v):
-        return self._set(shingleSize=v)
-
-    def getThreshold(self):
-        return self.getOrDefault(self.threshold)
-
-    def setThreshold(self, v):
-        return self._set(threshold=float(v))
+    _defaults = dict(inputCol="text", shingleSize=8, threshold=0.2,
+                     idCol="doc_id")
 
     def transform_against(self, df: DataFrame,
                           benchmark: DataFrame) -> DataFrame:
@@ -391,15 +335,7 @@ class TfIdfKeywords(AlgoOperator, HasInputCol, HasIdColMixin):
     k = Param(Params._dummy(), "k", "keywords per document",
               TypeConverters.toInt)
 
-    def __init__(self):
-        super().__init__()
-        self._setDefault(inputCol="text", k=5, idCol="doc_id")
-
-    def getK(self):
-        return self.getOrDefault(self.k)
-
-    def setK(self, v):
-        return self._set(k=v)
+    _defaults = dict(inputCol="text", k=5, idCol="doc_id")
 
     def transform(self, df: DataFrame) -> DataFrame:
         idc = self.getIdCol()
@@ -458,16 +394,8 @@ class TemperatureMixer(AlgoOperator):
                         "total training tokens to allocate (0 = use "
                         "the corpus total)", TypeConverters.toInt)
 
-    def __init__(self):
-        super().__init__()
-        self._setDefault(groupCol="lang", textCol="text",
-                         temperature=0.7, tokenBudget=0)
-
-    def setGroupCol(self, v):
-        return self._set(groupCol=v)
-
-    def setTextCol(self, v):
-        return self._set(textCol=v)
+    _defaults = dict(groupCol="lang", textCol="text",
+                     temperature=0.7, tokenBudget=0)
 
     def setTemperature(self, v):
         v = float(v)
@@ -563,16 +491,8 @@ class UniMaxAllocator(AlgoOperator):
                       "per-domain repeat cap (>= 1)",
                       TypeConverters.toFloat)
 
-    def __init__(self):
-        super().__init__()
-        self._setDefault(groupCol="source", tokenCol="n_tokens",
-                         budget=0, maxEpochs=4.0)
-
-    def setGroupCol(self, v):
-        return self._set(groupCol=v)
-
-    def setTokenCol(self, v):
-        return self._set(tokenCol=v)
+    _defaults = dict(groupCol="source", tokenCol="n_tokens",
+                     budget=0, maxEpochs=4.0)
 
     def setBudget(self, v):
         v = int(v)
@@ -681,22 +601,8 @@ class LeakageSafeSplitter(AlgoOperator, HasIdColMixin):
     outputCol = Param(Params._dummy(), "outputCol",
                       "split label column", TypeConverters.toString)
 
-    def __init__(self):
-        super().__init__()
-        self._setDefault(trainFrac=0.8, valFrac=0.1, salt="split",
-                         outputCol="split", idCol="doc_id")
-
-    def setTrainFrac(self, v):
-        return self._set(trainFrac=float(v))
-
-    def setValFrac(self, v):
-        return self._set(valFrac=float(v))
-
-    def setSalt(self, v):
-        return self._set(salt=v)
-
-    def setOutputCol(self, v):
-        return self._set(outputCol=v)
+    _defaults = dict(trainFrac=0.8, valFrac=0.1, salt="split",
+                     outputCol="split", idCol="doc_id")
 
     def split(self, df: DataFrame, pairs: DataFrame,
               id_a: str = "id_keep", id_b: str = "id_dup") -> DataFrame:
@@ -748,9 +654,7 @@ class DuplicateClusterer(AlgoOperator, HasIdColMixin, HasMaxIter):
     mid-job matters.
     """
 
-    def __init__(self):
-        super().__init__()
-        self._setDefault(idCol="doc_id", maxIter=20)
+    _defaults = dict(idCol="doc_id", maxIter=20)
 
     def cluster(self, pairs: DataFrame, nodes: DataFrame | None = None,
                 id_a: str = "id_keep", id_b: str = "id_dup") -> DataFrame:
@@ -872,28 +776,8 @@ class SequencePacker(AlgoOperator, HasIdColMixin):
                      "precomputed token-count column",
                      TypeConverters.toString)
 
-    def __init__(self):
-        super().__init__()
-        self._setDefault(windowSize=2048, numShards=16,
-                         tokenCol="n_tokens", idCol="doc_id")
-
-    def getWindowSize(self):
-        return self.getOrDefault(self.windowSize)
-
-    def setWindowSize(self, v):
-        return self._set(windowSize=v)
-
-    def getNumShards(self):
-        return self.getOrDefault(self.numShards)
-
-    def setNumShards(self, v):
-        return self._set(numShards=v)
-
-    def getTokenCol(self):
-        return self.getOrDefault(self.tokenCol)
-
-    def setTokenCol(self, v):
-        return self._set(tokenCol=v)
+    _defaults = dict(windowSize=2048, numShards=16,
+                     tokenCol="n_tokens", idCol="doc_id")
 
     def transform(self, df: DataFrame) -> DataFrame:
         idc = self.getIdCol()
@@ -942,22 +826,8 @@ class DomainBalancer(AlgoOperator, HasIdColMixin):
                     "balance to the smallest group",
                     TypeConverters.toString)
 
-    def __init__(self):
-        super().__init__()
-        self._setDefault(groupCol="lang", salt="balance", idCol="doc_id",
-                         targets="")
-
-    def getGroupCol(self):
-        return self.getOrDefault(self.groupCol)
-
-    def setGroupCol(self, v):
-        return self._set(groupCol=v)
-
-    def getSalt(self):
-        return self.getOrDefault(self.salt)
-
-    def setSalt(self, v):
-        return self._set(salt=v)
+    _defaults = dict(groupCol="lang", salt="balance", idCol="doc_id",
+                     targets="")
 
     def getTargets(self) -> dict:
         import json
@@ -1082,16 +952,8 @@ class DocumentChunker(AlgoOperator, HasInputCol, HasIdColMixin):
                           "tokens shared with the previous chunk",
                           TypeConverters.toInt)
 
-    def __init__(self):
-        super().__init__()
-        self._setDefault(inputCol="text", idCol="doc_id",
-                         chunkTokens=64, overlapTokens=16)
-
-    def setChunkTokens(self, v):
-        return self._set(chunkTokens=v)
-
-    def setOverlapTokens(self, v):
-        return self._set(overlapTokens=v)
+    _defaults = dict(inputCol="text", idCol="doc_id",
+                     chunkTokens=64, overlapTokens=16)
 
     def transform(self, df: DataFrame) -> DataFrame:
         ct = self.getOrDefault(self.chunkTokens)
@@ -1149,16 +1011,8 @@ class RepresentativeSelector(AlgoOperator, HasIdColMixin):
                        "duplicate-cluster id column",
                        TypeConverters.toString)
 
-    def __init__(self):
-        super().__init__()
-        self._setDefault(idCol="doc_id", scoreCol="n_chars",
-                         clusterCol="cluster_id")
-
-    def setScoreCol(self, v):
-        return self._set(scoreCol=v)
-
-    def setClusterCol(self, v):
-        return self._set(clusterCol=v)
+    _defaults = dict(idCol="doc_id", scoreCol="n_chars",
+                     clusterCol="cluster_id")
 
     def transform(self, df: DataFrame) -> DataFrame:
         idc = self.getIdCol()
@@ -1191,9 +1045,10 @@ class DSIRModel(AlgoOperator, HasInputCol, HasIdColMixin):
 
     _state = ("_logratio", "_num_buckets")
 
+    _defaults = dict(inputCol="text", idCol="doc_id")
+
     def __init__(self, logratio=None, num_buckets: int | None = None):
         super().__init__()
-        self._setDefault(inputCol="text", idCol="doc_id")
         self._logratio = logratio        # list[float], len == num_buckets
         self._num_buckets = num_buckets
 
@@ -1255,16 +1110,8 @@ class DSIRSelector(AlgoOperator, HasInputCol, HasIdColMixin):
                       "additive smoothing per bucket",
                       TypeConverters.toFloat)
 
-    def __init__(self):
-        super().__init__()
-        self._setDefault(inputCol="text", idCol="doc_id", numBuckets=1024,
-                         smoothing=1.0)
-
-    def setNumBuckets(self, v):
-        return self._set(numBuckets=v)
-
-    def setSmoothing(self, v):
-        return self._set(smoothing=float(v))
+    _defaults = dict(inputCol="text", idCol="doc_id", numBuckets=1024,
+                     smoothing=1.0)
 
     def _bucket_counts(self, df: DataFrame) -> dict[int, int]:
         """O(numBuckets) bucket histogram of bigram features — one
@@ -1353,19 +1200,8 @@ class PerplexityBucketer(AlgoOperator, HasRelativeError):
                      "fraction of the corpus in the tail bucket",
                      TypeConverters.toFloat)
 
-    def __init__(self):
-        super().__init__()
-        self._setDefault(scoreCol="mean_logprob", headFrac=1 / 3,
-                         tailFrac=1 / 3)
-
-    def setScoreCol(self, v):
-        return self._set(scoreCol=v)
-
-    def setHeadFrac(self, v):
-        return self._set(headFrac=float(v))
-
-    def setTailFrac(self, v):
-        return self._set(tailFrac=float(v))
+    _defaults = dict(scoreCol="mean_logprob", headFrac=1 / 3,
+                     tailFrac=1 / 3)
 
     def transform(self, df: DataFrame) -> DataFrame:
         hf = self.getOrDefault(self.headFrac)
@@ -1416,9 +1252,7 @@ class ZipfProfiler(AlgoOperator, HasInputCol):
     maxRank = Param(Params._dummy(), "maxRank",
                     "top frequency ranks fitted", TypeConverters.toInt)
 
-    def __init__(self):
-        super().__init__()
-        self._setDefault(inputCol="text", maxRank=256)
+    _defaults = dict(inputCol="text", maxRank=256)
 
     def setMaxRank(self, v):
         v = int(v)
@@ -1478,15 +1312,10 @@ class CorpusProfiler(AlgoOperator):
                   "exact percentiles (matchable) vs approx_percentile",
                   TypeConverters.toBoolean)
 
-    def __init__(self):
-        super().__init__()
-        self._setDefault(groupCols=["lang"], valueCol="n_chars", exact=True)
+    _defaults = dict(groupCols=["lang"], valueCol="n_chars", exact=True)
 
     def setGroupCols(self, *v):
         return self._set(groupCols=list(v))
-
-    def setValueCol(self, v):
-        return self._set(valueCol=v)
 
     def setExact(self, v):
         return self._set(exact=bool(v))
@@ -1574,18 +1403,10 @@ class LineFilter(AlgoOperator, HasInputCol):
                       "case-insensitive phrases that disqualify a line",
                       TypeConverters.toListString)
 
-    def __init__(self):
-        super().__init__()
-        self._setDefault(inputCol="text", lineSep="\n", minWords=3,
-                         requireTerminalPunct=True,
-                         blocklist=["javascript", "cookie policy",
-                                    "terms of use", "privacy policy"])
-
-    def setLineSep(self, v):
-        return self._set(lineSep=v)
-
-    def setMinWords(self, v):
-        return self._set(minWords=v)
+    _defaults = dict(inputCol="text", lineSep="\n", minWords=3,
+                     requireTerminalPunct=True,
+                     blocklist=["javascript", "cookie policy",
+                                "terms of use", "privacy policy"])
 
     def setRequireTerminalPunct(self, v):
         return self._set(requireTerminalPunct=bool(v))
@@ -1644,10 +1465,11 @@ class UnigramLMModel(AlgoOperator, HasInputCol, HasIdColMixin):
 
     _state = ("_vocab", "_oov_logp")
 
+    _defaults = dict(inputCol="text", idCol="doc_id")
+
     def __init__(self, vocab: DataFrame | None = None,
                  oov_logp: float | None = None):
         super().__init__()
-        self._setDefault(inputCol="text", idCol="doc_id")
         self._vocab = vocab          # (token string, logp double)
         self._oov_logp = oov_logp
 
@@ -1712,12 +1534,7 @@ class UnigramLM(AlgoOperator, HasInputCol, HasIdColMixin):
                      "most-frequent tokens kept in the model",
                      TypeConverters.toInt)
 
-    def __init__(self):
-        super().__init__()
-        self._setDefault(inputCol="text", idCol="doc_id", maxVocab=65536)
-
-    def setMaxVocab(self, v):
-        return self._set(maxVocab=v)
+    _defaults = dict(inputCol="text", idCol="doc_id", maxVocab=65536)
 
     def _vocab_frame(self, df: DataFrame, total: int) -> DataFrame:
         """The capped vocab plan (pre-materialization). orderBy+limit
@@ -1789,11 +1606,12 @@ class BigramLMModel(AlgoOperator, HasInputCol, HasIdColMixin):
 
     _state = ("_unigrams", "_bigrams", "_total", "_lam")
 
+    _defaults = dict(inputCol="text", idCol="doc_id")
+
     def __init__(self, unigrams: DataFrame | None = None,
                  bigrams: DataFrame | None = None,
                  total: int | None = None, lam: float = 0.7):
         super().__init__()
-        self._setDefault(inputCol="text", idCol="doc_id")
         self._unigrams = unigrams    # (token string, cnt long)
         self._bigrams = bigrams      # (w1 string, w2 string, cnt long)
         self._total = total
@@ -1874,19 +1692,8 @@ class BigramLM(AlgoOperator, HasInputCol, HasIdColMixin):
     interpWeight = Param(Params._dummy(), "interpWeight",
                          "λ on the bigram ML term", TypeConverters.toFloat)
 
-    def __init__(self):
-        super().__init__()
-        self._setDefault(inputCol="text", idCol="doc_id", maxVocab=65536,
-                         maxBigrams=1 << 18, interpWeight=0.7)
-
-    def setMaxVocab(self, v):
-        return self._set(maxVocab=v)
-
-    def setMaxBigrams(self, v):
-        return self._set(maxBigrams=v)
-
-    def setInterpWeight(self, v):
-        return self._set(interpWeight=float(v))
+    _defaults = dict(inputCol="text", idCol="doc_id", maxVocab=65536,
+                     maxBigrams=1 << 18, interpWeight=0.7)
 
     def _toks(self) -> Column:
         return F.filter(F.split(F.lower(F.col(self.getInputCol())),
@@ -1964,28 +1771,8 @@ class FrequentNgrams(AlgoOperator, HasInputCol, HasIdColMixin):
                        "drop n-grams seen in fewer documents",
                        TypeConverters.toInt)
 
-    def __init__(self):
-        super().__init__()
-        self._setDefault(inputCol="text", idCol="doc_id", n=3, topK=50,
-                         minDocFreq=2)
-
-    def getN(self):
-        return self.getOrDefault(self.n)
-
-    def setN(self, v):
-        return self._set(n=int(v))
-
-    def getTopK(self):
-        return self.getOrDefault(self.topK)
-
-    def setTopK(self, v):
-        return self._set(topK=int(v))
-
-    def getMinDocFreq(self):
-        return self.getOrDefault(self.minDocFreq)
-
-    def setMinDocFreq(self, v):
-        return self._set(minDocFreq=int(v))
+    _defaults = dict(inputCol="text", idCol="doc_id", n=3, topK=50,
+                     minDocFreq=2)
 
     def transform(self, df: DataFrame) -> DataFrame:
         import re
@@ -2068,25 +1855,14 @@ class StratifiedSampler(AlgoOperator, HasIdColMixin):
                      "stratum instead of a random draw ('' disables)",
                      TypeConverters.toString)
 
-    def __init__(self):
-        super().__init__()
-        self._setDefault(idCol="doc_id", groupCol="lang", k=100,
-                         salt="sample", scoreCol="")
-
-    def setGroupCol(self, v):
-        return self._set(groupCol=v)
+    _defaults = dict(idCol="doc_id", groupCol="lang", k=100,
+                     salt="sample", scoreCol="")
 
     def setK(self, v):
         v = int(v)
         if v < 1:
             raise ValueError(f"k must be >= 1, got {v}")
         return self._set(k=v)
-
-    def setSalt(self, v):
-        return self._set(salt=v)
-
-    def setScoreCol(self, v):
-        return self._set(scoreCol=v)
 
     def transform(self, df: DataFrame) -> DataFrame:
         from pyspark.sql import Window
@@ -2136,28 +1912,8 @@ class EpochShuffler(AlgoOperator, HasIdColMixin):
     salt = Param(Params._dummy(), "salt", "hash salt",
                  TypeConverters.toString)
 
-    def __init__(self):
-        super().__init__()
-        self._setDefault(idCol="doc_id", numShards=8, epoch=0,
-                         salt="epoch")
-
-    def getNumShards(self):
-        return self.getOrDefault(self.numShards)
-
-    def setNumShards(self, v):
-        return self._set(numShards=int(v))
-
-    def getEpoch(self):
-        return self.getOrDefault(self.epoch)
-
-    def setEpoch(self, v):
-        return self._set(epoch=int(v))
-
-    def getSalt(self):
-        return self.getOrDefault(self.salt)
-
-    def setSalt(self, v):
-        return self._set(salt=v)
+    _defaults = dict(idCol="doc_id", numShards=8, epoch=0,
+                     salt="epoch")
 
     def transform(self, df: DataFrame) -> DataFrame:
         tag = f"{self.getSalt()}{self.getEpoch()}"
@@ -2200,21 +1956,7 @@ class DomainDivergence(AlgoOperator, HasInputCol):
                       "global top-V tokens the distributions run over",
                       TypeConverters.toInt)
 
-    def __init__(self):
-        super().__init__()
-        self._setDefault(inputCol="text", groupCol="lang", vocabSize=300)
-
-    def getGroupCol(self):
-        return self.getOrDefault(self.groupCol)
-
-    def setGroupCol(self, v):
-        return self._set(groupCol=v)
-
-    def getVocabSize(self):
-        return self.getOrDefault(self.vocabSize)
-
-    def setVocabSize(self, v):
-        return self._set(vocabSize=int(v))
+    _defaults = dict(inputCol="text", groupCol="lang", vocabSize=300)
 
     def transform(self, df: DataFrame) -> DataFrame:
         grp = self.getGroupCol()
@@ -2288,19 +2030,8 @@ class LineDeduplicator(AlgoOperator, HasInputCol, HasIdColMixin):
                       "keep the corpus-wide first occurrence instead "
                       "of removing every copy", TypeConverters.toBoolean)
 
-    def __init__(self):
-        super().__init__()
-        self._setDefault(inputCol="text", idCol="doc_id", dupDocs=2,
-                         keepFirst=False)
-
-    def getDupDocs(self):
-        return self.getOrDefault(self.dupDocs)
-
-    def setDupDocs(self, v):
-        return self._set(dupDocs=int(v))
-
-    def getKeepFirst(self):
-        return self.getOrDefault(self.keepFirst)
+    _defaults = dict(inputCol="text", idCol="doc_id", dupDocs=2,
+                     keepFirst=False)
 
     def setKeepFirst(self, v):
         return self._set(keepFirst=bool(v))
@@ -2380,28 +2111,8 @@ class TokenBudgetSampler(AlgoOperator, HasIdColMixin):
     budgets = Param(Params._dummy(), "budgets",
                     "JSON {group: token budget}", TypeConverters.toString)
 
-    def __init__(self):
-        super().__init__()
-        self._setDefault(groupCol="lang", tokenCol="n_tokens",
-                         salt="budget", idCol="doc_id", budgets="")
-
-    def getGroupCol(self):
-        return self.getOrDefault(self.groupCol)
-
-    def setGroupCol(self, v):
-        return self._set(groupCol=v)
-
-    def getTokenCol(self):
-        return self.getOrDefault(self.tokenCol)
-
-    def setTokenCol(self, v):
-        return self._set(tokenCol=v)
-
-    def getSalt(self):
-        return self.getOrDefault(self.salt)
-
-    def setSalt(self, v):
-        return self._set(salt=v)
+    _defaults = dict(groupCol="lang", tokenCol="n_tokens",
+                     salt="budget", idCol="doc_id", budgets="")
 
     def getBudgets(self) -> dict:
         import json
@@ -2479,9 +2190,10 @@ class QualityClassifierModel(AlgoOperator, HasInputCol):
 
     _state = ("_num_features",)
 
+    _defaults = dict(inputCol="text")
+
     def __init__(self, lr_model=None, num_features: int = 1 << 18):
         super().__init__()
-        self._setDefault(inputCol="text")
         self._lr = lr_model
         self._num_features = num_features
 
@@ -2559,22 +2271,8 @@ class QualityClassifier(Estimator, HasInputCol, HasMaxIter):
     regParam = Param(Params._dummy(), "regParam", "L2 regularization",
                      TypeConverters.toFloat)
 
-    def __init__(self):
-        super().__init__()
-        self._setDefault(inputCol="text", numFeatures=1 << 18,
-                         maxIter=50, regParam=0.01)
-
-    def getNumFeatures(self):
-        return self.getOrDefault(self.numFeatures)
-
-    def setNumFeatures(self, v):
-        return self._set(numFeatures=int(v))
-
-    def getRegParam(self):
-        return self.getOrDefault(self.regParam)
-
-    def setRegParam(self, v):
-        return self._set(regParam=float(v))
+    _defaults = dict(inputCol="text", numFeatures=1 << 18,
+                     maxIter=50, regParam=0.01)
 
     def fit(self, positives: DataFrame,
             negatives: DataFrame) -> QualityClassifierModel:
@@ -2654,28 +2352,8 @@ class WeightedSampler(AlgoOperator, HasIdColMixin):
 
     U_DENOM = float(1 << 60)
 
-    def __init__(self):
-        super().__init__()
-        self._setDefault(weightCol="n_chars", n=100, salt="wsample",
-                         idCol="doc_id")
-
-    def getWeightCol(self):
-        return self.getOrDefault(self.weightCol)
-
-    def setWeightCol(self, v):
-        return self._set(weightCol=v)
-
-    def getN(self):
-        return self.getOrDefault(self.n)
-
-    def setN(self, v):
-        return self._set(n=int(v))
-
-    def getSalt(self):
-        return self.getOrDefault(self.salt)
-
-    def setSalt(self, v):
-        return self._set(salt=v)
+    _defaults = dict(weightCol="n_chars", n=100, salt="wsample",
+                     idCol="doc_id")
 
     def transform(self, df: DataFrame) -> DataFrame:
         idc = self.getIdCol()
@@ -2722,9 +2400,7 @@ class CompressionScorer(AlgoOperator, HasInputCol):
     level = Param(Params._dummy(), "level",
                   "zlib compression level 1-9", TypeConverters.toInt)
 
-    def __init__(self):
-        super().__init__()
-        self._setDefault(inputCol="text", level=6)
+    _defaults = dict(inputCol="text", level=6)
 
     def setLevel(self, v):
         v = int(v)
@@ -2801,18 +2477,7 @@ class NegativeSampler(AlgoOperator, HasIdColMixin):
     _C = 1013904223
     _M = 2147483647
 
-    def __init__(self):
-        super().__init__()
-        self._setDefault(k=4, oversample=4, salt=0, idCol="doc_id")
-
-    def setK(self, v):
-        return self._set(k=int(v))
-
-    def setOversample(self, v):
-        return self._set(oversample=int(v))
-
-    def setSalt(self, v):
-        return self._set(salt=int(v))
+    _defaults = dict(k=4, oversample=4, salt=0, idCol="doc_id")
 
     @staticmethod
     def _dense_index(df: DataFrame, idc: str) -> DataFrame:
@@ -2947,10 +2612,8 @@ class ContentDefinedChunker(AlgoOperator, HasInputCol, HasIdColMixin):
     GEAR_MOD = 1 << 32
     GEAR_VAL_MOD = 1 << 31
 
-    def __init__(self):
-        super().__init__()
-        self._setDefault(inputCol="text", idCol="doc_id", maskBits=6,
-                         minChunk=1, maxChunk=0)
+    _defaults = dict(inputCol="text", idCol="doc_id", maskBits=6,
+                     minChunk=1, maxChunk=0)
 
     def setMaskBits(self, v):
         v = int(v)
@@ -3078,9 +2741,7 @@ class ChunkOverlapDetector(AlgoOperator, HasIdColMixin):
                   "drop chunks appearing in more than this many docs",
                   TypeConverters.toInt)
 
-    def __init__(self):
-        super().__init__()
-        self._setDefault(idCol="doc_id", minFraction=0.5, maxDf=1000)
+    _defaults = dict(idCol="doc_id", minFraction=0.5, maxDf=1000)
 
     def setMinFraction(self, v):
         v = float(v)
@@ -3154,25 +2815,14 @@ class TemporalSplitter(AlgoOperator):
     outputCol = Param(Params._dummy(), "outputCol", "split column",
                       TypeConverters.toString)
 
-    def __init__(self):
-        super().__init__()
-        self._setDefault(timeCol="ts", embargoSec=0.0,
-                         outputCol="split")
-
-    def setTimeCol(self, v):
-        return self._set(timeCol=v)
-
-    def setTrainEnd(self, v):
-        return self._set(trainEnd=str(v))
+    _defaults = dict(timeCol="ts", embargoSec=0.0,
+                     outputCol="split")
 
     def setEmbargoSec(self, v):
         v = float(v)
         if v < 0:
             raise ValueError(f"embargoSec must be >= 0, got {v}")
         return self._set(embargoSec=v)
-
-    def setOutputCol(self, v):
-        return self._set(outputCol=v)
 
     def transform(self, df: DataFrame) -> DataFrame:
         if not self.isDefined(self.trainEnd):
@@ -3223,13 +2873,8 @@ class HeapsLawProfiler(AlgoOperator, HasInputCol):
                       "ID-range buckets (fit points)",
                       TypeConverters.toInt)
 
-    def __init__(self):
-        super().__init__()
-        self._setDefault(inputCol="text", orderCol="doc_id",
-                         numPoints=16)
-
-    def setOrderCol(self, v):
-        return self._set(orderCol=v)
+    _defaults = dict(inputCol="text", orderCol="doc_id",
+                     numPoints=16)
 
     def setNumPoints(self, v):
         v = int(v)
@@ -3434,9 +3079,7 @@ class KneserNeyBigramLM(BigramLM):
     discount = Param(Params._dummy(), "discount",
                      "absolute discount D", TypeConverters.toFloat)
 
-    def __init__(self):
-        super().__init__()
-        self._setDefault(discount=0.75)
+    _defaults = dict(discount=0.75)
 
     def setDiscount(self, v):
         v = float(v)
@@ -3473,12 +3116,7 @@ class EffectiveSampleSize(AlgoOperator):
     weightCol = Param(Params._dummy(), "weightCol",
                       "positive weight column", TypeConverters.toString)
 
-    def __init__(self):
-        super().__init__()
-        self._setDefault(weightCol="weight")
-
-    def setWeightCol(self, v):
-        return self._set(weightCol=v)
+    _defaults = dict(weightCol="weight")
 
     def evaluate(self, df: DataFrame) -> DataFrame:
         w = F.col(self.getOrDefault(self.weightCol)).cast("double")
@@ -3516,9 +3154,7 @@ class Chao1VocabularyEstimator(AlgoOperator, HasInputCol):
     sized), then a 1-row fold over the count-of-counts.
     """
 
-    def __init__(self):
-        super().__init__()
-        self._setDefault(inputCol="text")
+    _defaults = dict(inputCol="text")
 
     def evaluate(self, df: DataFrame) -> DataFrame:
         toks = F.filter(
@@ -3569,12 +3205,7 @@ class MixtureDiversityProfiler(AlgoOperator):
     groupCol = Param(Params._dummy(), "groupCol",
                      "mixture component column", TypeConverters.toString)
 
-    def __init__(self):
-        super().__init__()
-        self._setDefault(groupCol="source")
-
-    def setGroupCol(self, v):
-        return self._set(groupCol=v)
+    _defaults = dict(groupCol="source")
 
     def evaluate(self, df: DataFrame) -> DataFrame:
         g = F.col(self.getOrDefault(self.groupCol))
@@ -3602,7 +3233,7 @@ class MixtureDiversityProfiler(AlgoOperator):
         return self.evaluate(df)
 
 
-class PaddingWasteProfiler(AlgoOperator):
+class PaddingWasteProfiler(AlgoOperator, HasRelativeError):
     """Length-bucketed padding-waste audit for batch building: sort
     documents into ``numBuckets`` token-length bands (quantile
     boundaries) and report, per band, how much compute padding to the
@@ -3616,7 +3247,7 @@ class PaddingWasteProfiler(AlgoOperator):
     (0.0 for an all-empty band).
 
     100 TB shape: boundary fit is ONE array-percentile aggregation
-    (exact by default — the oracle pins it; ``setExactEdges(False)``
+    (exact by default — the oracle pins it; ``setRelativeError(>0)``
     swaps in the mergeable bounded-memory ``approx_percentile`` sketch,
     same contract as ``RankGaussTransformer``), then assignment is a
     map-side comparison chain folded into the scan and the profile is
@@ -3629,22 +3260,8 @@ class PaddingWasteProfiler(AlgoOperator):
                      "token count column", TypeConverters.toString)
     numBuckets = Param(Params._dummy(), "numBuckets",
                        "length bands", TypeConverters.toInt)
-    exactEdges = Param(Params._dummy(), "exactEdges",
-                       "exact percentile boundaries (True) or "
-                       "approx_percentile sketch (False)",
-                       TypeConverters.toBoolean)
-    relativeError = Param(Params._dummy(), "relativeError",
-                          "approx_percentile accuracy when "
-                          "exactEdges=False (1/accuracy)",
-                          TypeConverters.toFloat)
 
-    def __init__(self):
-        super().__init__()
-        self._setDefault(tokenCol="n_tokens", numBuckets=8,
-                         exactEdges=True, relativeError=1e-4)
-
-    def setTokenCol(self, v):
-        return self._set(tokenCol=v)
+    _defaults = dict(tokenCol="n_tokens", numBuckets=8)
 
     def setNumBuckets(self, v):
         v = int(v)
@@ -3652,43 +3269,14 @@ class PaddingWasteProfiler(AlgoOperator):
             raise ValueError(f"numBuckets must be >= 1, got {v}")
         return self._set(numBuckets=v)
 
-    def setExactEdges(self, v):
-        return self._set(exactEdges=bool(v))
-
-    def setRelativeError(self, v):
-        v = float(v)
-        if not 0.0 < v < 1.0:
-            raise ValueError(f"relativeError must be in (0, 1), got {v}")
-        return self._set(relativeError=v)
-
     def transform(self, df: DataFrame) -> DataFrame:
+        from flink_ml__spark.functions.quantiles import quantile_edges
+
         k = self.getOrDefault(self.numBuckets)
         nt = F.col(self.getOrDefault(self.tokenCol)).cast("double")
         base = df.filter(nt.isNotNull()).select(nt.alias("__nt"))
         if k > 1:
-            if self.getOrDefault(self.exactEdges):
-                # exact percentiles, bit-identical to the percentile
-                # aggregate (see functions/quantiles.py)
-                import math
-
-                from flink_ml__spark.functions.quantiles import (
-                    exact_percentiles,
-                )
-
-                raw = exact_percentiles(base, F.col("__nt"),
-                                        [i / k for i in range(1, k)])
-                bs = [math.floor(e * 1e6 + 0.5) / 1e6
-                      for e in (raw or [])]
-            else:
-                probs = F.array(*[F.lit(i / k) for i in range(1, k)])
-                acc = int(round(
-                    1.0 / self.getOrDefault(self.relativeError)))
-                pct = F.approx_percentile(F.col("__nt"), probs,
-                                          F.lit(acc))
-                row = base.agg(F.transform(
-                    pct, lambda e: F.floor(e * 1e6 + 0.5) / 1e6)
-                    .alias("bs")).collect()[0]
-                bs = list(row["bs"] or [])
+            bs = quantile_edges(base, "__nt", k, self.getRelativeError())
         else:
             bs = []
             if base.first() is None:
@@ -3743,10 +3331,8 @@ class BoilerplateFractionScorer(AlgoOperator, _MaterializeMixin,
                   "shingle counts as corpus-common",
                   TypeConverters.toInt)
 
-    def __init__(self):
-        super().__init__()
-        self._setDefault(inputCol="text", idCol="doc_id",
-                         shingleSize=5, minDf=2)
+    _defaults = dict(inputCol="text", idCol="doc_id",
+                     shingleSize=5, minDf=2)
 
     def setShingleSize(self, v):
         v = int(v)
@@ -3893,10 +3479,8 @@ class GreedyCoverageSelector(AlgoOperator, HasInputCol, HasIdColMixin):
     numDocs = Param(Params._dummy(), "numDocs",
                     "documents to select", TypeConverters.toInt)
 
-    def __init__(self):
-        super().__init__()
-        self._setDefault(inputCol="text", idCol="doc_id",
-                         shingleSize=3, numDocs=8)
+    _defaults = dict(inputCol="text", idCol="doc_id",
+                     shingleSize=3, numDocs=8)
 
     def setShingleSize(self, v):
         v = int(v)

@@ -95,15 +95,7 @@ class HasIdColMixin(Params):
                   "unique ascending document id column",
                   typeConverter=TypeConverters.toString)
 
-    def __init__(self):
-        super().__init__()
-        self._setDefault(idCol="doc_id")
-
-    def getIdCol(self) -> str:
-        return self.getOrDefault(self.idCol)
-
-    def setIdCol(self, value: str):
-        return self._set(idCol=value)
+    _defaults = dict(idCol="doc_id")
 
 
 def _keep_non_dominated(df: DataFrame, dup_ids: DataFrame, id_col: str) -> DataFrame:
@@ -260,9 +252,7 @@ class ExactDeduplicator(AlgoOperator, HasInputCol, HasIdColMixin):
     smallest-id document per fingerprint (hash-groupBy + semi join —
     one shuffle on the md5 key)."""
 
-    def __init__(self):
-        super().__init__()
-        self._setDefault(inputCol="text")
+    _defaults = dict(inputCol="text")
 
     def _fp(self) -> Column:
         return F.md5(Fingerprinter.normalized(F.col(self.getInputCol())))
@@ -314,34 +304,8 @@ class MinHashDeduplicator(AlgoOperator, _MaterializeMixin,
                       "Jaccard threshold for verified duplicates",
                       TypeConverters.toFloat)
 
-    def __init__(self):
-        super().__init__()
-        self._setDefault(inputCol="text", shingleSize=3, numHashes=12,
-                         bands=4, threshold=0.8)
-
-    def getShingleSize(self):
-        return self.getOrDefault(self.shingleSize)
-
-    def setShingleSize(self, v):
-        return self._set(shingleSize=v)
-
-    def getNumHashes(self):
-        return self.getOrDefault(self.numHashes)
-
-    def setNumHashes(self, v):
-        return self._set(numHashes=v)
-
-    def getBands(self):
-        return self.getOrDefault(self.bands)
-
-    def setBands(self, v):
-        return self._set(bands=v)
-
-    def getThreshold(self):
-        return self.getOrDefault(self.threshold)
-
-    def setThreshold(self, v):
-        return self._set(threshold=float(v))
+    _defaults = dict(inputCol="text", shingleSize=3, numHashes=12,
+                     bands=4, threshold=0.8)
 
     def hash_coefficients(self) -> list[tuple[int, int]]:
         rng = random.Random(self.getSeed())
@@ -536,15 +500,7 @@ class SimHashDeduplicator(AlgoOperator, _MaterializeMixin,
     N_BITS = 60
     N_BANDS = 4
 
-    def __init__(self):
-        super().__init__()
-        self._setDefault(inputCol="text", hammingThreshold=3)
-
-    def getHammingThreshold(self):
-        return self.getOrDefault(self.hammingThreshold)
-
-    def setHammingThreshold(self, v):
-        return self._set(hammingThreshold=v)
+    _defaults = dict(inputCol="text", hammingThreshold=3)
 
     def simhash(self, text: Column) -> Column:
         """Per-row simhash expression — the semantic spec. The pipeline
@@ -714,11 +670,9 @@ class MinHashTopK(AlgoOperator, HasInputCol, HasIdColMixin, HasSeed):
                           "(0 = uncapped) — the LSH skew guard",
                           TypeConverters.toInt)
 
-    def __init__(self):
-        super().__init__()
-        self._setDefault(inputCol="text", shingleSize=3, numHashes=12,
-                         bands=4, k=5, minJaccard=0.0,
-                         maxBandBucket=0)
+    _defaults = dict(inputCol="text", shingleSize=3, numHashes=12,
+                     bands=4, k=5, minJaccard=0.0,
+                     maxBandBucket=0)
 
     def setMaxBandBucket(self, v):
         """Skew guard for high-recall bandings (rows-per-band 1-2):
@@ -734,29 +688,11 @@ class MinHashTopK(AlgoOperator, HasInputCol, HasIdColMixin, HasSeed):
             raise ValueError(f"maxBandBucket must be >= 0, got {v}")
         return self._set(maxBandBucket=v)
 
-    def setShingleSize(self, v):
-        return self._set(shingleSize=v)
-
-    def setNumHashes(self, v):
-        return self._set(numHashes=v)
-
-    def setBands(self, v):
-        return self._set(bands=v)
-
-    def getK(self):
-        return self.getOrDefault(self.k)
-
     def setK(self, v):
         v = int(v)
         if v < 1:
             raise ValueError(f"k must be >= 1, got {v}")
         return self._set(k=v)
-
-    def getMinJaccard(self):
-        return self.getOrDefault(self.minJaccard)
-
-    def setMinJaccard(self, v):
-        return self._set(minJaccard=float(v))
 
     def _dedup(self) -> MinHashDeduplicator:
         """Signature/banding twin — ONE parameterization shared with
@@ -864,21 +800,7 @@ class NgramJaccardDeduplicator(AlgoOperator, _MaterializeMixin,
     threshold = Param(Params._dummy(), "threshold", "Jaccard threshold",
                       TypeConverters.toFloat)
 
-    def __init__(self):
-        super().__init__()
-        self._setDefault(inputCol="text", shingleSize=3, threshold=0.8)
-
-    def getShingleSize(self):
-        return self.getOrDefault(self.shingleSize)
-
-    def setShingleSize(self, v):
-        return self._set(shingleSize=int(v))
-
-    def getThreshold(self):
-        return self.getOrDefault(self.threshold)
-
-    def setThreshold(self, v):
-        return self._set(threshold=float(v))
+    _defaults = dict(inputCol="text", shingleSize=3, threshold=0.8)
 
     def hashed_table(self, df: DataFrame) -> DataFrame:
         """(__id, __sh) sorted-shingle-hash base, materialized behind a
@@ -1125,15 +1047,7 @@ class SubstringDeduplicator(AlgoOperator, _MaterializeMixin, HasInputCol, HasIdC
 
     LOC_M = 1 << 21
 
-    def __init__(self):
-        super().__init__()
-        self._setDefault(inputCol="text", spanTokens=8)
-
-    def getSpanTokens(self):
-        return self.getOrDefault(self.spanTokens)
-
-    def setSpanTokens(self, v):
-        return self._set(spanTokens=v)
+    _defaults = dict(inputCol="text", spanTokens=8)
 
     def _toks(self) -> Column:
         return F.filter(
@@ -1286,28 +1200,8 @@ class EmbeddingCosineDeduplicator(AlgoOperator, _MaterializeMixin,
                    "independent hyperplane tables (buys recall)",
                    TypeConverters.toInt)
 
-    def __init__(self):
-        super().__init__()
-        self._setDefault(embeddingCol="embedding", threshold=0.95, nBits=8,
-                         nBands=4, idCol="vec_id")
-
-    def getEmbeddingCol(self):
-        return self.getOrDefault(self.embeddingCol)
-
-    def setEmbeddingCol(self, v):
-        return self._set(embeddingCol=v)
-
-    def getThreshold(self):
-        return self.getOrDefault(self.threshold)
-
-    def setThreshold(self, v):
-        return self._set(threshold=float(v))
-
-    def getNBands(self):
-        return self.getOrDefault(self.nBands)
-
-    def setNBands(self, v):
-        return self._set(nBands=v)
+    _defaults = dict(embeddingCol="embedding", threshold=0.95, nBits=8,
+                     nBands=4, idCol="vec_id")
 
     def hyperplanes(self, dims: int):
         """``nBands × nBits`` seeded hyperplanes; band b owns rows
@@ -1491,10 +1385,8 @@ class BloomCorpusDeduplicator(AlgoOperator, BloomBitset, HasInputCol,
 
     _state = ("_bits",)
 
-    def __init__(self):
-        super().__init__()
-        self._setDefault(inputCol="text", idCol="doc_id",
-                         numBits=1 << 23, numHashes=4)
+    _defaults = dict(inputCol="text", idCol="doc_id",
+                     numBits=1 << 23, numHashes=4)
 
     def _fp(self) -> Column:
         return F.md5(Fingerprinter.normalized(F.col(self.getInputCol())))

@@ -127,9 +127,7 @@ class DriftMonitor(AlgoOperator, HasRelativeError):
                        "quantile buckets per column",
                        TypeConverters.toInt)
 
-    def __init__(self):
-        super().__init__()
-        self._setDefault(inputCols=[], numBuckets=10)
+    _defaults = dict(inputCols=[], numBuckets=10)
 
     def setInputCols(self, *v):
         if len(v) == 1 and isinstance(v[0], (list, tuple)):
@@ -315,9 +313,7 @@ class CategoricalDriftMonitor(AlgoOperator):
     NULL_CAT = "__null__"
     OTHER_CAT = "__other__"
 
-    def __init__(self):
-        super().__init__()
-        self._setDefault(inputCols=[], maxCategories=100)
+    _defaults = dict(inputCols=[], maxCategories=100)
 
     def setInputCols(self, *v):
         if len(v) == 1 and isinstance(v[0], (list, tuple)):
@@ -475,12 +471,7 @@ class EmbeddingDriftMonitor(AlgoOperator):
                          "array<float/double> embedding column",
                          TypeConverters.toString)
 
-    def __init__(self):
-        super().__init__()
-        self._setDefault(embeddingCol="embedding")
-
-    def setEmbeddingCol(self, v):
-        return self._set(embeddingCol=v)
+    _defaults = dict(embeddingCol="embedding")
 
     def _moments(self, df: DataFrame, tag: str) -> DataFrame:
         arr = F.transform(F.col(self.getOrDefault(self.embeddingCol)),

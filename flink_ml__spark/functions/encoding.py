@@ -55,9 +55,10 @@ class StringIndexerModel(Model, _IndexerParams):
 
     _state = ("_mapping",)
 
+    _defaults = dict(outputCol="label_index", handleInvalid="keep")
+
     def __init__(self, mapping: DataFrame | None = None):
         super().__init__()
-        self._setDefault(outputCol="label_index", handleInvalid="keep")
         self._mapping = mapping  # columns: __label string, __index int
 
     def labels(self) -> list[str]:
@@ -98,9 +99,7 @@ class StringIndexer(Estimator, _IndexerParams):
     rule, same as every top-k model artifact in the engine.
     """
 
-    def __init__(self):
-        super().__init__()
-        self._setDefault(outputCol="label_index", handleInvalid="keep")
+    _defaults = dict(outputCol="label_index", handleInvalid="keep")
 
     def fit(self, df: DataFrame) -> StringIndexerModel:
         from pyspark.sql import Window
@@ -127,10 +126,11 @@ class TargetEncoderModel(Model, HasInputCol, HasOutputCol):
 
     _state = ("_encoding", "_prior")
 
+    _defaults = dict(outputCol="target_enc")
+
     def __init__(self, encoding: DataFrame | None = None,
                  prior: float | None = None):
         super().__init__()
-        self._setDefault(outputCol="target_enc")
         self._encoding = encoding  # columns: __cat string, __enc double
         self._prior = prior
 
@@ -174,12 +174,7 @@ class TargetEncoder(Estimator, HasInputCol, HasOutputCol):
                       "m-estimate pseudo-count (>= 0)",
                       TypeConverters.toFloat)
 
-    def __init__(self):
-        super().__init__()
-        self._setDefault(outputCol="target_enc", smoothing=20.0)
-
-    def setTargetCol(self, v):
-        return self._set(targetCol=v)
+    _defaults = dict(outputCol="target_enc", smoothing=20.0)
 
     def setSmoothing(self, v):
         v = float(v)
@@ -233,9 +228,7 @@ class FeatureHasher(AlgoOperator, HasOutputCol):
                    "appended-column name suffix",
                    TypeConverters.toString)
 
-    def __init__(self):
-        super().__init__()
-        self._setDefault(numFeatures=1 << 18, suffix="_hash")
+    _defaults = dict(numFeatures=1 << 18, suffix="_hash")
 
     def setInputCols(self, *v):
         cols = list(v[0]) if len(v) == 1 and not isinstance(v[0], str) \
@@ -247,9 +240,6 @@ class FeatureHasher(AlgoOperator, HasOutputCol):
         if v < 2:
             raise ValueError("numFeatures must be >= 2")
         return self._set(numFeatures=v)
-
-    def setSuffix(self, v):
-        return self._set(suffix=v)
 
     def transform(self, df: DataFrame) -> DataFrame:
         n = self.getOrDefault(self.numFeatures)
@@ -275,13 +265,11 @@ class RareCategoryCollapserModel(Model, HasInputCol, HasOutputCol):
 
     _state = ("_kept",)
 
+    _defaults = dict(outputCol="collapsed", otherLabel="__other__")
+
     def __init__(self, kept: DataFrame | None = None):
         super().__init__()
-        self._setDefault(outputCol="collapsed", otherLabel="__other__")
         self._kept = kept  # column: __label string
-
-    def setOtherLabel(self, v):
-        return self._set(otherLabel=v)
 
     def kept_labels(self) -> list[str]:
         return sorted(r["__label"] for r in self._kept.collect())
@@ -322,10 +310,8 @@ class RareCategoryCollapser(Estimator, HasInputCol, HasOutputCol):
                         "(overrides minCount when > 0)",
                         TypeConverters.toFloat)
 
-    def __init__(self):
-        super().__init__()
-        self._setDefault(outputCol="collapsed", minCount=2,
-                         minFraction=0.0)
+    _defaults = dict(outputCol="collapsed", minCount=2,
+                     minFraction=0.0)
 
     def setMinCount(self, v):
         v = int(v)
@@ -369,10 +355,11 @@ class CountEncoderModel(Model, HasInputCol, HasOutputCol):
 
     _state = ("_counts", "_total")
 
+    _defaults = dict(outputCol="cat_count", normalize=False)
+
     def __init__(self, counts: DataFrame | None = None,
                  total: int | None = None):
         super().__init__()
-        self._setDefault(outputCol="cat_count", normalize=False)
         self._counts = counts  # __cat string, __n bigint
         self._total = total
 
@@ -404,9 +391,7 @@ class CountEncoder(Estimator, HasInputCol, HasOutputCol):
     refits on differently-sized corpora.
     """
 
-    def __init__(self):
-        super().__init__()
-        self._setDefault(outputCol="cat_count")
+    _defaults = dict(outputCol="cat_count")
 
     def fit(self, df: DataFrame) -> CountEncoderModel:
         c = self.getInputCol()

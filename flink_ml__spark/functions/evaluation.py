@@ -47,19 +47,8 @@ class BinaryClassificationEvaluator(AlgoOperator):
                     "score buckets for the binned AUC",
                     TypeConverters.toInt)
 
-    def __init__(self):
-        super().__init__()
-        self._setDefault(labelCol="label", scoreCol="score",
-                         threshold=0.5, numBins=1024)
-
-    def setLabelCol(self, v):
-        return self._set(labelCol=v)
-
-    def setScoreCol(self, v):
-        return self._set(scoreCol=v)
-
-    def setThreshold(self, v):
-        return self._set(threshold=float(v))
+    _defaults = dict(labelCol="label", scoreCol="score",
+                     threshold=0.5, numBins=1024)
 
     def setNumBins(self, v):
         v = int(v)
@@ -158,18 +147,7 @@ class CalibrationEvaluator(AlgoOperator):
                     "fixed-width reliability bins",
                     TypeConverters.toInt)
 
-    def __init__(self):
-        super().__init__()
-        self._setDefault(labelCol="label", scoreCol="score", numBins=10)
-
-    def setLabelCol(self, v):
-        return self._set(labelCol=v)
-
-    def setScoreCol(self, v):
-        return self._set(scoreCol=v)
-
-    def setNumBins(self, v):
-        return self._set(numBins=v)
+    _defaults = dict(labelCol="label", scoreCol="score", numBins=10)
 
     def _base(self, df: DataFrame) -> DataFrame:
         lbl = F.col(self.getOrDefault(self.labelCol)).cast("int")
@@ -235,9 +213,7 @@ class LabelConsensus(AlgoOperator):
                       "labeling-function columns (0/1/NULL)",
                       TypeConverters.toListString)
 
-    def __init__(self):
-        super().__init__()
-        self._setDefault(inputCols=[])
+    _defaults = dict(inputCols=[])
 
     def setInputCols(self, *v):
         if len(v) == 1 and isinstance(v[0], (list, tuple)):
@@ -299,15 +275,7 @@ class ClassificationReport(AlgoOperator):
                           "predicted-label column",
                           TypeConverters.toString)
 
-    def __init__(self):
-        super().__init__()
-        self._setDefault(labelCol="label", predictionCol="prediction")
-
-    def setLabelCol(self, v):
-        return self._set(labelCol=v)
-
-    def setPredictionCol(self, v):
-        return self._set(predictionCol=v)
+    _defaults = dict(labelCol="label", predictionCol="prediction")
 
     def evaluate(self, df: DataFrame) -> DataFrame:
         lc = self.getOrDefault(self.labelCol)
@@ -368,15 +336,7 @@ class AgreementEvaluator(AlgoOperator):
                       "second rater's label column",
                       TypeConverters.toString)
 
-    def __init__(self):
-        super().__init__()
-        self._setDefault(raterACol="rater_a", raterBCol="rater_b")
-
-    def setRaterACol(self, v):
-        return self._set(raterACol=v)
-
-    def setRaterBCol(self, v):
-        return self._set(raterBCol=v)
+    _defaults = dict(raterACol="rater_a", raterBCol="rater_b")
 
     def evaluate(self, df: DataFrame) -> DataFrame:
         a = F.col(self.getOrDefault(self.raterACol)).cast("string")
@@ -437,15 +397,7 @@ class RegressionEvaluator(_AggStat):
     predictionCol = Param(Params._dummy(), "predictionCol",
                           "predicted numeric column", TypeConverters.toString)
 
-    def __init__(self):
-        super().__init__()
-        self._setDefault(labelCol="label", predictionCol="prediction")
-
-    def setLabelCol(self, v):
-        return self._set(labelCol=v)
-
-    def setPredictionCol(self, v):
-        return self._set(predictionCol=v)
+    _defaults = dict(labelCol="label", predictionCol="prediction")
 
     def _stats(self):
         """Every row enters (invalid ones add a NULL error); ``bias``
@@ -508,19 +460,11 @@ class ClusteringEvaluator(AlgoOperator):
 
     MAX_CLUSTERS = 64
 
-    def __init__(self):
-        super().__init__()
-        self._setDefault(predictionCol="cluster", outputCol="silhouette")
+    _defaults = dict(predictionCol="cluster", outputCol="silhouette")
 
     def setFeatureCols(self, *v):
         cols = list(v[0]) if len(v) == 1 and not isinstance(v[0], str) else list(v)
         return self._set(featureCols=cols)
-
-    def setPredictionCol(self, v):
-        return self._set(predictionCol=v)
-
-    def setOutputCol(self, v):
-        return self._set(outputCol=v)
 
     def _centroids(self, df: DataFrame):
         feats = self.getOrDefault(self.featureCols)
@@ -595,18 +539,13 @@ class IsotonicCalibratorModel(AlgoOperator):
 
     _state = ("_boundaries", "_values")
 
+    _defaults = dict(scoreCol="score", outputCol="calibrated")
+
     def __init__(self, boundaries: list[float] | None = None,
                  values: list[float] | None = None):
         super().__init__()
-        self._setDefault(scoreCol="score", outputCol="calibrated")
         self._boundaries = boundaries  # ascending step lower edges
         self._values = values          # non-decreasing step values
-
-    def setScoreCol(self, v):
-        return self._set(scoreCol=v)
-
-    def setOutputCol(self, v):
-        return self._set(outputCol=v)
 
     @property
     def steps(self) -> list[tuple[float, float]]:
@@ -652,19 +591,8 @@ class IsotonicCalibrator(AlgoOperator):
                     "score buckets for the binned fit",
                     TypeConverters.toInt)
 
-    def __init__(self):
-        super().__init__()
-        self._setDefault(labelCol="label", scoreCol="score",
-                         outputCol="calibrated", numBins=1024)
-
-    def setLabelCol(self, v):
-        return self._set(labelCol=v)
-
-    def setScoreCol(self, v):
-        return self._set(scoreCol=v)
-
-    def setOutputCol(self, v):
-        return self._set(outputCol=v)
+    _defaults = dict(labelCol="label", scoreCol="score",
+                     outputCol="calibrated", numBins=1024)
 
     def setNumBins(self, v):
         v = int(v)
@@ -721,16 +649,11 @@ class PlattCalibratorModel(AlgoOperator):
 
     _state = ("_a", "_b")
 
+    _defaults = dict(scoreCol="score", outputCol="calibrated")
+
     def __init__(self, a: float | None = None, b: float | None = None):
         super().__init__()
-        self._setDefault(scoreCol="score", outputCol="calibrated")
         self._a, self._b = a, b
-
-    def setScoreCol(self, v):
-        return self._set(scoreCol=v)
-
-    def setOutputCol(self, v):
-        return self._set(outputCol=v)
 
     @property
     def coefficients(self) -> tuple[float, float]:
@@ -771,29 +694,15 @@ class PlattCalibrator(AlgoOperator):
     maxIter = Param(Params._dummy(), "maxIter",
                     "Newton iterations", TypeConverters.toInt)
 
-    def __init__(self):
-        super().__init__()
-        self._setDefault(labelCol="label", scoreCol="score",
-                         outputCol="calibrated", numBins=1024,
-                         maxIter=50)
-
-    def setLabelCol(self, v):
-        return self._set(labelCol=v)
-
-    def setScoreCol(self, v):
-        return self._set(scoreCol=v)
-
-    def setOutputCol(self, v):
-        return self._set(outputCol=v)
+    _defaults = dict(labelCol="label", scoreCol="score",
+                     outputCol="calibrated", numBins=1024,
+                     maxIter=50)
 
     def setNumBins(self, v):
         v = int(v)
         if v < 2:
             raise ValueError(f"numBins must be >= 2, got {v}")
         return self._set(numBins=v)
-
-    def setMaxIter(self, v):
-        return self._set(maxIter=int(v))
 
     def fit(self, df: DataFrame) -> PlattCalibratorModel:
         import math
@@ -943,16 +852,8 @@ class SplitConformalRegressor(AlgoOperator):
                   "miscoverage level (interval = 1 - alpha)",
                   TypeConverters.toFloat)
 
-    def __init__(self):
-        super().__init__()
-        self._setDefault(predCol="prediction", labelCol="label",
-                         groupCols=[], alpha=0.1)
-
-    def setPredCol(self, v):
-        return self._set(predCol=v)
-
-    def setLabelCol(self, v):
-        return self._set(labelCol=v)
+    _defaults = dict(predCol="prediction", labelCol="label",
+                     groupCols=[], alpha=0.1)
 
     def setGroupCols(self, *cols):
         cols = list(cols[0]) if len(cols) == 1 and not isinstance(
@@ -1036,19 +937,8 @@ class UpliftEvaluator(AlgoOperator):
     numBins = Param(Params._dummy(), "numBins", "score buckets",
                     TypeConverters.toInt)
 
-    def __init__(self):
-        super().__init__()
-        self._setDefault(scoreCol="score", outcomeCol="outcome",
-                         variantCol="variant", numBins=10)
-
-    def setScoreCol(self, v):
-        return self._set(scoreCol=v)
-
-    def setOutcomeCol(self, v):
-        return self._set(outcomeCol=v)
-
-    def setVariantCol(self, v):
-        return self._set(variantCol=v)
+    _defaults = dict(scoreCol="score", outcomeCol="outcome",
+                     variantCol="variant", numBins=10)
 
     def setLabels(self, treated: str, control: str):
         if treated == control:
@@ -1079,13 +969,9 @@ class UpliftEvaluator(AlgoOperator):
         # per-edge percentile aggregates this replaces (each of which
         # buffered the full column separately — see
         # functions/quantiles.py)
-        import math
+        from flink_ml__spark.functions.quantiles import quantile_edges
 
-        from flink_ml__spark.functions.quantiles import exact_percentiles
-
-        raw = exact_percentiles(base, s, [i / k for i in range(1, k)])
-        edges = ([math.floor(e * 1e6 + 0.5) / 1e6 for e in raw]
-                 if raw is not None else [None] * (k - 1))
+        edges = quantile_edges(base, s, k) or [None] * (k - 1)
         above = sum((s > F.lit(e)).cast("int") for e in edges)
         is_t = v == t_lbl
         per = (base.withColumn("__b", F.lit(len(edges)) - above)

@@ -54,9 +54,7 @@ class TimeFeatureExtractor(AlgoOperator, HasInputCol, HasOutputCols):
     (null, null, null).
     """
 
-    def __init__(self):
-        super().__init__()
-        self._setDefault(outputCols=["year", "month", "day"])
+    _defaults = dict(outputCols=["year", "month", "day"])
 
     def transform(self, df: DataFrame) -> DataFrame:
         out = self.getOutputCols()
@@ -76,12 +74,6 @@ class _SingleColOutputParams(HasInputCol):
         Params._dummy(), "outputCol", "output column name",
         typeConverter=TypeConverters.toString)
 
-    def getOutputCol(self) -> str:
-        return self.getOrDefault(self.outputCol)
-
-    def setOutputCol(self, value: str):
-        return self._set(outputCol=value)
-
 
 class MeanImputerModel(Model, _SingleColOutputParams):
     """Replaces nulls with the fitted mean; emits ONLY ``outputCol``
@@ -89,9 +81,10 @@ class MeanImputerModel(Model, _SingleColOutputParams):
 
     _state = ("_mean_value",)
 
+    _defaults = dict(outputCol="imputed_value")
+
     def __init__(self, mean_value: float | None = None):
         super().__init__()
-        self._setDefault(outputCol="imputed_value")
         self._mean_value = mean_value
 
     @property
@@ -113,9 +106,7 @@ class MeanImputer(Estimator, _SingleColOutputParams):
     empty column is 0 (``MeanImputer.java:58``).
     """
 
-    def __init__(self):
-        super().__init__()
-        self._setDefault(outputCol="imputed_value")
+    _defaults = dict(outputCol="imputed_value")
 
     def fit(self, df: DataFrame) -> MeanImputerModel:
         row = df.agg(
@@ -138,9 +129,10 @@ class StandardScalerModel(Model, _SingleColOutputParams):
 
     _state = ("_mean", "_std")
 
+    _defaults = dict(outputCol="scaled_value", passthrough=False)
+
     def __init__(self, mean: float | None = None, std: float | None = None):
         super().__init__()
-        self._setDefault(outputCol="scaled_value", passthrough=False)
         self._mean, self._std = mean, std
 
     def transform(self, df: DataFrame) -> DataFrame:
@@ -157,9 +149,7 @@ class StandardScaler(Estimator, _SingleColOutputParams):
     """Fits mean/std for z-scaling (the behavior the reference stub
     intended); set ``passthrough`` on the model for bug-compat output."""
 
-    def __init__(self):
-        super().__init__()
-        self._setDefault(outputCol="scaled_value")
+    _defaults = dict(outputCol="scaled_value")
 
     def fit(self, df: DataFrame) -> StandardScalerModel:
         x = F.col(self.getInputCol()).cast("double")
@@ -202,9 +192,7 @@ class AutoFeatureTransformer(AlgoOperator):
                           "'error' (reference behavior) or 'keep'",
                           TypeConverters.toString)
 
-    def __init__(self):
-        super().__init__()
-        self._setDefault(handleInvalid="error")
+    _defaults = dict(handleInvalid="error")
 
     def setHandleInvalid(self, v):
         if v not in ("error", "keep"):
@@ -303,16 +291,8 @@ class Winsorizer(Estimator, _SingleColOutputParams, HasRelativeError):
                      "upper clip percentile in [0, 1]",
                      TypeConverters.toFloat)
 
-    def __init__(self):
-        super().__init__()
-        self._setDefault(outputCol="winsorized", lowerPct=0.05,
-                         upperPct=0.95)
-
-    def setLowerPct(self, v):
-        return self._set(lowerPct=float(v))
-
-    def setUpperPct(self, v):
-        return self._set(upperPct=float(v))
+    _defaults = dict(outputCol="winsorized", lowerPct=0.05,
+                     upperPct=0.95)
 
     def fit(self, df: DataFrame) -> WinsorizerModel:
         lo_p = self.getOrDefault(self.lowerPct)
@@ -354,15 +334,7 @@ class JsonColumnParser(AlgoOperator, HasInputCol):
                    "prefix for the extracted column names",
                    typeConverter=TypeConverters.toString)
 
-    def __init__(self):
-        super().__init__()
-        self._setDefault(inputCol="props", schema="k INT", prefix="")
-
-    def setSchema(self, v):
-        return self._set(schema=v)
-
-    def setPrefix(self, v):
-        return self._set(prefix=v)
+    _defaults = dict(inputCol="props", schema="k INT", prefix="")
 
     def transform(self, df: DataFrame) -> DataFrame:
         from pyspark.sql.types import StructType
@@ -393,17 +365,12 @@ class MinMaxScalerModel(Model, _SingleColOutputParams):
 
     _state = ("_lo", "_hi")
 
+    _defaults = dict(outputCol="scaled_value",
+                     featureMin=0.0, featureMax=1.0)
+
     def __init__(self, lo: float | None = None, hi: float | None = None):
         super().__init__()
-        self._setDefault(outputCol="scaled_value",
-                         featureMin=0.0, featureMax=1.0)
         self._lo, self._hi = lo, hi
-
-    def setFeatureMin(self, v):
-        return self._set(featureMin=float(v))
-
-    def setFeatureMax(self, v):
-        return self._set(featureMax=float(v))
 
     def transform(self, df: DataFrame) -> DataFrame:
         fmin = self.getOrDefault(self.featureMin)
@@ -431,9 +398,7 @@ class MinMaxScaler(Estimator, _SingleColOutputParams):
     vector column; this operates on the raw numeric column.
     """
 
-    def __init__(self):
-        super().__init__()
-        self._setDefault(outputCol="scaled_value")
+    _defaults = dict(outputCol="scaled_value")
 
     def fit(self, df: DataFrame) -> MinMaxScalerModel:
         x = F.col(self.getInputCol()).cast("double")
@@ -454,9 +419,10 @@ class MaxAbsScalerModel(Model, _SingleColOutputParams):
 
     _state = ("_max_abs",)
 
+    _defaults = dict(outputCol="scaled_value")
+
     def __init__(self, max_abs: float | None = None):
         super().__init__()
-        self._setDefault(outputCol="scaled_value")
         self._max_abs = max_abs
 
     def transform(self, df: DataFrame) -> DataFrame:
@@ -470,9 +436,7 @@ class MaxAbsScaler(Estimator, _SingleColOutputParams):
     map-only apply. The scaler of choice for already-centered or
     sparse features, since it never shifts zero."""
 
-    def __init__(self):
-        super().__init__()
-        self._setDefault(outputCol="scaled_value")
+    _defaults = dict(outputCol="scaled_value")
 
     def fit(self, df: DataFrame) -> MaxAbsScalerModel:
         x = F.col(self.getInputCol()).cast("double")
@@ -501,11 +465,12 @@ class RobustScalerModel(Model, _SingleColOutputParams):
 
     _state = ("_median", "_range")
 
+    _defaults = dict(outputCol="scaled_value",
+                     withCentering=True, withScaling=True)
+
     def __init__(self, median: float | None = None,
                  q_range: float | None = None):
         super().__init__()
-        self._setDefault(outputCol="scaled_value",
-                         withCentering=True, withScaling=True)
         self._median, self._range = median, q_range
 
     def setWithCentering(self, v):
@@ -543,16 +508,8 @@ class RobustScaler(Estimator, _SingleColOutputParams, HasRelativeError):
                      "upper quantile of the scaling range",
                      TypeConverters.toFloat)
 
-    def __init__(self):
-        super().__init__()
-        self._setDefault(outputCol="scaled_value",
-                         lowerPct=0.25, upperPct=0.75)
-
-    def setLowerPct(self, v):
-        return self._set(lowerPct=float(v))
-
-    def setUpperPct(self, v):
-        return self._set(upperPct=float(v))
+    _defaults = dict(outputCol="scaled_value",
+                     lowerPct=0.25, upperPct=0.75)
 
     def fit(self, df: DataFrame) -> RobustScalerModel:
         lo_p = self.getOrDefault(self.lowerPct)
@@ -579,9 +536,10 @@ class QuantileDiscretizerModel(Model, _SingleColOutputParams):
 
     _state = ("_edges",)
 
+    _defaults = dict(outputCol="bucket")
+
     def __init__(self, edges: list[float] | None = None):
         super().__init__()
-        self._setDefault(outputCol="bucket")
         self._edges = edges
 
     @property
@@ -615,9 +573,7 @@ class QuantileDiscretizer(Estimator, _SingleColOutputParams,
                        "number of equal-frequency buckets (>= 2)",
                        TypeConverters.toInt)
 
-    def __init__(self):
-        super().__init__()
-        self._setDefault(outputCol="bucket", numBuckets=4)
+    _defaults = dict(outputCol="bucket", numBuckets=4)
 
     def setNumBuckets(self, v):
         v = int(v)
@@ -657,14 +613,12 @@ class MadOutlierModel(Model, _SingleColOutputParams):
 
     _state = ("_median", "_mad")
 
+    _defaults = dict(outputCol="robust_z", threshold=3.5)
+
     def __init__(self, median: float | None = None,
                  mad: float | None = None):
         super().__init__()
-        self._setDefault(outputCol="robust_z", threshold=3.5)
         self._median, self._mad = median, mad
-
-    def setThreshold(self, v):
-        return self._set(threshold=float(v))
 
     def transform(self, df: DataFrame) -> DataFrame:
         x = F.col(self.getInputCol()).cast("double")
@@ -695,9 +649,7 @@ class MadOutlierDetector(Estimator, _SingleColOutputParams,
     100 TB. The model transform is map-only.
     """
 
-    def __init__(self):
-        super().__init__()
-        self._setDefault(outputCol="robust_z")
+    _defaults = dict(outputCol="robust_z")
 
     def fit(self, df: DataFrame) -> MadOutlierModel:
         c = self.getInputCol()
@@ -735,17 +687,12 @@ class FeatureAssembler(AlgoOperator):
                           "'error' | 'keep' | 'skip'",
                           TypeConverters.toString)
 
-    def __init__(self):
-        super().__init__()
-        self._setDefault(outputCol="features", handleInvalid="error")
+    _defaults = dict(outputCol="features", handleInvalid="error")
 
     def setInputCols(self, *v):
         cols = list(v[0]) if len(v) == 1 and not isinstance(v[0], str) \
             else list(v)
         return self._set(inputCols=cols)
-
-    def setOutputCol(self, v):
-        return self._set(outputCol=v)
 
     def setHandleInvalid(self, v):
         if v not in ("error", "keep", "skip"):
@@ -782,9 +729,10 @@ class GroupedStandardScalerModel(Model, _SingleColOutputParams):
 
     _state = ("_moments",)
 
+    _defaults = dict(outputCol="scaled_value")
+
     def __init__(self, moments: DataFrame | None = None):
         super().__init__()
-        self._setDefault(outputCol="scaled_value")
         self._moments = moments  # __g string, __mean double, __std double
 
     def transform(self, df: DataFrame) -> DataFrame:
@@ -815,12 +763,7 @@ class GroupedStandardScaler(Estimator, _SingleColOutputParams):
                      "normalization group column",
                      TypeConverters.toString)
 
-    def __init__(self):
-        super().__init__()
-        self._setDefault(outputCol="scaled_value")
-
-    def setGroupCol(self, v):
-        return self._set(groupCol=v)
+    _defaults = dict(outputCol="scaled_value")
 
     def fit(self, df: DataFrame) -> GroupedStandardScalerModel:
         c = self.getInputCol()
@@ -849,10 +792,11 @@ class QuantileMatcherModel(Model, _SingleColOutputParams):
 
     _state = ("_ref_grid", "_relative_error")
 
+    _defaults = dict(outputCol="matched")
+
     def __init__(self, ref_grid: list[float] | None = None,
                  relative_error: float = 0.0):
         super().__init__()
-        self._setDefault(outputCol="matched")
         self._ref_grid = ref_grid
         self._relative_error = relative_error
 
@@ -933,9 +877,7 @@ class QuantileMatcher(Estimator, _SingleColOutputParams,
     numBuckets = Param(Params._dummy(), "numBuckets",
                        "grid segments (>= 2)", TypeConverters.toInt)
 
-    def __init__(self):
-        super().__init__()
-        self._setDefault(outputCol="matched", numBuckets=8)
+    _defaults = dict(outputCol="matched", numBuckets=8)
 
     def setNumBuckets(self, v):
         v = int(v)
@@ -990,20 +932,9 @@ class RollingFeatureGenerator(AlgoOperator):
                     "trailing frame widths to emit",
                     TypeConverters.toListInt)
 
-    def __init__(self):
-        super().__init__()
-        self._setDefault(timeCol="bucket_start", keyCol="user_id",
-                         valueCol="avg_value", lags=[1, 2, 3],
-                         windows=[3, 7])
-
-    def setTimeCol(self, v):
-        return self._set(timeCol=v)
-
-    def setKeyCol(self, v):
-        return self._set(keyCol=v)
-
-    def setValueCol(self, v):
-        return self._set(valueCol=v)
+    _defaults = dict(timeCol="bucket_start", keyCol="user_id",
+                     valueCol="avg_value", lags=[1, 2, 3],
+                     windows=[3, 7])
 
     def setLags(self, v):
         v = [int(x) for x in v]
@@ -1057,10 +988,11 @@ class RankGaussModel(AlgoOperator, HasInputCol, HasOutputCol):
 
     _state = ("_edges", "_z")
 
+    _defaults = dict(inputCol="value", outputCol="value_gauss")
+
     def __init__(self, edges: list[float] | None = None,
                  z_scores: list[float] | None = None):
         super().__init__()
-        self._setDefault(inputCol="value", outputCol="value_gauss")
         self._edges = list(edges or [])
         self._z = list(z_scores or [])
 
@@ -1083,7 +1015,8 @@ class RankGaussModel(AlgoOperator, HasInputCol, HasOutputCol):
         return df.withColumn(self.getOutputCol(), F.expr(out))
 
 
-class RankGaussTransformer(AlgoOperator, HasInputCol, HasOutputCol):
+class RankGaussTransformer(AlgoOperator, HasInputCol, HasOutputCol,
+                           HasRelativeError):
     """Rank-Gauss (quantile-to-normal) feature transform — the
     normalization that made several Kaggle-winning tabular NNs work
     (Jahrer 2017) and scikit-learn's ``QuantileTransformer(
@@ -1102,30 +1035,19 @@ class RankGaussTransformer(AlgoOperator, HasInputCol, HasOutputCol):
     the data share a bucket (identical values always produce
     identical scores — the honest rank semantics).
 
-    ``exactEdges`` picks the fit's scale path: ``True`` (default, and
-    what the oracle gate pins) uses exact ``percentile``, which
-    gathers the column on one reducer — fine to ~1 executor's memory
-    of values; ``False`` uses ``approx_percentile`` (Greenwald-Khanna,
-    ``relativeError``), a bounded-memory mergeable sketch that is the
-    right fit at true 100 TB. Apply is identical either way.
+    ``relativeError`` picks the fit's scale path (``HasRelativeError``):
+    0 (default, and what the oracle gate pins) fits exact percentiles,
+    which gather the column on one reducer — fine to ~1 executor's
+    memory of values; above 0 fits the bounded-memory mergeable
+    ``approx_percentile`` sketch, the right fit at true 100 TB. Apply is
+    identical either way.
     """
 
     numBuckets = Param(Params._dummy(), "numBuckets",
                        "rank resolution", TypeConverters.toInt)
-    exactEdges = Param(Params._dummy(), "exactEdges",
-                       "exact percentile edges (True) or bounded-memory "
-                       "approx_percentile sketch (False)",
-                       TypeConverters.toBoolean)
-    relativeError = Param(Params._dummy(), "relativeError",
-                          "approx_percentile accuracy when "
-                          "exactEdges=False (1/accuracy)",
-                          TypeConverters.toFloat)
 
-    def __init__(self):
-        super().__init__()
-        self._setDefault(inputCol="value", outputCol="value_gauss",
-                         numBuckets=64, exactEdges=True,
-                         relativeError=1e-4)
+    _defaults = dict(inputCol="value", outputCol="value_gauss",
+                     numBuckets=64)
 
     def setNumBuckets(self, v):
         v = int(v)
@@ -1133,45 +1055,14 @@ class RankGaussTransformer(AlgoOperator, HasInputCol, HasOutputCol):
             raise ValueError(f"numBuckets must be >= 2, got {v}")
         return self._set(numBuckets=v)
 
-    def setExactEdges(self, v):
-        return self._set(exactEdges=bool(v))
-
-    def setRelativeError(self, v):
-        v = float(v)
-        if not 0 < v < 1:
-            raise ValueError(f"relativeError must be in (0, 1), got {v}")
-        return self._set(relativeError=v)
-
     def fit(self, df: DataFrame) -> RankGaussModel:
+        from flink_ml__spark.functions.quantiles import quantile_edges
         from flink_ml__spark.functions.stats import _norm_ppf
-
-        import math
 
         k = self.getOrDefault(self.numBuckets)
         x = F.col(self.getInputCol()).cast("double")
-        base = df.filter(x.isNotNull())
-        if self.getOrDefault(self.exactEdges):
-            # exact percentiles in one in-engine sort, bit-identical to
-            # the percentile aggregate (TypedImperativeAggregate: 4-5 s
-            # at sf0.1 for ONE 600 k-row column) — see
-            # functions/quantiles.py for the interpolation parity proof
-            from flink_ml__spark.functions.quantiles import (
-                exact_percentiles,
-            )
-
-            raw = exact_percentiles(base, x, [i / k for i in range(1, k)])
-            edges = [math.floor(e * 1e6 + 0.5) / 1e6 for e in (raw or [])]
-        else:
-            # ONE percentile aggregate with the whole probability array:
-            # k−1 separate percentile expressions would each buffer the
-            # full column (measured 50 s vs 2 s at sf0.1, k=32)
-            probs = F.array(*[F.lit(i / k) for i in range(1, k)])
-            acc = int(round(1.0 / self.getOrDefault(self.relativeError)))
-            pct = F.approx_percentile(x, probs, F.lit(acc))
-            row = base.agg(
-                F.transform(pct, lambda e: (F.floor((e) * 1e6 + 0.5) / 1e6))
-                .alias("es")).collect()[0]
-            edges = list(row["es"] or [])
+        edges = quantile_edges(df.filter(x.isNotNull()), x, k,
+                               self.getRelativeError())
         if not edges:
             raise ValueError("no non-null values to fit on")
         z = [_norm_ppf((i + 0.5) / k) for i in range(k)]

@@ -31,6 +31,10 @@ class PageRank(AlgoOperator):
     where ``W(u)`` is u's total out-weight, ``D`` the summed rank of
     dangling nodes (no out-edges), and ranks start uniform at 1/n.
     Ranks sum to 1 after every iteration (mass-conserving).
+    ``setWeightCol`` makes it weighted PageRank: ``w(u,v)`` is the
+    summed ``weightCol`` per (src, dst) instead of the parallel-edge
+    count, and NULL/non-positive weights drop (a zero or negative
+    transition mass is undefined).
 
     100 TB design: edges pre-aggregate to (src, dst, weight) ONCE
     (the only edge-volume shuffle; the table persists across
@@ -56,18 +60,12 @@ class PageRank(AlgoOperator):
                       "explicit edge-weight column ('' = parallel "
                       "edges count as weight)", TypeConverters.toString)
 
+    _defaults = dict(srcCol="src", dstCol="dst", damping=0.85,
+                     maxIter=5, weightCol="")
+
     def __init__(self):
         super().__init__()
-        self._setDefault(srcCol="src", dstCol="dst", damping=0.85,
-                         maxIter=5, weightCol="")
         self._seed_nodes: list | None = None
-
-    def setWeightCol(self, v):
-        """Weighted PageRank: transition probability proportional to
-        the summed ``weightCol`` per (src, dst) instead of the
-        parallel-edge count. NULL/non-positive weights drop (a zero
-        or negative transition mass is undefined)."""
-        return self._set(weightCol=v)
 
     def setSeedNodes(self, seeds):
         """Personalized PageRank (Jeh & Widom 2003): teleport and
@@ -78,30 +76,6 @@ class PageRank(AlgoOperator):
         seeds = list(seeds) if seeds is not None else None
         self._seed_nodes = seeds if seeds else None
         return self
-
-    def getSrcCol(self):
-        return self.getOrDefault(self.srcCol)
-
-    def setSrcCol(self, v):
-        return self._set(srcCol=v)
-
-    def getDstCol(self):
-        return self.getOrDefault(self.dstCol)
-
-    def setDstCol(self, v):
-        return self._set(dstCol=v)
-
-    def getDamping(self):
-        return self.getOrDefault(self.damping)
-
-    def setDamping(self, v):
-        return self._set(damping=float(v))
-
-    def getMaxIter(self):
-        return self.getOrDefault(self.maxIter)
-
-    def setMaxIter(self, v):
-        return self._set(maxIter=int(v))
 
     def transform(self, edges: DataFrame) -> DataFrame:
         s, t = self.getSrcCol(), self.getDstCol()
@@ -226,15 +200,7 @@ class TriangleCounter(AlgoOperator):
     dstCol = Param(Params._dummy(), "dstCol", "edge destination column",
                    TypeConverters.toString)
 
-    def __init__(self):
-        super().__init__()
-        self._setDefault(srcCol="src", dstCol="dst")
-
-    def setSrcCol(self, v):
-        return self._set(srcCol=v)
-
-    def setDstCol(self, v):
-        return self._set(dstCol=v)
+    _defaults = dict(srcCol="src", dstCol="dst")
 
     def transform(self, edges: DataFrame) -> DataFrame:
         s = F.col(self.getOrDefault(self.srcCol))
@@ -321,18 +287,7 @@ class ConnectedComponents(AlgoOperator):
     maxIter = Param(Params._dummy(), "maxIter",
                     "pointer-jumping round cap", TypeConverters.toInt)
 
-    def __init__(self):
-        super().__init__()
-        self._setDefault(srcCol="src", dstCol="dst", maxIter=20)
-
-    def setSrcCol(self, v):
-        return self._set(srcCol=v)
-
-    def setDstCol(self, v):
-        return self._set(dstCol=v)
-
-    def setMaxIter(self, v):
-        return self._set(maxIter=int(v))
+    _defaults = dict(srcCol="src", dstCol="dst", maxIter=20)
 
     def transform(self, edges: DataFrame) -> DataFrame:
         from flink_ml__spark.functions.curation import (
@@ -379,18 +334,7 @@ class LabelPropagation(AlgoOperator):
     maxIter = Param(Params._dummy(), "maxIter",
                     "exact synchronous rounds", TypeConverters.toInt)
 
-    def __init__(self):
-        super().__init__()
-        self._setDefault(srcCol="src", dstCol="dst", maxIter=5)
-
-    def setSrcCol(self, v):
-        return self._set(srcCol=v)
-
-    def setDstCol(self, v):
-        return self._set(dstCol=v)
-
-    def setMaxIter(self, v):
-        return self._set(maxIter=int(v))
+    _defaults = dict(srcCol="src", dstCol="dst", maxIter=5)
 
     def transform(self, edges: DataFrame) -> DataFrame:
         from pyspark.sql import Window
@@ -453,15 +397,7 @@ class CommonNeighborsLinkPredictor(AlgoOperator):
                            "pivot-degree cap, 0 = uncapped",
                            TypeConverters.toInt)
 
-    def __init__(self):
-        super().__init__()
-        self._setDefault(srcCol="src", dstCol="dst", maxPivotDegree=0)
-
-    def setSrcCol(self, v):
-        return self._set(srcCol=v)
-
-    def setDstCol(self, v):
-        return self._set(dstCol=v)
+    _defaults = dict(srcCol="src", dstCol="dst", maxPivotDegree=0)
 
     def setMaxPivotDegree(self, v):
         v = int(v)
@@ -542,15 +478,7 @@ class KCoreExtractor(AlgoOperator):
     maxIter = Param(Params._dummy(), "maxIter", "peeling round cap",
                     TypeConverters.toInt)
 
-    def __init__(self):
-        super().__init__()
-        self._setDefault(srcCol="src", dstCol="dst", k=2, maxIter=50)
-
-    def setSrcCol(self, v):
-        return self._set(srcCol=v)
-
-    def setDstCol(self, v):
-        return self._set(dstCol=v)
+    _defaults = dict(srcCol="src", dstCol="dst", k=2, maxIter=50)
 
     def setK(self, v):
         v = int(v)
@@ -640,15 +568,7 @@ class DegreeAssortativity(AlgoOperator):
     dstCol = Param(Params._dummy(), "dstCol", "edge destination column",
                    TypeConverters.toString)
 
-    def __init__(self):
-        super().__init__()
-        self._setDefault(srcCol="src", dstCol="dst")
-
-    def setSrcCol(self, v):
-        return self._set(srcCol=v)
-
-    def setDstCol(self, v):
-        return self._set(dstCol=v)
+    _defaults = dict(srcCol="src", dstCol="dst")
 
     def evaluate(self, edges: DataFrame) -> DataFrame:
         s = F.col(self.getOrDefault(self.srcCol))

@@ -75,36 +75,13 @@ class AsOfJoiner(AlgoOperator):
                       "backward | forward | nearest",
                       TypeConverters.toString)
 
-    def __init__(self):
-        super().__init__()
-        self._setDefault(keyCol="user_id", timeCol="ts", toleranceSec=0.0,
-                         direction="backward")
-
-    def getDirection(self):
-        return self.getOrDefault(self.direction)
+    _defaults = dict(keyCol="user_id", timeCol="ts", toleranceSec=0.0,
+                     direction="backward")
 
     def setDirection(self, v):
         if v not in ("backward", "forward", "nearest"):
             raise ValueError("direction must be backward|forward|nearest")
         return self._set(direction=v)
-
-    def getKeyCol(self):
-        return self.getOrDefault(self.keyCol)
-
-    def setKeyCol(self, v):
-        return self._set(keyCol=v)
-
-    def getTimeCol(self):
-        return self.getOrDefault(self.timeCol)
-
-    def setTimeCol(self, v):
-        return self._set(timeCol=v)
-
-    def getToleranceSec(self):
-        return self.getOrDefault(self.toleranceSec)
-
-    def setToleranceSec(self, v):
-        return self._set(toleranceSec=float(v))
 
     def join(self, left: DataFrame, right: DataFrame,
              value_cols: list[str]) -> DataFrame:
@@ -218,56 +195,15 @@ class RangeJoiner(AlgoOperator):
                        "unique point id (only used by how='left')",
                        TypeConverters.toString)
 
-    def __init__(self):
-        super().__init__()
-        self._setDefault(keyCol="user_id", timeCol="ts",
-                         startCol="range_start", endCol="range_end",
-                         bucketWidthSec=3600.0, how="inner",
-                         pointIdCol="event_id")
-
-    def getKeyCol(self):
-        return self.getOrDefault(self.keyCol)
-
-    def setKeyCol(self, v):
-        return self._set(keyCol=v)
-
-    def getTimeCol(self):
-        return self.getOrDefault(self.timeCol)
-
-    def setTimeCol(self, v):
-        return self._set(timeCol=v)
-
-    def getStartCol(self):
-        return self.getOrDefault(self.startCol)
-
-    def setStartCol(self, v):
-        return self._set(startCol=v)
-
-    def getEndCol(self):
-        return self.getOrDefault(self.endCol)
-
-    def setEndCol(self, v):
-        return self._set(endCol=v)
-
-    def getBucketWidthSec(self):
-        return self.getOrDefault(self.bucketWidthSec)
-
-    def setBucketWidthSec(self, v):
-        return self._set(bucketWidthSec=float(v))
-
-    def getHow(self):
-        return self.getOrDefault(self.how)
+    _defaults = dict(keyCol="user_id", timeCol="ts",
+                     startCol="range_start", endCol="range_end",
+                     bucketWidthSec=3600.0, how="inner",
+                     pointIdCol="event_id")
 
     def setHow(self, v):
         if v not in ("inner", "left"):
             raise ValueError("how must be 'inner' or 'left'")
         return self._set(how=v)
-
-    def getPointIdCol(self):
-        return self.getOrDefault(self.pointIdCol)
-
-    def setPointIdCol(self, v):
-        return self._set(pointIdCol=v)
 
     @staticmethod
     def _us(col) -> "F.Column":
@@ -355,9 +291,7 @@ class SaltedJoiner(AlgoOperator):
                           "(spreads duplicates)",
                           TypeConverters.toBoolean)
 
-    def __init__(self):
-        super().__init__()
-        self._setDefault(numSalts=16, deterministic=True)
+    _defaults = dict(numSalts=16, deterministic=True)
 
     def setNumSalts(self, v):
         v = int(v)
@@ -432,9 +366,7 @@ class BloomJoinFilter(AlgoOperator, BloomBitset):
 
     _state = ("_bits",)
 
-    def __init__(self):
-        super().__init__()
-        self._setDefault(keyCols=[], numBits=1 << 20, numHashes=4)
+    _defaults = dict(keyCols=[], numBits=1 << 20, numHashes=4)
 
     def setKeyCols(self, *v):
         if len(v) == 1 and isinstance(v[0], (list, tuple)):

@@ -87,19 +87,8 @@ class FuzzyRecordLinker(AlgoOperator, HasInputCol, HasIdColMixin):
                      "prefix length / length-band width",
                      TypeConverters.toInt)
 
-    def __init__(self):
-        super().__init__()
-        self._setDefault(inputCol="text", idCol="doc_id", maxDistance=2,
-                         blocker="first_token", blockLen=4)
-
-    def setMaxDistance(self, v):
-        return self._set(maxDistance=int(v))
-
-    def setBlocker(self, v):
-        return self._set(blocker=v)
-
-    def setBlockLen(self, v):
-        return self._set(blockLen=int(v))
+    _defaults = dict(inputCol="text", idCol="doc_id", maxDistance=2,
+                     blocker="first_token", blockLen=4)
 
     def _block_key(self, col):
         how = self.getOrDefault(self.blocker)
@@ -176,9 +165,7 @@ class SnapshotDiffer(AlgoOperator):
                         "column (NULL row for deletes)",
                         TypeConverters.toBoolean)
 
-    def __init__(self):
-        super().__init__()
-        self._setDefault(keyCols=["id"], compareCols=[], emitPayload=False)
+    _defaults = dict(keyCols=["id"], compareCols=[], emitPayload=False)
 
     def setKeyCols(self, *v):
         # accept both setKeyCols('a', 'b') and setKeyCols(['a', 'b'])
@@ -457,9 +444,7 @@ class DatasetFingerprint(AlgoOperator):
                       "(default: all, in schema order)",
                       TypeConverters.toListString)
 
-    def __init__(self):
-        super().__init__()
-        self._setDefault(inputCols=[])
+    _defaults = dict(inputCols=[])
 
     def setInputCols(self, *v):
         if len(v) == 1 and isinstance(v[0], (list, tuple)):
@@ -520,9 +505,7 @@ class TableProfiler(AlgoOperator):
                 "0.0 = exact distinct counts; > 0 = HLL++ at this "
                 "relative standard deviation", TypeConverters.toFloat)
 
-    def __init__(self):
-        super().__init__()
-        self._setDefault(rsd=0.0)
+    _defaults = dict(rsd=0.0)
 
     def setColumns(self, *v):
         cols = list(v[0]) if len(v) == 1 and not isinstance(v[0], str) \
@@ -786,12 +769,7 @@ class GoldenRecordBuilder(AlgoOperator):
                       "attribute columns to survive",
                       TypeConverters.toListString)
 
-    def __init__(self):
-        super().__init__()
-        self._setDefault(clusterCol="cluster")
-
-    def setClusterCol(self, v):
-        return self._set(clusterCol=v)
+    _defaults = dict(clusterCol="cluster")
 
     def setValueCols(self, *cols):
         cols = list(cols[0]) if len(cols) == 1 and not isinstance(
@@ -859,9 +837,7 @@ class FunctionalDependencyProfiler(AlgoOperator):
 
     NULL_VAL = "␀"  # sentinel so NULL b is its own value
 
-    def __init__(self):
-        super().__init__()
-        self._setDefault(rules=[])
+    _defaults = dict(rules=[])
 
     def setRules(self, *v):
         if len(v) == 1 and isinstance(v[0], (list, tuple)):
@@ -928,12 +904,7 @@ class PartitionHealthAuditor(AlgoOperator):
                       "columns whose null rates are audited",
                       TypeConverters.toListString)
 
-    def __init__(self):
-        super().__init__()
-        self._setDefault(partitionCol="ds", checkCols=[])
-
-    def setPartitionCol(self, v):
-        return self._set(partitionCol=v)
+    _defaults = dict(partitionCol="ds", checkCols=[])
 
     def setCheckCols(self, *v):
         if len(v) == 1 and isinstance(v[0], (list, tuple)):
@@ -1022,21 +993,13 @@ class CompactionPlanner(AlgoOperator):
                        "target output size per group (bytes)",
                        TypeConverters.toInt)
 
-    def __init__(self):
-        super().__init__()
-        self._setDefault(keyCols=[], sizeCol="size", orderCol="path",
-                         targetSize=128 * 1024 * 1024)
+    _defaults = dict(keyCols=[], sizeCol="size", orderCol="path",
+                     targetSize=128 * 1024 * 1024)
 
     def setKeyCols(self, *cols):
         cols = list(cols[0]) if len(cols) == 1 and not isinstance(
             cols[0], str) else list(cols)
         return self._set(keyCols=cols)
-
-    def setSizeCol(self, v):
-        return self._set(sizeCol=v)
-
-    def setOrderCol(self, v):
-        return self._set(orderCol=v)
 
     def setTargetSize(self, v):
         v = int(v)
@@ -1106,9 +1069,7 @@ class UpsertMerger(AlgoOperator):
                      "dedup order for duplicate update keys ('' = "
                      "duplicates are an error)", TypeConverters.toString)
 
-    def __init__(self):
-        super().__init__()
-        self._setDefault(keyCols=[], deleteCol="", orderCol="")
+    _defaults = dict(keyCols=[], deleteCol="", orderCol="")
 
     def setKeyCols(self, *cols):
         cols = list(cols[0]) if len(cols) == 1 and not isinstance(
@@ -1116,12 +1077,6 @@ class UpsertMerger(AlgoOperator):
         if not cols:
             raise ValueError("keyCols must be non-empty")
         return self._set(keyCols=cols)
-
-    def setDeleteCol(self, v):
-        return self._set(deleteCol=v)
-
-    def setOrderCol(self, v):
-        return self._set(orderCol=v)
 
     def _prep(self, target: DataFrame, updates: DataFrame):
         from pyspark.sql import Window
@@ -1280,9 +1235,7 @@ class KAnonymityAuditor(AlgoOperator):
     k = Param(Params._dummy(), "k", "minimum class size",
               TypeConverters.toInt)
 
-    def __init__(self):
-        super().__init__()
-        self._setDefault(quasiCols=[], k=5)
+    _defaults = dict(quasiCols=[], k=5)
 
     def setQuasiCols(self, *cols):
         cols = list(cols[0]) if len(cols) == 1 and not isinstance(

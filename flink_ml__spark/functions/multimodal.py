@@ -51,15 +51,7 @@ class HasBinaryCol(Params):
                       "opaque binary payload column",
                       typeConverter=TypeConverters.toString)
 
-    def __init__(self):
-        super().__init__()
-        self._setDefault(binaryCol="payload")
-
-    def getBinaryCol(self) -> str:
-        return self.getOrDefault(self.binaryCol)
-
-    def setBinaryCol(self, v):
-        return self._set(binaryCol=v)
+    _defaults = dict(binaryCol="payload")
 
 
 class HasDecoder(Params):
@@ -70,15 +62,7 @@ class HasDecoder(Params):
                     "('pil', 'soundfile') if importable",
                     typeConverter=TypeConverters.toString)
 
-    def __init__(self):
-        super().__init__()
-        self._setDefault(decoder="fake")
-
-    def getDecoder(self) -> str:
-        return self.getOrDefault(self.decoder)
-
-    def setDecoder(self, v):
-        return self._set(decoder=v)
+    _defaults = dict(decoder="fake")
 
 
 def _load_real_decoder(name: str, modules: dict[str, str]):
@@ -266,21 +250,7 @@ class ImageDecoder(AlgoOperator, HasBinaryCol, HasDecoder):
     width = Param(Params._dummy(), "width", "decode width",
                   typeConverter=TypeConverters.toInt)
 
-    def __init__(self):
-        super().__init__()
-        self._setDefault(height=16, width=16)
-
-    def getHeight(self):
-        return self.getOrDefault(self.height)
-
-    def setHeight(self, v):
-        return self._set(height=v)
-
-    def getWidth(self):
-        return self.getOrDefault(self.width)
-
-    def setWidth(self, v):
-        return self._set(width=v)
+    _defaults = dict(height=16, width=16)
 
     def transform(self, df: DataFrame) -> DataFrame:
         dec = self.getDecoder()
@@ -347,15 +317,7 @@ class ImageResizer(AlgoOperator):
     targetWidth = Param(Params._dummy(), "targetWidth", "output width",
                         typeConverter=TypeConverters.toInt)
 
-    def __init__(self):
-        super().__init__()
-        self._setDefault(targetHeight=8, targetWidth=8)
-
-    def setTargetHeight(self, v):
-        return self._set(targetHeight=v)
-
-    def setTargetWidth(self, v):
-        return self._set(targetWidth=v)
+    _defaults = dict(targetHeight=8, targetWidth=8)
 
     def transform(self, df: DataFrame) -> DataFrame:
         th = self.getOrDefault(self.targetHeight)
@@ -446,15 +408,7 @@ class FrameSampler(AlgoOperator, HasBinaryCol, HasDecoder):
     stride = Param(Params._dummy(), "stride", "sample every n-th frame",
                    typeConverter=TypeConverters.toInt)
 
-    def __init__(self):
-        super().__init__()
-        self._setDefault(frameBytes=256, stride=2)
-
-    def setFrameBytes(self, v):
-        return self._set(frameBytes=v)
-
-    def setStride(self, v):
-        return self._set(stride=v)
+    _defaults = dict(frameBytes=256, stride=2)
 
     def transform(self, df: DataFrame) -> DataFrame:
         dec = self.getDecoder()
@@ -548,22 +502,8 @@ class SceneChangeDetector(AlgoOperator):
                       "absolute feature delta that opens a new scene",
                       typeConverter=TypeConverters.toFloat)
 
-    def __init__(self):
-        super().__init__()
-        self._setDefault(idCol="doc_id", frameIndexCol="frame_index",
-                         valueCol="frame_mean", threshold=8.0)
-
-    def setIdCol(self, v):
-        return self._set(idCol=v)
-
-    def setFrameIndexCol(self, v):
-        return self._set(frameIndexCol=v)
-
-    def setValueCol(self, v):
-        return self._set(valueCol=v)
-
-    def setThreshold(self, v):
-        return self._set(threshold=float(v))
+    _defaults = dict(idCol="doc_id", frameIndexCol="frame_index",
+                     valueCol="frame_mean", threshold=8.0)
 
     def transform(self, df: DataFrame) -> DataFrame:
         from pyspark.sql import Window
@@ -589,12 +529,7 @@ class AudioFeatureExtractor(AlgoOperator, HasBinaryCol, HasDecoder):
                         "stub-decoded samples per payload",
                         typeConverter=TypeConverters.toInt)
 
-    def __init__(self):
-        super().__init__()
-        self._setDefault(sampleCount=1024)
-
-    def setSampleCount(self, v):
-        return self._set(sampleCount=v)
+    _defaults = dict(sampleCount=1024)
 
     def transform(self, df: DataFrame) -> DataFrame:
         dec = self.getDecoder()
@@ -849,13 +784,8 @@ class AudioSilenceDetector(AlgoOperator, HasBinaryCol, HasDecoder):
                       "RMS below this is silence",
                       typeConverter=TypeConverters.toFloat)
 
-    def __init__(self):
-        super().__init__()
-        self._setDefault(sampleCount=1024, windowSize=64,
-                         threshold=0.5)
-
-    def setSampleCount(self, v):
-        return self._set(sampleCount=v)
+    _defaults = dict(sampleCount=1024, windowSize=64,
+                     threshold=0.5)
 
     def setWindowSize(self, v):
         v = int(v)

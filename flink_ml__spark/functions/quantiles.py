@@ -39,11 +39,17 @@ ships every partial's value map to a single reducer; this ships every
 partial's value list there. The scan stays parallel: a partial
 ``collect_list`` runs in each scan task, with one exchange after it.
 Callers that need bounded memory at 100 TB keep their
-``approx_percentile`` path (``exactEdges=False`` /
-``relativeError > 0``), which is mergeable and unaffected here.
+``approx_percentile`` path (``relativeError > 0``, see
+``base.HasRelativeError``), which is mergeable and unaffected here.
+
+:func:`quantile_edges` is the bucket-edge fit of the operators that
+cut a column into ``k`` quantile bands: exact or approximate by the
+one ``relativeError`` switch, then the 6 dp floor.
 """
 
 from __future__ import annotations
+
+import math
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -78,3 +84,28 @@ def exact_percentiles(df: DataFrame, col: Column | str,
                          f"END AS __es"))
           .collect()[0]["__es"])
     return None if es is None else list(es)
+
+
+def quantile_edges(df: DataFrame, col: Column | str, k: int,
+                   relative_error: float = 0.0) -> list[float]:
+    """The ``k``-1 interior quantile edges of ``col`` over ``df`` (at
+    ``i/k``), each floored to 6 dp (``floor(e·1e6 + 0.5)/1e6``, the
+    engine's cross-engine tie pin); ``[]`` when ``col`` has no non-null
+    value.
+
+    ``relative_error`` 0 fits them with :func:`exact_percentiles`;
+    above 0, with ONE ``approx_percentile`` aggregate over the whole
+    probability array at accuracy ``ceil(1/relative_error)`` (k-1
+    separate aggregates would each buffer the column: measured 50 s vs
+    2 s at sf0.1, k=32).
+    """
+    c = F.col(col) if isinstance(col, str) else col
+    probs = [i / k for i in range(1, k)]
+    if relative_error > 0:
+        acc = int(math.ceil(1.0 / relative_error))
+        raw = (df.agg(F.approx_percentile(c.cast("double"), probs, acc)
+                      .alias("__es"))
+               .collect()[0]["__es"])
+    else:
+        raw = exact_percentiles(df, c, probs)
+    return [math.floor(e * 1e6 + 0.5) / 1e6 for e in (raw or [])]

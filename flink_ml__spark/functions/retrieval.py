@@ -76,44 +76,9 @@ class BM25Retriever(AlgoOperator, _MaterializeMixin, HasInputCol,
                           "(1.0 = exact, no pruning)",
                           TypeConverters.toFloat)
 
-    def __init__(self):
-        super().__init__()
-        self._setDefault(inputCol="text", idCol="doc_id",
-                         queryIdCol="query_id", queryTextCol="query_text",
-                         k1=1.2, b=0.75, topK=10, maxDfFraction=1.0)
-
-    def getQueryIdCol(self):
-        return self.getOrDefault(self.queryIdCol)
-
-    def setQueryIdCol(self, v):
-        return self._set(queryIdCol=v)
-
-    def getQueryTextCol(self):
-        return self.getOrDefault(self.queryTextCol)
-
-    def setQueryTextCol(self, v):
-        return self._set(queryTextCol=v)
-
-    def getK1(self):
-        return self.getOrDefault(self.k1)
-
-    def setK1(self, v):
-        return self._set(k1=float(v))
-
-    def getB(self):
-        return self.getOrDefault(self.b)
-
-    def setB(self, v):
-        return self._set(b=float(v))
-
-    def getTopK(self):
-        return self.getOrDefault(self.topK)
-
-    def setTopK(self, v):
-        return self._set(topK=int(v))
-
-    def getMaxDfFraction(self):
-        return self.getOrDefault(self.maxDfFraction)
+    _defaults = dict(inputCol="text", idCol="doc_id",
+                     queryIdCol="query_id", queryTextCol="query_text",
+                     k1=1.2, b=0.75, topK=10, maxDfFraction=1.0)
 
     def setMaxDfFraction(self, v):
         v = float(v)
@@ -262,12 +227,7 @@ class QueryLikelihoodRetriever(BM25Retriever):
     mu = Param(Params._dummy(), "mu", "Dirichlet smoothing mass",
                TypeConverters.toFloat)
 
-    def __init__(self):
-        super().__init__()
-        self._setDefault(mu=2000.0)
-
-    def getMu(self):
-        return self.getOrDefault(self.mu)
+    _defaults = dict(mu=2000.0)
 
     def setMu(self, v):
         v = float(v)
@@ -365,40 +325,8 @@ class ReciprocalRankFusion(AlgoOperator):
     topK = Param(Params._dummy(), "topK", "fused results per query",
                  TypeConverters.toInt)
 
-    def __init__(self):
-        super().__init__()
-        self._setDefault(queryIdCol="query_id", itemCol="doc_id",
-                         rankCol="rank", k0=60.0, topK=10)
-
-    def getQueryIdCol(self):
-        return self.getOrDefault(self.queryIdCol)
-
-    def setQueryIdCol(self, v):
-        return self._set(queryIdCol=v)
-
-    def getItemCol(self):
-        return self.getOrDefault(self.itemCol)
-
-    def setItemCol(self, v):
-        return self._set(itemCol=v)
-
-    def getRankCol(self):
-        return self.getOrDefault(self.rankCol)
-
-    def setRankCol(self, v):
-        return self._set(rankCol=v)
-
-    def getK0(self):
-        return self.getOrDefault(self.k0)
-
-    def setK0(self, v):
-        return self._set(k0=float(v))
-
-    def getTopK(self):
-        return self.getOrDefault(self.topK)
-
-    def setTopK(self, v):
-        return self._set(topK=int(v))
+    _defaults = dict(queryIdCol="query_id", itemCol="doc_id",
+                     rankCol="rank", k0=60.0, topK=10)
 
     def fuse(self, rankings: list) -> "DataFrame":
         if not rankings:
@@ -461,19 +389,8 @@ class RankingEvaluator(AlgoOperator):
     k = Param(Params._dummy(), "k", "evaluation cutoff",
               TypeConverters.toInt)
 
-    def __init__(self):
-        super().__init__()
-        self._setDefault(queryCol="query_id", itemCol="doc_id",
-                         rankCol="rank", k=10)
-
-    def setQueryCol(self, v):
-        return self._set(queryCol=v)
-
-    def setItemCol(self, v):
-        return self._set(itemCol=v)
-
-    def setRankCol(self, v):
-        return self._set(rankCol=v)
+    _defaults = dict(queryCol="query_id", itemCol="doc_id",
+                     rankCol="rank", k=10)
 
     def setK(self, v):
         v = int(v)
@@ -581,19 +498,8 @@ class RankingOverlapEvaluator(AlgoOperator):
     depth = Param(Params._dummy(), "depth", "prefix depth evaluated",
                   TypeConverters.toInt)
 
-    def __init__(self):
-        super().__init__()
-        self._setDefault(queryCol="query_id", docCol="doc_id",
-                         rankCol="rank", persistence=0.9, depth=10)
-
-    def setQueryCol(self, v):
-        return self._set(queryCol=v)
-
-    def setDocCol(self, v):
-        return self._set(docCol=v)
-
-    def setRankCol(self, v):
-        return self._set(rankCol=v)
+    _defaults = dict(queryCol="query_id", docCol="doc_id",
+                     rankCol="rank", persistence=0.9, depth=10)
 
     def setPersistence(self, v):
         v = float(v)

@@ -49,34 +49,8 @@ class Sessionizer(AlgoOperator):
                      "numeric column summed per session ('' disables)",
                      TypeConverters.toString)
 
-    def __init__(self):
-        super().__init__()
-        self._setDefault(timeCol="ts", keyCol="user_id",
-                         gap="30 minutes", valueCol="value")
-
-    def getTimeCol(self):
-        return self.getOrDefault(self.timeCol)
-
-    def setTimeCol(self, v):
-        return self._set(timeCol=v)
-
-    def getKeyCol(self):
-        return self.getOrDefault(self.keyCol)
-
-    def setKeyCol(self, v):
-        return self._set(keyCol=v)
-
-    def getGap(self):
-        return self.getOrDefault(self.gap)
-
-    def setGap(self, v):
-        return self._set(gap=v)
-
-    def getValueCol(self):
-        return self.getOrDefault(self.valueCol)
-
-    def setValueCol(self, v):
-        return self._set(valueCol=v)
+    _defaults = dict(timeCol="ts", keyCol="user_id",
+                     gap="30 minutes", valueCol="value")
 
     def transform(self, df: DataFrame) -> DataFrame:
         t, k = self.getTimeCol(), self.getKeyCol()
@@ -126,19 +100,8 @@ class IntervalMerger(AlgoOperator):
                    "are the caller's; merging only compares)",
                    TypeConverters.toString)
 
-    def __init__(self):
-        super().__init__()
-        self._setDefault(keyCol="user_id", startCol="span_start",
-                         endCol="span_end")
-
-    def setKeyCol(self, v):
-        return self._set(keyCol=v)
-
-    def setStartCol(self, v):
-        return self._set(startCol=v)
-
-    def setEndCol(self, v):
-        return self._set(endCol=v)
+    _defaults = dict(keyCol="user_id", startCol="span_start",
+                     endCol="span_end")
 
     def transform(self, df: DataFrame) -> DataFrame:
         from pyspark.sql import Window
@@ -205,19 +168,8 @@ class IntervalOverlapJoiner(AlgoOperator):
                            "(key, time-bucket) join for hot keys",
                            TypeConverters.toFloat)
 
-    def __init__(self):
-        super().__init__()
-        self._setDefault(keyCol="user_id", startCol="span_start",
-                         endCol="span_end", bucketWidthSec=0.0)
-
-    def setKeyCol(self, v):
-        return self._set(keyCol=v)
-
-    def setStartCol(self, v):
-        return self._set(startCol=v)
-
-    def setEndCol(self, v):
-        return self._set(endCol=v)
+    _defaults = dict(keyCol="user_id", startCol="span_start",
+                     endCol="span_end", bucketWidthSec=0.0)
 
     def setBucketWidthSec(self, v):
         v = float(v)
@@ -310,26 +262,9 @@ class AttributionAnalyzer(AlgoOperator):
                    "deterministic tie-break column",
                    TypeConverters.toString)
 
-    def __init__(self):
-        super().__init__()
-        self._setDefault(keyCol="user_id", timeCol="ts",
-                         channelCol="event_type",
-                         conversionEvent="purchase", tieCol="event_id")
-
-    def setKeyCol(self, v):
-        return self._set(keyCol=v)
-
-    def setTimeCol(self, v):
-        return self._set(timeCol=v)
-
-    def setChannelCol(self, v):
-        return self._set(channelCol=v)
-
-    def setConversionEvent(self, v):
-        return self._set(conversionEvent=v)
-
-    def setTieCol(self, v):
-        return self._set(tieCol=v)
+    _defaults = dict(keyCol="user_id", timeCol="ts",
+                     channelCol="event_type",
+                     conversionEvent="purchase", tieCol="event_id")
 
     UNATTRIBUTED = "__unattributed__"
 
@@ -445,23 +380,9 @@ class SessionPathAnalyzer(AlgoOperator):
     topN = Param(Params._dummy(), "topN", "paths returned",
                  TypeConverters.toInt)
 
-    def __init__(self):
-        super().__init__()
-        self._setDefault(timeCol="ts", keyCol="user_id",
-                         typeCol="event_type", idCol="event_id",
-                         gapSec=1800.0, pathLen=3, topN=20)
-
-    def setTimeCol(self, v):
-        return self._set(timeCol=v)
-
-    def setKeyCol(self, v):
-        return self._set(keyCol=v)
-
-    def setTypeCol(self, v):
-        return self._set(typeCol=v)
-
-    def setIdCol(self, v):
-        return self._set(idCol=v)
+    _defaults = dict(timeCol="ts", keyCol="user_id",
+                     typeCol="event_type", idCol="event_id",
+                     gapSec=1800.0, pathLen=3, topN=20)
 
     def setGapSec(self, v):
         if v <= 0:
@@ -569,19 +490,8 @@ class ConversionLagAnalyzer(AlgoOperator):
                        "conversion window (seconds)",
                        TypeConverters.toFloat)
 
-    def __init__(self):
-        super().__init__()
-        self._setDefault(timeCol="ts", keyCol="user_id",
-                         typeCol="event_type", horizonSec=3600.0)
-
-    def setTimeCol(self, v):
-        return self._set(timeCol=v)
-
-    def setKeyCol(self, v):
-        return self._set(keyCol=v)
-
-    def setTypeCol(self, v):
-        return self._set(typeCol=v)
+    _defaults = dict(timeCol="ts", keyCol="user_id",
+                     typeCol="event_type", horizonSec=3600.0)
 
     def setPattern(self, anchor: str, target: str):
         if anchor == target:

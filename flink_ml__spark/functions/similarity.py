@@ -36,27 +36,7 @@ class _SimilarityParams(HasSeed):
     k = Param(Params._dummy(), "k", "neighbors per query",
               TypeConverters.toInt)
 
-    def __init__(self):
-        super().__init__()
-        self._setDefault(embeddingCol="embedding", idCol="vec_id", k=10)
-
-    def getEmbeddingCol(self):
-        return self.getOrDefault(self.embeddingCol)
-
-    def setEmbeddingCol(self, v):
-        return self._set(embeddingCol=v)
-
-    def getIdCol(self):
-        return self.getOrDefault(self.idCol)
-
-    def setIdCol(self, v):
-        return self._set(idCol=v)
-
-    def getK(self):
-        return self.getOrDefault(self.k)
-
-    def setK(self, v):
-        return self._set(k=v)
+    _defaults = dict(embeddingCol="embedding", idCol="vec_id", k=10)
 
 
 def _make_unit():
@@ -165,15 +145,7 @@ class HardNegativeMiner(AlgoOperator, _SimilarityParams):
                   "maximum cosine (near-dup exclusion band above)",
                   TypeConverters.toFloat)
 
-    def __init__(self):
-        super().__init__()
-        self._setDefault(labelCol="label", simLo=0.0, simHi=0.95)
-
-    def setLabelCol(self, v):
-        return self._set(labelCol=v)
-
-    def setSimLo(self, v):
-        return self._set(simLo=float(v))
+    _defaults = dict(labelCol="label", simLo=0.0, simHi=0.95)
 
     def setSimHi(self, v):
         v = float(v)
@@ -244,29 +216,12 @@ class IVFCosineTopK(AlgoOperator, _SimilarityParams):
 
     _state = ("_centroids",)
 
+    _defaults = dict(nList=16, nProbe=4, trainSampleSize=8192,
+                     trainIter=3)
+
     def __init__(self):
         super().__init__()
-        self._setDefault(nList=16, nProbe=4, trainSampleSize=8192,
-                         trainIter=3)
         self._centroids: list[list[float]] | None = None
-
-    def getNList(self):
-        return self.getOrDefault(self.nList)
-
-    def setNList(self, v):
-        return self._set(nList=v)
-
-    def getNProbe(self):
-        return self.getOrDefault(self.nProbe)
-
-    def setNProbe(self, v):
-        return self._set(nProbe=v)
-
-    def setTrainSampleSize(self, v):
-        return self._set(trainSampleSize=int(v))
-
-    def setTrainIter(self, v):
-        return self._set(trainIter=int(v))
 
     def train(self, corpus: DataFrame) -> "IVFCosineTopK":
         """Spherical coarse quantizer (spherical k-means, Dhillon &
@@ -485,15 +440,7 @@ class EmbeddingContaminationChecker(AlgoOperator, _SimilarityParams):
                       "max_benchmark_cosine at/above which "
                       "is_contaminated is true", TypeConverters.toFloat)
 
-    def __init__(self):
-        super().__init__()
-        self._setDefault(threshold=0.9)
-
-    def getThreshold(self):
-        return self.getOrDefault(self.threshold)
-
-    def setThreshold(self, v):
-        return self._set(threshold=float(v))
+    _defaults = dict(threshold=0.9)
 
     def transform_against(self, df: DataFrame,
                           benchmark: DataFrame) -> DataFrame:
@@ -577,21 +524,7 @@ class SemDeDup(AlgoOperator, _SimilarityParams):
                       "cosine at/above which two rows are semantic "
                       "duplicates", TypeConverters.toFloat)
 
-    def __init__(self):
-        super().__init__()
-        self._setDefault(nList=16, threshold=0.95)
-
-    def getNList(self):
-        return self.getOrDefault(self.nList)
-
-    def setNList(self, v):
-        return self._set(nList=int(v))
-
-    def getThreshold(self):
-        return self.getOrDefault(self.threshold)
-
-    def setThreshold(self, v):
-        return self._set(threshold=float(v))
+    _defaults = dict(nList=16, threshold=0.95)
 
     def _train_centroids(self, df: DataFrame):
         """Deterministic spherical k-means on a hash-ordered sample."""
@@ -733,9 +666,7 @@ class EmbeddingPCA(AlgoOperator, _SimilarityParams):
     fit costs one scan and the apply fuses with the sink.
     """
 
-    def __init__(self):
-        super().__init__()
-        self._setDefault(k=8)
+    _defaults = dict(k=8)
 
     def fit(self, df: DataFrame) -> EmbeddingPCAModel:
         import numpy as np
@@ -886,29 +817,12 @@ class ProductQuantizer(AlgoOperator, _SimilarityParams):
 
     _state = ("_codebooks",)
 
+    _defaults = dict(numSubspaces=8, bitsPerCode=8,
+                     trainSampleSize=8192, trainIter=5)
+
     def __init__(self):
         super().__init__()
-        self._setDefault(numSubspaces=8, bitsPerCode=8,
-                         trainSampleSize=8192, trainIter=5)
         self._codebooks = None  # list[m] of (k_sub, d/m) lists
-
-    def getNumSubspaces(self):
-        return self.getOrDefault(self.numSubspaces)
-
-    def setNumSubspaces(self, v):
-        return self._set(numSubspaces=v)
-
-    def getBitsPerCode(self):
-        return self.getOrDefault(self.bitsPerCode)
-
-    def setBitsPerCode(self, v):
-        return self._set(bitsPerCode=v)
-
-    def setTrainSampleSize(self, v):
-        return self._set(trainSampleSize=int(v))
-
-    def setTrainIter(self, v):
-        return self._set(trainIter=int(v))
 
     # -- training -------------------------------------------------------
 
@@ -1089,41 +1003,15 @@ class IVFPQTopK(AlgoOperator, _SimilarityParams):
 
     _state = ("_centroids", "_anchors", "_codebooks")
 
+    _defaults = dict(nList=16, nProbe=4, numSubspaces=8,
+                     bitsPerCode=6, trainSampleSize=8192,
+                     trainIter=3, refineFactor=1)
+
     def __init__(self):
         super().__init__()
-        self._setDefault(nList=16, nProbe=4, numSubspaces=8,
-                         bitsPerCode=6, trainSampleSize=8192,
-                         trainIter=3, refineFactor=1)
         self._centroids = None    # nList × dims (unit rows; routing)
         self._anchors = None      # nList × dims (raw cell means)
         self._codebooks = None    # m × k_sub × dims/m (residual space)
-
-    def getNList(self):
-        return self.getOrDefault(self.nList)
-
-    def setNList(self, v):
-        return self._set(nList=v)
-
-    def getNProbe(self):
-        return self.getOrDefault(self.nProbe)
-
-    def setNProbe(self, v):
-        return self._set(nProbe=v)
-
-    def setNumSubspaces(self, v):
-        return self._set(numSubspaces=v)
-
-    def setBitsPerCode(self, v):
-        return self._set(bitsPerCode=v)
-
-    def setTrainSampleSize(self, v):
-        return self._set(trainSampleSize=int(v))
-
-    def setTrainIter(self, v):
-        return self._set(trainIter=int(v))
-
-    def setRefineFactor(self, v):
-        return self._set(refineFactor=int(v))
 
     # -- training: coarse centroids + residual codebooks, ONE sample ----
 
@@ -1379,10 +1267,8 @@ class RandomProjection(AlgoOperator, _SimilarityParams):
                      "action, so STREAMING input requires an explicit "
                      "setInputDim)", TypeConverters.toInt)
 
-    def __init__(self):
-        super().__init__()
-        self._setDefault(outputDim=4, outputCol="projected",
-                         inputDim=0)
+    _defaults = dict(outputDim=4, outputCol="projected",
+                     inputDim=0)
 
     def setInputDim(self, v):
         v = int(v)
@@ -1395,9 +1281,6 @@ class RandomProjection(AlgoOperator, _SimilarityParams):
         if v < 1:
             raise ValueError("outputDim must be >= 1")
         return self._set(outputDim=v)
-
-    def setOutputCol(self, v):
-        return self._set(outputCol=v)
 
     @staticmethod
     def sign(seed: int, j: int, i: int) -> int:
@@ -1467,12 +1350,7 @@ class EmbeddingTruncationAuditor(AlgoOperator):
     budgets = Param(Params._dummy(), "budgets",
                     "prefix lengths to audit", TypeConverters.toListInt)
 
-    def __init__(self):
-        super().__init__()
-        self._setDefault(inputCol="embedding", budgets=[8, 16, 32])
-
-    def setInputCol(self, v):
-        return self._set(inputCol=v)
+    _defaults = dict(inputCol="embedding", budgets=[8, 16, 32])
 
     def setBudgets(self, *v):
         v = list(v[0]) if len(v) == 1 and not isinstance(
@@ -1543,12 +1421,7 @@ class AnisotropyAuditor(AlgoOperator):
     inputCol = Param(Params._dummy(), "inputCol",
                      "embedding array column", TypeConverters.toString)
 
-    def __init__(self):
-        super().__init__()
-        self._setDefault(inputCol="embedding")
-
-    def setInputCol(self, v):
-        return self._set(inputCol=v)
+    _defaults = dict(inputCol="embedding")
 
     def evaluate(self, df: DataFrame) -> DataFrame:
         arr = F.col(self.getOrDefault(self.inputCol))
@@ -1616,12 +1489,7 @@ class KCenterCoreset(AlgoOperator, _SimilarityParams):
     numCenters = Param(Params._dummy(), "numCenters",
                        "centers to select", TypeConverters.toInt)
 
-    def __init__(self):
-        super().__init__()
-        self._setDefault(numCenters=8)
-
-    def getNumCenters(self):
-        return self.getOrDefault(self.numCenters)
+    _defaults = dict(numCenters=8)
 
     def setNumCenters(self, v):
         v = int(v)

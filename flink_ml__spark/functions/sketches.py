@@ -89,19 +89,11 @@ class DistinctCounter(AlgoOperator):
                   "exact count_distinct vs HLL++ sketch",
                   TypeConverters.toBoolean)
 
-    def __init__(self):
-        super().__init__()
-        self._setDefault(keyCol="user_id", groupCols=[],
-                         relativeSD=0.05, exact=True)
-
-    def setKeyCol(self, v):
-        return self._set(keyCol=v)
+    _defaults = dict(keyCol="user_id", groupCols=[],
+                     relativeSD=0.05, exact=True)
 
     def setGroupCols(self, *v):
         return self._set(groupCols=list(v))
-
-    def setRelativeSD(self, v):
-        return self._set(relativeSD=float(v))
 
     def setExact(self, v):
         return self._set(exact=bool(v))
@@ -168,15 +160,10 @@ class SkewProfiler(AlgoOperator):
     topN = Param(Params._dummy(), "topN", "heaviest keys to report",
                  TypeConverters.toInt)
 
-    def __init__(self):
-        super().__init__()
-        self._setDefault(keyCols=["event_type"], topN=10)
+    _defaults = dict(keyCols=["event_type"], topN=10)
 
     def setKeyCols(self, *v):
         return self._set(keyCols=list(v))
-
-    def setTopN(self, v):
-        return self._set(topN=int(v))
 
     def _counts(self, df: DataFrame) -> DataFrame:
         ks = self.getOrDefault(self.keyCols)
@@ -244,28 +231,8 @@ class HeavyHitters(AlgoOperator, HasInputCol):
                      "report items with count >= minShare * n",
                      TypeConverters.toFloat)
 
-    def __init__(self):
-        super().__init__()
-        self._setDefault(inputCol="text", itemCol="", numCounters=256,
-                         minShare=0.01)
-
-    def getItemCol(self):
-        return self.getOrDefault(self.itemCol)
-
-    def setItemCol(self, v):
-        return self._set(itemCol=v)
-
-    def getNumCounters(self):
-        return self.getOrDefault(self.numCounters)
-
-    def setNumCounters(self, v):
-        return self._set(numCounters=int(v))
-
-    def getMinShare(self):
-        return self.getOrDefault(self.minShare)
-
-    def setMinShare(self, v):
-        return self._set(minShare=float(v))
+    _defaults = dict(inputCol="text", itemCol="", numCounters=256,
+                     minShare=0.01)
 
     def _items(self, df: DataFrame) -> DataFrame:
         if self.getItemCol():
@@ -414,29 +381,12 @@ class CountMinSketch(AlgoOperator, HasInputCol):
 
     _state = ("_matrix", "_total")
 
+    _defaults = dict(inputCol="item", depth=5, width=2048, seed=17)
+
     def __init__(self):
         super().__init__()
-        self._setDefault(inputCol="item", depth=5, width=2048, seed=17)
         self._matrix = None   # list[depth] of list[width] ints
         self._total = 0
-
-    def getDepth(self):
-        return self.getOrDefault(self.depth)
-
-    def setDepth(self, v):
-        return self._set(depth=v)
-
-    def getWidth(self):
-        return self.getOrDefault(self.width)
-
-    def setWidth(self, v):
-        return self._set(width=v)
-
-    def getSeed(self):
-        return self.getOrDefault(self.seed)
-
-    def setSeed(self, v):
-        return self._set(seed=v)
 
     def _cells(self, df: DataFrame) -> DataFrame:
         d, w = self.getDepth(), self.getWidth()
@@ -577,24 +527,13 @@ class SketchOverlapEstimator(AlgoOperator):
                        "HLL++ relative standard deviation",
                        TypeConverters.toFloat)
 
-    def __init__(self):
-        super().__init__()
-        self._setDefault(keyCol="key", labelCol="label",
-                         relativeSD=0.02)
-
-    def setKeyCol(self, v):
-        return self._set(keyCol=v)
-
-    def setLabelCol(self, v):
-        return self._set(labelCol=v)
+    _defaults = dict(keyCol="key", labelCol="label",
+                     relativeSD=0.02)
 
     def setLabels(self, a: str, b: str):
         if a == b:
             raise ValueError("labelA and labelB must differ")
         return self._set(labelA=a, labelB=b)
-
-    def setRelativeSD(self, v):
-        return self._set(relativeSD=float(v))
 
     def _slices(self, df: DataFrame):
         if (not self.isDefined(self.labelA)
@@ -684,18 +623,6 @@ class BloomBitset(Params):
         super().__init__()
         self._bits: bytes | None = None
         self._bc = None    # cached SparkContext broadcast of the bitset
-
-    def getNumBits(self):
-        return self.getOrDefault(self.numBits)
-
-    def setNumBits(self, v):
-        return self._set(numBits=int(v))
-
-    def getNumHashes(self):
-        return self.getOrDefault(self.numHashes)
-
-    def setNumHashes(self, v):
-        return self._set(numHashes=int(v))
 
     def _fit_bits(self, fp: DataFrame) -> None:
         """Fold the one md5-hex column of ``fp`` into ``_bits``."""

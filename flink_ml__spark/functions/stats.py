@@ -51,9 +51,7 @@ class CategoricalAssociation(AlgoOperator):
                   "column pairs as 'x:y' strings",
                   TypeConverters.toListString)
 
-    def __init__(self):
-        super().__init__()
-        self._setDefault(pairs=[])
+    _defaults = dict(pairs=[])
 
     def setPairs(self, *v):
         if len(v) == 1 and isinstance(v[0], (list, tuple)):
@@ -166,9 +164,7 @@ class CorrelationMatrix(AlgoOperator):
                       "numeric columns to correlate",
                       TypeConverters.toListString)
 
-    def __init__(self):
-        super().__init__()
-        self._setDefault(inputCols=[])
+    _defaults = dict(inputCols=[])
 
     def setInputCols(self, *v):
         if len(v) == 1 and isinstance(v[0], (list, tuple)):
@@ -228,9 +224,7 @@ class SpearmanCorrelation(AlgoOperator):
                       "numeric columns to rank-correlate",
                       TypeConverters.toListString)
 
-    def __init__(self):
-        super().__init__()
-        self._setDefault(inputCols=[])
+    _defaults = dict(inputCols=[])
 
     def setInputCols(self, *v):
         if len(v) == 1 and isinstance(v[0], (list, tuple)):
@@ -313,16 +307,8 @@ class CooccurrencePMI(AlgoOperator):
                           "drop baskets with more distinct items",
                           TypeConverters.toInt)
 
-    def __init__(self):
-        super().__init__()
-        self._setDefault(groupCol="basket", itemCol="item",
-                         minCount=2, maxBasketSize=1000)
-
-    def setGroupCol(self, v):
-        return self._set(groupCol=v)
-
-    def setItemCol(self, v):
-        return self._set(itemCol=v)
+    _defaults = dict(groupCol="basket", itemCol="item",
+                     minCount=2, maxBasketSize=1000)
 
     def setMinCount(self, v):
         v = int(v)
@@ -419,19 +405,8 @@ class ABTestAnalyzer(AlgoOperator):
                     "variant value treated as the control arm",
                     TypeConverters.toString)
 
-    def __init__(self):
-        super().__init__()
-        self._setDefault(variantCol="variant", metricCol="metric",
-                         control="control")
-
-    def setVariantCol(self, v):
-        return self._set(variantCol=v)
-
-    def setMetricCol(self, v):
-        return self._set(metricCol=v)
-
-    def setControl(self, v):
-        return self._set(control=str(v))
+    _defaults = dict(variantCol="variant", metricCol="metric",
+                     control="control")
 
     def evaluate(self, df: DataFrame) -> DataFrame:
         vc = self.getOrDefault(self.variantCol)
@@ -513,12 +488,7 @@ class BenfordProfiler(AlgoOperator):
     inputCol = Param(Params._dummy(), "inputCol",
                      "numeric column to profile", TypeConverters.toString)
 
-    def __init__(self):
-        super().__init__()
-        self._setDefault(inputCol="value")
-
-    def setInputCol(self, v):
-        return self._set(inputCol=v)
+    _defaults = dict(inputCol="value")
 
     def transform(self, df: DataFrame) -> DataFrame:
         x = F.abs(F.col(self.getOrDefault(self.inputCol)).cast("double"))
@@ -570,16 +540,8 @@ class _BinnedTwoSampleTest(AlgoOperator):
                     "value buckets for the binned statistic",
                     TypeConverters.toInt)
 
-    def __init__(self):
-        super().__init__()
-        self._setDefault(valueCol="value", groupCol="group",
-                         groupA="a", groupB="b", numBins=1024)
-
-    def setValueCol(self, v):
-        return self._set(valueCol=v)
-
-    def setGroupCol(self, v):
-        return self._set(groupCol=v)
+    _defaults = dict(valueCol="value", groupCol="group",
+                     groupA="a", groupB="b", numBins=1024)
 
     def setGroups(self, a, b):
         return self._set(groupA=str(a), groupB=str(b))
@@ -754,15 +716,7 @@ class AnovaFTest(AlgoOperator):
     groupCol = Param(Params._dummy(), "groupCol",
                      "categorical factor column", TypeConverters.toString)
 
-    def __init__(self):
-        super().__init__()
-        self._setDefault(valueCol="value", groupCol="group")
-
-    def setValueCol(self, v):
-        return self._set(valueCol=v)
-
-    def setGroupCol(self, v):
-        return self._set(groupCol=v)
+    _defaults = dict(valueCol="value", groupCol="group")
 
     def evaluate(self, df: DataFrame) -> DataFrame:
         y = F.col(self.getOrDefault(self.valueCol)).cast("double")
@@ -820,12 +774,7 @@ class MutualInformationRanker(AlgoOperator):
                       "categorical feature columns",
                       TypeConverters.toListString)
 
-    def __init__(self):
-        super().__init__()
-        self._setDefault(labelCol="label")
-
-    def setLabelCol(self, v):
-        return self._set(labelCol=v)
+    _defaults = dict(labelCol="label")
 
     def setInputCols(self, *cols):
         cols = list(cols[0]) if len(cols) == 1 and not isinstance(
@@ -890,12 +839,7 @@ class CorrelationRanker(AlgoOperator):
                       "numeric feature columns",
                       TypeConverters.toListString)
 
-    def __init__(self):
-        super().__init__()
-        self._setDefault(labelCol="label")
-
-    def setLabelCol(self, v):
-        return self._set(labelCol=v)
+    _defaults = dict(labelCol="label")
 
     def setInputCols(self, *cols):
         cols = list(cols[0]) if len(cols) == 1 and not isinstance(
@@ -951,9 +895,7 @@ class OtsuThreshold(AlgoOperator, HasInputCol):
     numBins = Param(Params._dummy(), "numBins", "histogram bins",
                     TypeConverters.toInt)
 
-    def __init__(self):
-        super().__init__()
-        self._setDefault(inputCol="quality_score", numBins=256)
+    _defaults = dict(inputCol="quality_score", numBins=256)
 
     def setNumBins(self, v):
         v = int(v)
@@ -1054,15 +996,7 @@ class GiniConcentration(AlgoOperator):
                       "per-row weight ('' counts rows)",
                       TypeConverters.toString)
 
-    def __init__(self):
-        super().__init__()
-        self._setDefault(groupCol="lang", weightCol="")
-
-    def setGroupCol(self, v):
-        return self._set(groupCol=v)
-
-    def setWeightCol(self, v):
-        return self._set(weightCol=v)
+    _defaults = dict(groupCol="lang", weightCol="")
 
     def transform(self, df: DataFrame) -> DataFrame:
         from pyspark.sql import Window
@@ -1140,15 +1074,7 @@ class WelchTTest(_AggStat):
     groupB = Param(Params._dummy(), "groupB",
                    "label of the second sample", TypeConverters.toString)
 
-    def __init__(self):
-        super().__init__()
-        self._setDefault(valueCol="value", groupCol="group")
-
-    def setValueCol(self, v):
-        return self._set(valueCol=v)
-
-    def setGroupCol(self, v):
-        return self._set(groupCol=v)
+    _defaults = dict(valueCol="value", groupCol="group")
 
     def setGroups(self, a: str, b: str):
         if a == b:
@@ -1252,25 +1178,14 @@ class PoissonBootstrapper(AlgoOperator):
                           "of a 2B-expression fused aggregation",
                           TypeConverters.toBoolean)
 
-    def __init__(self):
-        super().__init__()
-        self._setDefault(idCol="id", valueCol="value",
-                         numReplicas=100, seed=7, arrowPartials=True)
-
-    def setIdCol(self, v):
-        return self._set(idCol=v)
-
-    def setValueCol(self, v):
-        return self._set(valueCol=v)
+    _defaults = dict(idCol="id", valueCol="value",
+                     numReplicas=100, seed=7, arrowPartials=True)
 
     def setNumReplicas(self, v):
         v = int(v)
         if not 2 <= v <= 1000:
             raise ValueError(f"numReplicas must be in [2, 1000], got {v}")
         return self._set(numReplicas=v)
-
-    def setSeed(self, v):
-        return self._set(seed=int(v))
 
     def setArrowPartials(self, v):
         return self._set(arrowPartials=bool(v))
@@ -1438,19 +1353,8 @@ class CupedAdjuster(AlgoOperator):
     variantB = Param(Params._dummy(), "variantB", "control label",
                      TypeConverters.toString)
 
-    def __init__(self):
-        super().__init__()
-        self._setDefault(metricCol="y", covariateCol="x",
-                         variantCol="variant")
-
-    def setMetricCol(self, v):
-        return self._set(metricCol=v)
-
-    def setCovariateCol(self, v):
-        return self._set(covariateCol=v)
-
-    def setVariantCol(self, v):
-        return self._set(variantCol=v)
+    _defaults = dict(metricCol="y", covariateCol="x",
+                     variantCol="variant")
 
     def setVariants(self, a: str, b: str):
         if a == b:
@@ -1539,22 +1443,8 @@ class DiffInDiffAnalyzer(AlgoOperator):
                     "boolean column: row belongs to the post period",
                     TypeConverters.toString)
 
-    def __init__(self):
-        super().__init__()
-        self._setDefault(metricCol="y", groupCol="variant",
-                         treatedLabel="t", postCol="post")
-
-    def setMetricCol(self, v):
-        return self._set(metricCol=v)
-
-    def setGroupCol(self, v):
-        return self._set(groupCol=v)
-
-    def setTreatedLabel(self, v):
-        return self._set(treatedLabel=v)
-
-    def setPostCol(self, v):
-        return self._set(postCol=v)
+    _defaults = dict(metricCol="y", groupCol="variant",
+                     treatedLabel="t", postCol="post")
 
     def evaluate(self, df: DataFrame) -> DataFrame:
         y = F.col(self.getOrDefault(self.metricCol)).cast("double")
@@ -1636,10 +1526,8 @@ class CovariateBalanceChecker(AlgoOperator):
     threshold = Param(Params._dummy(), "threshold",
                       "|SMD| flag level", TypeConverters.toFloat)
 
-    def __init__(self):
-        super().__init__()
-        self._setDefault(inputCols=[], variantCol="variant",
-                         threshold=0.1)
+    _defaults = dict(inputCols=[], variantCol="variant",
+                     threshold=0.1)
 
     def setInputCols(self, *cols):
         cols = list(cols[0]) if len(cols) == 1 and not isinstance(
@@ -1647,9 +1535,6 @@ class CovariateBalanceChecker(AlgoOperator):
         if not cols:
             raise ValueError("inputCols must be non-empty")
         return self._set(inputCols=cols)
-
-    def setVariantCol(self, v):
-        return self._set(variantCol=v)
 
     def setLabels(self, treated: str, control: str):
         if treated == control:
@@ -1747,18 +1632,13 @@ class FdrController(AlgoOperator):
                    "'bh' (FDR) or 'holm' (step-down FWER)",
                    TypeConverters.toString)
 
-    def __init__(self):
-        super().__init__()
-        self._setDefault(pCol="p_value", alpha=0.05, tieCols=[],
-                         method="bh")
+    _defaults = dict(pCol="p_value", alpha=0.05, tieCols=[],
+                     method="bh")
 
     def setMethod(self, v):
         if v not in ("bh", "holm"):
             raise ValueError(f"method must be 'bh' or 'holm', got {v!r}")
         return self._set(method=v)
-
-    def setPCol(self, v):
-        return self._set(pCol=v)
 
     def setAlpha(self, v):
         v = float(v)
@@ -1870,12 +1750,7 @@ class SrmChecker(_AggStat):
                    "configured share of variant A",
                    TypeConverters.toFloat)
 
-    def __init__(self):
-        super().__init__()
-        self._setDefault(variantCol="variant", ratioA=0.5)
-
-    def setVariantCol(self, v):
-        return self._set(variantCol=v)
+    _defaults = dict(variantCol="variant", ratioA=0.5)
 
     def setVariants(self, a: str, b: str):
         if a == b:
@@ -1945,16 +1820,8 @@ class MdeCalculator(AlgoOperator):
     power = Param(Params._dummy(), "power", "target power",
                   TypeConverters.toFloat)
 
-    def __init__(self):
-        super().__init__()
-        self._setDefault(metricCol="y", variantCol="variant",
-                         alpha=0.05, power=0.8)
-
-    def setMetricCol(self, v):
-        return self._set(metricCol=v)
-
-    def setVariantCol(self, v):
-        return self._set(variantCol=v)
+    _defaults = dict(metricCol="y", variantCol="variant",
+                     alpha=0.05, power=0.8)
 
     def setVariants(self, a: str, b: str):
         if a == b:
@@ -2046,19 +1913,8 @@ class RatioMetricAnalyzer(_AggStat):
     variantB = Param(Params._dummy(), "variantB", "second label",
                      TypeConverters.toString)
 
-    def __init__(self):
-        super().__init__()
-        self._setDefault(numCol="num", denCol="den",
-                         variantCol="variant")
-
-    def setNumCol(self, v):
-        return self._set(numCol=v)
-
-    def setDenCol(self, v):
-        return self._set(denCol=v)
-
-    def setVariantCol(self, v):
-        return self._set(variantCol=v)
+    _defaults = dict(numCol="num", denCol="den",
+                     variantCol="variant")
 
     def setVariants(self, a: str, b: str):
         if a == b:
@@ -2148,12 +2004,7 @@ class LorenzCurveAnalyzer(AlgoOperator):
     numBins = Param(Params._dummy(), "numBins", "quantile buckets",
                     TypeConverters.toInt)
 
-    def __init__(self):
-        super().__init__()
-        self._setDefault(weightCol="weight", numBins=10)
-
-    def setWeightCol(self, v):
-        return self._set(weightCol=v)
+    _defaults = dict(weightCol="weight", numBins=10)
 
     def setNumBins(self, v):
         v = int(v)
@@ -2169,12 +2020,9 @@ class LorenzCurveAnalyzer(AlgoOperator):
         base = df.filter(w.isNotNull() & (w >= 0))
         # exact percentiles, bit-identical to the percentile
         # aggregate (see functions/quantiles.py)
-        import math
+        from flink_ml__spark.functions.quantiles import quantile_edges
 
-        from flink_ml__spark.functions.quantiles import exact_percentiles
-
-        raw = exact_percentiles(base, w, [i / k for i in range(1, k)])
-        edges = [math.floor(e * 1e6 + 0.5) / 1e6 for e in (raw or [])]
+        edges = quantile_edges(base, w, k)
         if not edges:
             raise ValueError("no non-null weights to fit on")
         bucket = sum((w > F.lit(e)).cast("int") for e in edges)
@@ -2230,16 +2078,8 @@ class QuantileComparison(AlgoOperator):
     probs = Param(Params._dummy(), "probs", "probability grid",
                   TypeConverters.toListFloat)
 
-    def __init__(self):
-        super().__init__()
-        self._setDefault(valueCol="value", groupCol="group",
-                         probs=[i / 20 for i in range(1, 20)])
-
-    def setValueCol(self, v):
-        return self._set(valueCol=v)
-
-    def setGroupCol(self, v):
-        return self._set(groupCol=v)
+    _defaults = dict(valueCol="value", groupCol="group",
+                     probs=[i / 20 for i in range(1, 20)])
 
     def setGroups(self, a: str, b: str):
         if a == b:
@@ -2313,15 +2153,7 @@ class EmpiricalBayesRateShrinker(AlgoOperator):
     successCol = Param(Params._dummy(), "successCol",
                        "per-group success count", TypeConverters.toString)
 
-    def __init__(self):
-        super().__init__()
-        self._setDefault(trialsCol="trials", successCol="successes")
-
-    def setTrialsCol(self, v):
-        return self._set(trialsCol=v)
-
-    def setSuccessCol(self, v):
-        return self._set(successCol=v)
+    _defaults = dict(trialsCol="trials", successCol="successes")
 
     def _fit(self, df: DataFrame):
         n = F.col(self.getOrDefault(self.trialsCol)).cast("double")

@@ -39,9 +39,7 @@ class LanguageIdentifier(AlgoOperator, HasInputCol, HasOutputCol):
     profile → argmax with deterministic tie-breaking (profile order).
     """
 
-    def __init__(self):
-        super().__init__()
-        self._setDefault(inputCol="text", outputCol="lang_pred")
+    _defaults = dict(inputCol="text", outputCol="lang_pred")
 
     def transform(self, df: DataFrame) -> DataFrame:
         toks = F.array_distinct(
@@ -73,9 +71,7 @@ class QualityScorer(AlgoOperator, HasInputCol):
 
     PUNCT = r"[.,!?;:]"
 
-    def __init__(self):
-        super().__init__()
-        self._setDefault(inputCol="text")
+    _defaults = dict(inputCol="text")
 
     def transform(self, df: DataFrame) -> DataFrame:
         text = F.col(self.getInputCol())
@@ -151,23 +147,12 @@ class GopherQualityFilter(AlgoOperator, HasInputCol):
                       TypeConverters.toListString)
 
     # the paper's thresholds and stop set (§A1.1)
-    def __init__(self):
-        super().__init__()
-        self._setDefault(inputCol="text", minWords=50, maxWords=100000,
-                         minMeanWordLen=3.0, maxMeanWordLen=10.0,
-                         maxSymbolRatio=0.1, minAlphaWordFrac=0.8,
-                         minStopHits=2,
-                         stopWords=["the", "be", "to", "of", "and",
-                                    "that", "have", "with"])
-
-    def setMinWords(self, v):
-        return self._set(minWords=v)
-
-    def setMaxWords(self, v):
-        return self._set(maxWords=v)
-
-    def setMinStopHits(self, v):
-        return self._set(minStopHits=v)
+    _defaults = dict(inputCol="text", minWords=50, maxWords=100000,
+                     minMeanWordLen=3.0, maxMeanWordLen=10.0,
+                     maxSymbolRatio=0.1, minAlphaWordFrac=0.8,
+                     minStopHits=2,
+                     stopWords=["the", "be", "to", "of", "and",
+                                "that", "have", "with"])
 
     def transform(self, df: DataFrame) -> DataFrame:
         text = F.coalesce(F.col(self.getInputCol()), F.lit(""))
@@ -211,9 +196,7 @@ class TokenCounter(AlgoOperator, HasInputCol, HasOutputCol):
 
     BPE_PATTERN = r"[a-zA-Z]+|[0-9]|[^a-zA-Z0-9\s]"
 
-    def __init__(self):
-        super().__init__()
-        self._setDefault(inputCol="text", outputCol="n_tokens")
+    _defaults = dict(inputCol="text", outputCol="n_tokens")
 
     def transform(self, df: DataFrame) -> DataFrame:
         text = F.col(self.getInputCol())
@@ -252,9 +235,10 @@ class PiiRedactor(AlgoOperator, HasInputCol, HasOutputCol):
          "<PHONE>", "phones"),
     ]
 
+    _defaults = dict(inputCol="text", outputCol="text_redacted")
+
     def __init__(self):
         super().__init__()
-        self._setDefault(inputCol="text", outputCol="text_redacted")
         self._patterns = list(self.PATTERNS)
 
     def setPatterns(self, patterns):
@@ -297,9 +281,7 @@ class Fingerprinter(AlgoOperator, HasInputCol, HasOutputCol):
     normalized text (md5 is available in every engine, so the oracle can
     reproduce it bit-for-bit)."""
 
-    def __init__(self):
-        super().__init__()
-        self._setDefault(inputCol="text", outputCol="fingerprint")
+    _defaults = dict(inputCol="text", outputCol="fingerprint")
 
     @staticmethod
     def normalized(col):
@@ -330,22 +312,8 @@ class WinnowingFingerprinter(AlgoOperator, HasInputCol, HasOutputCol):
     windowSize = Param(Params._dummy(), "windowSize",
                        "grams per winnow window (w)", TypeConverters.toInt)
 
-    def __init__(self):
-        super().__init__()
-        self._setDefault(inputCol="text", outputCol="fingerprints",
-                         gramSize=5, windowSize=4)
-
-    def getGramSize(self):
-        return self.getOrDefault(self.gramSize)
-
-    def setGramSize(self, v):
-        return self._set(gramSize=v)
-
-    def getWindowSize(self):
-        return self.getOrDefault(self.windowSize)
-
-    def setWindowSize(self, v):
-        return self._set(windowSize=v)
+    _defaults = dict(inputCol="text", outputCol="fingerprints",
+                     gramSize=5, windowSize=4)
 
     def transform(self, df: DataFrame) -> DataFrame:
         import hashlib
@@ -397,15 +365,7 @@ class QualityFilter(AlgoOperator, HasInputCol):
                      "minimum quality_score to keep",
                      TypeConverters.toFloat)
 
-    def __init__(self):
-        super().__init__()
-        self._setDefault(inputCol="text", minScore=0.5)
-
-    def getMinScore(self):
-        return self.getOrDefault(self.minScore)
-
-    def setMinScore(self, v):
-        return self._set(minScore=float(v))
+    _defaults = dict(inputCol="text", minScore=0.5)
 
     def transform(self, df: DataFrame) -> DataFrame:
         scored = (QualityScorer()
@@ -449,19 +409,11 @@ class TextNormalizer(AlgoOperator, HasInputCol, HasOutputCol):
                        "drop every char outside [a-zA-Z0-9 ']",
                        TypeConverters.toBoolean)
 
-    def __init__(self):
-        super().__init__()
-        self._setDefault(inputCol="text", outputCol="text_norm",
-                         lowercase=True, stripPunct=False)
-
-    def getLowercase(self):
-        return self.getOrDefault(self.lowercase)
+    _defaults = dict(inputCol="text", outputCol="text_norm",
+                     lowercase=True, stripPunct=False)
 
     def setLowercase(self, v):
         return self._set(lowercase=bool(v))
-
-    def getStripPunct(self):
-        return self.getOrDefault(self.stripPunct)
 
     def setStripPunct(self, v):
         return self._set(stripPunct=bool(v))
@@ -522,9 +474,7 @@ class MarkupStripper(AlgoOperator, HasInputCol, HasOutputCol):
     ENTITIES = [("&lt;", "<"), ("&gt;", ">"), ("&quot;", '"'),
                 ("&#39;", "'"), ("&nbsp;", " "), ("&amp;", "&")]
 
-    def __init__(self):
-        super().__init__()
-        self._setDefault(inputCol="text", outputCol="text_clean")
+    _defaults = dict(inputCol="text", outputCol="text_clean")
 
     def transform(self, df: DataFrame) -> DataFrame:
         text = F.col(self.getInputCol())
@@ -580,9 +530,7 @@ class ScriptProfiler(AlgoOperator, HasInputCol):
         ("digit", "[0-9]"),
     ]
 
-    def __init__(self):
-        super().__init__()
-        self._setDefault(inputCol="text")
+    _defaults = dict(inputCol="text")
 
     def transform(self, df: DataFrame) -> DataFrame:
         # each regexp_count lands in its OWN named column, and every
@@ -665,13 +613,11 @@ class PhraseMatcher(AlgoOperator, HasInputCol):
     idCol = Param(Params._dummy(), "idCol", "document id column",
                   TypeConverters.toString)
 
+    _defaults = dict(inputCol="text", idCol="doc_id")
+
     def __init__(self, phrases: list[str] | None = None):
         super().__init__()
-        self._setDefault(inputCol="text", idCol="doc_id")
         self._phrases = list(phrases or [])
-
-    def setIdCol(self, v):
-        return self._set(idCol=v)
 
     def setPhrases(self, *v):
         if len(v) == 1 and isinstance(v[0], (list, tuple)):
@@ -762,9 +708,7 @@ class ReadabilityScorer(AlgoOperator, HasInputCol):
     projections — zero shuffle, streaming-compatible, exactly
     replayable in SQL."""
 
-    def __init__(self):
-        super().__init__()
-        self._setDefault(inputCol="text")
+    _defaults = dict(inputCol="text")
 
     def transform(self, df: DataFrame) -> DataFrame:
         t = F.col(self.getInputCol())
@@ -817,13 +761,8 @@ class HashedTfEmbedder(AlgoOperator, HasInputCol, HasOutputCol):
                       "ln(1+tf) instead of raw counts",
                       TypeConverters.toBoolean)
 
-    def __init__(self):
-        super().__init__()
-        self._setDefault(inputCol="text", outputCol="embedding",
-                         dim=64, sublinear=False)
-
-    def getDim(self):
-        return self.getOrDefault(self.dim)
+    _defaults = dict(inputCol="text", outputCol="embedding",
+                     dim=64, sublinear=False)
 
     def setDim(self, v):
         v = int(v)
@@ -909,9 +848,7 @@ class EncodingCorruptionDetector(AlgoOperator, HasInputCol):
     RE_CONTROL = ("[\\x{00}-\\x{08}\\x{0B}\\x{0C}"
                   "\\x{0E}-\\x{1F}\\x{7F}-\\x{9F}]")
 
-    def __init__(self):
-        super().__init__()
-        self._setDefault(inputCol="text", threshold=0.01)
+    _defaults = dict(inputCol="text", threshold=0.01)
 
     def setThreshold(self, v):
         v = float(v)
@@ -965,12 +902,7 @@ class SentenceSplitter(AlgoOperator, HasInputCol):
 
     RE_SENT = "[^.!?]+[.!?]*"
 
-    def __init__(self):
-        super().__init__()
-        self._setDefault(inputCol="text", idCol="doc_id")
-
-    def setIdCol(self, v):
-        return self._set(idCol=v)
+    _defaults = dict(inputCol="text", idCol="doc_id")
 
     def transform(self, df: DataFrame) -> DataFrame:
         i = self.getOrDefault(self.idCol)
@@ -1000,10 +932,11 @@ class HashedTfIdfModel(AlgoOperator, HasInputCol, HasOutputCol):
 
     _state = ("_dim", "_idf")
 
+    _defaults = dict(inputCol="text", outputCol="embedding")
+
     def __init__(self, dim: int | None = None,
                  idf: list | None = None):
         super().__init__()
-        self._setDefault(inputCol="text", outputCol="embedding")
         self._dim = dim
         self._idf = idf    # length-dim doubles
 
@@ -1056,10 +989,8 @@ class HashedTfIdfEmbedder(AlgoOperator, HasInputCol, HasOutputCol):
     dim = Param(Params._dummy(), "dim", "vector width",
                 TypeConverters.toInt)
 
-    def __init__(self):
-        super().__init__()
-        self._setDefault(inputCol="text", outputCol="embedding",
-                         dim=64)
+    _defaults = dict(inputCol="text", outputCol="embedding",
+                     dim=64)
 
     def setDim(self, v):
         v = int(v)
@@ -1114,12 +1045,7 @@ class LexicalDiversityScorer(AlgoOperator, HasInputCol):
     idCol = Param(Params._dummy(), "idCol", "document id column",
                   TypeConverters.toString)
 
-    def __init__(self):
-        super().__init__()
-        self._setDefault(inputCol="text", idCol="doc_id")
-
-    def setIdCol(self, v):
-        return self._set(idCol=v)
+    _defaults = dict(inputCol="text", idCol="doc_id")
 
     def transform(self, df: DataFrame) -> DataFrame:
         idc = self.getOrDefault(self.idCol)
@@ -1177,12 +1103,7 @@ class CodeDensityProfiler(AlgoOperator, HasInputCol):
                       "code_score flag threshold",
                       TypeConverters.toFloat)
 
-    def __init__(self):
-        super().__init__()
-        self._setDefault(inputCol="text", threshold=0.4)
-
-    def setThreshold(self, v):
-        return self._set(threshold=float(v))
+    _defaults = dict(inputCol="text", threshold=0.4)
 
     def transform(self, df: DataFrame) -> DataFrame:
         t = F.col(self.getInputCol())
@@ -1263,11 +1184,9 @@ class NgramOverlapScorer(AlgoOperator):
     inputCol = Param(Params._dummy(), "inputCol", "text column",
                      TypeConverters.toString)
 
-    def __init__(self):
-        super().__init__()
-        self._setDefault(idColA="id_a", idColB="id_b",
-                         ngramOrders=[1, 2], docIdCol="doc_id",
-                         inputCol="text")
+    _defaults = dict(idColA="id_a", idColB="id_b",
+                     ngramOrders=[1, 2], docIdCol="doc_id",
+                     inputCol="text")
 
     def setIdCols(self, a, b):
         return self._set(idColA=a, idColB=b)
@@ -1278,12 +1197,6 @@ class NgramOverlapScorer(AlgoOperator):
         if not v or any(n < 1 for n in v):
             raise ValueError("ngramOrders must be positive ints")
         return self._set(ngramOrders=sorted(set(v)))
-
-    def setDocIdCol(self, v):
-        return self._set(docIdCol=v)
-
-    def setInputCol(self, v):
-        return self._set(inputCol=v)
 
     def _gram_array(self, toks):
         """array<struct<n,__g>> of every configured order's grams —
@@ -1399,12 +1312,7 @@ class TokenizerFertilityProfiler(AlgoOperator, HasInputCol):
     groupCol = Param(Params._dummy(), "groupCol", "group column",
                      TypeConverters.toString)
 
-    def __init__(self):
-        super().__init__()
-        self._setDefault(inputCol="text", groupCol="lang")
-
-    def setGroupCol(self, v):
-        return self._set(groupCol=v)
+    _defaults = dict(inputCol="text", groupCol="lang")
 
     def transform(self, df: DataFrame) -> DataFrame:
         g = self.getOrDefault(self.groupCol)

@@ -69,37 +69,8 @@ class TimeBucketRollup(AlgoOperator):
                  "gap policy for avg_value: null|zero|locf|interp",
                  TypeConverters.toString)
 
-    def __init__(self):
-        super().__init__()
-        self._setDefault(timeCol="ts", keyCol="user_id", valueCol="value",
-                         bucketWidthSec=86400.0, fill="locf")
-
-    def getTimeCol(self):
-        return self.getOrDefault(self.timeCol)
-
-    def setTimeCol(self, v):
-        return self._set(timeCol=v)
-
-    def getKeyCol(self):
-        return self.getOrDefault(self.keyCol)
-
-    def setKeyCol(self, v):
-        return self._set(keyCol=v)
-
-    def getValueCol(self):
-        return self.getOrDefault(self.valueCol)
-
-    def setValueCol(self, v):
-        return self._set(valueCol=v)
-
-    def getBucketWidthSec(self):
-        return self.getOrDefault(self.bucketWidthSec)
-
-    def setBucketWidthSec(self, v):
-        return self._set(bucketWidthSec=float(v))
-
-    def getFill(self):
-        return self.getOrDefault(self.fill)
+    _defaults = dict(timeCol="ts", keyCol="user_id", valueCol="value",
+                     bucketWidthSec=86400.0, fill="locf")
 
     def setFill(self, v):
         if v not in _FILLS:
@@ -230,22 +201,8 @@ class TrendingItems(AlgoOperator):
     topK = Param(Params._dummy(), "topK", "items per bucket",
                  TypeConverters.toInt)
 
-    def __init__(self):
-        super().__init__()
-        self._setDefault(timeCol="ts", itemCol="event_type",
-                         bucketWidthSec=86400.0, topK=3)
-
-    def setTimeCol(self, v):
-        return self._set(timeCol=v)
-
-    def setItemCol(self, v):
-        return self._set(itemCol=v)
-
-    def setBucketWidthSec(self, v):
-        return self._set(bucketWidthSec=float(v))
-
-    def setTopK(self, v):
-        return self._set(topK=int(v))
+    _defaults = dict(timeCol="ts", itemCol="event_type",
+                     bucketWidthSec=86400.0, topK=3)
 
     def transform(self, df: DataFrame) -> DataFrame:
         t = self.getOrDefault(self.timeCol)
@@ -296,19 +253,8 @@ class CohortRetention(AlgoOperator):
                            "cohort/activity bucket width in seconds",
                            TypeConverters.toFloat)
 
-    def __init__(self):
-        super().__init__()
-        self._setDefault(timeCol="ts", userCol="user_id",
-                         bucketWidthSec=7 * 86400.0)
-
-    def setTimeCol(self, v):
-        return self._set(timeCol=v)
-
-    def setUserCol(self, v):
-        return self._set(userCol=v)
-
-    def setBucketWidthSec(self, v):
-        return self._set(bucketWidthSec=float(v))
+    _defaults = dict(timeCol="ts", userCol="user_id",
+                     bucketWidthSec=7 * 86400.0)
 
     def transform(self, df: DataFrame) -> DataFrame:
         t = self.getOrDefault(self.timeCol)
@@ -373,19 +319,8 @@ class FunnelAnalyzer(AlgoOperator):
                   "ordered event types forming the funnel",
                   TypeConverters.toListString)
 
-    def __init__(self):
-        super().__init__()
-        self._setDefault(timeCol="ts", userCol="user_id",
-                         typeCol="event_type", steps=[])
-
-    def setTimeCol(self, v):
-        return self._set(timeCol=v)
-
-    def setUserCol(self, v):
-        return self._set(userCol=v)
-
-    def setTypeCol(self, v):
-        return self._set(typeCol=v)
+    _defaults = dict(timeCol="ts", userCol="user_id",
+                     typeCol="event_type", steps=[])
 
     def setSteps(self, *v):
         steps = list(v[0]) if len(v) == 1 and isinstance(v[0], (list, tuple)) else list(v)
@@ -465,29 +400,9 @@ class RollingAnomalyDetector(AlgoOperator):
                       "|z| at/above which is_anomaly is true",
                       TypeConverters.toFloat)
 
-    def __init__(self):
-        super().__init__()
-        self._setDefault(timeCol="bucket_start", keyCol="user_id",
-                         valueCol="avg_value", window=24, minPeriods=5,
-                         threshold=3.0)
-
-    def setTimeCol(self, v):
-        return self._set(timeCol=v)
-
-    def setKeyCol(self, v):
-        return self._set(keyCol=v)
-
-    def setValueCol(self, v):
-        return self._set(valueCol=v)
-
-    def setWindow(self, v):
-        return self._set(window=int(v))
-
-    def setMinPeriods(self, v):
-        return self._set(minPeriods=int(v))
-
-    def setThreshold(self, v):
-        return self._set(threshold=float(v))
+    _defaults = dict(timeCol="bucket_start", keyCol="user_id",
+                     valueCol="avg_value", window=24, minPeriods=5,
+                     threshold=3.0)
 
     def transform(self, df: DataFrame) -> DataFrame:
         t = self.getOrDefault(self.timeCol)
@@ -544,15 +459,7 @@ class SCD2Builder(AlgoOperator):
                      "tracked attribute columns",
                      TypeConverters.toListString)
 
-    def __init__(self):
-        super().__init__()
-        self._setDefault(keyCol="user_id", timeCol="ts", attrCols=[])
-
-    def setKeyCol(self, v):
-        return self._set(keyCol=v)
-
-    def setTimeCol(self, v):
-        return self._set(timeCol=v)
+    _defaults = dict(keyCol="user_id", timeCol="ts", attrCols=[])
 
     def setAttrCols(self, *v):
         cols = (list(v[0]) if len(v) == 1 and isinstance(v[0], (list, tuple))
@@ -625,29 +532,15 @@ class MeanShiftDetector(AlgoOperator):
                       "shift at/above which is_shift is true",
                       TypeConverters.toFloat)
 
-    def __init__(self):
-        super().__init__()
-        self._setDefault(timeCol="bucket_start", keyCol="user_id",
-                         valueCol="avg_value", window=12,
-                         threshold=1.0)
-
-    def setTimeCol(self, v):
-        return self._set(timeCol=v)
-
-    def setKeyCol(self, v):
-        return self._set(keyCol=v)
-
-    def setValueCol(self, v):
-        return self._set(valueCol=v)
+    _defaults = dict(timeCol="bucket_start", keyCol="user_id",
+                     valueCol="avg_value", window=12,
+                     threshold=1.0)
 
     def setWindow(self, v):
         v = int(v)
         if v < 1:
             raise ValueError(f"window must be >= 1, got {v}")
         return self._set(window=v)
-
-    def setThreshold(self, v):
-        return self._set(threshold=float(v))
 
     def transform(self, df: DataFrame) -> DataFrame:
         t = self.getOrDefault(self.timeCol)
@@ -709,25 +602,8 @@ class ExponentialSmoother(AlgoOperator):
                    "trailing terms kept (truncation horizon)",
                    TypeConverters.toInt)
 
-    def __init__(self):
-        super().__init__()
-        self._setDefault(timeCol="bucket_start", keyCol="user_id",
-                         valueCol="avg_value", alpha=0.3, maxLag=50)
-
-    def setTimeCol(self, v):
-        return self._set(timeCol=v)
-
-    def setKeyCol(self, v):
-        return self._set(keyCol=v)
-
-    def setValueCol(self, v):
-        return self._set(valueCol=v)
-
-    def setAlpha(self, v):
-        return self._set(alpha=float(v))
-
-    def setMaxLag(self, v):
-        return self._set(maxLag=int(v))
+    _defaults = dict(timeCol="bucket_start", keyCol="user_id",
+                     valueCol="avg_value", alpha=0.3, maxLag=50)
 
     def transform(self, df: DataFrame) -> DataFrame:
         t = self.getOrDefault(self.timeCol)
@@ -790,19 +666,8 @@ class InterArrivalProfiler(AlgoOperator):
                    "deterministic tie-break column within equal "
                    "timestamps", TypeConverters.toString)
 
-    def __init__(self):
-        super().__init__()
-        self._setDefault(keyCol="event_type", timeCol="ts",
-                         tieCol="event_id")
-
-    def setKeyCol(self, v):
-        return self._set(keyCol=v)
-
-    def setTimeCol(self, v):
-        return self._set(timeCol=v)
-
-    def setTieCol(self, v):
-        return self._set(tieCol=v)
+    _defaults = dict(keyCol="event_type", timeCol="ts",
+                     tieCol="event_id")
 
     def transform(self, df: DataFrame) -> DataFrame:
         k = self.getOrDefault(self.keyCol)
@@ -870,20 +735,9 @@ class HoltForecaster(AlgoOperator):
     horizon = Param(Params._dummy(), "horizon",
                     "forecast steps ahead (>= 1)", TypeConverters.toInt)
 
-    def __init__(self):
-        super().__init__()
-        self._setDefault(keyCol="event_type", timeCol="ts",
-                         valueCol="value", alpha=0.5, beta=0.3,
-                         horizon=1)
-
-    def setKeyCol(self, v):
-        return self._set(keyCol=v)
-
-    def setTimeCol(self, v):
-        return self._set(timeCol=v)
-
-    def setValueCol(self, v):
-        return self._set(valueCol=v)
+    _defaults = dict(keyCol="event_type", timeCol="ts",
+                     valueCol="value", alpha=0.5, beta=0.3,
+                     horizon=1)
 
     def setAlpha(self, v):
         v = float(v)
@@ -966,19 +820,8 @@ class TransitionMatrix(AlgoOperator):
     stateCol = Param(Params._dummy(), "stateCol", "state label column",
                      TypeConverters.toString)
 
-    def __init__(self):
-        super().__init__()
-        self._setDefault(keyCol="user_id", timeCol="ts",
-                         stateCol="event_type")
-
-    def setKeyCol(self, v):
-        return self._set(keyCol=v)
-
-    def setTimeCol(self, v):
-        return self._set(timeCol=v)
-
-    def setStateCol(self, v):
-        return self._set(stateCol=v)
+    _defaults = dict(keyCol="user_id", timeCol="ts",
+                     stateCol="event_type")
 
     def transform(self, df: DataFrame) -> DataFrame:
         from pyspark.sql import Window
@@ -1037,19 +880,8 @@ class OhlcRollup(AlgoOperator):
                            "bucket width in seconds",
                            TypeConverters.toFloat)
 
-    def __init__(self):
-        super().__init__()
-        self._setDefault(timeCol="ts", keyCol="event_type",
-                         valueCol="value", bucketWidthSec=3600.0)
-
-    def setTimeCol(self, v):
-        return self._set(timeCol=v)
-
-    def setKeyCol(self, v):
-        return self._set(keyCol=v)
-
-    def setValueCol(self, v):
-        return self._set(valueCol=v)
+    _defaults = dict(timeCol="ts", keyCol="event_type",
+                     valueCol="value", bucketWidthSec=3600.0)
 
     def setBucketWidthSec(self, v):
         v = float(v)
@@ -1122,19 +954,8 @@ class AutocorrelationAnalyzer(AlgoOperator):
     maxLag = Param(Params._dummy(), "maxLag",
                    "largest lag to evaluate", TypeConverters.toInt)
 
-    def __init__(self):
-        super().__init__()
-        self._setDefault(timeCol="bucket_start", keyCol="user_id",
-                         valueCol="avg_value", maxLag=12)
-
-    def setTimeCol(self, v):
-        return self._set(timeCol=v)
-
-    def setKeyCol(self, v):
-        return self._set(keyCol=v)
-
-    def setValueCol(self, v):
-        return self._set(valueCol=v)
+    _defaults = dict(timeCol="bucket_start", keyCol="user_id",
+                     valueCol="avg_value", maxLag=12)
 
     def setMaxLag(self, v):
         v = int(v)
@@ -1216,20 +1037,9 @@ class SeasonalDecomposer(AlgoOperator):
     period = Param(Params._dummy(), "period",
                    "season length in buckets", TypeConverters.toInt)
 
-    def __init__(self):
-        super().__init__()
-        self._setDefault(timeCol="ts", keyCol="user_id",
-                         valueCol="value", bucketWidthSec=3600.0,
-                         period=24)
-
-    def setTimeCol(self, v):
-        return self._set(timeCol=v)
-
-    def setKeyCol(self, v):
-        return self._set(keyCol=v)
-
-    def setValueCol(self, v):
-        return self._set(valueCol=v)
+    _defaults = dict(timeCol="ts", keyCol="user_id",
+                     valueCol="value", bucketWidthSec=3600.0,
+                     period=24)
 
     def setBucketWidthSec(self, v):
         v = float(v)
@@ -1310,20 +1120,9 @@ class CusumDetector(AlgoOperator):
                        "process target mu; NaN = per-key series mean",
                        TypeConverters.toFloat)
 
-    def __init__(self):
-        super().__init__()
-        self._setDefault(timeCol="bucket_start", keyCol="user_id",
-                         valueCol="avg_value", slack=0.5,
-                         threshold=5.0, targetMean=float("nan"))
-
-    def setTimeCol(self, v):
-        return self._set(timeCol=v)
-
-    def setKeyCol(self, v):
-        return self._set(keyCol=v)
-
-    def setValueCol(self, v):
-        return self._set(valueCol=v)
+    _defaults = dict(timeCol="bucket_start", keyCol="user_id",
+                     valueCol="avg_value", slack=0.5,
+                     threshold=5.0, targetMean=float("nan"))
 
     def setSlack(self, v):
         v = float(v)
@@ -1336,9 +1135,6 @@ class CusumDetector(AlgoOperator):
         if v <= 0:
             raise ValueError(f"threshold must be > 0, got {v}")
         return self._set(threshold=v)
-
-    def setTargetMean(self, v):
-        return self._set(targetMean=float(v))
 
     def transform(self, df: DataFrame) -> DataFrame:
         import math
@@ -1409,20 +1205,9 @@ class WindowedQuantileProfiler(AlgoOperator):
                   "quantile probabilities in (0, 1)",
                   TypeConverters.toListFloat)
 
-    def __init__(self):
-        super().__init__()
-        self._setDefault(timeCol="ts", keyCol="event_type",
-                         valueCol="value", bucketWidthSec=86400.0,
-                         probs=[0.5, 0.95, 0.99])
-
-    def setTimeCol(self, v):
-        return self._set(timeCol=v)
-
-    def setKeyCol(self, v):
-        return self._set(keyCol=v)
-
-    def setValueCol(self, v):
-        return self._set(valueCol=v)
+    _defaults = dict(timeCol="ts", keyCol="event_type",
+                     valueCol="value", bucketWidthSec=86400.0,
+                     probs=[0.5, 0.95, 0.99])
 
     def setBucketWidthSec(self, v):
         v = float(v)
@@ -1510,19 +1295,8 @@ class _RobustTrendBase(AlgoOperator):
                        "most-recent buckets kept per key (bounds the "
                        "pairwise pass)", TypeConverters.toInt)
 
-    def __init__(self):
-        super().__init__()
-        self._setDefault(keyCol="key", timeCol="ts", valueCol="value",
-                         bucketWidthSec=86400.0, maxBuckets=128)
-
-    def setKeyCol(self, v):
-        return self._set(keyCol=v)
-
-    def setTimeCol(self, v):
-        return self._set(timeCol=v)
-
-    def setValueCol(self, v):
-        return self._set(valueCol=v)
+    _defaults = dict(keyCol="key", timeCol="ts", valueCol="value",
+                     bucketWidthSec=86400.0, maxBuckets=128)
 
     def setBucketWidthSec(self, v):
         if v <= 0:
@@ -1685,15 +1459,7 @@ class KaplanMeierEstimator(AlgoOperator):
                      "1/true = event observed, 0/false = censored",
                      TypeConverters.toString)
 
-    def __init__(self):
-        super().__init__()
-        self._setDefault(durationCol="duration", eventCol="event")
-
-    def setDurationCol(self, v):
-        return self._set(durationCol=v)
-
-    def setEventCol(self, v):
-        return self._set(eventCol=v)
+    _defaults = dict(durationCol="duration", eventCol="event")
 
     def evaluate(self, df: DataFrame) -> DataFrame:
         t = F.col(self.getOrDefault(self.durationCol)).cast("double")
@@ -1769,23 +1535,9 @@ class ForecastAccuracyEvaluator(AlgoOperator):
                       "output grouping ([] = seriesCol)",
                       TypeConverters.toListString)
 
-    def __init__(self):
-        super().__init__()
-        self._setDefault(seriesCol="key", timeCol="ts",
-                         valueCol="value", forecastCol="forecast",
-                         groupCols=[])
-
-    def setSeriesCol(self, v):
-        return self._set(seriesCol=v)
-
-    def setTimeCol(self, v):
-        return self._set(timeCol=v)
-
-    def setValueCol(self, v):
-        return self._set(valueCol=v)
-
-    def setForecastCol(self, v):
-        return self._set(forecastCol=v)
+    _defaults = dict(seriesCol="key", timeCol="ts",
+                     valueCol="value", forecastCol="forecast",
+                     groupCols=[])
 
     def setGroupCols(self, *cols):
         cols = list(cols[0]) if len(cols) == 1 and not isinstance(
@@ -1857,19 +1609,8 @@ class LogRankTest(AlgoOperator):
     groupB = Param(Params._dummy(), "groupB", "label of group B",
                    TypeConverters.toString)
 
-    def __init__(self):
-        super().__init__()
-        self._setDefault(durationCol="duration", eventCol="event",
-                         groupCol="group")
-
-    def setDurationCol(self, v):
-        return self._set(durationCol=v)
-
-    def setEventCol(self, v):
-        return self._set(eventCol=v)
-
-    def setGroupCol(self, v):
-        return self._set(groupCol=v)
+    _defaults = dict(durationCol="duration", eventCol="event",
+                     groupCol="group")
 
     def setGroups(self, a: str, b: str):
         if a == b:
@@ -1963,15 +1704,7 @@ class WeibullFitter(AlgoOperator):
                      "true = event observed, false = censored",
                      TypeConverters.toString)
 
-    def __init__(self):
-        super().__init__()
-        self._setDefault(durationCol="duration", eventCol="event")
-
-    def setDurationCol(self, v):
-        return self._set(durationCol=v)
-
-    def setEventCol(self, v):
-        return self._set(eventCol=v)
+    _defaults = dict(durationCol="duration", eventCol="event")
 
     def evaluate(self, df: DataFrame) -> DataFrame:
         km = (KaplanMeierEstimator()
@@ -2041,19 +1774,8 @@ class CohortValueCurve(AlgoOperator):
                            "cohort/age bucket width in seconds",
                            TypeConverters.toFloat)
 
-    def __init__(self):
-        super().__init__()
-        self._setDefault(timeCol="ts", userCol="user_id",
-                         valueCol="value", bucketWidthSec=7 * 86400.0)
-
-    def setTimeCol(self, v):
-        return self._set(timeCol=v)
-
-    def setUserCol(self, v):
-        return self._set(userCol=v)
-
-    def setValueCol(self, v):
-        return self._set(valueCol=v)
+    _defaults = dict(timeCol="ts", userCol="user_id",
+                     valueCol="value", bucketWidthSec=7 * 86400.0)
 
     def setBucketWidthSec(self, v):
         v = float(v)

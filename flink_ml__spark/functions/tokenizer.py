@@ -161,9 +161,10 @@ class BpeTokenizerModel(AlgoOperator, HasInputCol):
     batch (zipf again: a 10k-row batch has few distinct words).
     """
 
+    _defaults = dict(inputCol="text")
+
     def __init__(self, merges: list[tuple[str, str]] | None = None):
         super().__init__()
-        self._setDefault(inputCol="text")
         self._merges = list(merges or [])
 
     @property
@@ -241,22 +242,14 @@ class BpeTokenizer(Estimator, HasInputCol):
                      "cap on distinct words pulled to the driver",
                      TypeConverters.toInt)
 
-    def __init__(self):
-        super().__init__()
-        self._setDefault(inputCol="text", numMerges=200, minPairCount=2,
-                         maxWords=100_000)
+    _defaults = dict(inputCol="text", numMerges=200, minPairCount=2,
+                     maxWords=100_000)
 
     def setNumMerges(self, v):
         v = int(v)
         if v < 1:
             raise ValueError(f"numMerges must be >= 1, got {v}")
         return self._set(numMerges=v)
-
-    def setMinPairCount(self, v):
-        return self._set(minPairCount=int(v))
-
-    def setMaxWords(self, v):
-        return self._set(maxWords=int(v))
 
     def fit(self, df: DataFrame) -> BpeTokenizerModel:
         col = self.getInputCol()

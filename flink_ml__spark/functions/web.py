@@ -77,9 +77,7 @@ class UrlParser(AlgoOperator, HasInputCol):
     per-query string probes over the raw URL.
     """
 
-    def __init__(self):
-        super().__init__()
-        self._setDefault(inputCol="url")
+    _defaults = dict(inputCol="url")
 
     def transform(self, df: DataFrame) -> DataFrame:
         c = F.col(self.getInputCol())
@@ -115,10 +113,8 @@ class UrlCanonicalizer(AlgoOperator, HasInputCol):
                        "removed during canonicalization",
                        TypeConverters.toListString)
 
-    def __init__(self):
-        super().__init__()
-        self._setDefault(inputCol="url",
-                         dropParams=["utm_*", "fbclid", "gclid", "ref"])
+    _defaults = dict(inputCol="url",
+                     dropParams=["utm_*", "fbclid", "gclid", "ref"])
 
     def setDropParams(self, *v):
         if len(v) == 1 and isinstance(v[0], (list, tuple)):
@@ -189,12 +185,7 @@ class UrlDeduplicator(AlgoOperator, HasInputCol):
     idCol = Param(Params._dummy(), "idCol", "tie-break id column",
                   TypeConverters.toString)
 
-    def __init__(self):
-        super().__init__()
-        self._setDefault(inputCol="url", idCol="doc_id")
-
-    def setIdCol(self, v):
-        return self._set(idCol=v)
+    _defaults = dict(inputCol="url", idCol="doc_id")
 
     def transform(self, df: DataFrame) -> DataFrame:
         canon = UrlCanonicalizer().setInputCol(self.getInputCol())
@@ -231,9 +222,7 @@ class DomainFilter(AlgoOperator, HasInputCol):
                       "registrable domains to keep (empty = keep all)",
                       TypeConverters.toListString)
 
-    def __init__(self):
-        super().__init__()
-        self._setDefault(inputCol="url", blocklist=[], allowlist=[])
+    _defaults = dict(inputCol="url", blocklist=[], allowlist=[])
 
     def setBlocklist(self, *v):
         if len(v) == 1 and isinstance(v[0], (list, tuple)):
@@ -312,12 +301,7 @@ class OutlinkExtractor(AlgoOperator, HasInputCol):
     # alternatives explicitly so RE2 accepts the pattern)
     RE_HREF = "(?i)(?:href|src)\\s*=\\s*(?:\"([^\"]*)\"|'([^']*)')"
 
-    def __init__(self):
-        super().__init__()
-        self._setDefault(inputCol="text", idCol="doc_id")
-
-    def setIdCol(self, v):
-        return self._set(idCol=v)
+    _defaults = dict(inputCol="text", idCol="doc_id")
 
     def transform(self, df: DataFrame) -> DataFrame:
         i = self.getOrDefault(self.idCol)

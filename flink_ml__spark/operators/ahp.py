@@ -74,18 +74,10 @@ class AHPParams(HasInputCols, HasOutputCol):
         "per-column indicator type: 1=positive, 0=negative",
         typeConverter=TypeConverters.toListInt)
 
-    def __init__(self):
-        super().__init__()
-        self._setDefault(judgmentMatrix=None)
-
-    def getJudgmentMatrix(self):
-        return self.getOrDefault(self.judgmentMatrix)
+    _defaults = dict(judgmentMatrix=None)
 
     def setJudgmentMatrix(self, value):
         return self._set(judgmentMatrix=[[float(x) for x in row] for row in value])
-
-    def getIndicatorType(self) -> list[int]:
-        return self.getOrDefault(self.indicatorType)
 
     def setIndicatorType(self, *value):
         if len(value) == 1 and isinstance(value[0], (list, tuple)):

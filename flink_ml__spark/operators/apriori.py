@@ -69,40 +69,8 @@ class AprioriParams(HasInputCols, HasMaxIter):
                           "guard against the 2^n subset explosion",
                           typeConverter=TypeConverters.toInt)
 
-    def __init__(self):
-        super().__init__()
-        self._setDefault(minSupport=0.5, minConfidence=0.5, lift=1.0,
-                         itemSeparator=None, maxBasketSize=16)
-
-    def getMinSupport(self) -> float:
-        return self.getOrDefault(self.minSupport)
-
-    def setMinSupport(self, value: float):
-        return self._set(minSupport=float(value))
-
-    def getMinConfidence(self) -> float:
-        return self.getOrDefault(self.minConfidence)
-
-    def setMinConfidence(self, value: float):
-        return self._set(minConfidence=float(value))
-
-    def getLift(self) -> float:
-        return self.getOrDefault(self.lift)
-
-    def setLift(self, value: float):
-        return self._set(lift=float(value))
-
-    def getItemSeparator(self) -> str:
-        return self.getOrDefault(self.itemSeparator)
-
-    def setItemSeparator(self, value: str):
-        return self._set(itemSeparator=value)
-
-    def getMaxBasketSize(self) -> int:
-        return self.getOrDefault(self.maxBasketSize)
-
-    def setMaxBasketSize(self, value: int):
-        return self._set(maxBasketSize=value)
+    _defaults = dict(minSupport=0.5, minConfidence=0.5, lift=1.0,
+                     itemSeparator=None, maxBasketSize=16)
 
 
 def _subset_expr(items_col: str, mask_col: str):

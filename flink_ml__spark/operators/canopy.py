@@ -59,21 +59,7 @@ class CanopyParams(HasFeaturesCol, HasPredictionCol, HasMaxIter, HasSeed,
     t2 = Param(Params._dummy(), "t2", "tight distance threshold",
                typeConverter=TypeConverters.toFloat)
 
-    def __init__(self):
-        super().__init__()
-        self._setDefault(t1=1.0, t2=0.5)
-
-    def getT1(self) -> float:
-        return self.getOrDefault(self.t1)
-
-    def setT1(self, value: float):
-        return self._set(t1=float(value))
-
-    def getT2(self) -> float:
-        return self.getOrDefault(self.t2)
-
-    def setT2(self, value: float):
-        return self._set(t2=float(value))
+    _defaults = dict(t1=1.0, t2=0.5)
 
 
 class Canopy(AlgoOperator, CanopyParams):

@@ -63,27 +63,14 @@ class FCMParams(HasFeaturesCol, HasPredictionCol, HasMaxIter, HasSeed,
                 "convergence tolerance on max membership delta",
                 typeConverter=TypeConverters.toFloat)
 
-    def __init__(self):
-        super().__init__()
-        self._setDefault(k=3, m=2.0, tol=1e-4)
-
-    def getK(self) -> int:
-        return self.getOrDefault(self.k)
-
-    def setK(self, value: int):
-        return self._set(k=value)
-
-    def getM(self) -> float:
-        return self.getOrDefault(self.m)
-
-    def setM(self, value: float):
-        return self._set(m=float(value))
+    _defaults = dict(k=3, m=2.0, tol=1e-4)
 
     def getTOL(self) -> float:
-        return self.getOrDefault(self.tol)
+        """The reference's spelling of ``getTol``."""
+        return self.getTol()
 
     def setTOL(self, value: float):
-        return self._set(tol=float(value))
+        return self.setTol(value)
 
 
 def _dist_expr(x_elems, centroid: list[float], measure: str):

@@ -61,26 +61,15 @@ class KMeansParams(HasFeaturesCol, HasPredictionCol, HasMaxIter, HasSeed):
                            "bounded seeded sample for k-means++ init",
                            TypeConverters.toInt)
 
-    def __init__(self):
-        super().__init__()
-        self._setDefault(k=4, tol=1e-4, maxIter=20, initSampleSize=8192,
-                         featuresCol="embedding", predictionCol="prediction",
-                         seed=42)
-
-    def getK(self) -> int:
-        return self.getOrDefault(self.k)
+    _defaults = dict(k=4, tol=1e-4, maxIter=20, initSampleSize=8192,
+                     featuresCol="embedding", predictionCol="prediction",
+                     seed=42)
 
     def setK(self, v):
         v = int(v)
         if v < 1:
             raise ValueError("k must be >= 1")
         return self._set(k=v)
-
-    def setTol(self, v):
-        return self._set(tol=float(v))
-
-    def setInitSampleSize(self, v):
-        return self._set(initSampleSize=int(v))
 
 
 def _vec_sql(c) -> str:

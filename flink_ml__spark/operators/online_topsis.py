@@ -44,15 +44,7 @@ class HasIdCol(Params):
                   "record-timestamp column (epoch millis)",
                   typeConverter=TypeConverters.toString)
 
-    def __init__(self):
-        super().__init__()
-        self._setDefault(idCol="id")
-
-    def getIdCol(self) -> str:
-        return self.getOrDefault(self.idCol)
-
-    def setIdCol(self, value: str):
-        return self._set(idCol=value)
+    _defaults = dict(idCol="id")
 
 
 class OnlineTopsisParams(TopsisParams, HasWindows, HasTimeCol, HasIdCol):
@@ -63,15 +55,7 @@ class OnlineTopsisParams(TopsisParams, HasWindows, HasTimeCol, HasIdCol):
         "a row at time t is scored by the model covering t - delay",
         typeConverter=TypeConverters.toInt)
 
-    def __init__(self):
-        super().__init__()
-        self._setDefault(maxAllowedModelDelayMs=0)
-
-    def getMaxAllowedModelDelayMs(self) -> int:
-        return self.getOrDefault(self.maxAllowedModelDelayMs)
-
-    def setMaxAllowedModelDelayMs(self, value: int):
-        return self._set(maxAllowedModelDelayMs=value)
+    _defaults = dict(maxAllowedModelDelayMs=0)
 
 
 class OnlineTopsisModel(Model, OnlineTopsisParams):

@@ -69,34 +69,17 @@ class TopsisParams(HasFeaturesCol, HasPredictionCol):
         "[lo, hi] optimal interval for interval-type criteria",
         typeConverter=TypeConverters.toListFloat)
 
-    def __init__(self):
-        super().__init__()
-        self._setDefault(bestValue=None, intervalValue=None)
-
-    def getCriteriaTypes(self) -> list[int]:
-        return self.getOrDefault(self.criteriaTypes)
+    _defaults = dict(bestValue=None, intervalValue=None)
 
     def setCriteriaTypes(self, *value):
         if len(value) == 1 and isinstance(value[0], (list, tuple)):
             value = value[0]
         return self._set(criteriaTypes=list(value))
 
-    def getWeights(self) -> list[float]:
-        return self.getOrDefault(self.weights)
-
     def setWeights(self, *value):
         if len(value) == 1 and isinstance(value[0], (list, tuple)):
             value = value[0]
         return self._set(weights=list(value))
-
-    def getBestValue(self):
-        return self.getOrDefault(self.bestValue)
-
-    def setBestValue(self, value: float):
-        return self._set(bestValue=float(value))
-
-    def getIntervalValue(self):
-        return self.getOrDefault(self.intervalValue)
 
     def setIntervalValue(self, *value):
         if len(value) == 1 and isinstance(value[0], (list, tuple)):

@@ -1598,10 +1598,11 @@ def test_padding_waste_single_bucket_and_empty_docs(spark):
 
 
 def test_padding_waste_approx_edges_relative_error(spark):
-    """exactEdges=False honours relativeError (accuracy =
-    round(1/relativeError) — the RankGaussTransformer contract); at a
+    """relativeError > 0 fits the approx_percentile sketch (accuracy =
+    ceil(1/relativeError) — the HasRelativeError contract); at a
     tight error the approx profile matches the exact one on small
-    data, and out-of-range values are rejected."""
+    data, 0.0 is the exact default, and out-of-range values are
+    rejected."""
     import pytest as _pt
 
     from flink_ml__spark.functions.curation import PaddingWasteProfiler
@@ -1613,13 +1614,18 @@ def test_padding_waste_approx_edges_relative_error(spark):
         PaddingWasteProfiler().setNumBuckets(4).transform(df).collect())
     approx = sorted(
         (r["bucket"], r["n_docs"], r["sum_tokens"]) for r in
-        (PaddingWasteProfiler().setNumBuckets(4).setExactEdges(False)
+        (PaddingWasteProfiler().setNumBuckets(4)
          .setRelativeError(1e-5).transform(df).collect()))
     assert approx == exact
-    with _pt.raises(ValueError, match="relativeError"):
-        PaddingWasteProfiler().setRelativeError(0.0)
+    zero = sorted(
+        (r["bucket"], r["n_docs"], r["sum_tokens"]) for r in
+        (PaddingWasteProfiler().setNumBuckets(4)
+         .setRelativeError(0.0).transform(df).collect()))
+    assert zero == exact
     with _pt.raises(ValueError, match="relativeError"):
         PaddingWasteProfiler().setRelativeError(1.5)
+    with _pt.raises(ValueError, match="relativeError"):
+        PaddingWasteProfiler().setRelativeError(-0.1)
 
 
 # ---------------------------------------------------------------------------

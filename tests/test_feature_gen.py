@@ -393,13 +393,14 @@ def test_rank_gauss_normalizes_and_is_monotone(spark):
 
 
 def test_rank_gauss_approx_edges_scale_path(spark):
-    """exactEdges=False fits via the bounded-memory approx_percentile
+    """relativeError > 0 fits via the bounded-memory approx_percentile
     sketch (the 100 TB path). Unlike exact percentile it returns
     actual data values (no interpolation), so edges differ from the
     exact fit's — pin the sketch path's own contract: k-1 sorted
     edges drawn from the data, identical z table, and a transform
     that is still monotone with ties sharing a bucket. The exact path
-    stays the default (it's what the oracle gate pins)."""
+    (relativeError 0) stays the default (it's what the oracle gate
+    pins)."""
     import pytest as _pt
     from flink_ml__spark.functions.feature_gen import RankGaussTransformer
 
@@ -407,7 +408,7 @@ def test_rank_gauss_approx_edges_scale_path(spark):
     df = spark.createDataFrame(data, "id long, value double")
     exact = RankGaussTransformer().setNumBuckets(16).fit(df)
     approx = (RankGaussTransformer().setNumBuckets(16)
-              .setExactEdges(False).fit(df))
+              .setRelativeError(1e-4).fit(df))
     assert approx.z_scores == exact.z_scores
     assert len(approx.edges) == 15
     assert approx.edges == sorted(approx.edges)
@@ -419,8 +420,13 @@ def test_rank_gauss_approx_edges_scale_path(spark):
     assert all(len(s) == 1 for s in by_val.values())
     zs = [next(iter(by_val[v])) for v in sorted(by_val)]
     assert zs == sorted(zs)
+    zero = (RankGaussTransformer().setNumBuckets(16)
+            .setRelativeError(0.0).fit(df))
+    assert zero.edges == exact.edges
     with _pt.raises(ValueError, match="relativeError"):
-        RankGaussTransformer().setRelativeError(0.0)
+        RankGaussTransformer().setRelativeError(1.0)
+    with _pt.raises(ValueError, match="relativeError"):
+        RankGaussTransformer().setRelativeError(-0.1)
 
 
 def test_rank_gauss_save_load_roundtrip(spark, tmp_path):
